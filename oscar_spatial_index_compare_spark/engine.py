@@ -30,6 +30,7 @@ from .operators.index_build import (
 from .operators.mentions import extract_mentions
 from .operators.token_index import sorted_list_agg, token_postings_from_base
 from .plans.planner import Planner, QueryContext
+from .session import local_frame
 from .sources.tables import ensure_scan_parallelism, load
 
 # Largest token dictionary worth holding on the driver for plan-time leaf
@@ -143,11 +144,8 @@ class Engine:
             if toks is None:
                 self._vocab = None
             else:
-                import pandas as pd
-
-                vh = self.spark.createDataFrame(
-                    pd.DataFrame({"token": toks})
-                ).select("token", F.xxhash64("token").alias("th"))
+                vh = local_frame(self.spark, "token string", [toks]).select(
+                    "token", F.xxhash64("token").alias("th"))
                 coll_rows = (
                     vh.groupBy("th").agg(F.collect_list("token").alias("ts"))
                     .where(F.size("ts") > 1).select("ts").collect()
@@ -470,13 +468,10 @@ class Engine:
                     probe, (id(ctx.mcells), ctx.grid, ctx.res),
                     source=ctx.mcells)
                 import numpy as np
-                import pandas as pd
 
-                dim = self.spark.createDataFrame(pd.DataFrame({
-                    "cell_id": pd.array([0], dtype="int64"),
-                    "rid": pd.array([0], dtype="int64"),
-                    "needs_pip": [False],
-                }))
+                dim = local_frame(
+                    self.spark, "cell_id long, rid long, needs_pip boolean",
+                    [[0], [0], [False]])
                 j = probe.join(F.broadcast(dim), "cell_id")
                 # warm BOTH gate shapes a real region query compiles: the
                 # no-boundary form and the HOF-PIP CASE form (whose

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.optree import Node, parse
+from ..session import local_frame
 
 GH_COLS = ["pixel_kind", "pixel_id", "is_fm", "doc_ids"]
 
@@ -55,9 +56,10 @@ def gh_cell_items(cp: DataFrame) -> DataFrame:
 def gh_region_leaf(spark: SparkSession, region_id: int) -> DataFrame:
     """$region:<id> leaf = ONE full-match region node (the region subtree
     rolled up; reference: a region pixel whose items() resolve lazily)."""
-    return spark.createDataFrame(
-        [("region", int(region_id), True, None)],
+    return local_frame(
+        spark,
         "pixel_kind string, pixel_id long, is_fm boolean, doc_ids array<long>",
+        [["region"], [int(region_id)], [True], [None]],
     )
 
 
@@ -173,7 +175,7 @@ def gh_hcqr_docs(spark: SparkSession, tree: str, cp: DataFrame) -> DataFrame:
     ast = parse(tree)
 
     def leaf_cells(region_id) -> DataFrame:
-        reg = spark.createDataFrame([(int(region_id),)], "region_id long")
+        reg = local_frame(spark, "region_id long", [[int(region_id)]])
         return cp.join(F.broadcast(reg), "region_id").select("cell_id", "doc_ids")
 
     def ev(n: Node) -> DataFrame:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.udfs import parent_col
 from ..grids.base import get_grid
+from ..session import local_frame
 
 HCQR_COLS = ["pixel_id", "level", "is_fm", "doc_ids"]
 
@@ -572,21 +573,19 @@ def _hcqr_difference(
         if row.ofm:
             fm_hit_leaves.add(row.opix)
     if overlapped:
-        over_keys = spark.createDataFrame(
-            [(x, lx) for x, lx in overlapped], "pixel_id long, level int"
-        )
+        over_keys = local_frame(
+            spark, "pixel_id long, level int", zip(*overlapped))
         clean = lf_surv.join(F.broadcast(over_keys), ["pixel_id", "level"], "left_anti")
         parts.append(clean.select(*HCQR_COLS))
         jobs = [(x, lx, plist) for (x, lx), plist in overlapped.items()]
         fm_cells, leaf_hits = _decompose_fm(grid, jobs)
         if fm_cells:
-            parts.append(_mkfm(spark.createDataFrame(
-                fm_cells, "pixel_id long, level int"
-            )))
+            parts.append(_mkfm(local_frame(
+                spark, "pixel_id long, level int", zip(*fm_cells))))
         # leaf hits where the contained row was pm_R → cell totals − pm docs
         pm_hit = [p for p in leaf_hits if p not in fm_hit_leaves]
         if pm_hit:
-            hit_df = spark.createDataFrame([(p,) for p in pm_hit], "pixel_id long")
+            hit_df = local_frame(spark, "pixel_id long", [pm_hit])
             t = ctotals.select(
                 F.col("cell_id").alias("pixel_id"), F.col("doc_ids").alias("tdocs")
             )

@@ -37,6 +37,7 @@ from ..functions.geo import (
 )
 from ..grids.base import get_grid
 from ..grids.hex7 import SQRT3, _frame
+from ..session import local_frame
 
 KM_PER_DEG = 111.19492664455873  # great-circle km per degree (min over lat)
 
@@ -101,6 +102,14 @@ MAX_CANDIDATE_ROWS = 5_000_000
 # per-cell counts) the per-partition Python bounded heap is pure overhead —
 # the window's global top-k alone handles the rows comfortably
 PARTIAL_TOPK_MIN_ROWS = 2_000_000
+
+_QUERY_DDL = "query_id long, qlat double, qlon double, k int"
+_CAND_DDL = "query_id long, cand_cell long"
+
+
+def _broadcast_frame(spark: SparkSession, ddl: str, rows) -> DataFrame:
+    """Non-empty [(…)] rows → a broadcast local frame with ``ddl`` types."""
+    return F.broadcast(local_frame(spark, ddl, zip(*rows)))
 
 
 def _cell_doc_counts(probe: DataFrame, source: DataFrame,
@@ -217,14 +226,8 @@ def warm_plan_shape(spark: SparkSession, probe: DataFrame) -> None:
     byte-identical).  Called from knn_docs's stats-overlap thread and from
     the engine's context-open preload."""
     try:
-        import pandas as pd
-
-        c0 = F.broadcast(spark.createDataFrame(pd.DataFrame({
-            "query_id": np.array([0], np.int64),
-            "cand_cell": np.array([0], np.int64)})))
-        q0 = F.broadcast(spark.createDataFrame(
-            [(0, 0.0, 0.0, 1)],
-            "query_id long, qlat double, qlon double, k int"))
+        c0 = _broadcast_frame(spark, _CAND_DDL, [(0, 0)])
+        q0 = _broadcast_frame(spark, _QUERY_DDL, [(0, 0.0, 0.0, 1)])
         j0 = probe.join(c0, probe.cell_id == c0.cand_cell).join(q0, "query_id")
         (_per_doc_topk(j0, 1, use_partial=False).drop("k")
          .write.format("noop").mode("overwrite").save())
@@ -245,11 +248,12 @@ def knn_docs(
     ``mcells``: mention_cells at (grid, res).  Returns exactly k rows per
     query (fewer only if the corpus has fewer docs).
 
-    r01 VERDICT fixes: (a) the initial radius per query is DENSITY-SEEDED
-    from cached per-cell doc counts so the verification loop almost always
-    terminates in one round instead of re-running at r=2,4,8,…; (b) the
-    returned DataFrame is ONE distributed plan over the verified radii —
-    no driver-side ``createDataFrame`` of result rows.
+    The per-cell doc counts (collected once per table) bound each query's
+    kth distance on the driver, so the candidate cells are provably
+    complete without a probe job; the queries and candidates ship as Arrow
+    local frames (no Python workers), and the result is ONE distributed
+    plan.  Ring expansion remains the fallback when the counts or the
+    candidate set exceed their driver caps.
     """
     g = get_grid(grid)
     s, _ = _frame(res)
@@ -277,7 +281,7 @@ def knn_docs(
         counts, mstar, ndocs = _cell_doc_counts(probe, mcells, key)
     finally:
         if warm_pool is not None:
-            warm_pool.shutdown(wait=False)
+            warm_pool.shutdown(wait=False, cancel_futures=True)
     if counts is None:
         # populated-cell list too large for the driver (very deep res at
         # 100 TB): planar ring expansion with the conservative km bound
@@ -288,8 +292,9 @@ def knn_docs(
     if not counts:
         # no mentions at this (grid, res): empty result, correct schema
         # (the grid kernels reject empty id arrays, so bail before geometry)
-        return spark.createDataFrame(
-            [], "query_id long, doc_id long, dist_m long, rank int")
+        return local_frame(
+            spark, "query_id long, doc_id long, dist_m long, rank int",
+            [[]] * 4)
 
     # geometry of every populated cell — cached per (table, grid, res)
     # alongside the counts (r04 VERDICT item 7: recomputing center/bbox/
@@ -305,12 +310,7 @@ def knn_docs(
     # ---- phase 2: provably complete candidate set — every populated cell
     # whose NEAREST point (center distance − circumradius) can be within X
     # (pole/antimeridian safe: pure haversine on cell geometry).
-    qdf_all = F.broadcast(
-        spark.createDataFrame(
-            [(qid, lat, lon, k) for qid, lat, lon, k in queries],
-            "query_id long, qlat double, qlon double, k int",
-        )
-    )
+    qdf_all = _broadcast_frame(spark, _QUERY_DDL, queries)
     max_k = max(k for _, _, _, k in queries)
     # cum(prefix) = Σ per-cell distinct counts OVERCOUNTS distinct docs (a
     # doc spanning j cells is counted j times), so "cum ≥ k" alone cannot
@@ -353,14 +353,8 @@ def knn_docs(
             )
         qids_parts.append(np.full(len(sel), qid, np.int64))
         cells_parts.append(sel)
-    import pandas as pd
-
-    cand2 = F.broadcast(spark.createDataFrame(pd.DataFrame({
-        "query_id": np.concatenate(qids_parts) if qids_parts else
-        np.empty(0, np.int64),
-        "cand_cell": np.concatenate(cells_parts) if cells_parts else
-        np.empty(0, np.int64),
-    })))
+    cand2 = F.broadcast(local_frame(spark, _CAND_DDL, [
+        np.concatenate(qids_parts), np.concatenate(cells_parts)]))
     j2 = probe.join(cand2, probe.cell_id == cand2.cand_cell).join(qdf_all, "query_id")
     # the per-partition bounded heap (mapInPandas) only pays for itself
     # when the post-aggregation row set is large; the cached counts give an
@@ -386,15 +380,9 @@ def _knn_ring_expansion(spark, probe, g, s, queries, res, max_r):
             for qid in pending
             for c in g.disk(seed[qid], radius[qid]).tolist()
         ]
-        cand = F.broadcast(
-            spark.createDataFrame(cand_rows, "query_id long, cand_cell long")
-        )
-        qdf = F.broadcast(
-            spark.createDataFrame(
-                [(qid, v[0], v[1], v[2]) for qid, v in pending.items()],
-                "query_id long, qlat double, qlon double, k int",
-            )
-        )
+        cand = _broadcast_frame(spark, _CAND_DDL, cand_rows)
+        qdf = _broadcast_frame(
+            spark, _QUERY_DDL, [(qid, *v) for qid, v in pending.items()])
         j = probe.join(cand, probe.cell_id == cand.cand_cell).join(qdf, "query_id")
         max_k = max(k for _, _, k in pending.values())
         rows = _per_doc_topk(j, max_k).collect()  # k-bounded
@@ -415,12 +403,7 @@ def _knn_ring_expansion(spark, probe, g, s, queries, res, max_r):
             else:
                 radius[qid] = min(radius[qid] * 2, max_r)
 
-    qdf_all = F.broadcast(
-        spark.createDataFrame(
-            [(qid, lat, lon, k) for qid, lat, lon, k in queries],
-            "query_id long, qlat double, qlon double, k int",
-        )
-    )
+    qdf_all = _broadcast_frame(spark, _QUERY_DDL, queries)
     parts = []
     ring_rows = [
         (qid, int(c))
@@ -429,9 +412,7 @@ def _knn_ring_expansion(spark, probe, g, s, queries, res, max_r):
         for c in g.disk(seed[qid], r).tolist()
     ]
     if ring_rows:
-        cand = F.broadcast(
-            spark.createDataFrame(ring_rows, "query_id long, cand_cell long")
-        )
+        cand = _broadcast_frame(spark, _CAND_DDL, ring_rows)
         parts.append(
             probe.join(cand, probe.cell_id == cand.cand_cell)
             .join(qdf_all, "query_id")

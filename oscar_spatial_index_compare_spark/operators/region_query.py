@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geo import pip_col
 from ..grids.base import get_grid
+from ..session import local_frame
 
 _COVERING_CACHE: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
 # bounded like every other driver-side cache (_POP_CACHE, engine result LRU):
@@ -96,12 +97,8 @@ MAX_BROADCAST_CELLS = 200_000
 
 
 def cells_df(spark: SparkSession, arr, colname: str) -> DataFrame:
-    """int64 array → single-column DataFrame via Arrow (fast for 10^5 rows)."""
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame({colname: np.asarray(arr, np.int64)})
-    )
+    """Cell ids → a one-column ``long`` local frame (``local_frame``)."""
+    return local_frame(spark, f"{colname} long", [np.asarray(arr, np.int64)])
 
 
 def populated_cells(df: DataFrame, key: tuple,
@@ -141,8 +138,8 @@ def _pop_row_bound(key: tuple, cells: np.ndarray) -> int | None:
     entry = _POP_CACHE.get(key)
     if entry is None or entry[1] is None or entry[2] is None:
         return None
-    if not len(cells):
-        return 0
+    if not len(cells) or not len(entry[1]):
+        return 0  # nothing asked for, or no populated cell to hit
     idx = np.searchsorted(entry[1], cells)
     idx = np.clip(idx, 0, len(entry[1]) - 1)
     hit = entry[1][idx] == cells
@@ -288,7 +285,7 @@ def region_query_batch_counts(
     if not regions:
         # every lowering below assumes ≥1 region (agg(*[]) and stack(0,)
         # are invalid; the per-region fallback would index parts[0])
-        return spark.createDataFrame([], "region string, n_docs long")
+        return local_frame(spark, "region string, n_docs long", [[], []])
     probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res))
     key = (id(mcells), grid, res)
     pop = populated_cells(probe, key, source=mcells)
@@ -469,8 +466,6 @@ def _batch_dim(
     """
     if pop is None:
         return None
-    import pandas as pd
-
     per_region = []
     total = 0
     for name, poly in regions:
@@ -495,8 +490,8 @@ def _batch_dim(
         empty = spark.range(0).select(
             F.col("id").cast("int").alias("rid"), F.col("id").alias("doc_id"))
         return empty, names
-    dim = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cell_id", "rid", "needs_pip"]))
+    dim = local_frame(
+        spark, "cell_id long, rid long, needs_pip boolean", zip(*rows))
     j = probe.join(F.broadcast(dim), "cell_id")
     # the PIP gate is ONE SQL string: building the equivalent CASE from
     # pip_col Column objects cost ~3s of py4j round-trips per 50-polygon
@@ -574,8 +569,7 @@ def _one_region_parts(
         if len(full):
             lvls = g.level(full)
             for lvl in np.unique(lvls):
-                cells = [int(c) for c in full[lvls == lvl]]
-                cdf = F.broadcast(spark.createDataFrame([(c,) for c in cells], "fcell long"))
+                cdf = F.broadcast(cells_df(spark, full[lvls == lvl], "fcell"))
                 if int(lvl) == res:
                     parts.append(probe.join(cdf, F.col("cell_id") == F.col("fcell")).select("doc_id"))
                 else:
@@ -584,9 +578,7 @@ def _one_region_parts(
                     )
                     parts.append(anc.join(cdf, F.col("anc") == F.col("fcell")).select("doc_id"))
         if len(boundary):
-            bdf = F.broadcast(
-                spark.createDataFrame([(int(c),) for c in boundary], "bcell long")
-            )
+            bdf = F.broadcast(cells_df(spark, boundary, "bcell"))
             cand = probe.join(bdf, F.col("cell_id") == F.col("bcell"))
             parts.append(
                 cand.where(pip_col(F.col("lat"), F.col("lon"), poly)).select("doc_id")

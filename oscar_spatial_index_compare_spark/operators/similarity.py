@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 N_PLANES = 12
 DIM = 64
 
@@ -167,7 +169,8 @@ def ann_topk(
     rows = []
     for qid, q in queries:
         rows.extend((qid, int(b)) for b in _probe_set(q, planes, hamming))
-    probe_df = F.broadcast(spark.createDataFrame(rows, "query_id long, bucket long"))
+    probe_df = F.broadcast(
+        local_frame(spark, "query_id long, bucket long", zip(*rows)))
     cand = bucketed.join(probe_df, "bucket")
     scored = _score_candidates(cand, queries)
     w = Window.partitionBy("query_id").orderBy(F.col("sim_micro").desc(), F.col("vec_id").asc())
@@ -216,7 +219,8 @@ def ann_topk_bucketed(
     rows = []
     for qid, q in queries:
         rows.extend((qid, int(b)) for b in _probe_set(q, planes, hamming))
-    probe_df = F.broadcast(spark.createDataFrame(rows, "query_id long, bucket long"))
+    probe_df = F.broadcast(
+        local_frame(spark, "query_id long, bucket long", zip(*rows)))
     all_buckets = sorted({b for _, b in rows})
     cand = emb.where(F.col("bucket").isin(all_buckets)).join(probe_df, "bucket")
     scored = _score_candidates(cand, queries)

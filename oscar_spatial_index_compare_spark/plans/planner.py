@@ -31,10 +31,12 @@ from ..operators.cqr import (
     cqr_union,
 )
 from ..operators.token_index import DEFAULT_MAX_KEY_LEN, match_tokens, resolve_qt
+from ..session import local_frame
 from ..sources.regions import region_by_id, region_by_name
 from .optree import Node, parse
 
 ALL_QTS = frozenset({"exact", "prefix", "suffix", "substring"})
+CQR_DDL = "cell_id long, is_fm boolean, doc_ids array<long>"
 
 # dictionary-expansion leaves lower to Column.isin(<literals>); above this
 # many matches the literal list itself becomes the bottleneck (plan size,
@@ -285,9 +287,7 @@ class Planner:
                 return None
             return cqr_dilate(c, ctx.grid, ctx.res, ctx.ctotals)
         if n.op == "cell":
-            return ctx.spark.createDataFrame(
-                [(int(n.args[0]), True, None)], "cell_id long, is_fm boolean, doc_ids array<long>"
-            )
+            return local_frame(ctx.spark, CQR_DDL, [[int(n.args[0])], [True], [None]])
         if n.op == "fm":
             c = self._eval(n.args[0])
             return None if c is None else cqr_all_to_full(c)
@@ -361,8 +361,7 @@ class Planner:
                 present = ctx.ctotals.select("cell_id")
                 lvls = g.level(full)
                 for lvl in np.unique(lvls):
-                    cells = [(int(c),) for c in full[lvls == lvl]]
-                    cdf = F.broadcast(spark.createDataFrame(cells, "fcell long"))
+                    cdf = F.broadcast(cells_df(spark, full[lvls == lvl], "fcell"))
                     if int(lvl) == ctx.res:
                         cond = F.col("cell_id") == F.col("fcell")
                         parts.append(present.join(cdf, cond).select(
@@ -378,9 +377,7 @@ class Planner:
                             F.lit(None).cast("array<long>").alias("doc_ids"),
                         ))
         if len(boundary):
-            bdf = F.broadcast(spark.createDataFrame(
-                [(int(c),) for c in boundary], "bcell long"
-            ))
+            bdf = F.broadcast(cells_df(spark, boundary, "bcell"))
             cand = ctx.mcells.join(bdf, F.col("cell_id") == F.col("bcell"))
             # PIP form choice mirrors region_query._batch_dim: when the
             # memoized mention-cell row counts (populated by any earlier
@@ -417,9 +414,7 @@ class Planner:
             )
             parts.append(pm)
         if not parts:
-            return self.ctx.spark.createDataFrame(
-                [], "cell_id long, is_fm boolean, doc_ids array<long>"
-            )
+            return local_frame(self.ctx.spark, CQR_DDL, [[], [], []])
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -78,3 +78,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, ddl: str, columns) -> DataFrame:
+    """Driver-side columns → a DataFrame with exactly the ``ddl`` types,
+    planned as an Arrow-built ``LocalRelation``.
+
+    ``columns`` align with the DDL fields: numpy arrays, pandas Series or
+    Python sequences (``None`` is NULL, e.g. a NULL ``array<long>``).  The
+    Arrow table is the one driver-side frame that runs no job: a list of
+    row tuples is a pickled Python RDD whose first use starts Python
+    workers, and an empty pandas frame takes the same path."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.table([pa.array(c) for c in columns], names=schema.names)
+    return spark.createDataFrame(table, schema)

@@ -91,9 +91,11 @@ def gazetteer() -> list[tuple[str, float, float, int]]:
 
 def gazetteer_df(spark):
     """Gazetteer as a (broadcastable) DataFrame: name, lat, lon, popularity."""
-    return spark.createDataFrame(
-        gazetteer(), "name string, lat double, lon double, popularity int"
-    )
+    from ..session import local_frame
+
+    return local_frame(
+        spark, "name string, lat double, lon double, popularity int",
+        zip(*gazetteer()))
 
 
 def gazetteer_array_col():

@@ -51,12 +51,16 @@ REGIONS: list[tuple[int, str, int, np.ndarray]] = [
 
 
 def regions_df(spark):
+    from ..session import local_frame
+
     rows = [
         (rid, name, lvl, [[float(a), float(b)] for a, b in poly.tolist()])
         for rid, name, lvl, poly in REGIONS
     ]
-    return spark.createDataFrame(
-        rows, "region_id long, name string, admin_level int, poly array<array<double>>"
+    return local_frame(
+        spark,
+        "region_id long, name string, admin_level int, poly array<array<double>>",
+        zip(*rows),
     )
 
 

@@ -26,8 +26,8 @@ def test_pip_forms_bit_identical_on_corpus(spark, engine):
     for _rid, name, _lvl, poly in REGIONS:
         checks.append(
             F.sum(
-                (F.expr(pip_sql("lat", "lon", poly))
-                 != F.expr(pip_hof_sql("lat", "lon", poly))).cast("int")
+                (~F.expr(pip_sql("lat", "lon", poly))
+                 .eqNullSafe(F.expr(pip_hof_sql("lat", "lon", poly)))).cast("int")
             ).alias(name)
         )
     row = m.agg(*checks).collect()[0]

@@ -15,12 +15,21 @@ import json, sys
 p = sys.argv[1]
 runs = [json.load(open(f"{p}_{i}.json")) for i in (1, 2, 3)]
 mins = {k: min(r["queries"][k] for r in runs) for k in runs[0]["queries"]}
+
+
+def invariant(name):
+    vals = {r[name] for r in runs}
+    if len(vals) != 1:
+        sys.exit(f"runs disagree on {name}: {sorted(vals)}")
+    return vals.pop()
+
+
 out = {
     "e2e_min": min(r["value"] for r in runs),
     "e2e_all": [r["value"] for r in runs],
     "queries_min": mins,
-    "n_mentions": {r["n_mentions"] for r in runs}.pop(),
-    "region_docs_matched": {r["region_docs_matched"] for r in runs}.pop(),
+    "n_mentions": invariant("n_mentions"),
+    "region_docs_matched": invariant("region_docs_matched"),
 }
 print(json.dumps(out))
 EOF
