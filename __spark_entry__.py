@@ -504,18 +504,17 @@ def _region_batch_counts(spark, sf):
     scan, zero joins.  Raises if the bitmap path would not fire, so this
     entry is hard evidence for exactly the lowering bench/scaling time
     (ADVICE r03 high: that path previously had no oracle coverage)."""
+    from oscar_spatial_index_compare_spark.operators.cell_stats import cell_stats
     from oscar_spatial_index_compare_spark.operators.region_query import (
         _batch_preds_sql,
-        populated_cells,
         region_query_batch_counts,
     )
 
     eng = _engine(spark, sf)
     ctx = eng.context("s2", 10)
     regs = [(n, region_by_name(n)) for n in _BATCH_COUNT_REGIONS]
-    probe = ctx.mcells.where((F.col("grid") == "s2") & (F.col("res") == 10))
-    pop = populated_cells(probe, (id(ctx.mcells), "s2", 10), source=ctx.mcells)
-    assert pop is not None and _batch_preds_sql(regs, "s2", 10, pop) is not None, \
+    stats = cell_stats(ctx.mcells, "s2", 10)
+    assert stats is not None and _batch_preds_sql(regs, "s2", 10, stats) is not None, \
         "bitmap lowering must fire for this entry to certify it"
     return region_query_batch_counts(spark, ctx.mcells, regs, "s2", 10)
 

@@ -78,17 +78,15 @@ def main() -> None:
 
     from oscar_spatial_index_compare_spark.engine import Engine
     from oscar_spatial_index_compare_spark.operators import knn as K
+    from oscar_spatial_index_compare_spark.operators.cell_stats import cell_stats
 
     cat = tempfile.mkdtemp(prefix="bench_extra_cat_", dir="/dev/shm/sparktmp")
     eng = Engine(spark, SF_DIR, catalog_root=cat)
     t0 = time.perf_counter()
     hctx = eng.context("h3", 6)
     out["index_build_h3_cold_session"] = round(time.perf_counter() - t0, 3)
-    probe = hctx.mcells.where(
-        (F.col("grid") == "h3") & (F.col("res") == 6)
-    ).select("doc_id", "lat", "lon", "cell_id")
     t0 = time.perf_counter()
-    K._cell_doc_counts(probe, hctx.mcells, (id(hctx.mcells), "h3", 6))
+    cell_stats(hctx.mcells, "h3", 6)
     out["knn_metadata_action"] = round(time.perf_counter() - t0, 3)
     queries = [(1, 48.86, 2.36, 5), (2, -33.0, 151.0, 10), (3, 89.0, 10.0, 3),
                (4, 0.0, 0.0, 7), (5, 13.37, 179.0, 5)]

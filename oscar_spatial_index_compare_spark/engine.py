@@ -21,6 +21,7 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.cell_stats import cell_stats
 from .operators.index_build import (
     cell_totals_from_base,
     doc_index_full,
@@ -433,103 +434,12 @@ class Engine:
                 tokens=self.corpus_tokens(),
             )
             if self.catalog is not None:
-                self._preload_query_metadata(self._ctx[key], base)
+                # the reference's energize() (SURVEY S7): per-cell metadata
+                # loads once, at open, so no query pays for it.  An
+                # in-memory mcells is a lineage view whose scan would run
+                # the whole extraction; it loads on first spatial use.
+                cell_stats(mc, grid, res)
         return self._ctx[key]
-
-    def _preload_query_metadata(self, ctx: QueryContext,
-                                base: DataFrame | None = None) -> None:
-        """The reference's energize()/preload step (SURVEY S7;
-        ``apps/main.cpp:111-121`` mmaps + preloads the cell list at open)
-        for a freshly materialized catalog context: a daemon thread
-        collects the populated-cell list + per-cell row counts into the
-        region-query memo and noop-executes a one-row covering-dimension
-        join so its generated stages are janino-compiled — both overlap
-        the remaining build stages / reload counts instead of serializing
-        into the first region query (measured ~0.6 s collect + ~0.8 s
-        first-plan per table).  Best-effort and catalog-mode only: an
-        in-memory context's mcells is a lineage view whose eager scan
-        would trigger the whole extraction.  ``SPARK_GRAFT_NO_PRELOAD=1``
-        disables it (a token-query-only client opening many contexts may
-        not want speculative metadata jobs contending with its own first
-        queries)."""
-        import os
-        import threading
-
-        if os.environ.get("SPARK_GRAFT_NO_PRELOAD"):
-            return
-
-        def _warm():
-            try:
-                from .operators.region_query import populated_cells
-
-                probe = ctx.mcells.where(
-                    (F.col("grid") == ctx.grid) & (F.col("res") == ctx.res))
-                populated_cells(
-                    probe, (id(ctx.mcells), ctx.grid, ctx.res),
-                    source=ctx.mcells)
-                import numpy as np
-
-                dim = local_frame(
-                    self.spark, "cell_id long, rid long, needs_pip boolean",
-                    [[0], [0], [False]])
-                j = probe.join(F.broadcast(dim), "cell_id")
-                # warm BOTH gate shapes a real region query compiles: the
-                # no-boundary form and the HOF-PIP CASE form (whose
-                # generated source is polygon-independent, so one dummy
-                # triangle covers every bound-gated polygon — review r06)
-                from .functions.geo import pip_hof_sql
-
-                tri = np.array([[0.0, 0.0], [0.0, 1.0], [1.0, 0.0]])
-                for gate in (
-                    "(NOT needs_pip)",
-                    "(NOT needs_pip) OR (CASE WHEN rid = 0 THEN "
-                    f"({pip_hof_sql('lat', 'lon', tri)}) ELSE false END)",
-                ):
-                    (j.where(F.expr(gate))
-                     .select("doc_id").dropDuplicates(["doc_id"])
-                     .write.format("noop").mode("overwrite").save())
-                # one tiny op-tree query warms the flagship path's stage
-                # shapes (leaf scan + cell join + flatten) the same way;
-                # the result is discarded (the small internal plan-boundary
-                # blocks are reclaimed by the ContextCleaner)
-                if ctx.tokens and len(ctx.tokens) >= 2:
-                    (Planner(ctx).docs(f"{ctx.tokens[0]} / {ctx.tokens[1]}")
-                     .write.format("noop").mode("overwrite").save())
-                # kNN per-cell stats from the STORED aggregates (the
-                # CellInfo-at-open analog): per-cell distinct-doc counts
-                # ARE cell_totals.n_docs, and (M*, D) are one pruned scan
-                # of the stored base's cells column — no re-aggregation of
-                # the mention set (knn._cell_doc_counts re-derives the
-                # same numbers from mcells when this memo is cold; its
-                # exactness vs this path is pinned by
-                # tests/test_pip_forms.py::test_preloaded_knn_counts)
-                if base is not None:
-                    from .operators import knn as K
-
-                    kkey = (id(ctx.mcells), ctx.grid, ctx.res)
-                    if kkey not in K._COUNTS_CACHE:
-                        crows = (ctx.ctotals.select("cell_id", "n_docs")
-                                 .limit(K.MAX_DRIVER_COUNT_CELLS + 1)
-                                 .collect())
-                        if len(crows) <= K.MAX_DRIVER_COUNT_CELLS:
-                            srow = base.agg(
-                                F.max(F.size("cells")).alias("a"),
-                                F.sum((F.size("cells") > 0).cast("long")
-                                      ).alias("b")).collect()[0]
-                            K.seed_counts(
-                                kkey, ctx.mcells,
-                                {int(r.cell_id): int(r.n_docs)
-                                 for r in crows},
-                                int(srow.a or 0), int(srow.b or 0))
-                            # with the stats memo warm, knn_docs's own
-                            # stats-overlap thread never fires — warm the
-                            # plan shape here instead
-                            K.warm_plan_shape(self.spark, probe.select(
-                                "doc_id", "lat", "lon", "cell_id"))
-            except Exception:
-                pass  # preload is best-effort; queries pay their own way
-
-        threading.Thread(target=_warm, daemon=True).start()
 
     def hcqr_context(self, grid: str = "s2", res: int = 10) -> QueryContext:
         """context() + the materialized per-token HCQR payload table — the

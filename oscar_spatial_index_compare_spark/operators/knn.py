@@ -38,6 +38,7 @@ from ..functions.geo import (
 from ..grids.base import get_grid
 from ..grids.hex7 import SQRT3, _frame
 from ..session import local_frame
+from .cell_stats import cell_stats
 
 KM_PER_DEG = 111.19492664455873  # great-circle km per degree (min over lat)
 
@@ -82,17 +83,6 @@ def _partial_topk(per_doc: DataFrame, max_k: int) -> DataFrame:
     return per_doc.mapInPandas(fn, schema)
 
 
-# populated-cell doc counts collected once per (table, grid, res) to seed
-# per-query radii; above the cap seeding is skipped (radii start at 2).
-# Each entry HOLDS the source DataFrame: keys embed id(df), and a live
-# reference guarantees CPython never reuses that id for a different table
-# (ADVICE/VERDICT r02: id()-aliasing after GC returned another corpus's
-# counts).  Bounded FIFO — an evicted entry's id can recycle safely because
-# the entry is gone.
-MAX_DRIVER_COUNT_CELLS = 2_000_000
-_COUNTS_CACHE: dict[tuple, tuple[DataFrame, dict[int, int] | None, int, int]] = {}
-_COUNTS_CACHE_CAP = 64
-
 # hard cap on the Σ-per-query candidate-cell literal frame built on the
 # driver; beyond it knn_docs falls back to ring expansion instead of
 # shipping a queries×populated-cells broadcast (VERDICT r05 item 4)
@@ -110,89 +100,6 @@ _CAND_DDL = "query_id long, cand_cell long"
 def _broadcast_frame(spark: SparkSession, ddl: str, rows) -> DataFrame:
     """Non-empty [(…)] rows → a broadcast local frame with ``ddl`` types."""
     return F.broadcast(local_frame(spark, ddl, zip(*rows)))
-
-
-def _cell_doc_counts(probe: DataFrame, source: DataFrame,
-                     key: tuple) -> tuple[dict[int, int] | None, int, int]:
-    """→ (per-cell distinct-doc counts | None, max cells-per-doc M*, distinct
-    docs D).  Per-cell counts OVERCOUNT docs whose mentions span several
-    cells (each cell counts the doc once), so the density bound in
-    ``knn_docs`` needs M* and D to turn the cumulative per-cell sum into a
-    provable LOWER bound on distinct docs.
-
-    r06: counts and spread come back in ONE Spark action, each branch a
-    direct ``count_distinct`` aggregation (partial distinct happens
-    map-side inside the aggregate) instead of a shared dropDuplicates
-    pre-stage whose shuffle every union branch re-ran — 4 shuffle stages
-    → 2, measured 2.13 s → 1.31 s cold at 50k docs (probe r06d; result
-    verified identical).  The doc side still reduces distributively, so
-    nothing doc-cardinality-sized ever reaches the driver."""
-    if key not in _COUNTS_CACHE:
-        per_cell = (
-            probe.groupBy("cell_id").agg(F.count_distinct("doc_id").alias("a"))
-            .select(F.lit(0).alias("kind"), "cell_id", "a", F.lit(0).alias("b"))
-            .limit(MAX_DRIVER_COUNT_CELLS + 1)
-        )
-        spread = (
-            probe.groupBy("doc_id").agg(F.count_distinct("cell_id").alias("nc"))
-            .agg(F.max("nc").alias("a"), F.count("*").alias("b"))
-            .select(F.lit(1).alias("kind"), F.lit(0).cast("long").alias("cell_id"),
-                    "a", "b")
-        )
-        rows = per_cell.unionByName(spread).collect()
-        cell_rows = [r for r in rows if r.kind == 0]
-        srow = next(r for r in rows if r.kind == 1)
-        if len(cell_rows) > MAX_DRIVER_COUNT_CELLS:
-            seed_counts(key, source, None, 0, 0)
-        else:
-            seed_counts(
-                key, source,
-                {int(r.cell_id): int(r.a) for r in cell_rows},
-                int(srow.a or 0), int(srow.b or 0),
-            )
-    return _COUNTS_CACHE[key][1:]
-
-
-def seed_counts(key: tuple, source: DataFrame,
-                counts: dict[int, int] | None, mstar: int, ndocs: int) -> None:
-    """Insert a stats entry under the cache's invariants (FIFO cap,
-    source-df pinning for id() safety, geometry invalidation on refill).
-    Shared by _cell_doc_counts and the engine's context-open preload so
-    the insertion protocol lives in exactly one place (review r06)."""
-    if len(_COUNTS_CACHE) >= _COUNTS_CACHE_CAP:
-        try:
-            _COUNTS_CACHE.pop(next(iter(_COUNTS_CACHE)), None)
-        except (StopIteration, RuntimeError):
-            pass  # concurrent evictor (preload thread vs query thread)
-    # a (re)computed counts entry invalidates any geometry cached under
-    # the same key (id() reuse after an eviction)
-    _GEOM_CACHE.pop(key, None)
-    _COUNTS_CACHE[key] = (source, counts, mstar, ndocs)
-
-
-# per-(table, grid, res) populated-cell geometry: ids, counts, centers and a
-# safe circumradius (max haversine center→bbox corner).  Keyed and bounded
-# exactly like _COUNTS_CACHE; entries are pure numpy (no DataFrame refs —
-# the matching _COUNTS_CACHE entry already pins the table id).
-_GEOM_CACHE: dict[tuple, tuple] = {}
-
-
-def _cell_geometry(g, counts: dict[int, int], key: tuple) -> tuple:
-    if key not in _GEOM_CACHE:
-        cells = np.fromiter(counts.keys(), np.int64, len(counts))
-        n_arr = np.fromiter(counts.values(), np.int64, len(counts))
-        clat, clon = g.center(cells)
-        bb = g.bbox(cells)  # (n, 4): min_lat, max_lat, min_lon, max_lon
-        rad_km = np.zeros(len(cells))
-        for la, lo in ((0, 2), (0, 3), (1, 2), (1, 3)):
-            rad_km = np.maximum(rad_km, haversine_np(clat, clon, bb[:, la], bb[:, lo]))
-        if len(_GEOM_CACHE) >= _COUNTS_CACHE_CAP:
-            try:
-                _GEOM_CACHE.pop(next(iter(_GEOM_CACHE)), None)
-            except (StopIteration, RuntimeError):
-                pass  # concurrent evictor
-        _GEOM_CACHE[key] = (cells, n_arr, clat, clon, rad_km)
-    return _GEOM_CACHE[key]
 
 
 def _per_doc_topk(j: DataFrame, max_k: int,
@@ -219,22 +126,6 @@ def _per_doc_topk(j: DataFrame, max_k: int,
     )
 
 
-def warm_plan_shape(spark: SparkSession, probe: DataFrame) -> None:
-    """Best-effort: noop-execute a single-candidate kNN-shaped plan so the
-    real batched plan's generated stages load from the janino cache (query
-    coords/cells are broadcast DATA, not literals, so the sources are
-    byte-identical).  Called from knn_docs's stats-overlap thread and from
-    the engine's context-open preload."""
-    try:
-        c0 = _broadcast_frame(spark, _CAND_DDL, [(0, 0)])
-        q0 = _broadcast_frame(spark, _QUERY_DDL, [(0, 0.0, 0.0, 1)])
-        j0 = probe.join(c0, probe.cell_id == c0.cand_cell).join(q0, "query_id")
-        (_per_doc_topk(j0, 1, use_partial=False).drop("k")
-         .write.format("noop").mode("overwrite").save())
-    except Exception:
-        pass  # warm-up is best-effort; the real plan compiles inline
-
-
 def knn_docs(
     spark: SparkSession,
     mcells: DataFrame,
@@ -248,58 +139,36 @@ def knn_docs(
     ``mcells``: mention_cells at (grid, res).  Returns exactly k rows per
     query (fewer only if the corpus has fewer docs).
 
-    The per-cell doc counts (collected once per table) bound each query's
-    kth distance on the driver, so the candidate cells are provably
-    complete without a probe job; the queries and candidates ship as Arrow
-    local frames (no Python workers), and the result is ONE distributed
-    plan.  Ring expansion remains the fallback when the counts or the
-    candidate set exceed their driver caps.
+    The per-cell doc counts (``cell_stats``, collected once per frame)
+    bound each query's kth distance on the driver, so the candidate cells
+    are provably complete without a probe job; the queries and candidates
+    ship as Arrow local frames (no Python workers), and the result is ONE
+    distributed plan.  Ring expansion remains the fallback when the
+    populated cells or the candidate set exceed their driver caps.
     """
     g = get_grid(grid)
     s, _ = _frame(res)
     probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res)).select(
         "doc_id", "lat", "lon", "cell_id"
     )
-    key = (id(mcells), grid, res)
-    warm_pool = None
-    if key not in _COUNTS_CACHE:
-        # the per-cell stats collect blocks the driver ~1.3 s while the
-        # executors aggregate; the batched plan's first execution then pays
-        # ~2-3 s of whole-stage codegen (driver-side janino) before any
-        # task runs.  Compile it CONCURRENTLY with the stats action (guide
-        # §2.6): a single-candidate same-shape plan generates byte-identical
-        # stage sources (query coords/cells are DATA in the broadcast
-        # frames, not literals), so the real plan below hits the janino
-        # cache.  Driver-side compile overlaps executor-side aggregation —
-        # genuine overlap, not moved cost.  Warm runs (counts cached) have
-        # compiled sources already and skip this.
-        from concurrent.futures import ThreadPoolExecutor
-
-        warm_pool = ThreadPoolExecutor(max_workers=1)
-        warm_pool.submit(warm_plan_shape, spark, probe)
-    try:
-        counts, mstar, ndocs = _cell_doc_counts(probe, mcells, key)
-    finally:
-        if warm_pool is not None:
-            warm_pool.shutdown(wait=False, cancel_futures=True)
-    if counts is None:
+    stats = cell_stats(mcells, grid, res)
+    if stats is None:
         # populated-cell list too large for the driver (very deep res at
         # 100 TB): planar ring expansion with the conservative km bound
         return _knn_ring_expansion(
             spark, probe, g, s, queries, res, max_r
         )
 
-    if not counts:
+    if not len(stats.cells):
         # no mentions at this (grid, res): empty result, correct schema
         # (the grid kernels reject empty id arrays, so bail before geometry)
         return local_frame(
             spark, "query_id long, doc_id long, dist_m long, rank int",
             [[]] * 4)
 
-    # geometry of every populated cell — cached per (table, grid, res)
-    # alongside the counts (r04 VERDICT item 7: recomputing center/bbox/
-    # circumradius arrays per call was pure fixed cost on repeat queries)
-    cells, n_arr, clat, clon, rad_km = _cell_geometry(g, counts, key)
+    cells, n_arr = stats.cells, stats.n_docs
+    mstar, ndocs = stats.mstar, stats.docs
+    clat, clon, rad_km = stats.geometry
 
     # ---- phase 1, DRIVER-SIDE ONLY (r04 VERDICT item 7: this used to be a
     # Spark probe job + collect — the dominant fixed cost of a cold batch):
@@ -315,7 +184,7 @@ def knn_docs(
     # cum(prefix) = Σ per-cell distinct counts OVERCOUNTS distinct docs (a
     # doc spanning j cells is counted j times), so "cum ≥ k" alone cannot
     # prove k docs lie within the prefix.  Two sound lower bounds from the
-    # cached spread stats: distinct ≥ cum − (P − D) (the global overcount
+    # spread stats: distinct ≥ cum − (P − D) (the global overcount
     # budget is exactly P − D) and distinct ≥ ceil(cum / M*); the prefix is
     # proven once cum reaches the SMALLER of the two thresholds.
     total_pairs = int(n_arr.sum())
@@ -366,7 +235,8 @@ def knn_docs(
 
 
 def _knn_ring_expansion(spark, probe, g, s, queries, res, max_r):
-    """Ring-doubling fallback when per-cell counts exceed the driver cap."""
+    """Ring-doubling fallback when the populated cells or the candidate
+    set exceed their driver caps."""
     pending = {qid: (lat, lon, k) for qid, lat, lon, k in queries}
     seed = {
         qid: int(g.cell(np.array([lat]), np.array([lon]), res)[0])

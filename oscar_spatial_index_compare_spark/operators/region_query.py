@@ -26,6 +26,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,30 +35,7 @@ from pyspark.sql import functions as F
 from ..functions.geo import pip_col
 from ..grids.base import get_grid
 from ..session import local_frame
-
-_COVERING_CACHE: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-# bounded like every other driver-side cache (_POP_CACHE, engine result LRU):
-# coverings are small, but a long-lived service scanning many distinct
-# polygons must not grow without bound (VERDICT r03 item 5)
-_COVERING_CACHE_CAP = 256
-
-# populated-cell lists below this size are collected once per table and used
-# to prune coverings driver-side (exact, not heuristic); above it region
-# queries fall back to distributed per-level ancestor equi-joins.  6*4^10
-# s2 cells ≈ 6.3M, so res-10 indexes always qualify; very deep resolutions
-# at 100 TB take the distributed path.
-MAX_DRIVER_POP_CELLS = 4_000_000
-
-# Entries HOLD the source DataFrame: keys embed id(df), and a live reference
-# guarantees CPython never reuses that id for a different table (ADVICE/
-# VERDICT r02 aliasing hazard).  Bounded FIFO — an evicted entry's id can
-# recycle safely because the entry is gone.
-# Entry: (source_df, sorted cell ids | None, per-cell ROW counts aligned
-# with the sorted ids | None) — the counts cost nothing extra (the distinct
-# pass became a count aggregation over the same shuffle) and give the PIP
-# form chooser an EXACT driver-side bound on boundary rows.
-_POP_CACHE: dict[tuple, tuple[DataFrame, np.ndarray | None, np.ndarray | None]] = {}
-_POP_CACHE_CAP = 64
+from .cell_stats import CellStats, cell_stats
 
 # largest exact boundary-row bound for which the polygon-independent
 # interpreted PIP form (pip_hof_sql) is used in the batch-dimension gate.
@@ -72,23 +51,13 @@ def cached_covering(grid_name: str, poly: np.ndarray, res: int):
     """Coverings are deterministic functions of (grid, polygon, res) and are
     computed serially on the driver — memoize them (repeated queries over
     the same regions are the common case; this is the query-plan cache)."""
-    key = (grid_name, res, poly.tobytes())
-    if key not in _COVERING_CACHE:
-        if len(_COVERING_CACHE) >= _COVERING_CACHE_CAP:
-            _evict_one(_COVERING_CACHE)
-        _COVERING_CACHE[key] = get_grid(grid_name).covering(poly, res)
-    return _COVERING_CACHE[key]
+    return _covering(grid_name, res, np.asarray(poly, np.float64).tobytes())
 
 
-def _evict_one(cache: dict) -> None:
-    """FIFO-evict one entry, tolerating a concurrent evictor: the engine's
-    context-open preload thread fills these memos while query threads may
-    be doing the same, and two threads racing ``pop(next(iter(...)))`` on
-    the same victim must not raise out of a user's query (review r06)."""
-    try:
-        cache.pop(next(iter(cache)), None)
-    except (StopIteration, RuntimeError):
-        pass  # emptied or resized mid-iteration by the other thread
+@functools.lru_cache(maxsize=256)
+def _covering(grid_name: str, res: int, poly: bytes):
+    return get_grid(grid_name).covering(
+        np.frombuffer(poly, np.float64).reshape(-1, 2), res)
 
 
 # largest pruned covering worth shipping from the driver as a broadcast
@@ -99,51 +68,6 @@ MAX_BROADCAST_CELLS = 200_000
 def cells_df(spark: SparkSession, arr, colname: str) -> DataFrame:
     """Cell ids → a one-column ``long`` local frame (``local_frame``)."""
     return local_frame(spark, f"{colname} long", [np.asarray(arr, np.int64)])
-
-
-def populated_cells(df: DataFrame, key: tuple,
-                    source: DataFrame | None = None) -> np.ndarray | None:
-    """Sorted distinct ``cell_id`` values of ``df`` — the engine's analog of
-    the reference intersecting a covering with its cell list
-    (``src/OscarSearchSgIndex.cpp:117-130``).  Memoized per (table, grid,
-    res); returns None above MAX_DRIVER_POP_CELLS (distributed fallback).
-    ``source`` is the DataFrame whose id() is embedded in ``key`` (held
-    alive by the entry to keep the key valid); defaults to ``df``.
-    """
-    if key not in _POP_CACHE:
-        rows = (
-            df.groupBy("cell_id").agg(F.count("*").alias("_n"))
-            .limit(MAX_DRIVER_POP_CELLS + 1).collect()
-        )
-        if len(_POP_CACHE) >= _POP_CACHE_CAP:
-            _evict_one(_POP_CACHE)
-        if len(rows) > MAX_DRIVER_POP_CELLS:
-            _POP_CACHE[key] = (source if source is not None else df, None, None)
-        else:
-            cells = np.array([r[0] for r in rows], np.int64)
-            cnts = np.array([r[1] for r in rows], np.int64)
-            order = np.argsort(cells)
-            _POP_CACHE[key] = (
-                source if source is not None else df,
-                cells[order], cnts[order],
-            )
-    return _POP_CACHE[key][1]
-
-
-def _pop_row_bound(key: tuple, cells: np.ndarray) -> int | None:
-    """Exact Σ source rows over ``cells`` from the memoized per-cell counts
-    (None when the populated list overflowed the driver cap or the key was
-    never collected) — the driver-known bound that gates the interpreted
-    PIP form."""
-    entry = _POP_CACHE.get(key)
-    if entry is None or entry[1] is None or entry[2] is None:
-        return None
-    if not len(cells) or not len(entry[1]):
-        return 0  # nothing asked for, or no populated cell to hit
-    idx = np.searchsorted(entry[1], cells)
-    idx = np.clip(idx, 0, len(entry[1]) - 1)
-    hit = entry[1][idx] == cells
-    return int(entry[2][idx[hit]].sum())
 
 
 def expand_full_to_populated(
@@ -191,13 +115,12 @@ def region_query_docs(
     MAX_LITERAL_CELLS.
     """
     probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res))
-    key = (id(mcells), grid, res)
-    pop = populated_cells(probe, key, source=mcells)
-    dim = _batch_dim(spark, probe, [("q", poly)], grid, res, pop, pop_key=key)
+    stats = cell_stats(mcells, grid, res)
+    dim = _batch_dim(spark, probe, [("q", poly)], grid, res, stats)
     if dim is not None:
         j, _names = dim
         return j.select("doc_id").dropDuplicates(["doc_id"])
-    parts = _one_region_parts(spark, probe, poly, grid, res, pop)
+    parts = _one_region_parts(spark, probe, poly, grid, res, stats)
     if not parts:
         return spark.range(0).select(F.col("id").alias("doc_id"))
     out = parts[0]
@@ -228,9 +151,8 @@ def region_query_batch(
     sizes (north_rule).
     """
     probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res))
-    key = (id(mcells), grid, res)
-    pop = populated_cells(probe, key, source=mcells)
-    dim = _batch_dim(spark, probe, regions, grid, res, pop, pop_key=key)
+    stats = cell_stats(mcells, grid, res)
+    dim = _batch_dim(spark, probe, regions, grid, res, stats)
     if dim is not None:
         j, names = dim
         out = j.select("rid", "doc_id").dropDuplicates(["rid", "doc_id"])
@@ -240,7 +162,7 @@ def region_query_batch(
         )
     tagged: list[DataFrame] = []
     for name, poly in regions:
-        for p in _one_region_parts(spark, probe, poly, grid, res, pop):
+        for p in _one_region_parts(spark, probe, poly, grid, res, stats):
             tagged.append(p.select(F.lit(name).alias("region"), "doc_id"))
     if not tagged:
         return spark.range(0).select(
@@ -287,14 +209,13 @@ def region_query_batch_counts(
         # are invalid; the per-region fallback would index parts[0])
         return local_frame(spark, "region string, n_docs long", [[], []])
     probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res))
-    key = (id(mcells), grid, res)
-    pop = populated_cells(probe, key, source=mcells)
-    if pop is not None:
-        dim = _batch_dim(spark, probe, regions, grid, res, pop, pop_key=key)
+    stats = cell_stats(mcells, grid, res)
+    if stats is not None:
+        dim = _batch_dim(spark, probe, regions, grid, res, stats)
         if dim is not None:
             j, names = dim
             return _mask_counts(j, names)
-        preds = _batch_preds_sql(regions, grid, res, pop)
+        preds = _batch_preds_sql(regions, grid, res, stats)
         if preds is not None:
             # fallback bitmap over run-length BETWEEN predicates — SQL
             # STRINGS: ~50 py4j calls instead of ~10^4 Column-building
@@ -394,12 +315,13 @@ def _runs(arr: np.ndarray, step: int) -> list:
 MAX_BATCH_RUNS = 50_000
 
 
-def _batch_preds_sql(regions: list, grid: str, res: int, pop: np.ndarray):
+def _batch_preds_sql(regions: list, grid: str, res: int, stats: CellStats):
     """[(name, sql_bool_expr)] for the bitmap batch lowering, or None when
     the compressed coverings exceed MAX_BATCH_RUNS (plan too large —
     per-region broadcast paths take over)."""
     from ..functions.geo import pip_sql
 
+    pop = stats.cells
     step = get_grid(grid).lattice_step(res)
     out = []
     total_runs = 0
@@ -443,8 +365,7 @@ def _batch_dim(
     regions: list,
     grid: str,
     res: int,
-    pop: np.ndarray | None,
-    pop_key: tuple | None = None,
+    stats: CellStats | None,
 ):
     """Batched lowering: ONE broadcast join of ``probe`` against the batch's
     combined pruned covering as a dimension table ``(cell_id, rid,
@@ -456,16 +377,17 @@ def _batch_dim(
     between cluster sizes (north_rule).  Query ids stay INTs in the wide
     path (strings only in the final tiny projection) so the join/dedup rows
     are primitive-only.  Returns (joined-and-filtered df with ``rid``,
-    names list), or None when ineligible (no driver-side populated list, or
+    names list), or None when ineligible (no driver-side cell stats, or
     combined covering above MAX_LITERAL_CELLS).
 
-    ``pop_key``: _POP_CACHE key whose per-cell row counts bound the
-    PIP-evaluated rows; when the bound is known and small the gate uses the
-    polygon-independent interpreted PIP form (no per-polygon codegen — see
-    PIP_HOF_MAX_ROWS), otherwise the unrolled codegen form that scales.
+    The stats' per-cell row counts bound the PIP-evaluated rows; when the
+    bound is small the gate uses the polygon-independent interpreted PIP
+    form (no per-polygon codegen — see PIP_HOF_MAX_ROWS), otherwise the
+    unrolled codegen form that scales.
     """
-    if pop is None:
+    if stats is None:
         return None
+    pop = stats.cells
     per_region = []
     total = 0
     for name, poly in regions:
@@ -502,21 +424,8 @@ def _batch_dim(
     # per (row × matching rid), so overlapping regions' shared boundary
     # cells count once per region (review r06 — the union bound
     # undercounted exactly for large overlapping batches)
-    all_bnd = [bnd for _n, _p, _f, bnd in per_region if len(bnd)]
-    if not all_bnd:
-        bnd_rows = 0
-    elif pop_key is None:
-        bnd_rows = None
-    else:
-        bnd_rows = 0
-        for bnd in all_bnd:
-            b = _pop_row_bound(pop_key, bnd)
-            if b is None:
-                bnd_rows = None
-                break
-            bnd_rows += b
-    pip_form = (pip_hof_sql if bnd_rows is not None
-                and bnd_rows <= PIP_HOF_MAX_ROWS else pip_sql)
+    bnd_rows = sum(stats.row_bound(bnd) for *_, bnd in per_region)
+    pip_form = pip_hof_sql if bnd_rows <= PIP_HOF_MAX_ROWS else pip_sql
     whens = " ".join(
         f"WHEN rid = {rid} THEN ({pip_form('lat', 'lon', poly)})"
         for rid, (_name, poly, _fulls, bnd) in enumerate(per_region)
@@ -532,13 +441,14 @@ def _one_region_parts(
     poly: np.ndarray,
     grid: str,
     res: int,
-    pop: np.ndarray | None,
+    stats: CellStats | None,
 ) -> list:
     """Per-polygon plan fragments (doc_id DataFrames) — shared by the
     single-query and batched entry points."""
     g = get_grid(grid)
     full, boundary = cached_covering(grid, poly, res)
     parts: list[DataFrame] = []
+    pop = None if stats is None else stats.cells
     if pop is not None:
         # prune the covering to POPULATED cells driver-side (r01 VERDICT
         # fix: no BroadcastNestedLoopJoin, and empty coverings cost nothing)

@@ -329,17 +329,16 @@ class Planner:
             cached_covering,
             cells_df,
             expand_full_to_populated,
-            populated_cells,
         )
+        from ..operators.cell_stats import cell_stats
 
         ctx = self.ctx
         g = get_grid(ctx.grid)
         full, boundary = cached_covering(ctx.grid, poly, ctx.res)
         spark = ctx.spark
         parts: list[DataFrame] = []
-        pop = populated_cells(
-            ctx.ctotals, (id(ctx.ctotals), ctx.grid, ctx.res), source=ctx.ctotals
-        )
+        stats = cell_stats(ctx.mcells, ctx.grid, ctx.res)
+        pop = None if stats is None else stats.cells
         fulls = None
         if pop is not None:
             fulls = expand_full_to_populated(ctx.grid, full, pop, ctx.res)
@@ -380,22 +379,17 @@ class Planner:
             bdf = F.broadcast(cells_df(spark, boundary, "bcell"))
             cand = ctx.mcells.join(bdf, F.col("cell_id") == F.col("bcell"))
             # PIP form choice mirrors region_query._batch_dim: when the
-            # memoized mention-cell row counts (populated by any earlier
-            # region query over the same table) bound the boundary rows
+            # context's mention-cell row counts bound the boundary rows
             # below PIP_HOF_MAX_ROWS, the polygon-independent interpreted
             # form skips the per-polygon codegen; otherwise the unrolled
             # codegen form that scales.  Bit-identical either way.
             from ..functions.geo import pip_hof_sql
-            from ..operators.region_query import (
-                PIP_HOF_MAX_ROWS,
-                _pop_row_bound,
-            )
-            bnd_rows = _pop_row_bound(
-                (id(ctx.mcells), ctx.grid, ctx.res),
-                np.asarray(boundary, np.int64))
+            from ..operators.region_query import PIP_HOF_MAX_ROWS
+
             pip_gate = (
                 F.expr(pip_hof_sql("lat", "lon", poly))
-                if bnd_rows is not None and bnd_rows <= PIP_HOF_MAX_ROWS
+                if stats is not None
+                and stats.row_bound(boundary) <= PIP_HOF_MAX_ROWS
                 else pip_col(F.col("lat"), F.col("lon"), poly))
             pm = (
                 cand.where(pip_gate)

@@ -47,6 +47,57 @@ def _size_bytes(conf_val: str, default: int) -> int:
         return default
 
 
+def _data_file_sizes(path: str) -> list[int]:
+    """Byte sizes of the files a parquet read of ``path`` scans: Spark's
+    file index skips names starting with ``_`` or ``.`` (``_SUCCESS``,
+    ``.crc`` checksums), in directories too."""
+    import os
+
+    if os.path.isfile(path):
+        return [os.path.getsize(path)]
+    sizes = []
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        sizes += [os.path.getsize(os.path.join(dirpath, f))
+                  for f in files if not f.startswith(("_", "."))]
+    return sizes
+
+
+def estimated_scan_partitions(spark: SparkSession, path: str) -> int | None:
+    """The partition count Spark's file scan of ``path`` will plan, from
+    file sizes alone — Spark's own ``FilePartition`` arithmetic, no job:
+
+      * bytesPerCore = (Σ sizes + nFiles·openCost) / minPartitionNum;
+      * maxSplitBytes = min(maxPartitionBytes, max(openCost, bytesPerCore));
+      * each file splits at maxSplitBytes; splits sort by size, descending;
+      * next-fit packing into bins of maxSplitBytes, each split padded by
+        openCost.
+
+    None when ``path`` holds no data file (e.g. a non-filesystem source)."""
+    sizes = [sz for sz in _data_file_sizes(path) if sz > 0]
+    if not sizes:
+        return None
+    conf = spark.conf
+    max_bytes = _size_bytes(
+        conf.get("spark.sql.files.maxPartitionBytes", "134217728b"), 128 << 20)
+    open_cost = _size_bytes(
+        conf.get("spark.sql.files.openCostInBytes", "4194304b"), 4 << 20)
+    min_parts = int(
+        conf.get("spark.sql.files.minPartitionNum", None)
+        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism)
+    per_core = (sum(sizes) + len(sizes) * open_cost) // min_parts
+    split = min(max_bytes, max(open_cost, per_core))
+    splits = sorted((min(split, sz - off) for sz in sizes
+                     for off in range(0, sz, split)), reverse=True)
+    bins, fill = 0, None
+    for sp in splits:
+        if fill is None or fill + sp > split:
+            bins, fill = bins + 1, 0
+        fill += sp + open_cost
+    return bins
+
+
 def ensure_scan_parallelism(df: DataFrame, spark: SparkSession,
                             key: str = "doc_id",
                             input_path: str | None = None) -> DataFrame:
@@ -61,38 +112,17 @@ def ensure_scan_parallelism(df: DataFrame, spark: SparkSession,
     SPARK-38388).
 
     ``input_path``: when the caller knows the file(s) behind ``df``, the
-    split count is ESTIMATED from file sizes with Spark's own formula
-    (maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
-    totalBytes / defaultParallelism))) instead of planning the scan —
-    ``df.rdd.getNumPartitions()`` forces a full physical plan + RDD
-    conversion, measured ~0.5-1 s of serial driver time on a cold session
-    (r06 third pass).  Without a path the exact planned count is used as
-    before."""
+    split count is computed from file sizes (estimated_scan_partitions)
+    instead of planning the scan — ``df.rdd.getNumPartitions()`` forces a
+    full physical plan + RDD conversion, measured ~0.5-1 s of serial driver
+    time on a cold session (r06 third pass).  Without a path the exact
+    planned count is used."""
     n = spark.sparkContext.defaultParallelism
-    if input_path is not None:
-        import os
-
-        sizes = []
-        if os.path.isdir(input_path):
-            for dirpath, _d, files in os.walk(input_path):
-                sizes += [os.path.getsize(os.path.join(dirpath, f))
-                          for f in files if f.endswith(".parquet")]
-        elif os.path.exists(input_path):
-            sizes = [os.path.getsize(input_path)]
-        if sizes:
-            mpb = _size_bytes(
-                spark.conf.get("spark.sql.files.maxPartitionBytes",
-                               "134217728b"), 128 << 20)
-            open_cost = _size_bytes(
-                spark.conf.get("spark.sql.files.openCostInBytes", "4194304b"),
-                4 << 20)
-            split = max(1, min(mpb, max(open_cost, sum(sizes) // max(1, n))))
-            est = sum(-(-sz // split) for sz in sizes)
-            if est >= n:
-                return df
-            return df.repartition(n, F.col(key))
-        # path missing/empty (non-filesystem source): exact check below
-    if df.rdd.getNumPartitions() >= n:
+    est = (estimated_scan_partitions(spark, input_path)
+           if input_path is not None else None)
+    if est is None:
+        est = df.rdd.getNumPartitions()
+    if est >= n:
         return df
     return df.repartition(n, F.col(key))
 

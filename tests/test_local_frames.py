@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 import numpy as np
 import pytest
@@ -54,8 +55,10 @@ def test_local_frame_round_trips_every_type(spark, n):
 
 def _mcells(spark, grid, res, mentions):
     """mentions: [(doc_id, lat, lon)] → a local mention_cells-shaped frame."""
-    doc, lat, lon = (np.array(c) for c in zip(*mentions))
-    cells = get_grid(grid).cell(lat, lon, res)
+    doc = np.array([m[0] for m in mentions], np.int64)
+    lat = np.array([m[1] for m in mentions], np.float64)
+    lon = np.array([m[2] for m in mentions], np.float64)
+    cells = get_grid(grid).cell(lat, lon, res) if len(doc) else doc
     return local_frame(
         spark, "grid string, res int, doc_id long, lat double, lon double, "
         "cell_id long", [[grid] * len(doc), [res] * len(doc), doc, lat, lon, cells])
@@ -75,8 +78,7 @@ def test_knn_batch_runs_no_rdd_scan(spark):
 def _ctx(spark, mentions):
     from oscar_spatial_index_compare_spark.plans.planner import QueryContext
 
-    mc = _mcells(spark, "s2", 10, mentions) if mentions else local_frame(
-        spark, "doc_id long, lat double, lon double, cell_id long", [[]] * 4)
+    mc = _mcells(spark, "s2", 10, mentions)
     by_cell: dict[int, list[int]] = {}
     for r in mc.collect():
         by_cell.setdefault(r.cell_id, []).append(r.doc_id)
@@ -100,28 +102,102 @@ def test_region_cqr_rect_runs_no_rdd_scan(spark):
 
 
 def test_pop_row_bound_empty_populated_list():
-    """An empty memoized populated list bounds every cell set at 0 rows
-    (it used to index the empty array and raise IndexError)."""
-    from oscar_spatial_index_compare_spark.operators import region_query as rq
+    """An empty populated list bounds every cell set at 0 rows (it used to
+    index the empty array and raise IndexError)."""
+    from oscar_spatial_index_compare_spark.operators.cell_stats import CellStats
 
-    key = ("test-empty", "s2", 10)
-    rq._POP_CACHE[key] = (None, np.empty(0, np.int64), np.empty(0, np.int64))
-    try:
-        assert rq._pop_row_bound(key, np.array([5, 7], np.int64)) == 0
-    finally:
-        rq._POP_CACHE.pop(key, None)
+    empty = np.empty(0, np.int64)
+    stats = CellStats("s2", empty, empty, empty, mstar=0, docs=0)
+    assert stats.row_bound(np.array([5, 7], np.int64)) == 0
 
 
 def test_rect_leaf_over_zero_mention_context_is_empty(spark, monkeypatch):
-    """The distributed covering path hands the unpruned boundary to the PIP
-    bound; over a zero-mention context that must yield no docs, not raise."""
+    """Both distributed covering paths over a zero-mention context yield no
+    docs: the unpruned boundary against empty stats (covering too big to
+    ship), and no stats at all (populated list above the driver cap)."""
+    from oscar_spatial_index_compare_spark.operators import cell_stats as cs
     from oscar_spatial_index_compare_spark.operators import region_query as rq
     from oscar_spatial_index_compare_spark.plans.planner import Planner
 
+    rect = "$rect:9.9,10.6,9.9,10.6"
+    with monkeypatch.context() as m:
+        m.setattr(rq, "MAX_BROADCAST_CELLS", -1)
+        assert Planner(_ctx(spark, [])).docs(rect).count() == 0
+    monkeypatch.setattr(cs, "MAX_DRIVER_CELLS", -1)
     ctx = _ctx(spark, [])
-    rq.populated_cells(ctx.mcells, (id(ctx.mcells), "s2", 10))
-    monkeypatch.setattr(rq, "MAX_DRIVER_POP_CELLS", -1)  # ctotals: too big
-    assert Planner(ctx).docs("$rect:9.9,10.6,9.9,10.6").count() == 0
+    assert Planner(ctx).docs(rect).count() == 0
+    assert cs.cell_stats(ctx.mcells, "s2", 10) is None
+
+
+def test_stats_never_alias_across_frames(spark):
+    """Stats live on the frame they describe: after frame A is dropped and
+    collected, new frames B over other mentions answer region and kNN
+    queries exactly as their own brute force does (an id()-keyed memo
+    once handed a recycled id another table's populated cells)."""
+    import gc
+
+    from oscar_spatial_index_compare_spark.functions.geo import haversine_np
+    from oscar_spatial_index_compare_spark.grids.base import point_in_poly
+    from oscar_spatial_index_compare_spark.operators.knn import knn_docs
+    from oscar_spatial_index_compare_spark.operators.region_query import (
+        region_query_docs,
+    )
+
+    rect = np.array([[9.9, 9.9], [9.9, 10.6], [10.6, 10.6], [10.6, 9.9]])
+    q = (10.0, 10.0, 2)
+
+    def engine(mentions):
+        s2 = _mcells(spark, "s2", 10, mentions)
+        h3 = _mcells(spark, "h3", 5, mentions)
+        region = region_query_docs(spark, s2, rect, "s2", 10).collect()
+        knn = knn_docs(spark, h3, [(0, *q)], "h3", 5).collect()
+        return (sorted(r.doc_id for r in region),
+                [r.doc_id for r in sorted(knn, key=lambda r: r.rank)])
+
+    def brute(mentions):
+        doc, lat, lon = (np.array(c) for c in zip(*mentions))
+        inside = point_in_poly(lat, lon, rect)
+        km = haversine_np(q[0], q[1], lat, lon)
+        best: dict[int, float] = {}
+        for d, k in zip(doc.tolist(), km.tolist()):
+            best[d] = min(best.get(d, k), k)
+        near = sorted(best, key=lambda d: (best[d], d))[: q[2]]
+        return sorted(set(doc[inside].tolist())), near
+
+    a = [(1, 10.0, 10.0), (2, 10.3, 10.4), (3, 20.0, 20.0)]
+    assert engine(a) == brute(a)
+    del a
+    gc.collect()
+    for shift in (10, 20):
+        b = [(shift + 1, 10.5, 10.05), (shift + 2, 9.95, 10.55),
+             (shift + 3, 10.02, 10.03), (shift + 3, 40.0, 40.0),
+             (shift + 4, -5.0, 12.0)]
+        assert engine(b) == brute(b)
+        gc.collect()
+
+
+def _normalized(plan: str) -> str:
+    return re.sub(r"#\d+|plan_id=\d+", "#", plan)
+
+
+def test_rect_leaf_pip_form_is_stable(spark):
+    """On a fresh context a $rect leaf plans the same PIP form before and
+    after a region query over the same frame: the form depends on the
+    context's stats, never on which query happened to run first.  (The
+    analyzed plan: over local frames the optimizer folds the filter.)"""
+    from oscar_spatial_index_compare_spark.operators.region_query import (
+        region_query_docs,
+    )
+    from oscar_spatial_index_compare_spark.plans.planner import Planner
+
+    ctx = _ctx(spark, [(1, 10.0, 10.0), (2, 10.3, 10.4), (3, 20.0, 20.0)])
+    rect = np.array([[9.95, 9.95], [9.95, 10.5], [10.5, 10.5], [10.5, 9.95]])
+    before = _analyzed(Planner(ctx)._region_cqr(rect))
+    poly = np.array([[9.9, 9.9], [9.9, 10.6], [10.6, 10.6], [10.6, 9.9]])
+    region_query_docs(spark, ctx.mcells, poly, "s2", 10).collect()
+    after = _analyzed(Planner(ctx)._region_cqr(rect))
+    assert "aggregate(" in before  # the polygon-independent HOF form
+    assert _normalized(before) == _normalized(after)
 
 
 # ---- AST guard: no list-fed createDataFrame in the package ---------------
@@ -173,3 +249,55 @@ def test_no_list_fed_create_dataframe_in_package():
         if (lines := _list_fed_calls(p.read_text()))
     }
     assert not bad, f"list-fed createDataFrame (use session.local_frame): {bad}"
+
+
+# ---- AST guard: no id()-keyed state, no threads in the operators ---------
+
+def _id_calls(src: str) -> list[int]:
+    """Line numbers of ``id(...)`` calls."""
+    return [node.lineno for node in ast.walk(ast.parse(src))
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+            and node.func.id == "id"]
+
+
+def _thread_imports(src: str) -> list[int]:
+    """Line numbers of ``threading`` or ``concurrent.futures`` imports."""
+    bad = []
+    for node in ast.walk(ast.parse(src)):
+        names = ([a.name for a in node.names] if isinstance(node, ast.Import)
+                 else [node.module or ""] if isinstance(node, ast.ImportFrom)
+                 else [])
+        if any(n == "threading" or n.split(".")[0] == "concurrent"
+               for n in names):
+            bad.append(node.lineno)
+    return bad
+
+
+def test_guard_flags_id_calls_and_thread_imports():
+    src = (
+        "key = (id(df), grid, res)\n"
+        "import threading\n"
+        "from concurrent.futures import ThreadPoolExecutor\n"
+        "import concurrent.futures as cf\n"
+        "from concurrent import futures\n"
+        "region_by_id(3); obj.id(4); ids = [id]\n"
+        "import os, threading\n"
+        "from .threading_notes import x; import threadpoolctl\n"
+    )
+    assert _id_calls(src) == [1]
+    assert _thread_imports(src) == [2, 3, 4, 5, 7]
+
+
+@pytest.mark.parametrize("sub, checks", [
+    ("operators", (_id_calls, _thread_imports)),
+    ("plans", (_id_calls,)),
+], ids=["operators", "plans"])
+def test_no_id_keys_or_threads_in_query_layers(sub, checks):
+    """Query-side state lives on the objects it describes (no id() keys),
+    and the operators start no threads of their own."""
+    bad = {
+        str(p.relative_to(PACKAGE)): lines
+        for p in sorted((PACKAGE / sub).rglob("*.py"))
+        if (lines := [n for check in checks for n in check(p.read_text())])
+    }
+    assert not bad, f"id() call or thread import: {bad}"

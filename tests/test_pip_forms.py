@@ -52,64 +52,36 @@ def test_pip_form_choice_result_identical(spark, engine, monkeypatch):
 
 
 def test_pop_row_bound_exact(spark, engine):
-    """The memoized per-cell row counts sum to the true row count of any
-    cell subset (the bound that gates the interpreted PIP form)."""
-    from oscar_spatial_index_compare_spark.operators import region_query as rq
+    """The per-cell row counts sum to the true row count of any cell
+    subset (the bound that gates the interpreted PIP form)."""
+    from oscar_spatial_index_compare_spark.operators.cell_stats import cell_stats
 
     ctx = engine.context("s2", 10)
     probe = ctx.mcells.where((F.col("grid") == "s2") & (F.col("res") == 10))
-    key = (id(ctx.mcells), "s2", 10)
-    pop = rq.populated_cells(probe, key, source=ctx.mcells)
-    assert pop is not None and len(pop) > 0
-    subset = pop[:: max(1, len(pop) // 17)]
-    bound = rq._pop_row_bound(key, subset)
+    stats = cell_stats(ctx.mcells, "s2", 10)
+    assert stats is not None and len(stats.cells) > 0
+    assert (np.diff(stats.cells) > 0).all()
+    subset = stats.cells[:: max(1, len(stats.cells) // 17)]
     truth = probe.where(
         F.col("cell_id").isin([int(c) for c in subset])).count()
-    assert bound == truth
+    assert stats.row_bound(subset) == truth
     # total over all cells == total probe rows
-    assert rq._pop_row_bound(key, pop) == probe.count()
-    # unknown key -> None (callers then take the codegen form)
-    assert rq._pop_row_bound(("nope", 0, 0), subset) is None
-
-
-def test_preloaded_knn_counts_match_self_sufficient_path(spark, tmp_path):
-    """The context-open preload fills knn's stats memo from the STORED
-    aggregates (cell_totals.n_docs + one base scan); it must equal what
-    knn._cell_doc_counts derives from mention_cells on its own."""
-    import time
-
-    from oscar_spatial_index_compare_spark.engine import Engine
-    from oscar_spatial_index_compare_spark.operators import knn as K
-    from tests.conftest import SF_DIR
-
-    eng = Engine(spark, SF_DIR, catalog_root=str(tmp_path / "cat"))
-    ctx = eng.context("h3", 6)
-    key = (id(ctx.mcells), "h3", 6)
-    for _ in range(120):  # preload runs in a daemon thread — wait for it
-        if key in K._COUNTS_CACHE:
-            break
-        time.sleep(0.25)
-    assert key in K._COUNTS_CACHE, "preload did not populate the knn memo"
-    pre = K._COUNTS_CACHE.pop(key)  # drop it and recompute from mcells
-    probe = ctx.mcells.where(
-        (F.col("grid") == "h3") & (F.col("res") == 6)).select(
-        "doc_id", "lat", "lon", "cell_id")
-    counts, mstar, ndocs = K._cell_doc_counts(probe, ctx.mcells, key)
-    assert pre[1] == counts
-    assert (pre[2], pre[3]) == (mstar, ndocs)
+    assert stats.row_bound(stats.cells) == probe.count()
+    # unpopulated ids add nothing
+    assert stats.row_bound(np.array([-1, 1], np.int64)) == 0
 
 
 def test_knn_cell_counts_exact(spark, engine):
-    """count_distinct rewrite of _cell_doc_counts returns exactly the
-    brute-force per-cell distinct doc counts and (M*, D) spread."""
-    from oscar_spatial_index_compare_spark.operators import knn as K
+    """cell_stats returns exactly the brute-force per-cell distinct doc
+    counts and (M*, D) spread."""
+    from oscar_spatial_index_compare_spark.operators.cell_stats import cell_stats
 
     ctx = engine.context("h3", 6)
     probe = ctx.mcells.where(
         (F.col("grid") == "h3") & (F.col("res") == 6)).select(
         "doc_id", "lat", "lon", "cell_id")
-    counts, mstar, ndocs = K._cell_doc_counts(
-        probe, ctx.mcells, (id(ctx.mcells), "h3", 6))
+    stats = cell_stats(ctx.mcells, "h3", 6)
+    counts = dict(zip(stats.cells.tolist(), stats.n_docs.tolist()))
     pairs = {(r.cell_id, r.doc_id) for r in
              probe.select("cell_id", "doc_id").dropDuplicates().collect()}
     exp_counts: dict[int, int] = {}
@@ -118,5 +90,5 @@ def test_knn_cell_counts_exact(spark, engine):
         exp_counts[c] = exp_counts.get(c, 0) + 1
         per_doc[d] = per_doc.get(d, 0) + 1
     assert counts == exp_counts
-    assert mstar == max(per_doc.values())
-    assert ndocs == len(per_doc)
+    assert stats.mstar == max(per_doc.values())
+    assert stats.docs == len(per_doc)

@@ -8,11 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from oscar_spatial_index_compare_spark.grids.base import get_grid
+from oscar_spatial_index_compare_spark.operators.cell_stats import cell_stats
 from oscar_spatial_index_compare_spark.operators.region_query import (
     _batch_preds_sql,
     _one_region_parts,
     _runs,
-    populated_cells,
     region_query_batch_counts,
     region_query_docs,
 )
@@ -57,11 +57,11 @@ def test_single_region_dim_join_matches_fallback(engine, spark, rname):
     ctx = engine.context("s2", 10)
     poly = region_by_name(rname)
     probe = ctx.mcells.where((F.col("grid") == "s2") & (F.col("res") == 10))
-    pop = populated_cells(probe, (id(ctx.mcells), "s2", 10), source=ctx.mcells)
-    assert pop is not None
+    stats = cell_stats(ctx.mcells, "s2", 10)
+    assert stats is not None
     got = {r.doc_id for r in
            region_query_docs(spark, ctx.mcells, poly, "s2", 10).collect()}
-    parts = _one_region_parts(spark, probe, poly, "s2", 10, pop)
+    parts = _one_region_parts(spark, probe, poly, "s2", 10, stats)
     want = set()
     for p in parts:
         want |= {r.doc_id for r in p.collect()}
@@ -71,10 +71,9 @@ def test_single_region_dim_join_matches_fallback(engine, spark, rname):
 def test_batch_counts_matches_per_region_docs(engine, spark):
     ctx = engine.context("s2", 10)
     regs = [(name, poly) for _rid, name, _lvl, poly in REGIONS[:6]]
-    probe = ctx.mcells.where((F.col("grid") == "s2") & (F.col("res") == 10))
-    pop = populated_cells(probe, (id(ctx.mcells), "s2", 10), source=ctx.mcells)
-    assert pop is not None
-    assert _batch_preds_sql(regs, "s2", 10, pop) is not None, \
+    stats = cell_stats(ctx.mcells, "s2", 10)
+    assert stats is not None
+    assert _batch_preds_sql(regs, "s2", 10, stats) is not None, \
         "bitmap predicate path must fire for this test to mean anything"
     got = {r.region: r.n_docs for r in region_query_batch_counts(
         spark, ctx.mcells, regs, "s2", 10).collect()}
