@@ -134,8 +134,7 @@ def explode_ancestors(df: DataFrame, grid: str, res: int, min_level: int,
 
 
 def hcqr_postings_build(tpostings: DataFrame, ctotals: DataFrame, grid: str,
-                        res: int, pop_anc: DataFrame | None = None,
-                        boundary_sink: list | None = None) -> DataFrame:
+                        res: int, pop_anc: DataFrame | None = None) -> DataFrame:
     """Pre-build the per-token compactified HCQR payload table
     ``(token, pixel_id, level, is_fm, doc_ids)`` — the reference's static
     HCQR index create step (``OscarSearchHCQRTextIndexCreator``,
@@ -173,10 +172,6 @@ def hcqr_postings_build(tpostings: DataFrame, ctotals: DataFrame, grid: str,
         # first action, block read for the second — r06)
         .localCheckpoint(eager=False)
     )
-    if boundary_sink is not None:
-        # let the (create-time) caller free the checkpoint blocks once the
-        # table is written — they are dead after the one write action
-        boundary_sink.append(cand)
     withp = cand.withColumn("pp", parent1_col(grid, F.col("pixel_id"))).withColumn(
         "plvl", (F.col("level") - 1).cast("int")
     )

@@ -8,10 +8,9 @@ machinery is replaced by one declarative pipeline:
     mentions → (cell_id per grid/res) → groupBy → sorted doc-id postings
 
 Scale notes (the part that must survive 100 TB):
-  * ``mention_cells`` is the big fact table — written partitioned by
-    ``(grid, res)`` and bucketed/sorted by ``cell_id`` so region-query joins
-    co-locate and parquet min-max stats prune by cell range (S2 ids make
-    descendant ranges contiguous).
+  * ``mention_cells`` is the big fact table — one table per (grid, res),
+    hash-clustered and sorted by ``cell_id`` so parquet min-max stats prune
+    by cell range (S2 ids make descendant ranges contiguous).
   * the postings groupBy is the one unavoidable shuffle; map-side partial
     aggregation (collect_list is partial-aggregating; inputs are distinct
     by construction, see _doc_sets_by_cell) + AQE skew split keep hot

@@ -6,11 +6,10 @@ matched items with per-trixel postings (two-pointer merge,
 vs partial-match by comparing matched-count to the trixel total
 (``src/OscarSearchSgIndex.cpp:178-197``).
 
-Spark shape: one chained DataFrame —
-
-    token_docs (explode text) ⋈ doc_cells → groupBy(token, cell)
-      → n_matched, matched doc array
-      ⋈ cell_totals → is_fm = (n_matched == n_total); doc_ids NULL iff fm
+Spark shape (``token_postings_from_base``): one (doc, cell) row carrying
+the doc's token hashes → exchange on (cell, salt) → an Arrow kernel groups
+by (token, cell) → n_matched, matched doc array; is_fm = (n_matched ==
+cell total); doc_ids NULL iff fm.
 
 The fm bit is the reference's "store 1 bit instead of the item list"
 compression (SURVEY §4): fm rows carry NULL doc_ids and flatten() recovers
@@ -58,43 +57,6 @@ def sorted_list_agg(spark):
         spark.conf.set(_OBJ_HASH_AGG_CONF, old)
 
 
-def token_docs(docs: DataFrame) -> DataFrame:
-    """(token, doc_id) distinct pairs from the document token stream."""
-    return docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("token")
-    )
-
-
-def token_postings(tdocs: DataFrame, dcells: DataFrame, ctotals: DataFrame) -> DataFrame:
-    """→ (token, qt, grid, res, cell_id, is_fm, doc_ids, n_docs).
-
-    ``dcells``: doc_cells at one or more (grid, res); ``ctotals``:
-    cell_totals for the same keys.
-    """
-    # tdocs (token,doc) and dcells (doc,cell) are both distinct, so the join
-    # rows are distinct per (token,grid,res,cell,doc) → collect_list/count
-    # are exact (and scale — see token_postings_from_base)
-    j = tdocs.join(dcells, "doc_id")
-    matched = j.groupBy("token", "grid", "res", "cell_id").agg(
-        F.array_sort(F.collect_list("doc_id")).alias("m_docs"),
-        F.count("*").alias("n_matched"),
-    )
-    out = matched.join(
-        ctotals.select("grid", "res", "cell_id", F.col("n_docs").alias("n_total")),
-        ["grid", "res", "cell_id"],
-    )
-    return out.select(
-        "token",
-        F.lit("exact").alias("qt"),
-        "grid", "res", "cell_id",
-        (F.col("n_matched") == F.col("n_total")).alias("is_fm"),
-        F.when(F.col("n_matched") == F.col("n_total"), F.lit(None)).otherwise(
-            F.col("m_docs")
-        ).alias("doc_ids"),
-        F.col("n_matched").cast("long").alias("n_docs"),
-    )
-
-
 # docs per (cell, salt) group of the Arrow-grouped build: bounds both the
 # pandas group's memory (≈ target · |toks| token refs) and the straggler
 # tail (a 10M-doc metro cell fans out to 200 salted groups, not one task)
@@ -105,6 +67,15 @@ TARGET_GROUP_DOCS = 50_000
 # colliding PAIRS at a 100M-token vocabulary), so hitting this cap means a
 # broken hash, not a big corpus
 MAX_COLLIDING_TOKENS = 10_000
+
+
+def vocab_collisions(vh: DataFrame) -> list[str]:
+    """The plan-time collision audit over a (token, th = xxhash64(token))
+    vocabulary: the sorted tokens whose hash another token shares."""
+    rows = (vh.groupBy("th").agg(F.collect_list("token").alias("ts"))
+            .where(F.size("ts") > 1).select("ts")
+            .limit(MAX_COLLIDING_TOKENS + 1).collect())
+    return sorted({t for r in rows for t in r.ts})
 
 
 def _salted_pairs(b: DataFrame, ctb: DataFrame, no_salt: bool,
@@ -434,13 +405,8 @@ def _tp_hashed(base: DataFrame, ctb: DataFrame, grid: str, res: int,
     else:
         vh = (base.select(F.explode("toks").alias("token")).distinct()
               .select("token", F.xxhash64("token").alias("th")))
-        if _collide_tokens is None:
-            coll_rows = (vh.groupBy("th").agg(F.collect_list("token").alias("ts"))
-                         .where(F.size("ts") > 1).select("ts")
-                         .limit(MAX_COLLIDING_TOKENS + 1).collect())
-            coll = sorted({t for r in coll_rows for t in r.ts})
-        else:
-            coll = sorted(set(_collide_tokens))
+        coll = (vocab_collisions(vh) if _collide_tokens is None
+                else sorted(set(_collide_tokens)))
     if len(coll) > MAX_COLLIDING_TOKENS:
         raise RuntimeError(
             f"token build: {len(coll)} xxhash64-colliding tokens exceeds "

@@ -44,7 +44,7 @@ mcells AS (
 )"""
 
 
-def _token_docs_sql(pat: str, qt: str) -> str:
+def _token_leaf_sql(pat: str, qt: str) -> str:
     if qt == "exact":
         cond = f"list_contains(string_split(text, ' '), '{pat}')"
     elif qt == "prefix":
@@ -62,7 +62,7 @@ def _support_sql(n: Node, res: int) -> str:
     if n.op == "token":
         return (
             f"SELECT doc_id, cell_id FROM mcells WHERE doc_id IN "
-            f"({_token_docs_sql(*n.args)})"
+            f"({_token_leaf_sql(*n.args)})"
         )
     if n.op in ("region", "poly", "rect"):
         import numpy as np

@@ -1,22 +1,21 @@
 """Table catalog with snapshot lineage + resumable checkpoints (SURVEY S3,
 M8; north_rule: "resumable from checkpoint with per-partition lineage +
-metrics logged per snapshot").
+metrics logged per snapshot"), and the one scheduler that builds it.
 
 Reference analog: ``osi-compare-create`` serializes the index to
 ``outdir/index`` + ``outdir/search`` and re-opens them read-only
 (``apps/mainc.cpp:84-125``, ``src/static-htm-index.cpp:202-207``).  Here a
-"serialized index" is a table directory; production target is Iceberg
-(``writeTo(...).createOrReplace()`` — used automatically when a Spark
-catalog is configured); the sandbox fallback is parquet + a JSON snapshot
-log carrying the same information Iceberg snapshots would:
+"serialized index" is a parquet table directory plus a JSON snapshot log:
 
-  snapshots.json: [{snapshot_id, table, stage, inputs (lineage),
-                    n_rows, n_files, bytes, partition_columns, wall_sec}]
+  snapshots.json: [{snapshot_id, table, stage, fingerprint, inputs
+                    (lineage), params, n_rows, n_files, bytes,
+                    start, end (epoch s), wall_sec (= end - start)}]
 
-Resume semantics: ``materialize`` is a no-op returning the stored table when
-a snapshot for (table, fingerprint) already exists — a pipeline re-run after
-a crash skips every completed stage (checkpoint gating).  The fingerprint
-covers the stage name + input lineage, so changed inputs re-materialize.
+A build is a list of ``TableSpec`` nodes run by ``Catalog.build``.  Resume
+semantics: a table whose (stage, lineage, params) fingerprint already has
+a snapshot is read back and its ``build`` is never called, so a pipeline
+re-run after a crash skips every completed table (checkpoint gating) and a
+query-side open constructs no build plan at all.
 """
 
 from __future__ import annotations
@@ -26,25 +25,83 @@ import json
 import os
 import threading
 import time
+from collections import Counter
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from dataclasses import dataclass
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.token_index import sorted_list_agg
+
+# value node a ``cluster_by`` spec must list among its deps: the partition
+# count of its clustered write
+WRITE_PARTS = "write_parts"
+
+
+@dataclass(frozen=True)
+class TableSpec:
+    """One node of a build DAG.  ``build`` gets ``{dep: value}`` for its
+    ``deps`` and returns the frame to store.  ``stage=None`` marks a value
+    node (a count, a vocabulary): computed only when a spec that needs it
+    is built, never stored.  ``inputs`` is the fingerprint lineage
+    (default: the table deps); ``cluster_by`` hash-clusters the write on one
+    column into ``WRITE_PARTS`` partitions, ``sort_within`` sorts each."""
+
+    name: str
+    stage: str | None
+    deps: tuple[str, ...]
+    build: Callable[[dict], Any]
+    cluster_by: str | None = None
+    sort_within: tuple[str, ...] = ()
+    inputs: tuple[str, ...] | None = None
+    params: dict | None = None
+
+
+def _plan(specs: list[TableSpec], targets: list[str],
+          stored: Callable[[TableSpec], bool]) -> tuple[dict, list[str]]:
+    """→ (specs to build in dependency order, stored tables to read back).
+    Only what a target needs is visited; a stored table's deps are not."""
+    by = {s.name: s for s in specs}
+    order: dict[str, TableSpec] = {}
+    reads: list[str] = []
+
+    def visit(name: str) -> None:
+        if name in order or name in reads:
+            return
+        s = by[name]
+        if s.stage is not None and stored(s):
+            reads.append(name)
+            return
+        for d in s.deps:
+            visit(d)
+        order[name] = s
+
+    for t in targets:
+        visit(t)
+    return order, reads
+
+
+def build_cached(specs: list[TableSpec], targets: list[str]) -> dict:
+    """The in-memory walk of a spec list: dependency order on the calling
+    thread, every table ``.cache()``d instead of written."""
+    order, _ = _plan(specs, targets, lambda s: False)
+    vals: dict = {}
+    for s in order.values():
+        out = s.build({d: vals[d] for d in s.deps})
+        vals[s.name] = out if s.stage is None else out.cache()
+    return {t: vals[t] for t in targets}
+
 
 class Catalog:
-    def __init__(self, spark: SparkSession, root: str, use_iceberg: bool | None = None):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
         self.log_path = os.path.join(root, "snapshots.json")
-        # materialize() may be called from concurrent build threads (the
-        # driver submits independent table writes in parallel to fill the
-        # cluster through stage tails); the log append is read-modify-write
+        # build() writes tables from its pool threads; the log append is
+        # read-modify-write
         self._log_lock = threading.Lock()
-        if use_iceberg is None:
-            use_iceberg = bool(
-                spark.conf.get("spark.sql.catalog.osi", None)
-            )
-        self.use_iceberg = use_iceberg
 
     # -- snapshot log --------------------------------------------------------
     def _log(self) -> list[dict]:
@@ -77,68 +134,76 @@ class Catalog:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    # -- materialize (checkpoint-gated write) ---------------------------------
-    def materialize(
-        self,
-        df,  # DataFrame | Callable[[], DataFrame] (thunk: built only on write)
-        table: str,
-        stage: str,
-        inputs: list[str],
-        partition_by: list[str] | None = None,
-        sort_within: list[str] | None = None,
-        params: dict | None = None,
-        force: bool = False,
-    ) -> DataFrame:
-        """Write ``df`` as a snapshot of ``table`` unless an identical
-        (stage, lineage, params) snapshot already exists; return the stored
-        table either way.  ``sort_within`` pre-sorts partitions (postings
-        sorted by cell_id → parquet min/max stats prune range queries).
+    def read(self, table: str) -> DataFrame:
+        return self.spark.read.parquet(self.path(table))
 
-        ``df`` may be a zero-arg callable returning the DataFrame: it is
-        invoked only when a build is actually needed, so plan constructions
-        that run eager Spark actions (the token build's vocab/collision
-        audit) cost nothing on the checkpoint-gated resume path."""
-        fp = self.fingerprint(stage, inputs, params)
-        if not force and self.has(table, fp):
-            return self.read(table)
-        t0 = time.perf_counter()
-        out = df() if callable(df) else df
-        if sort_within:
-            out = out.sortWithinPartitions(*sort_within)
-        if self.use_iceberg:
-            w = out.writeTo(f"osi.{table}")
-            if partition_by:
-                from pyspark.sql import functions as F
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()
-        else:
-            writer = out.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(self.path(table))
-        wall = time.perf_counter() - t0
-        stored = self.read(table)
-        n_rows = stored.count()
-        n_files, nbytes = self._file_stats(table)
+    # -- build (checkpoint-gated DAG) ----------------------------------------
+    def _lineage(self, s: TableSpec, by: dict) -> tuple[list[str], str]:
+        inputs = list(s.inputs if s.inputs is not None else
+                      [d for d in s.deps if by[d].stage is not None])
+        return inputs, self.fingerprint(s.stage, inputs, s.params)
+
+    def build(self, specs: list[TableSpec], targets: list[str]) -> dict:
+        """Return ``{target: stored frame}``, building on demand whatever a
+        target lacks.  Every spec whose deps are ready runs at once on one
+        pool as wide as the widest layer of the DAG, under one
+        ``sorted_list_agg`` scope; on any failure pending specs are
+        cancelled, running ones finish, and the error re-raises."""
+        by = {s.name: s for s in specs}
+        order, reads = _plan(specs, targets,
+                             lambda s: self.has(s.name, self._lineage(s, by)[1]))
+        vals: dict = {t: self.read(t) for t in reads}
+        if order:
+            depth: dict[str, int] = {}
+            for s in order.values():
+                depth[s.name] = 1 + max(
+                    (depth[d] for d in s.deps if d in depth), default=-1)
+            pool = ThreadPoolExecutor(max(Counter(depth.values()).values()))
+            running: dict = {}
+            with sorted_list_agg(self.spark):
+                try:
+                    while order or running:
+                        for s in [s for s in order.values()
+                                  if all(d in vals for d in s.deps)]:
+                            del order[s.name]
+                            deps = {d: vals[d] for d in s.deps}
+                            running[pool.submit(self._run, s, deps, by)] = s.name
+                        done, _ = wait(running, return_when=FIRST_COMPLETED)
+                        for f in done:
+                            vals[running.pop(f)] = f.result()
+                finally:
+                    pool.shutdown(cancel_futures=True)
+        return {t: vals[t] for t in targets}
+
+    def _run(self, s: TableSpec, deps: dict, by: dict):
+        if s.stage is None:
+            return s.build(deps)
+        inputs, fp = self._lineage(s, by)
+        start = time.time()
+        out = s.build(deps)
+        if s.cluster_by:
+            out = out.repartition(deps[WRITE_PARTS], s.cluster_by)
+        if s.sort_within:
+            out = out.sortWithinPartitions(*s.sort_within)
+        out.write.mode("overwrite").parquet(self.path(s.name))
+        end = time.time()
+        stored = self.read(s.name)
+        n_files, nbytes = self._file_stats(s.name)
         self._append({
-            "snapshot_id": f"{table}-{len(self.snapshots(table))}-{fp}",
-            "table": table,
-            "stage": stage,
+            "snapshot_id": f"{s.name}-{len(self.snapshots(s.name))}-{fp}",
+            "table": s.name,
+            "stage": s.stage,
             "fingerprint": fp,
             "inputs": inputs,
-            "params": params or {},
-            "n_rows": n_rows,
+            "params": s.params or {},
+            "n_rows": stored.count(),
             "n_files": n_files,
             "bytes": nbytes,
-            "partition_columns": partition_by or [],
-            "wall_sec": round(wall, 3),
+            "start": round(start, 3),
+            "end": round(end, 3),
+            "wall_sec": round(end - start, 3),
         })
         return stored
-
-    def read(self, table: str) -> DataFrame:
-        if self.use_iceberg:
-            return self.spark.read.table(f"osi.{table}")
-        return self.spark.read.parquet(self.path(table))
 
     def _file_stats(self, table: str) -> tuple[int, int]:
         n, b = 0, 0
@@ -148,37 +213,3 @@ class Catalog:
                     n += 1
                     b += os.path.getsize(os.path.join(dirpath, fn))
         return n, b
-
-
-def build_index_checkpointed(spark: SparkSession, sf_dir: str, root: str,
-                             grid: str = "s2", res: int = 10) -> Catalog:
-    """The E1 build pipeline (documents → mentions → doc_cells →
-    cell_totals → token_postings) as checkpoint-gated snapshots: rerunning
-    after an interruption skips completed stages."""
-    from ..engine import Engine
-    from ..operators.index_build import cell_totals, doc_cells, mention_cells
-    from ..operators.token_index import token_docs, token_postings
-
-    cat = Catalog(spark, root)
-    eng = Engine(spark, sf_dir, cache=False)
-    m = cat.materialize(
-        eng.mentions, "mentions", "extract_mentions", [sf_dir],
-    )
-    mc = cat.materialize(
-        mention_cells(m, grid, res), "mention_cells", "mention_cells",
-        ["mentions"], partition_by=["grid", "res"], sort_within=["cell_id"],
-        params={"grid": grid, "res": res},
-    )
-    dc = doc_cells(mc)
-    ct = cat.materialize(
-        cell_totals(dc), "cell_totals", "cell_totals", ["mention_cells"],
-        partition_by=["grid", "res"], sort_within=["cell_id"],
-        params={"grid": grid, "res": res},
-    )
-    cat.materialize(
-        token_postings(token_docs(eng.docs), dc, ct),
-        "token_postings", "token_postings", ["mention_cells", "cell_totals"],
-        partition_by=["grid", "res"], sort_within=["token", "cell_id"],
-        params={"grid": grid, "res": res},
-    )
-    return cat

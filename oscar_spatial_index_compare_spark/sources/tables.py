@@ -2,11 +2,11 @@
 
 Reference analog: ``OsmCompleter::setAllFilesFromPrefix`` + ``energize()``
 (``apps/main.cpp:111-121``) — open the store and expose typed views.  Here a
-"store" is a directory of parquet (tests) or Iceberg tables (production); the
-schema-on-read adapter below lifts the driver's ``documents`` table into the
-exact input_hint shape ``(url, warc_ts, html, text, lang)`` with *pure,
-deterministic, SQL-expressible* column derivations so the DuckDB oracle can
-reproduce every byte.
+"store" is a directory of parquet tables; the schema-on-read adapter below
+lifts the driver's ``documents`` table into the exact input_hint shape
+``(url, warc_ts, html, text, lang)`` with *pure, deterministic,
+SQL-expressible* column derivations so the DuckDB oracle can reproduce
+every byte.
 
 Per-row invariant (north_rule): ``text`` is carried through untouched, so
 sha256(text) per url is trivially byte-identical across runs and parallelism

@@ -386,14 +386,6 @@ def start_worker(url: str, cores: int) -> object:
     raise RuntimeError(f"standalone worker did not register, see {wlog}")
 
 
-def start_cluster() -> tuple:
-    """Master + one UNPINNED 32-core worker for the whole run (the pre-r5.2
-    shape, kept for diag_text.py).  Returns (master, worker, url)."""
-    m, url = start_master()
-    w = start_worker(url, N4_CORES)
-    return m, w, url
-
-
 def _stop_daemons(*procs) -> None:
     """terminate → wait(10s) → kill fallback so a stubborn daemon cannot
     leave JVMs (and a populated /dev/shm/sparktmp) behind (ADVICE r04)."""

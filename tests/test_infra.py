@@ -1,31 +1,101 @@
-"""Checkpointed catalog, streaming ingest, multimodal plumbing,
+"""Checkpointed build DAG, streaming ingest, multimodal plumbing,
 determinism + reconstruction invariants (SURVEY §5, FIXTURES §6)."""
 
+import itertools
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
 
-def test_catalog_checkpoint_resume(spark, tmp_path):
-    from oscar_spatial_index_compare_spark.sources.catalog import (
-        build_index_checkpointed,
-    )
+TABLES = ("index_base", "mention_cells", "cell_totals", "token_postings")
+OBJ_HASH_AGG = "spark.sql.execution.useObjectHashAggregateExec"
 
-    root = str(tmp_path / "cat")
-    cat = build_index_checkpointed(spark, SF_DIR, root, "s2", 10)
-    snaps1 = cat.snapshots()
-    assert {s["table"] for s in snaps1} == {
-        "mentions", "mention_cells", "cell_totals", "token_postings"
-    }
+
+def _counting_engine(spark, root):
+    """A catalog Engine whose corpus ``count()`` calls are recorded."""
+    from oscar_spatial_index_compare_spark.engine import Engine
+
+    eng = Engine(spark, SF_DIR, catalog_root=root)
+    calls = []
+    count = eng.docs.count
+    eng.docs.count = lambda: calls.append(1) or count()
+    return eng, calls
+
+
+@pytest.fixture(scope="module")
+def fresh_build(spark, tmp_path_factory):
+    """One fresh s2-10 catalog build, shared by the build-DAG tests."""
+    eng, calls = _counting_engine(spark, str(tmp_path_factory.mktemp("cat")))
+    eng.context("s2", 10)
+    return eng, calls
+
+
+def test_catalog_checkpoint_resume(spark, fresh_build):
+    eng, _ = fresh_build
+    snaps1 = eng.catalog.snapshots()
+    assert {s["table"] for s in snaps1} == {f"{t}_s2_10" for t in TABLES}
     for s in snaps1:
         assert s["n_rows"] > 0 and s["bytes"] > 0 and s["n_files"] > 0
         assert s["inputs"], "lineage missing"
-    # resume: second run creates NO new snapshots (all stages gated)
-    cat2 = build_index_checkpointed(spark, SF_DIR, root, "s2", 10)
-    assert len(cat2.snapshots()) == len(snaps1)
+        assert s["wall_sec"] == pytest.approx(s["end"] - s["start"], abs=0.002)
+    # resume: a second open writes NO new snapshots and builds nothing
+    # (not even the corpus count a build would need)
+    eng2, calls = _counting_engine(spark, eng.catalog.root)
+    ctx = eng2.context("s2", 10)
+    assert len(eng2.catalog.snapshots()) == len(snaps1)
+    assert calls == []
     # data round-trips
-    ct = cat2.read("cell_totals")
-    assert ct.where(F.col("n_docs") <= 0).count() == 0
+    assert ctx.ctotals.count() > 0
+    assert ctx.ctotals.where(F.col("n_docs") <= 0).count() == 0
+
+
+def test_fresh_context_counts_corpus_once(fresh_build):
+    _, calls = fresh_build
+    assert len(calls) == 1
+
+
+def test_fresh_build_overlaps_index_writes(fresh_build):
+    eng, _ = fresh_build
+    snap = {s["stage"]: s for s in eng.catalog.snapshots()}
+    for a, b in itertools.combinations(TABLES[1:], 2):
+        assert snap[a]["start"] < snap[b]["end"], (a, b)
+        assert snap[b]["start"] < snap[a]["end"], (a, b)
+
+
+def test_failed_build_cleans_up_and_resumes(spark, fresh_build, monkeypatch):
+    import oscar_spatial_index_compare_spark.engine as em
+
+    root = fresh_build[0].catalog.root
+    conf0 = spark.conf.get(OBJ_HASH_AGG, "true")
+    threads0 = set(threading.enumerate())
+    seen = []
+
+    def failing_cell_totals(base, *args, **kwargs):
+        seen.append(spark.conf.get(OBJ_HASH_AGG))
+        return base.select(
+            F.col("doc_id").alias("cell_id"),
+            F.raise_error(F.lit("injected fault")).cast("long").alias("n_docs"))
+
+    monkeypatch.setattr(em, "cell_totals_from_base", failing_cell_totals)
+    eng, _ = _counting_engine(spark, root)
+    with pytest.raises(Exception, match="injected fault"):
+        eng.context("zxy", 9)
+    assert seen == ["false"]  # the build ran under the sorted-list-agg conf
+    assert spark.conf.get(OBJ_HASH_AGG, "true") == conf0
+    assert not [t for t in threading.enumerate()
+                if t not in threads0 and type(t) is threading.Thread]
+    before = eng.catalog.snapshots()
+    written = {s["table"] for s in before}
+    assert "cell_totals_zxy_9" not in written
+    monkeypatch.undo()
+    eng2, calls = _counting_engine(spark, root)
+    eng2.context("zxy", 9)
+    new = [s["table"] for s in eng2.catalog.snapshots()[len(before):]]
+    assert sorted(new) == sorted({f"{t}_zxy_9" for t in TABLES} - written)
+    assert len(calls) == 1  # cell_totals needs the corpus size
 
 
 def test_streaming_incremental_matches_batch(spark, engine, tmp_path):

@@ -251,7 +251,7 @@ def test_no_list_fed_create_dataframe_in_package():
     assert not bad, f"list-fed createDataFrame (use session.local_frame): {bad}"
 
 
-# ---- AST guard: no id()-keyed state, no threads in the operators ---------
+# ---- AST guard: no id()-keyed state; threads only in the build scheduler --
 
 def _id_calls(src: str) -> list[int]:
     """Line numbers of ``id(...)`` calls."""
@@ -301,3 +301,16 @@ def test_no_id_keys_or_threads_in_query_layers(sub, checks):
         if (lines := [n for check in checks for n in check(p.read_text())])
     }
     assert not bad, f"id() call or thread import: {bad}"
+
+
+def test_only_the_catalog_starts_threads():
+    """Build concurrency has one owner, the ``Catalog.build`` scheduler: no
+    other module of the package imports a thread API."""
+    allowed = PACKAGE / "sources" / "catalog.py"
+    bad = {
+        str(p.relative_to(PACKAGE)): lines
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if p != allowed and (lines := _thread_imports(p.read_text()))
+    }
+    assert not bad, f"thread import outside sources/catalog.py: {bad}"
+    assert _thread_imports(allowed.read_text())
