@@ -262,10 +262,10 @@ class Engine:
             self._results.move_to_end(key)
             return self._results[key]
         df = self._results[key] = build().localCheckpoint(eager=False)
-        while len(self._results) > self.RESULT_CACHE_CAP:
-            _k, evicted = self._results.popitem(last=False)
-            try:  # free the evicted checkpoint's blocks now (ADVICE r03)
-                evicted.rdd.unpersist()
-            except Exception:
-                pass  # an un-materialized checkpoint has no blocks
+        if len(self._results) > self.RESULT_CACHE_CAP:
+            # eviction only drops the reference; the JVM ContextCleaner
+            # frees the checkpoint's blocks once no frame refers to them.
+            # Freeing them here would fail a caller still holding the frame
+            # on its next action.
+            self._results.popitem(last=False)
         return df

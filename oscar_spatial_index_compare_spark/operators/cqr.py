@@ -31,85 +31,69 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 CQR_COLS = ["cell_id", "is_fm", "doc_ids"]
+# the fm payload columns: full-match, no doc list
+FM_EXPRS = ("true AS is_fm", "CAST(NULL AS ARRAY<BIGINT>) AS doc_ids")
+
+# Expressions are SQL text (selectExpr / where(str) / one F.expr per join
+# condition): on classic PySpark each F.col costs ~19 py4j round trips, so
+# Column trees made plan construction a visible share of every op-tree.
 
 
 def _norm(df: DataFrame) -> DataFrame:
-    return df.select("cell_id", "is_fm", "doc_ids")
+    return df.selectExpr(*CQR_COLS)
+
+
+def _join(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
+    """``left`` as l ⋈ ``right`` as r on cell_id."""
+    return _norm(left).alias("l").join(
+        _norm(right).alias("r"), F.expr("l.cell_id = r.cell_id"), how)
 
 
 def cqr_union(left: DataFrame, right: DataFrame) -> DataFrame:
-    l = _norm(left).alias("l")
-    r = _norm(right).alias("r")
-    j = l.join(r, F.col("l.cell_id") == F.col("r.cell_id"), "full_outer")
-    is_fm = F.coalesce(F.col("l.is_fm"), F.lit(False)) | F.coalesce(
-        F.col("r.is_fm"), F.lit(False)
-    )
-    doc_ids = (
-        F.when(is_fm, F.lit(None))
-        .when(F.col("l.doc_ids").isNull(), F.col("r.doc_ids"))
-        .when(F.col("r.doc_ids").isNull(), F.col("l.doc_ids"))
-        .otherwise(F.array_sort(F.array_union(F.col("l.doc_ids"), F.col("r.doc_ids"))))
-    )
-    return j.select(
-        F.coalesce(F.col("l.cell_id"), F.col("r.cell_id")).alias("cell_id"),
-        is_fm.alias("is_fm"),
-        doc_ids.alias("doc_ids"),
-    )
+    fm = "coalesce(l.is_fm, false) OR coalesce(r.is_fm, false)"
+    return _join(left, right, "full_outer").selectExpr(
+        "coalesce(l.cell_id, r.cell_id) AS cell_id", f"{fm} AS is_fm",
+        f"CASE WHEN {fm} THEN NULL WHEN l.doc_ids IS NULL THEN r.doc_ids"
+        " WHEN r.doc_ids IS NULL THEN l.doc_ids"
+        " ELSE array_sort(array_union(l.doc_ids, r.doc_ids)) END AS doc_ids")
 
 
 def cqr_intersect(left: DataFrame, right: DataFrame) -> DataFrame:
-    l = _norm(left).alias("l")
-    r = _norm(right).alias("r")
-    j = l.join(r, F.col("l.cell_id") == F.col("r.cell_id"), "inner")
-    is_fm = F.col("l.is_fm") & F.col("r.is_fm")
-    doc_ids = (
-        F.when(is_fm, F.lit(None))
-        .when(F.col("l.is_fm"), F.col("r.doc_ids"))
-        .when(F.col("r.is_fm"), F.col("l.doc_ids"))
-        .otherwise(F.array_sort(F.array_intersect(F.col("l.doc_ids"), F.col("r.doc_ids"))))
+    return _join(left, right, "inner").selectExpr(
+        "l.cell_id AS cell_id", "l.is_fm AND r.is_fm AS is_fm",
+        "CASE WHEN l.is_fm AND r.is_fm THEN NULL WHEN l.is_fm THEN r.doc_ids"
+        " WHEN r.is_fm THEN l.doc_ids"
+        " ELSE array_sort(array_intersect(l.doc_ids, r.doc_ids)) END AS doc_ids",
+    ).where("is_fm OR size(doc_ids) > 0")
+
+
+def _minus_totals(pairs: DataFrame, ctotals: DataFrame) -> DataFrame:
+    """(cell_id, pm_docs) → pm rows of the cell totals minus pm_docs."""
+    return (
+        pairs.join(ctotals.selectExpr("cell_id", "doc_ids AS t_docs"), "cell_id")
+        .selectExpr("cell_id", "false AS is_fm",
+                    "array_sort(array_except(t_docs, pm_docs)) AS doc_ids")
+        .where("size(doc_ids) > 0")
     )
-    out = j.select(
-        F.col("l.cell_id").alias("cell_id"), is_fm.alias("is_fm"), doc_ids.alias("doc_ids")
-    )
-    return out.where(F.col("is_fm") | (F.size("doc_ids") > 0))
 
 
 def cqr_difference(left: DataFrame, right: DataFrame, ctotals: DataFrame) -> DataFrame:
     """L − R.  ``ctotals``: (cell_id, doc_ids) full per-cell lists — joined
     lazily and only for the fm−pm cells (SURVEY §7 hard-part 3)."""
-    l = _norm(left).alias("l")
-    r = _norm(right).alias("r")
-    # the case analysis below references the join THREE times — a lazy
-    # plan boundary computes it once instead of once per branch (r06)
-    j = l.join(r, F.col("l.cell_id") == F.col("r.cell_id"), "left"
-               ).localCheckpoint(eager=False)
-    passthrough = j.where(F.col("r.cell_id").isNull()).select(
-        F.col("l.cell_id").alias("cell_id"),
-        F.col("l.is_fm").alias("is_fm"),
-        F.col("l.doc_ids").alias("doc_ids"),
-    )
-    pm_pm = (
-        j.where(F.col("r.cell_id").isNotNull() & ~F.col("l.is_fm") & ~F.col("r.is_fm"))
-        .select(
-            F.col("l.cell_id").alias("cell_id"),
-            F.lit(False).alias("is_fm"),
-            F.array_sort(F.array_except(F.col("l.doc_ids"), F.col("r.doc_ids"))).alias("doc_ids"),
-        )
-        .where(F.size("doc_ids") > 0)
-    )
-    fm_pm = (
-        j.where(F.col("r.cell_id").isNotNull() & F.col("l.is_fm") & ~F.col("r.is_fm"))
-        .select(F.col("l.cell_id").alias("cell_id"), F.col("r.doc_ids").alias("r_docs"))
-        .join(ctotals.select("cell_id", F.col("doc_ids").alias("t_docs")), "cell_id")
-        .select(
-            "cell_id",
-            F.lit(False).alias("is_fm"),
-            F.array_sort(F.array_except(F.col("t_docs"), F.col("r_docs"))).alias("doc_ids"),
-        )
-        .where(F.size("doc_ids") > 0)
-    )
+    # the case analysis below references the join THREE times — a plan
+    # boundary computes it once instead of once per branch (r06); under
+    # AQE this call already runs the join's shuffle and broadcast stages
+    j = _join(left, right, "left").localCheckpoint(eager=False)
+    passthrough = j.where("r.cell_id IS NULL").selectExpr(
+        "l.cell_id AS cell_id", "l.is_fm AS is_fm", "l.doc_ids AS doc_ids")
+    pm_pm = j.where("r.cell_id IS NOT NULL AND NOT l.is_fm AND NOT r.is_fm").selectExpr(
+        "l.cell_id AS cell_id", "false AS is_fm",
+        "array_sort(array_except(l.doc_ids, r.doc_ids)) AS doc_ids",
+    ).where("size(doc_ids) > 0")
+    fm_pm = j.where("r.cell_id IS NOT NULL AND l.is_fm AND NOT r.is_fm").selectExpr(
+        "l.cell_id AS cell_id", "r.doc_ids AS pm_docs")
     # fm−fm and pm−fm vanish
-    return passthrough.unionByName(pm_pm).unionByName(fm_pm)
+    return passthrough.unionByName(pm_pm).unionByName(_minus_totals(fm_pm, ctotals))
 
 
 def cqr_symdiff(left: DataFrame, right: DataFrame, ctotals: DataFrame) -> DataFrame:
@@ -125,53 +109,24 @@ def cqr_symdiff(left: DataFrame, right: DataFrame, ctotals: DataFrame) -> DataFr
                                  exactly these cells — SURVEY §7 hard-part 3)
       * pm ^ pm                → (L−R) ∪ (R−L), drop when empty
     """
-    l = _norm(left).alias("l")
-    r = _norm(right).alias("r")
     # four references below (only_l/only_r/pm_pm/fm_pm) — one boundary
     # instead of four evaluations of the operand subtrees (r06)
-    j = l.join(r, F.col("l.cell_id") == F.col("r.cell_id"), "full_outer"
-               ).localCheckpoint(eager=False)
-    only_l = j.where(F.col("r.cell_id").isNull()).select(
-        F.col("l.cell_id").alias("cell_id"),
-        F.col("l.is_fm").alias("is_fm"),
-        F.col("l.doc_ids").alias("doc_ids"),
-    )
-    only_r = j.where(F.col("l.cell_id").isNull()).select(
-        F.col("r.cell_id").alias("cell_id"),
-        F.col("r.is_fm").alias("is_fm"),
-        F.col("r.doc_ids").alias("doc_ids"),
-    )
-    both = j.where(F.col("l.cell_id").isNotNull() & F.col("r.cell_id").isNotNull())
-    pm_pm = (
-        both.where(~F.col("l.is_fm") & ~F.col("r.is_fm"))
-        .select(
-            F.col("l.cell_id").alias("cell_id"),
-            F.lit(False).alias("is_fm"),
-            F.array_sort(
-                F.array_union(
-                    F.array_except(F.col("l.doc_ids"), F.col("r.doc_ids")),
-                    F.array_except(F.col("r.doc_ids"), F.col("l.doc_ids")),
-                )
-            ).alias("doc_ids"),
-        )
-        .where(F.size("doc_ids") > 0)
-    )
-    fm_pm = (
-        both.where(F.col("l.is_fm") != F.col("r.is_fm"))
-        .select(
-            F.col("l.cell_id").alias("cell_id"),
-            F.coalesce(F.col("l.doc_ids"), F.col("r.doc_ids")).alias("pm_docs"),
-        )
-        .join(ctotals.select("cell_id", F.col("doc_ids").alias("t_docs")), "cell_id")
-        .select(
-            "cell_id",
-            F.lit(False).alias("is_fm"),
-            F.array_sort(F.array_except(F.col("t_docs"), F.col("pm_docs"))).alias("doc_ids"),
-        )
-        .where(F.size("doc_ids") > 0)
-    )
+    j = _join(left, right, "full_outer").localCheckpoint(eager=False)
+    only_l = j.where("r.cell_id IS NULL").selectExpr(
+        "l.cell_id AS cell_id", "l.is_fm AS is_fm", "l.doc_ids AS doc_ids")
+    only_r = j.where("l.cell_id IS NULL").selectExpr(
+        "r.cell_id AS cell_id", "r.is_fm AS is_fm", "r.doc_ids AS doc_ids")
+    both = j.where("l.cell_id IS NOT NULL AND r.cell_id IS NOT NULL")
+    pm_pm = both.where("NOT l.is_fm AND NOT r.is_fm").selectExpr(
+        "l.cell_id AS cell_id", "false AS is_fm",
+        "array_sort(array_union(array_except(l.doc_ids, r.doc_ids),"
+        " array_except(r.doc_ids, l.doc_ids))) AS doc_ids",
+    ).where("size(doc_ids) > 0")
+    fm_pm = both.where("l.is_fm != r.is_fm").selectExpr(
+        "l.cell_id AS cell_id", "coalesce(l.doc_ids, r.doc_ids) AS pm_docs")
     # fm ^ fm cancels
-    return only_l.unionByName(only_r).unionByName(pm_pm).unionByName(fm_pm)
+    return (only_l.unionByName(only_r).unionByName(pm_pm)
+            .unionByName(_minus_totals(fm_pm, ctotals)))
 
 
 def cqr_dilate(cqr: DataFrame, grid: str, res: int, ctotals: DataFrame) -> DataFrame:
@@ -195,51 +150,33 @@ def cqr_dilate(cqr: DataFrame, grid: str, res: int, ctotals: DataFrame) -> DataF
             "(src/OscarSearchWithSg.cpp:167-181)"
         )
     c = _norm(cqr)
-    n = F.lit(1 << res).cast("long")
-    x = F.shiftright(F.col("cell_id"), 28).bitwiseAND(F.lit((1 << 28) - 1))
-    y = F.col("cell_id").bitwiseAND(F.lit((1 << 28) - 1))
-    nbrs = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            if dx == 0 and dy == 0:
-                continue
-            nx = F.pmod(x + F.lit(dx), n)
-            ny = y + F.lit(dy)
-            nid = (
-                F.lit(res).cast("long") * F.lit(1 << 56).cast("long")
-                + nx * F.lit(1 << 28).cast("long") + ny
-            )
-            nbrs.append(F.when((ny >= 0) & (ny < n), nid))
-    nb = c.select(
-        F.explode(F.array_compact(F.array(*nbrs))).alias("cell_id")
-    ).dropDuplicates(["cell_id"])
+    n, m = 1 << res, (1 << 28) - 1
+    x, y = f"(shiftright(cell_id, 28) & {m})", f"(cell_id & {m})"
+    nbrs = ", ".join(
+        f"CASE WHEN {y} + {dy} >= 0 AND {y} + {dy} < {n}L THEN"
+        f" CAST({res} AS BIGINT) * {1 << 56} + pmod({x} + {dx}, {n}L) * {1 << 28}"
+        f" + ({y} + {dy}) END"
+        for dx in (-1, 0, 1) for dy in (-1, 0, 1) if dx or dy)
+    nb = c.selectExpr(f"explode(array_compact(array({nbrs}))) AS cell_id"
+                      ).dropDuplicates(["cell_id"])
     added = (
-        nb.join(c.select("cell_id"), "cell_id", "left_anti")
-        .join(ctotals.select("cell_id"), "cell_id", "left_semi")
-        .select(
-            "cell_id", F.lit(True).alias("is_fm"),
-            F.lit(None).cast("array<long>").alias("doc_ids"),
-        )
+        nb.join(c.selectExpr("cell_id"), "cell_id", "left_anti")
+        .join(ctotals.selectExpr("cell_id"), "cell_id", "left_semi")
+        .selectExpr("cell_id", *FM_EXPRS)
     )
     return c.unionByName(added)
 
 
 def cqr_all_to_full(cqr: DataFrame) -> DataFrame:
-    return _norm(cqr).select(
-        "cell_id", F.lit(True).alias("is_fm"),
-        F.lit(None).cast("array<long>").alias("doc_ids"),
-    )
+    return cqr.selectExpr("cell_id", *FM_EXPRS)
 
 
 def cqr_flatten(cqr: DataFrame, ctotals: DataFrame) -> DataFrame:
     """→ DataFrame(doc_id) distinct — Q10 ``flaten``."""
-    c = _norm(cqr)
-    fm = (
-        c.where(F.col("is_fm"))
-        .join(ctotals.select("cell_id", F.col("doc_ids").alias("t_docs")), "cell_id")
-        .select(F.explode("t_docs").alias("doc_id"))
-    )
-    pm = c.where(~F.col("is_fm")).select(F.explode("doc_ids").alias("doc_id"))
+    fm = cqr.where("is_fm").selectExpr("cell_id").join(
+        ctotals.selectExpr("cell_id", "doc_ids AS t_docs"), "cell_id"
+    ).selectExpr("explode(t_docs) AS doc_id")
+    pm = cqr.where("NOT is_fm").selectExpr("explode(doc_ids) AS doc_id")
     return fm.unionByName(pm).dropDuplicates(["doc_id"])
 
 

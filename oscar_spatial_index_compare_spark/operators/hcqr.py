@@ -24,13 +24,16 @@ check (``apps/mainq.cpp:399-482``).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import parent_col
+from ..functions.udfs import parent1_col, parent_col
 from ..grids.base import get_grid
 from ..session import local_frame
+from .cqr import FM_EXPRS
 
 HCQR_COLS = ["pixel_id", "level", "is_fm", "doc_ids"]
 
@@ -39,67 +42,51 @@ def hcqr_from_cqr(cqr: DataFrame, grid: str, res: int, ctotals: DataFrame,
                   min_level: int = 0,
                   pop_anc: DataFrame | None = None) -> DataFrame:
     """CQR at res → compactified HCQR (B8 sge2shcqr/sge2cn analog)."""
-    leaves = cqr.select(
-        F.col("cell_id").alias("pixel_id"),
-        F.lit(res).cast("int").alias("level"),
-        "is_fm", "doc_ids",
-    )
+    leaves = cqr.selectExpr(
+        "cell_id AS pixel_id", f"{res} AS level", "is_fm", "doc_ids")
     # plan boundary: an HCQR is reused many times by the op layer and the
     # compactify internals reference their input ~levels× — without a
     # boundary here, nested ops make Catalyst analysis explode
     # multiplicatively (observed: minutes of driver CPU on a 3-node tree).
-    # eager=False keeps the boundary but folds materialization into the
-    # next job instead of one Spark job per tree node (r01 had 35 jobs for
-    # a 3-node query; lazy checkpoints + root-only compaction → ~8).
+    # eager=False is NOT lazy under AQE: to hand back the checkpoint RDD,
+    # AQE runs every shuffle and broadcast stage beneath this call right
+    # here; only the final, exchange-free stage waits for the next action.
     return compactify(leaves, grid, res, ctotals, min_level, pop_anc).localCheckpoint(eager=False)
+
+
+_M28 = (1 << 28) - 1
+
+
+def _anc_sql(grid: str, k: int, c: str = "pixel_id") -> str | None:
+    """SQL for the ancestor ``k`` levels above the id column ``c`` (k=0:
+    the cell itself), valid for mixed levels in one column; None on grids
+    without prefix ids (hex).  Closed form per k (s2: ``(id & -(lsb<<2k))
+    | (lsb<<2k)``; zxy: field shifts), so an explode over k stays O(levels):
+    chained one-level parents would be collapsed by Catalyst's
+    CollapseProject into a 4^depth tree and hang the optimizer (observed)."""
+    if grid == "s2":
+        nl = f"shiftleft({c} & -{c}, {2 * k})"
+        return f"(({c} & -{nl}) | {nl})"
+    if grid == "htm":
+        return f"shiftright({c}, {2 * k})"
+    if grid == "zxy":
+        return (f"((shiftright({c}, 56) - {k}) * {1 << 56}"
+                f" + shiftright(shiftright({c}, 28) & {_M28}, {k}) * {1 << 28}"
+                f" + shiftright({c} & {_M28}, {k}))")
+    return None
 
 
 def explode_ancestors(df: DataFrame, grid: str, res: int, min_level: int,
                       keep: list[str]) -> DataFrame:
     """→ (apix, alvl, *keep): one row per (row, ancestor-or-self) pair, from
-    the row's own level up to min_level.
-
-    Closed-form per-level expressions (s2: ``(id & -(lsb<<2k)) | (lsb<<2k)``;
-    zxy: field shifts) keep the expression tree O(levels).  Chained
-    one-level parents would be collapsed by Catalyst's CollapseProject into
-    a 4^depth tree and hang the optimizer (observed).  hex: one
-    array-returning vectorized UDF + posexplode.
-    """
-    if grid == "s2":
-        entries = []
-        for k in range(res - min_level + 1):
-            lsb = F.col("pixel_id").bitwiseAND(-F.col("pixel_id"))
-            nl = F.shiftleft(lsb, 2 * k)
-            anc = F.col("pixel_id").bitwiseAND(-nl).bitwiseOR(nl)
-            entries.append(F.struct(
-                anc.alias("apix"),
-                (F.col("level") - F.lit(k)).cast("int").alias("alvl"),
-            ))
-        e = df.select(*keep, "level", F.explode(F.array(*entries)).alias("e"))
-    elif grid == "htm":
-        entries = []
-        for k in range(res - min_level + 1):
-            entries.append(F.struct(
-                F.shiftright(F.col("pixel_id"), 2 * k).alias("apix"),
-                (F.col("level") - F.lit(k)).cast("int").alias("alvl"),
-            ))
-        e = df.select(*keep, "level", F.explode(F.array(*entries)).alias("e"))
-    elif grid == "zxy":
-        entries = []
-        z = F.shiftright(F.col("pixel_id"), 56)
-        x = F.shiftright(F.col("pixel_id"), 28).bitwiseAND(F.lit((1 << 28) - 1))
-        y = F.col("pixel_id").bitwiseAND(F.lit((1 << 28) - 1))
-        for k in range(res - min_level + 1):
-            anc = (
-                (z - k) * F.lit(1 << 56).cast("long")
-                + F.shiftright(x, k) * F.lit(1 << 28).cast("long")
-                + F.shiftright(y, k)
-            )
-            entries.append(F.struct(
-                anc.alias("apix"),
-                (F.col("level") - F.lit(k)).cast("int").alias("alvl"),
-            ))
-        e = df.select(*keep, "level", F.explode(F.array(*entries)).alias("e"))
+    the row's own level up to min_level.  Prefix grids: one SQL explode of
+    ``_anc_sql`` per k; hex: one array-returning vectorized UDF +
+    posexplode."""
+    if _anc_sql(grid, 0) is not None:
+        entries = ", ".join(
+            f"named_struct('apix', {_anc_sql(grid, k)}, 'alvl', CAST(level - {k} AS INT))"
+            for k in range(res - min_level + 1))
+        e = df.selectExpr(*keep, f"explode(array({entries})) AS e")
     else:
         import pandas as pd
         from pyspark.sql.types import ArrayType, LongType
@@ -120,17 +107,22 @@ def explode_ancestors(df: DataFrame, grid: str, res: int, min_level: int,
         e = df.select(
             *keep, "level",
             F.posexplode(_anc_arr(F.col("pixel_id"))).alias("k", "apix"),
-        ).select(
-            *keep, "level",
-            F.struct(
-                F.col("apix"),
-                (F.col("level") - F.col("k")).cast("int").alias("alvl"),
-            ).alias("e"),
-        )
-    return (
-        e.select(*keep, F.col("e.apix").alias("apix"), F.col("e.alvl").alias("alvl"))
-        .where(F.col("alvl") >= F.lit(min_level))
-    )
+        ).selectExpr(
+            *keep, "named_struct('apix', apix, 'alvl', CAST(level - k AS INT)) AS e")
+    return e.selectExpr(*keep, "e.apix AS apix", "e.alvl AS alvl").where(
+        f"alvl >= {min_level}")
+
+
+def _maximal(cand: DataFrame, grid: str, key: tuple = ()) -> DataFrame:
+    """Candidate (``*key``, pixel_id, level) rows whose one-level parent is
+    not itself a candidate, as fm rows."""
+    pp = _anc_sql(grid, 1)
+    withp = (cand.withColumn("pp", parent1_col(grid, F.col("pixel_id")))
+             if pp is None else cand.selectExpr("*", f"{pp} AS pp"))
+    return withp.selectExpr("*", "CAST(level - 1 AS INT) AS plvl").join(
+        cand.selectExpr(*key, "pixel_id AS pp", "level AS plvl"),
+        [*key, "pp", "plvl"], "left_anti",
+    ).selectExpr(*key, *_FM_COLS)
 
 
 def hcqr_postings_build(tpostings: DataFrame, ctotals: DataFrame, grid: str,
@@ -150,53 +142,33 @@ def hcqr_postings_build(tpostings: DataFrame, ctotals: DataFrame, grid: str,
     leaf res unchanged.  ONE ancestor explode + two groupBys for the whole
     dictionary — fully distributed, no driver-side token loop.
     """
-    from ..functions.udfs import parent1_col
-
-    tp = tpostings.select(
-        "token", F.col("cell_id").alias("pixel_id"),
-        F.lit(res).cast("int").alias("level"), "is_fm", "doc_ids",
-    )
-    pm = tp.where(~F.col("is_fm"))
-    fm = tp.where(F.col("is_fm")).withColumn("w", F.lit(1).cast("long"))
+    tp = tpostings.selectExpr(
+        "token", "cell_id AS pixel_id", f"{res} AS level", "is_fm", "doc_ids")
     if pop_anc is None:
         pop_anc = pop_ancestor_counts(ctotals, grid, res)
+    fm = tp.where("is_fm").selectExpr("*", "1L AS w")
     anc = explode_ancestors(fm, grid, res, 0, keep=["token", "w"])
-    covered = anc.groupBy("token", "apix", "alvl").agg(F.sum("w").alias("cov"))
     cand = (
-        covered.join(pop_anc, ["apix", "alvl"])
-        .where((F.col("cov") == F.col("tot")) & (F.col("tot") > 0))
-        .select("token", F.col("apix").alias("pixel_id"), F.col("alvl").alias("level"))
-        # referenced twice below (maximal's probe AND build side): without a
+        anc.groupBy("token", "apix", "alvl").agg(F.expr("sum(w) AS cov"))
+        .join(pop_anc, ["apix", "alvl"]).where("cov = tot AND tot > 0")
+        .selectExpr("token", "apix AS pixel_id", "alvl AS level")
+        # referenced twice by _maximal (probe AND build side): without a
         # plan boundary the whole fm-explode + two-groupBy subtree executes
-        # once per reference (lazy checkpoint = materialized inside the
-        # first action, block read for the second — r06)
+        # once per reference (this call already runs its shuffle stages
+        # under AQE; the second reference reads the blocks — r06)
         .localCheckpoint(eager=False)
     )
-    withp = cand.withColumn("pp", parent1_col(grid, F.col("pixel_id"))).withColumn(
-        "plvl", (F.col("level") - 1).cast("int")
-    )
-    maximal = withp.join(
-        cand.select(
-            "token", F.col("pixel_id").alias("pp"), F.col("level").alias("plvl")
-        ),
-        ["token", "pp", "plvl"], "left_anti",
-    ).select(
-        "token", "pixel_id", "level",
-        F.lit(True).alias("is_fm"),
-        F.lit(None).cast("array<long>").alias("doc_ids"),
-    )
-    return maximal.unionByName(pm.select("token", *HCQR_COLS))
+    return _maximal(cand, grid, ("token",)).unionByName(
+        tp.where("NOT is_fm").selectExpr("token", *HCQR_COLS))
 
 
 def pop_ancestor_counts(ctotals: DataFrame, grid: str, res: int,
                         min_level: int = 0) -> DataFrame:
     """(apix, alvl, tot): populated-leaf count per ancestor pixel/level —
     ONE explode + ONE groupBy; cache it per QueryContext."""
-    pop = ctotals.select(
-        F.col("cell_id").alias("pixel_id"), F.lit(res).cast("int").alias("level")
-    )
+    pop = ctotals.selectExpr("cell_id AS pixel_id", f"{res} AS level")
     anc = explode_ancestors(pop, grid, res, min_level, keep=[])
-    return anc.groupBy("apix", "alvl").agg(F.count("*").alias("tot"))
+    return anc.groupBy("apix", "alvl").agg(F.expr("count(1) AS tot"))
 
 
 def compactify(h: DataFrame, grid: str, res: int, ctotals: DataFrame,
@@ -212,53 +184,26 @@ def compactify(h: DataFrame, grid: str, res: int, ctotals: DataFrame,
     w = populated leaves covered; ancestors accumulate w via ONE
     ancestor-chain explode + groupBy, compared against ``pop_anc``
     (pop_ancestor_counts, cached per context).  Total: ~4 shuffles,
-    independent of depth.
+    independent of depth.  fm rows over no populated leaf are dropped.
     """
-    pop = ctotals.select(F.col("cell_id").alias("pixel_id"))
-    fm = h.where(F.col("is_fm"))
-    pm = h.where(~F.col("is_fm"))
     if pop_anc is None:
         pop_anc = pop_ancestor_counts(ctotals, grid, res, min_level)
-    # weight per fm row = populated leaves covered
-    leaf_fm = fm.where(F.col("level") == res).join(
-        pop, "pixel_id", "left_semi"
-    ).withColumn("w", F.lit(1).cast("long"))
-    # coarse fm rows: weight = populated leaves under them — their own
-    # (pixel, level) is an ancestor key in pop_anc
-    up_fm = (
-        fm.where(F.col("level") < res)
-        .join(
-            pop_anc.withColumnRenamed("apix", "pixel_id")
-            .withColumnRenamed("alvl", "level"),
-            ["pixel_id", "level"], "left",
-        )
-        .withColumn("w", F.coalesce(F.col("tot"), F.lit(0)).cast("long"))
-        .drop("tot")
-    )
-    fmw = leaf_fm.unionByName(up_fm.select(*HCQR_COLS, "w"))
-    # covered counts per ancestor: ONE explode + groupBy
+    # weight per fm row = populated leaves covered: 1 for a populated leaf;
+    # a coarse row's own (pixel, level) is an ancestor key in pop_anc
+    leaf_fm = h.where(f"is_fm AND level = {res}").join(
+        ctotals.selectExpr("cell_id AS pixel_id"), "pixel_id", "left_semi")
+    up_fm = h.where(f"is_fm AND level < {res}").join(
+        pop_anc.selectExpr("apix AS pixel_id", "alvl AS level", "tot"),
+        ["pixel_id", "level"], "left")
+    fmw = leaf_fm.selectExpr("pixel_id", "level", "1L AS w").unionByName(
+        up_fm.selectExpr("pixel_id", "level", "coalesce(tot, 0L) AS w"))
     anc = explode_ancestors(fmw, grid, res, min_level, keep=["w"])
-    covered = anc.groupBy("apix", "alvl").agg(F.sum("w").alias("cov"))
     cand = (
-        covered.join(pop_anc, ["apix", "alvl"])
-        .where((F.col("cov") == F.col("tot")) & (F.col("tot") > 0))
-        .select(F.col("apix").alias("pixel_id"), F.col("alvl").alias("level"))
+        anc.groupBy("apix", "alvl").agg(F.expr("sum(w) AS cov"))
+        .join(pop_anc, ["apix", "alvl"]).where("cov = tot AND tot > 0")
+        .selectExpr("apix AS pixel_id", "alvl AS level")
     )
-    # maximal: one-level parent not itself a candidate
-    from ..functions.udfs import parent1_col
-
-    withp = cand.withColumn("pp", parent1_col(grid, F.col("pixel_id"))).withColumn(
-        "plvl", (F.col("level") - 1).cast("int")
-    )
-    maximal = withp.join(
-        cand.select(F.col("pixel_id").alias("pp"), F.col("level").alias("plvl")),
-        ["pp", "plvl"], "left_anti",
-    ).select(
-        "pixel_id", "level",
-        F.lit(True).alias("is_fm"),
-        F.lit(None).cast("array<long>").alias("doc_ids"),
-    )
-    return maximal.unionByName(pm.select(*HCQR_COLS))
+    return _maximal(cand, grid).unionByName(h.where("NOT is_fm"))
 
 
 # ---------------------------------------------------------------------------
@@ -276,117 +221,96 @@ def compactify(h: DataFrame, grid: str, res: int, ctotals: DataFrame,
 # BETWEEN (native bit ops, file-prunable at scale); zxy = ancestor equality
 # via shifts.  The 7-ary hex grid has no prefix ids → HCQR ops raise (the
 # reference similarly supports ops only on its 4-ary prefix grids' trees).
+#
+# Every expression below is SQL text (selectExpr / where(str) / one F.expr
+# per join condition): on classic PySpark each F.col costs ~19 py4j round
+# trips, a selectExpr 9, a where(str) 1, so Column trees made plan
+# construction, not execution, most of an HCQR op's wall.
 
 
 def _fside(df: DataFrame, grid: str) -> DataFrame:
     """Containing ('f') side of a containment join, columns renamed flat —
-    fresh exprIds so self-joins never trip ambiguity detection."""
-    g = get_grid(grid)
-    out = df.select(
-        F.col("pixel_id").alias("f_pixel"), F.col("level").alias("f_level")
-    )
+    fresh exprIds so self-joins never trip ambiguity detection — and
+    broadcast (it is the small side of every containment join)."""
+    cols = ["pixel_id AS f_pixel", "level AS f_level"]
     if grid == "s2":
-        lo, hi = g.col_range(F.col("f_pixel"))
-        out = out.withColumn("f_lo", lo).withColumn("f_hi", hi)
-    return out
+        cols += ["pixel_id - ((pixel_id & -pixel_id) - 1) AS f_lo",
+                 "pixel_id + ((pixel_id & -pixel_id) - 1) AS f_hi"]
+    return df.selectExpr(*cols).hint("broadcast")
 
 
-def _contains_cond(grid: str):
+def _contains_cond(grid: str) -> str:
     """Join condition: f row (fm) contains-or-equals o row (plain columns)."""
     if grid == "s2":
-        return (
-            (F.col("pixel_id") >= F.col("f_lo"))
-            & (F.col("pixel_id") <= F.col("f_hi"))
-            & (F.col("level") >= F.col("f_level"))
-        )
+        return "pixel_id >= f_lo AND pixel_id <= f_hi AND level >= f_level"
     if grid == "zxy":
-        d = F.col("level") - F.col("f_level")
-        ox = F.shiftright(F.col("pixel_id"), 28).bitwiseAND(F.lit((1 << 28) - 1))
-        oy = F.col("pixel_id").bitwiseAND(F.lit((1 << 28) - 1))
-        anc = (
-            F.col("f_level").cast("long") * F.lit(1 << 56).cast("long")
-            + (ox / F.pow(F.lit(2.0), d)).cast("long") * F.lit(1 << 28).cast("long")
-            + (oy / F.pow(F.lit(2.0), d)).cast("long")
-        )
-        return (d >= 0) & (anc == F.col("f_pixel"))
+        d = "pow(2.0D, level - f_level)"
+        return (f"level - f_level >= 0 AND CAST(f_level AS BIGINT) * {1 << 56}"
+                f" + CAST((shiftright(pixel_id, 28) & {_M28}) / {d} AS BIGINT) * {1 << 28}"
+                f" + CAST((pixel_id & {_M28}) / {d} AS BIGINT) = f_pixel")
     if grid == "htm":
-        d = F.col("level") - F.col("f_level")
         # ids < 2^44: double division by 4^d is exact, cast truncates = floor
-        anc = (F.col("pixel_id").cast("double") / F.pow(F.lit(4.0), d)).cast("long")
-        return (d >= 0) & (anc == F.col("f_pixel"))
+        return ("level - f_level >= 0 AND CAST(CAST(pixel_id AS DOUBLE)"
+                " / pow(4.0D, level - f_level) AS BIGINT) = f_pixel")
     raise NotImplementedError("HCQR set ops require a prefix-id grid (s2/zxy/htm)")
 
 
-def _strict_cond(grid: str):
-    return _contains_cond(grid) & (F.col("level") > F.col("f_level"))
+def _strict_cond(grid: str) -> str:
+    return f"{_contains_cond(grid)} AND level > f_level"
 
 
-def _fm(df: DataFrame) -> DataFrame:
-    return df.where(F.col("is_fm")).select(*HCQR_COLS)
+def _semi(df: DataFrame, f: DataFrame, grid: str, how: str,
+          strict: bool = False) -> DataFrame:
+    """Rows of ``df`` (not) contained in an f row of ``f``."""
+    cond = _strict_cond(grid) if strict else _contains_cond(grid)
+    return df.join(_fside(f, grid), F.expr(cond), how)
 
 
-def _pm(df: DataFrame) -> DataFrame:
-    return df.where(~F.col("is_fm")).select(*HCQR_COLS)
+_FM_COLS = ("pixel_id", "level", *FM_EXPRS)
 
 
-def _mkfm(df: DataFrame) -> DataFrame:
-    return df.select(
-        "pixel_id", "level", F.lit(True).alias("is_fm"),
-        F.lit(None).cast("array<long>").alias("doc_ids"),
-    )
+def hcqr_all_to_full(h: DataFrame) -> DataFrame:
+    return h.selectExpr(*_FM_COLS)
+
+
+def _union_all(parts: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def _hcqr_union(l: DataFrame, r: DataFrame, grid: str) -> DataFrame:
-    fm = _fm(l).unionByName(_fm(r)).dropDuplicates(["pixel_id", "level"])
+    fm = l.where("is_fm").unionByName(r.where("is_fm")).dropDuplicates(
+        ["pixel_id", "level"])
     # keep only fm rows not strictly inside another fm row
-    keep = fm.join(
-        F.broadcast(_fside(fm, grid)), _strict_cond(grid), "left_anti"
-    ).select(*HCQR_COLS)
+    keep = _semi(fm, fm, grid, "left_anti", strict=True)
     # pm rows: per-pixel union, then drop those covered by a kept fm row
-    lp = _pm(l).alias("l")
-    rp = _pm(r).alias("r")
-    j = lp.join(rp, F.col("l.pixel_id") == F.col("r.pixel_id"), "full_outer")
-    pm = j.select(
-        F.coalesce(F.col("l.pixel_id"), F.col("r.pixel_id")).alias("pixel_id"),
-        F.coalesce(F.col("l.level"), F.col("r.level")).alias("level"),
-        F.lit(False).alias("is_fm"),
-        F.when(F.col("l.doc_ids").isNull(), F.col("r.doc_ids"))
-        .when(F.col("r.doc_ids").isNull(), F.col("l.doc_ids"))
-        .otherwise(F.array_sort(F.array_union(F.col("l.doc_ids"), F.col("r.doc_ids"))))
-        .alias("doc_ids"),
-    )
-    pm_keep = pm.join(
-        F.broadcast(_fside(keep, grid)), _contains_cond(grid), "left_anti"
-    ).select(*HCQR_COLS)
-    return keep.unionByName(pm_keep)
+    j = l.where("NOT is_fm").alias("l").join(
+        r.where("NOT is_fm").alias("r"), F.expr("l.pixel_id = r.pixel_id"),
+        "full_outer")
+    pm = j.selectExpr(
+        "coalesce(l.pixel_id, r.pixel_id) AS pixel_id",
+        "coalesce(l.level, r.level) AS level", "false AS is_fm",
+        "CASE WHEN l.doc_ids IS NULL THEN r.doc_ids"
+        " WHEN r.doc_ids IS NULL THEN l.doc_ids"
+        " ELSE array_sort(array_union(l.doc_ids, r.doc_ids)) END AS doc_ids")
+    return keep.unionByName(_semi(pm, keep, grid, "left_anti"))
 
 
 def _hcqr_intersect(l: DataFrame, r: DataFrame, grid: str) -> DataFrame:
-    lf, rf = _fm(l), _fm(r)
-    lp, rp = _pm(l), _pm(r)
-    parts = [
+    lf, rf = l.where("is_fm"), r.where("is_fm")
+    lp, rp = l.where("NOT is_fm"), r.where("NOT is_fm")
+    return _union_all([
         # the deeper (or equal) row of a containing fm/fm pair
-        rf.join(F.broadcast(_fside(lf, grid)), _contains_cond(grid), "left_semi"),
-        lf.join(F.broadcast(_fside(rf, grid)), _strict_cond(grid), "left_semi"),
+        _semi(rf, lf, grid, "left_semi"),
+        _semi(lf, rf, grid, "left_semi", strict=True),
         # fm contains pm (incl. equal leaf pixel) → the pm row
-        rp.join(F.broadcast(_fside(lf, grid)), _contains_cond(grid), "left_semi"),
-        lp.join(F.broadcast(_fside(rf, grid)), _contains_cond(grid), "left_semi"),
-    ]
-    parts = [x.select(*HCQR_COLS) for x in parts]
-    # pm ∩ pm at equal leaf pixels
-    jj = lp.alias("l").join(rp.alias("r"), F.col("l.pixel_id") == F.col("r.pixel_id"))
-    parts.append(
-        jj.select(
-            F.col("l.pixel_id").alias("pixel_id"),
-            F.col("l.level").alias("level"),
-            F.lit(False).alias("is_fm"),
-            F.array_sort(F.array_intersect(F.col("l.doc_ids"), F.col("r.doc_ids"))).alias("doc_ids"),
-        ).where(F.size("doc_ids") > 0)
-    )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        _semi(rp, lf, grid, "left_semi"),
+        _semi(lp, rf, grid, "left_semi"),
+        # pm ∩ pm at equal leaf pixels
+        lp.alias("l").join(rp.alias("r"), F.expr("l.pixel_id = r.pixel_id"))
+        .selectExpr("l.pixel_id AS pixel_id", "l.level AS level", "false AS is_fm",
+                    "array_sort(array_intersect(l.doc_ids, r.doc_ids)) AS doc_ids")
+        .where("size(doc_ids) > 0"),
+    ])
 
 
 def _decompose_fm(grid: str, jobs: list[tuple[int, int, list[tuple[int, int]]]]):
@@ -442,70 +366,47 @@ def _decompose_fm(grid: str, jobs: list[tuple[int, int, list[tuple[int, int]]]])
 MAX_DRIVER_OVERLAP_PAIRS = 100_000
 
 
+def _totals_minus_pm(keys: DataFrame, rp: DataFrame, ctotals: DataFrame,
+                     res: int) -> DataFrame:
+    """Leaf pixels of ``keys`` that hold a pm_R row → pm rows of the cell
+    totals minus the R docs (empty results dropped)."""
+    return (
+        keys.join(rp.selectExpr("pixel_id", "doc_ids AS rdocs"), "pixel_id")
+        .join(ctotals.selectExpr("cell_id AS pixel_id", "doc_ids AS tdocs"), "pixel_id")
+        .selectExpr("pixel_id", f"{res} AS level", "false AS is_fm",
+                    "array_sort(array_except(tdocs, rdocs)) AS doc_ids")
+        .where("size(doc_ids) > 0")
+    )
+
+
 def _difference_by_leaf_expansion(
     lf_surv: DataFrame, rall: DataFrame, rf: DataFrame, rp: DataFrame,
-    grid: str, res: int, spark: SparkSession, ctotals: DataFrame,
+    grid: str, res: int, ctotals: DataFrame,
 ) -> list[DataFrame]:
     """Distributed decomposition of fm_L − R: expand every OVERLAPPED fm_L
     container to its populated leaves (ancestor equi-joins, no BNLJ), then
     subtract R at leaf level.  compactify() in hcqr_op re-rolls the
     surviving leaves, so the normal form is restored.  Never collects
     data-dependent rows to the driver."""
-    from ..functions.udfs import parent_col
-
-    over_keys = (
-        rall.join(F.broadcast(_fside(lf_surv, grid)), _contains_cond(grid))
-        .select(F.col("f_pixel").alias("pixel_id"), F.col("f_level").alias("level"))
-        .dropDuplicates()
-    )
-    parts = [
-        lf_surv.join(over_keys, ["pixel_id", "level"], "left_anti")
-        .select(*HCQR_COLS)
-    ]
+    over_keys = _semi(rall, lf_surv, grid, "inner").selectExpr(
+        "f_pixel AS pixel_id", "f_level AS level").dropDuplicates()
+    parts = [lf_surv.join(over_keys, ["pixel_id", "level"], "left_anti")]
     # populated leaves under the overlapped containers, one equi-join per
     # distinct container level (≤ res+1 driver-side values, never row data)
     lvls = [row.level for row in over_keys.select("level").dropDuplicates().collect()]
-    leaf_parts = []
-    pop = ctotals.select("cell_id")
-    for lvl in lvls:
-        if int(lvl) == res:
-            keys = over_keys.where(F.col("level") == lvl).select(
-                F.col("pixel_id").alias("cell_id")
-            )
-            leaf_parts.append(pop.join(keys, "cell_id", "left_semi"))
-        else:
-            anc = parent_col(grid, F.col("cell_id"), int(lvl), from_res=res)
-            keys = over_keys.where(F.col("level") == lvl).select(
-                F.col("pixel_id").alias("_anc")
-            )
-            leaf_parts.append(
-                pop.withColumn("_anc", anc)
-                .join(keys, "_anc", "left_semi").select("cell_id")
-            )
-    leaves = leaf_parts[0]
-    for p in leaf_parts[1:]:
-        leaves = leaves.unionByName(p)
-    leaves = leaves.select(
-        F.col("cell_id").alias("pixel_id"), F.lit(res).cast("int").alias("level")
-    ).dropDuplicates()
+    leaves = _union_all([
+        ctotals.selectExpr(f"{_anc_sql(grid, res - int(lvl), 'cell_id')} AS _anc",
+                           "cell_id AS pixel_id", f"{res} AS level")
+        .join(over_keys.where(f"level = {int(lvl)}").selectExpr("pixel_id AS _anc"),
+              "_anc", "left_semi")
+        for lvl in lvls
+    ]).drop("_anc").dropDuplicates()
     # leaf ⊆ fm_R → gone entirely
-    leaves = leaves.join(
-        F.broadcast(_fside(rf, grid)), _contains_cond(grid), "left_anti"
-    )
+    leaves = _semi(leaves, rf, grid, "left_anti")
     # leaf == pm_R pixel → cell totals − pm docs; else stays fm
-    rpx = rp.select(F.col("pixel_id"), F.col("doc_ids").alias("rdocs"))
-    hit = leaves.join(rpx, "pixel_id")
-    parts.append(
-        hit.join(
-            ctotals.select(F.col("cell_id").alias("pixel_id"),
-                           F.col("doc_ids").alias("tdocs")),
-            "pixel_id",
-        ).select(
-            "pixel_id", "level", F.lit(False).alias("is_fm"),
-            F.array_sort(F.array_except(F.col("tdocs"), F.col("rdocs"))).alias("doc_ids"),
-        ).where(F.size("doc_ids") > 0)
-    )
-    parts.append(_mkfm(leaves.join(rpx, "pixel_id", "left_anti")))
+    parts.append(_totals_minus_pm(leaves, rp, ctotals, res))
+    parts.append(hcqr_all_to_full(
+        leaves.join(rp.selectExpr("pixel_id"), "pixel_id", "left_anti")))
     return parts
 
 
@@ -513,96 +414,60 @@ def _hcqr_difference(
     l: DataFrame, r: DataFrame, grid: str, res: int,
     spark: SparkSession, ctotals: DataFrame,
 ) -> DataFrame:
-    lf, rf = _fm(l), _fm(r)
-    lp, rp = _pm(l), _pm(r)
+    lf, rf = l.where("is_fm"), r.where("is_fm")
+    rp = r.where("NOT is_fm")
     rall = rf.unionByName(rp)
-    parts = []
     # pm_L: drop rows inside fm_R; subtract equal-pixel pm_R docs
-    pm_surv = lp.join(
-        F.broadcast(_fside(rf, grid)), _contains_cond(grid), "left_anti"
-    )
-    jj = pm_surv.alias("l").join(
-        rp.select(F.col("pixel_id").alias("rpix"), F.col("doc_ids").alias("rdocs")),
-        F.col("l.pixel_id") == F.col("rpix"), "left",
-    )
-    parts.append(
-        jj.select(
-            F.col("l.pixel_id").alias("pixel_id"), F.col("l.level").alias("level"),
-            F.lit(False).alias("is_fm"),
-            F.when(F.col("rdocs").isNull(), F.col("l.doc_ids"))
-            .otherwise(F.array_sort(F.array_except(F.col("l.doc_ids"), F.col("rdocs"))))
-            .alias("doc_ids"),
-        ).where(F.size("doc_ids") > 0)
-    )
+    pm_surv = _semi(l.where("NOT is_fm"), rf, grid, "left_anti")
+    parts = [
+        pm_surv.alias("l").join(
+            rp.selectExpr("pixel_id AS rpix", "doc_ids AS rdocs"),
+            F.expr("l.pixel_id = rpix"), "left",
+        ).selectExpr(
+            "l.pixel_id AS pixel_id", "l.level AS level", "false AS is_fm",
+            "CASE WHEN rdocs IS NULL THEN l.doc_ids"
+            " ELSE array_sort(array_except(l.doc_ids, rdocs)) END AS doc_ids",
+        ).where("size(doc_ids) > 0")
+    ]
     # fm_L: drop rows contained in fm_R
-    lf_surv = lf.join(
-        F.broadcast(_fside(rf, grid)), _contains_cond(grid), "left_anti"
-    ).select(*HCQR_COLS)
+    lf_surv = _semi(lf, rf, grid, "left_anti")
     # overlap pairs: surviving fm_L rows containing-or-equal any R row; the
     # fm side flips roles here — lf_surv rows are the containers ('f').
     # Collect is CAPPED: a too-large overlap set switches to the fully
     # distributed leaf-expansion decomposition instead of pulling
     # O(postings-cells) rows to the driver.
     pairs = (
-        rall.join(F.broadcast(_fside(lf_surv, grid)), _contains_cond(grid))
-        .select(
-            F.col("f_pixel").alias("xpix"), F.col("f_level").alias("xlvl"),
-            F.col("pixel_id").alias("opix"), F.col("level").alias("olvl"),
-            F.col("is_fm").alias("ofm"),
-        )
+        _semi(rall, lf_surv, grid, "inner")
+        .selectExpr("f_pixel AS xpix", "f_level AS xlvl", "pixel_id AS opix",
+                    "level AS olvl", "is_fm AS ofm")
         .limit(MAX_DRIVER_OVERLAP_PAIRS + 1)
         .collect()
     )
     if len(pairs) > MAX_DRIVER_OVERLAP_PAIRS:
-        parts.extend(_difference_by_leaf_expansion(
-            lf_surv, rall, rf, rp, grid, res, spark, ctotals
-        ))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(parts + _difference_by_leaf_expansion(
+            lf_surv, rall, rf, rp, grid, res, ctotals))
     overlapped: dict[tuple[int, int], list[tuple[int, int]]] = {}
     fm_hit_leaves: set[int] = set()
     for row in pairs:
         overlapped.setdefault((row.xpix, row.xlvl), []).append((row.opix, row.olvl))
         if row.ofm:
             fm_hit_leaves.add(row.opix)
-    if overlapped:
-        over_keys = local_frame(
-            spark, "pixel_id long, level int", zip(*overlapped))
-        clean = lf_surv.join(F.broadcast(over_keys), ["pixel_id", "level"], "left_anti")
-        parts.append(clean.select(*HCQR_COLS))
-        jobs = [(x, lx, plist) for (x, lx), plist in overlapped.items()]
-        fm_cells, leaf_hits = _decompose_fm(grid, jobs)
-        if fm_cells:
-            parts.append(_mkfm(local_frame(
-                spark, "pixel_id long, level int", zip(*fm_cells))))
-        # leaf hits where the contained row was pm_R → cell totals − pm docs
-        pm_hit = [p for p in leaf_hits if p not in fm_hit_leaves]
-        if pm_hit:
-            hit_df = local_frame(spark, "pixel_id long", [pm_hit])
-            t = ctotals.select(
-                F.col("cell_id").alias("pixel_id"), F.col("doc_ids").alias("tdocs")
-            )
-            x = (
-                hit_df.join(t, "pixel_id")
-                .join(
-                    rp.select(F.col("pixel_id"), F.col("doc_ids").alias("rdocs")),
-                    "pixel_id",
-                )
-                .select(
-                    "pixel_id", F.lit(res).cast("int").alias("level"),
-                    F.lit(False).alias("is_fm"),
-                    F.array_sort(F.array_except(F.col("tdocs"), F.col("rdocs"))).alias("doc_ids"),
-                ).where(F.size("doc_ids") > 0)
-            )
-            parts.append(x)
-    else:
-        parts.append(lf_surv)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    if not overlapped:
+        return _union_all(parts + [lf_surv])
+    over_keys = local_frame(spark, "pixel_id long, level int", zip(*overlapped))
+    parts.append(lf_surv.join(over_keys.hint("broadcast"), ["pixel_id", "level"],
+                              "left_anti"))
+    jobs = [(x, lx, plist) for (x, lx), plist in overlapped.items()]
+    fm_cells, leaf_hits = _decompose_fm(grid, jobs)
+    if fm_cells:
+        parts.append(hcqr_all_to_full(local_frame(
+            spark, "pixel_id long, level int", zip(*fm_cells))))
+    # leaf hits where the contained row was pm_R → cell totals − pm docs
+    pm_hit = [p for p in leaf_hits if p not in fm_hit_leaves]
+    if pm_hit:
+        parts.append(_totals_minus_pm(
+            local_frame(spark, "pixel_id long", [pm_hit]), rp, ctotals, res))
+    return _union_all(parts)
 
 
 def hcqr_op(
@@ -631,46 +496,32 @@ def hcqr_op(
     return compactify(out, grid, res, ctotals, pop_anc=pop_anc).localCheckpoint(eager=False)
 
 
-def hcqr_all_to_full(h: DataFrame) -> DataFrame:
-    return h.select(
-        "pixel_id", "level", F.lit(True).alias("is_fm"),
-        F.lit(None).cast("array<long>").alias("doc_ids"),
-    )
-
-
-def hcqr_items(h: DataFrame, ctotals: DataFrame, grid: str, res: int,
-               spark: SparkSession) -> DataFrame:
+def hcqr_items(h: DataFrame, ctotals: DataFrame, grid: str, res: int) -> DataFrame:
     """items(): flatten to distinct doc ids.  fm rows above leaf level pull
-    every leaf posting in their range (s2: range join; zxy: parent equality)."""
-    pm = h.where(~F.col("is_fm")).select(F.explode("doc_ids").alias("doc_id"))
-    fm_leaf = h.where(F.col("is_fm") & (F.col("level") == res)).select("pixel_id")
-    leaf_docs = fm_leaf.join(
-        ctotals.select(F.col("cell_id").alias("pixel_id"), "doc_ids"), "pixel_id"
-    ).select(F.explode("doc_ids").alias("doc_id"))
-    fm_up = h.where(F.col("is_fm") & (F.col("level") < res))
+    every leaf posting in their range (s2: range join; others: one
+    ancestor equi-join per fm level)."""
+    docs = "explode(doc_ids) AS doc_id"
+    parts = [
+        h.where("NOT is_fm").selectExpr(docs),
+        h.where(f"is_fm AND level = {res}").selectExpr("pixel_id AS cell_id")
+        .join(ctotals, "cell_id").selectExpr(docs),
+    ]
+    fm_up = h.where(f"is_fm AND level < {res}")
     if grid == "s2":
-        g = get_grid(grid)
-        lo, hi = g.col_range(F.col("pixel_id"))
-        ranges = F.broadcast(fm_up.select(lo.alias("lo"), hi.alias("hi")))
-        up_docs = ctotals.join(
-            ranges, (F.col("cell_id") >= F.col("lo")) & (F.col("cell_id") <= F.col("hi"))
-        ).select(F.explode("doc_ids").alias("doc_id"))
+        parts.append(ctotals.join(
+            _fside(fm_up, grid), F.expr("cell_id >= f_lo AND cell_id <= f_hi")
+        ).selectExpr(docs))
     else:
-        up = fm_up.select(F.col("pixel_id").alias("apix"), F.col("level").alias("alvl"))
-        tot = ctotals
-        parts = []
-        lvls = [row.alvl for row in up.select("alvl").dropDuplicates().collect()]
-        for lvl in lvls:
-            anc = parent_col(grid, F.col("cell_id"), int(lvl), from_res=res)
-            parts.append(
-                tot.withColumn("apix", anc)
-                .join(F.broadcast(up.where(F.col("alvl") == lvl)), "apix")
-                .select(F.explode("doc_ids").alias("doc_id"))
-            )
-        up_docs = parts[0] if parts else spark.range(0).select(F.col("id").alias("doc_id"))
-        for p in parts[1:]:
-            up_docs = up_docs.unionByName(p)
-    return pm.unionByName(leaf_docs).unionByName(up_docs).dropDuplicates(["doc_id"])
+        up = fm_up.selectExpr("pixel_id AS apix", "level AS alvl")
+        for row in up.select("alvl").dropDuplicates().collect():
+            lvl = int(row.alvl)
+            anc = _anc_sql(grid, res - lvl, "cell_id")
+            tot = (ctotals.withColumn("apix", parent_col(
+                       grid, F.col("cell_id"), lvl, from_res=res))
+                   if anc is None else ctotals.selectExpr("*", f"{anc} AS apix"))
+            parts.append(tot.join(up.where(f"alvl = {lvl}").hint("broadcast"), "apix")
+                         .selectExpr(docs))
+    return _union_all(parts).dropDuplicates(["doc_id"])
 
 
 def hcqr_stats(h: DataFrame, grid: str, res: int) -> DataFrame:

@@ -70,25 +70,34 @@ def cells_df(spark: SparkSession, arr, colname: str) -> DataFrame:
     return local_frame(spark, f"{colname} long", [np.asarray(arr, np.int64)])
 
 
+def _by_level(grid: str, full: np.ndarray, pop: np.ndarray, res: int):
+    """Per level of the full cells: (mask of the full cells at that level,
+    every populated res-level cell's ancestor at it)."""
+    g = get_grid(grid)
+    lvls = g.level(full)
+    for lvl in np.unique(lvls):
+        yield lvls == lvl, pop if int(lvl) == res else g.parent(pop, int(lvl))
+
+
 def expand_full_to_populated(
     grid: str, full: np.ndarray, pop: np.ndarray, res: int
 ) -> np.ndarray:
     """Full covering cells (mixed levels) → the POPULATED res-level cells
     they contain, via vectorized parent matching on the driver.  Exact: a
     dropped cell provably holds no documents."""
-    g = get_grid(grid)
-    lvls = g.level(full)
-    outs = []
-    for lvl in np.unique(lvls):
-        cells = full[lvls == lvl]
-        if int(lvl) == res:
-            outs.append(cells[np.isin(cells, pop)])
-        else:
-            anc = g.parent(pop, int(lvl))
-            outs.append(pop[np.isin(anc, cells)])
-    if not outs:
-        return np.empty(0, np.int64)
-    return np.unique(np.concatenate(outs))
+    return np.unique(np.concatenate([np.empty(0, np.int64)] + [
+        pop[np.isin(anc, full[sel])] for sel, anc in _by_level(grid, full, pop, res)]))
+
+
+def prune_full_to_populated(
+    grid: str, full: np.ndarray, pop: np.ndarray, res: int
+) -> np.ndarray:
+    """The full covering cells, at their own levels, that contain at least
+    one populated res-level cell."""
+    keep = np.zeros(len(full), bool)
+    for sel, anc in _by_level(grid, full, pop, res):
+        keep[sel] = np.isin(full[sel], anc)
+    return full[keep]
 
 
 def region_query_docs(

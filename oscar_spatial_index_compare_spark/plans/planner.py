@@ -1,9 +1,10 @@
 """Op-tree → DataFrame planner (SURVEY E2, §4).
 
-Recursively lowers a parsed op-tree to ONE lazy Catalyst plan over the
-postings tables.  Reproduces the reference evaluators' structure
-(``SgOpTree::calc`` ``include/hic/static-htm-index.h:197-299``,
-``HcqrOpTree::calc`` ``src/HcqrOpTree.cpp:13-153``) with their
+Recursively lowers a parsed op-tree to Catalyst plans over the postings
+tables, cut by local checkpoints where a subtree is referenced twice.
+Reproduces the reference evaluators' structure (``SgOpTree::calc``
+``include/hic/static-htm-index.h:197-299``, ``HcqrOpTree::calc``
+``src/HcqrOpTree.cpp:13-153``) with their
 empty-operand short-circuits (``src/HcqrOpTree.cpp:106-135``) done at plan
 time: a statically-empty leaf (no dictionary token matches the pattern)
 propagates ``None`` upward, pruning whole subtrees before Spark sees them.
@@ -15,13 +16,20 @@ nodes are the cqr_* joins, and Catalyst/AQE handle the physical plan.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.geo import pip_col, pip_hof_sql
+from ..functions.udfs import parent_col
+from ..grids.base import get_grid
+from ..operators.cell_stats import CellStats, cell_stats
 from ..operators.cqr import (
+    CQR_COLS,
+    FM_EXPRS,
     cqr_all_to_full,
     cqr_difference,
     cqr_dilate,
@@ -30,6 +38,14 @@ from ..operators.cqr import (
     cqr_symdiff,
     cqr_union,
 )
+from ..operators.region_query import (
+    MAX_BROADCAST_CELLS,
+    PIP_HOF_MAX_ROWS,
+    cached_covering,
+    cells_df,
+    expand_full_to_populated,
+    prune_full_to_populated,
+)
 from ..operators.token_index import DEFAULT_MAX_KEY_LEN, match_tokens, resolve_qt
 from ..session import local_frame
 from ..sources.regions import region_by_id, region_by_name
@@ -37,26 +53,31 @@ from .optree import Node, parse
 
 ALL_QTS = frozenset({"exact", "prefix", "suffix", "substring"})
 CQR_DDL = "cell_id long, is_fm boolean, doc_ids array<long>"
+HCQR_DDL = "pixel_id long, level int, is_fm boolean, doc_ids array<long>"
 
-# dictionary-expansion leaves lower to Column.isin(<literals>); above this
+# dictionary-expansion leaves lower to `token IN (<literals>)`; above this
 # many matches the literal list itself becomes the bottleneck (plan size,
-# py4j transfer) and the leaf takes the distributed predicate instead
+# parse) and the leaf takes the distributed predicate instead
 MAX_PLAN_LITERAL_TOKENS = 10_000
 
 
-def _token_pred(pat: str, qt: str):
+def sql_str(s: str) -> str:
+    """A Spark SQL string literal of ``s``: the one quoting path for
+    data-derived text in the planner's SQL expressions (the parser
+    unescapes backslashes, so both ``\\`` and ``'`` are escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+_TOKEN_PRED = {"exact": "token = {}", "prefix": "startswith(token, {})",
+               "suffix": "endswith(token, {})", "substring": "contains(token, {})"}
+
+
+def _token_pred(pat: str, qt: str) -> str:
     """Distributed leaf predicate on the postings token column — the
     no-driver-dictionary path (dictionary > Engine.MAX_DRIVER_TOKENS)."""
-    c = F.col("token")
-    if qt == "exact":
-        return c == F.lit(pat)
-    if qt == "prefix":
-        return c.startswith(pat)
-    if qt == "suffix":
-        return c.endswith(pat)
-    if qt == "substring":
-        return c.contains(pat)
-    raise ValueError(qt)
+    if qt not in _TOKEN_PRED:
+        raise ValueError(qt)
+    return _TOKEN_PRED[qt].format(sql_str(pat))
 
 
 @dataclass
@@ -109,16 +130,22 @@ class Planner:
         """Query string → CQR DataFrame (None == statically empty)."""
         return self._eval(parse(query))
 
+    def _no_docs(self) -> DataFrame:
+        return self.ctx.spark.range(0).selectExpr("id AS doc_id")
+
     def docs(self, query: str) -> DataFrame:
         """Query string → flattened distinct doc_id DataFrame (Q10).
 
-        The CQR is lazily checkpointed before flatten: cqr_flatten
-        references it twice (fm branch joining cell_totals + pm explode),
-        and without a plan boundary the whole op-tree join DAG executes
-        once per reference (r06 — measured ~25% off every optree entry)."""
+        The CQR is checkpointed before flatten: cqr_flatten references it
+        twice (fm branch joining cell_totals + pm explode), and without a
+        plan boundary the whole op-tree join DAG executes once per
+        reference (r06 — measured ~25% off every optree entry).  Under AQE
+        the eager=False checkpoint already runs the tree's shuffle and
+        broadcast stages inside this call; only the flatten's own stages
+        wait for the caller's action."""
         c = self.cqr(query)
         if c is None:
-            return self.ctx.spark.range(0).select(F.col("id").alias("doc_id"))
+            return self._no_docs()
         return cqr_flatten(c.localCheckpoint(eager=False), self.ctx.ctotals)
 
     # -- HCQR evaluation (SURVEY E3) -----------------------------------------
@@ -129,11 +156,13 @@ class Planner:
 
         Inner set ops run WITHOUT per-node re-compaction (they preserve the
         normal form); one compactify at the root restores maximality —
-        4x fewer Spark jobs per tree than the r01 per-op scheme."""
+        4x fewer Spark jobs per tree than the r01 per-op scheme.  Spatial
+        leaves come straight from the covering, so a bare one is compacted
+        here too; token, cell and dilate leaves arrive compacted."""
         n = parse(query)
         h = self._eval_hcqr(n)
-        if h is None or n.op in ("token", "region", "poly", "rect", "cell", "dilate"):
-            return h  # leaves come pre-compacted from hcqr_from_cqr
+        if h is None or n.op in ("token", "cell", "dilate"):
+            return h
         from ..operators.hcqr import compactify
 
         ctx = self.ctx
@@ -153,8 +182,8 @@ class Planner:
 
         h = self._eval_hcqr(parse(query))
         if h is None:
-            return self.ctx.spark.range(0).select(F.col("id").alias("doc_id"))
-        return hcqr_items(h, self.ctx.ctotals, self.ctx.grid, self.ctx.res, self.ctx.spark)
+            return self._no_docs()
+        return hcqr_items(h, self.ctx.ctotals, self.ctx.grid, self.ctx.res)
 
     def _eval_hcqr(self, n: Node) -> DataFrame | None:
         from ..operators.hcqr import hcqr_all_to_full, hcqr_from_cqr, hcqr_op
@@ -166,28 +195,29 @@ class Planner:
             # serialized per-token tree, ``src/static-htm-index.cpp:202-207``)
             pat, qt = n.args
             qt = resolve_qt(qt, ctx.available_qts)
+            tok = pat if ctx.tokens is None and qt == "exact" else None
             if ctx.tokens is not None:
                 matched = match_tokens(ctx.tokens, pat, qt)
                 if not matched:
                     return None
                 if len(matched) == 1:
-                    # lazy checkpoint: the hcqr set ops reference each leaf
-                    # up to 5x (fm/pm splits + broadcast f-sides) — without
-                    # a boundary every reference rescans the postings table
-                    # (r06; same rationale as docs()'s flatten boundary)
-                    return ctx.hcqr_tbl.where(
-                        F.col("token") == F.lit(matched[0])
-                    ).select("pixel_id", "level", "is_fm", "doc_ids"
-                             ).localCheckpoint(eager=False)
-            elif qt == "exact":
-                return ctx.hcqr_tbl.where(F.col("token") == F.lit(pat)).select(
+                    tok = matched[0]
+            if tok is not None:
+                # checkpoint: the hcqr set ops reference each leaf up to 5x
+                # (fm/pm splits + broadcast f-sides) — without a boundary
+                # every reference rescans the postings table (r06; same
+                # rationale as docs()'s flatten boundary)
+                return ctx.hcqr_tbl.where(f"token = {sql_str(tok)}").selectExpr(
                     "pixel_id", "level", "is_fm", "doc_ids"
                 ).localCheckpoint(eager=False)
             # multi-token pattern: fall through to the CQR-lift path below
             # (a union of per-token compacted trees is not normal-form)
-        if n.op in ("token", "region", "poly", "rect", "cell", "dilate"):
-            # dilate has no structural HCQR form — like the spatial leaves,
-            # its CQR result is lifted (and compacted) into the hierarchy
+        if n.op in ("region", "poly", "rect"):
+            return self._region_hcqr(self._poly(n))
+        if n.op in ("token", "cell", "dilate"):
+            # dilate has no structural HCQR form — like a multi-token
+            # leaf, its CQR result is lifted (and compacted) into the
+            # hierarchy
             c = self._eval(n)
             if c is None:
                 return None
@@ -238,8 +268,7 @@ class Planner:
                     entry if isinstance(entry, tuple) else (entry, DEFAULT_MAX_KEY_LEN)
                 )
                 if len(pat) <= cap:
-                    tp = tbl.where(F.col("token") == F.lit(pat))
-                    return tp.select("cell_id", "is_fm", "doc_ids")
+                    return tbl.where(f"token = {sql_str(pat)}").selectExpr(*CQR_COLS)
             if ctx.tokens is not None:
                 matched = match_tokens(ctx.tokens, pat, qt)
                 if not matched:
@@ -247,39 +276,29 @@ class Planner:
                 if len(matched) > MAX_PLAN_LITERAL_TOKENS:
                     # a broad pattern (e.g. '*e*') over a large dictionary
                     # would lower to ONE In-expression carrying 10^5+ string
-                    # literals through py4j — minutes of driver plan-build,
-                    # potentially OOM.  The distributed postings-filter twin
-                    # is plan-size O(1) and verified row-equivalent
+                    # literals — minutes of driver plan-build, potentially
+                    # OOM.  The distributed postings-filter twin is
+                    # plan-size O(1) and verified row-equivalent
                     # (tests/test_corpus_dictionary.py exercises both paths)
-                    tp = ctx.tpostings.where(_token_pred(pat, qt))
-                    single = qt == "exact"
+                    pred, single = _token_pred(pat, qt), qt == "exact"
                 else:
-                    tp = ctx.tpostings.where(F.col("token").isin(matched))
+                    pred = f"token IN ({', '.join(map(sql_str, matched))})"
                     single = len(matched) == 1
             else:
                 # web-scale dictionary: lower to a distributed filter on the
                 # postings table (no driver-side token scan at all)
-                tp = ctx.tpostings.where(_token_pred(pat, qt))
-                single = qt == "exact"
+                pred, single = _token_pred(pat, qt), qt == "exact"
+            tp = ctx.tpostings.where(pred)
             if single:
-                return tp.select("cell_id", "is_fm", "doc_ids")
+                return tp.selectExpr(*CQR_COLS)
             # multi-token (prefix/suffix/substring) → per-cell union; fm wins
             return tp.groupBy("cell_id").agg(
-                F.max("is_fm").alias("is_fm"),
-                F.when(
-                    F.max("is_fm"), F.lit(None)
-                ).otherwise(
-                    F.array_sort(F.array_distinct(F.flatten(F.collect_list("doc_ids"))))
-                ).alias("doc_ids"),
+                F.expr("max(is_fm) AS is_fm"),
+                F.expr("CASE WHEN max(is_fm) THEN NULL ELSE array_sort("
+                       "array_distinct(flatten(collect_list(doc_ids)))) END AS doc_ids"),
             )
         if n.op in ("region", "poly", "rect"):
-            if n.op == "rect":
-                la0, la1, lo0, lo1 = n.args
-                poly = np.array(
-                    [[la0, lo0], [la0, lo1], [la1, lo1], [la1, lo0]], np.float64)
-            else:
-                poly = region_by_id(n.args[0]) if n.op == "region" else region_by_name(n.args[0])
-            return self._region_cqr(poly)
+            return self._region_cqr(self._poly(n))
         if n.op == "dilate":
             c = self._eval(n.args[0])
             # dilating the empty result is empty (no cells → no neighbors)
@@ -318,98 +337,91 @@ class Planner:
             return cqr_symdiff(l, r, self.ctx.ctotals)
         raise ValueError(n.op)
 
+    @staticmethod
+    def _poly(n: Node) -> np.ndarray:
+        if n.op == "rect":
+            la0, la1, lo0, lo1 = n.args
+            return np.array(
+                [[la0, lo0], [la0, lo1], [la1, lo1], [la1, lo0]], np.float64)
+        return region_by_id(n.args[0]) if n.op == "region" else region_by_name(n.args[0])
+
     def _region_cqr(self, poly: np.ndarray) -> DataFrame:
         """Polygon leaf → CQR: res-level fm cells inside + pm boundary cells
         with exact-PIP doc lists (the CQR face of operators/region_query)."""
-        from ..functions.geo import pip_col
-        from ..functions.udfs import parent_col
-        from ..grids.base import get_grid
-        from ..operators.region_query import (
-            MAX_BROADCAST_CELLS,
-            cached_covering,
-            cells_df,
-            expand_full_to_populated,
-        )
-        from ..operators.cell_stats import cell_stats
-
         ctx = self.ctx
-        g = get_grid(ctx.grid)
         full, boundary = cached_covering(ctx.grid, poly, ctx.res)
-        spark = ctx.spark
         parts: list[DataFrame] = []
         stats = cell_stats(ctx.mcells, ctx.grid, ctx.res)
         pop = None if stats is None else stats.cells
-        fulls = None
         if pop is not None:
             fulls = expand_full_to_populated(ctx.grid, full, pop, ctx.res)
             if len(fulls) + len(boundary) > MAX_BROADCAST_CELLS:
-                pop, fulls = None, None  # too big to ship — distributed path
-            elif len(boundary):
-                boundary = boundary[np.isin(boundary, pop)]
-        if len(full):
-            if pop is not None:
-                # driver-side exact pruning: emit the populated fm cells
-                # directly — zero Spark work for the full-match side
-                if len(fulls):
-                    parts.append(cells_df(spark, fulls, "cell_id").select(
-                        "cell_id", F.lit(True).alias("is_fm"),
-                        F.lit(None).cast("array<long>").alias("doc_ids"),
-                    ))
+                pop = None  # too big to ship — distributed path
             else:
-                # distributed fallback: per-level ancestor equi-joins
-                present = ctx.ctotals.select("cell_id")
-                lvls = g.level(full)
-                for lvl in np.unique(lvls):
-                    cdf = F.broadcast(cells_df(spark, full[lvls == lvl], "fcell"))
-                    if int(lvl) == ctx.res:
-                        cond = F.col("cell_id") == F.col("fcell")
-                        parts.append(present.join(cdf, cond).select(
-                            "cell_id", F.lit(True).alias("is_fm"),
-                            F.lit(None).cast("array<long>").alias("doc_ids"),
-                        ))
-                    else:
-                        anc = present.withColumn(
-                            "anc", parent_col(ctx.grid, F.col("cell_id"), int(lvl), from_res=ctx.res)
-                        )
-                        parts.append(anc.join(cdf, F.col("anc") == F.col("fcell")).select(
-                            "cell_id", F.lit(True).alias("is_fm"),
-                            F.lit(None).cast("array<long>").alias("doc_ids"),
-                        ))
+                boundary = boundary[np.isin(boundary, pop)]
+                if len(fulls):
+                    # driver-side exact pruning: emit the populated fm
+                    # cells directly — zero Spark work for the full side
+                    parts.append(cells_df(ctx.spark, fulls, "cell_id")
+                                 .selectExpr("cell_id", *FM_EXPRS))
+        if pop is None and len(full):
+            # distributed fallback: per-level ancestor equi-joins
+            lvls = get_grid(ctx.grid).level(full)
+            for lvl in np.unique(lvls):
+                cdf = cells_df(ctx.spark, full[lvls == lvl], "anc").hint("broadcast")
+                anc = F.col("cell_id") if int(lvl) == ctx.res else parent_col(
+                    ctx.grid, F.col("cell_id"), int(lvl), from_res=ctx.res)
+                parts.append(ctx.ctotals.select("cell_id", anc.alias("anc"))
+                             .join(cdf, "anc").selectExpr("cell_id", *FM_EXPRS))
         if len(boundary):
-            bdf = F.broadcast(cells_df(spark, boundary, "bcell"))
-            cand = ctx.mcells.join(bdf, F.col("cell_id") == F.col("bcell"))
-            # PIP form choice mirrors region_query._batch_dim: when the
-            # context's mention-cell row counts bound the boundary rows
-            # below PIP_HOF_MAX_ROWS, the polygon-independent interpreted
-            # form skips the per-polygon codegen; otherwise the unrolled
-            # codegen form that scales.  Bit-identical either way.
-            from ..functions.geo import pip_hof_sql
-            from ..operators.region_query import PIP_HOF_MAX_ROWS
-
-            pip_gate = (
-                F.expr(pip_hof_sql("lat", "lon", poly))
-                if stats is not None
-                and stats.row_bound(boundary) <= PIP_HOF_MAX_ROWS
-                else pip_col(F.col("lat"), F.col("lon"), poly))
-            pm = (
-                cand.where(pip_gate)
-                .groupBy("cell_id")
-                .agg(F.array_sort(F.collect_set("doc_id")).alias("m_docs"))
-            )
-            # a boundary cell where *every* doc matches is fm (classification
-            # invariant, reference src/OscarSearchSgIndex.cpp:178-197)
-            pm = pm.join(
-                ctx.ctotals.select("cell_id", F.col("n_docs").alias("n_total")), "cell_id"
-            ).select(
-                "cell_id",
-                (F.size("m_docs") == F.col("n_total")).alias("is_fm"),
-                F.when(F.size("m_docs") == F.col("n_total"), F.lit(None))
-                .otherwise(F.col("m_docs")).alias("doc_ids"),
-            )
-            parts.append(pm)
+            parts.append(self._boundary_cqr(poly, boundary, stats))
         if not parts:
-            return local_frame(self.ctx.spark, CQR_DDL, [[], [], []])
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            return local_frame(ctx.spark, CQR_DDL, [[], [], []])
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    def _region_hcqr(self, poly: np.ndarray) -> DataFrame:
+        """Polygon leaf → normal-form HCQR straight from the covering, with
+        no Spark compaction: the covering's full cells are already disjoint
+        and hierarchical, so each is one fm row at its own level (pruned to
+        the cells holding a populated leaf when the context's stats are on
+        the driver); boundary cells keep the CQR's exact-PIP rows at res.
+        hcqr() compacts a bare spatial leaf at the root."""
+        ctx = self.ctx
+        full, boundary = cached_covering(ctx.grid, poly, ctx.res)
+        stats = cell_stats(ctx.mcells, ctx.grid, ctx.res)
+        if stats is not None:
+            full = prune_full_to_populated(ctx.grid, full, stats.cells, ctx.res)
+            boundary = boundary[np.isin(boundary, stats.cells)]
+        n = len(full)
+        out = local_frame(ctx.spark, HCQR_DDL, [
+            full, get_grid(ctx.grid).level(full).astype(np.int32),
+            np.ones(n, bool), [None] * n])
+        if len(boundary):
+            out = out.unionByName(self._boundary_cqr(poly, boundary, stats).selectExpr(
+                "cell_id AS pixel_id", f"{ctx.res} AS level", "is_fm", "doc_ids"))
+        # checkpoint: the set ops reference each leaf up to 5x
+        return out.localCheckpoint(eager=False)
+
+    def _boundary_cqr(self, poly: np.ndarray, boundary: np.ndarray,
+                      stats: CellStats | None) -> DataFrame:
+        """Boundary cells → CQR rows from exact PIP over their mentions."""
+        ctx = self.ctx
+        cand = ctx.mcells.join(
+            cells_df(ctx.spark, boundary, "cell_id").hint("broadcast"), "cell_id")
+        # PIP form choice mirrors region_query._batch_dim: when the
+        # context's mention-cell row counts bound the boundary rows below
+        # PIP_HOF_MAX_ROWS, the polygon-independent interpreted form skips
+        # the per-polygon codegen; otherwise the unrolled codegen form that
+        # scales.  Bit-identical either way.
+        if stats is not None and stats.row_bound(boundary) <= PIP_HOF_MAX_ROWS:
+            cand = cand.where(pip_hof_sql("lat", "lon", poly))
+        else:
+            cand = cand.where(pip_col(F.col("lat"), F.col("lon"), poly))
+        # a boundary cell where *every* doc matches is fm (classification
+        # invariant, reference src/OscarSearchSgIndex.cpp:178-197)
+        return (
+            cand.groupBy("cell_id").agg(F.expr("array_sort(collect_set(doc_id)) AS m_docs"))
+            .join(ctx.ctotals.selectExpr("cell_id", "n_docs AS n_total"), "cell_id")
+            .selectExpr("cell_id", "size(m_docs) = n_total AS is_fm",
+                        "CASE WHEN size(m_docs) = n_total THEN NULL ELSE m_docs END AS doc_ids")
+        )

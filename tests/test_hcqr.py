@@ -6,13 +6,18 @@ query-for-query, and compactification must preserve items()
 (``src/static-htm-index.cpp:359-362`` compactified trees answer identically).
 """
 
+import numpy as np
 import pytest
 
+from oscar_spatial_index_compare_spark.grids.base import get_grid
+from oscar_spatial_index_compare_spark.operators import cell_stats as cs
 from oscar_spatial_index_compare_spark.operators.hcqr import (
     hcqr_from_cqr,
     hcqr_items,
     hcqr_stats,
 )
+from oscar_spatial_index_compare_spark.operators.region_query import cached_covering
+from oscar_spatial_index_compare_spark.plans.optree import parse
 
 QUERIES = [
     "join",
@@ -35,6 +40,22 @@ def test_hcqr_matches_cqr(engine, q, grid, res):
     assert hdocs == cqr_docs, f"{grid} {q}: hcqr {len(hdocs)} vs cqr {len(cqr_docs)}"
 
 
+def _assert_normal_form(rows, grid, res):
+    """No row has an fm ancestor among the rows; pm rows sit at res."""
+    g = get_grid(grid)
+    fmset = {(r.pixel_id, r.level) for r in rows if r.is_fm}
+    for r in rows:
+        assert r.is_fm or r.level == res, "pm row above leaf res"
+        cur = np.array([r.pixel_id])
+        for lvl in range(r.level - 1, -1, -1):
+            cur = g.parent(cur, lvl)
+            assert (int(cur[0]), lvl) not in fmset, "fm ancestor present"
+
+
+def _rows(df):
+    return {(r.pixel_id, r.level, r.is_fm, tuple(r.doc_ids or [])) for r in df.collect()}
+
+
 @pytest.mark.parametrize("grid,res", [("s2", 10), ("zxy", 9), ("h3", 5)])
 def test_compactify_preserves_items_and_normal_form(engine, grid, res):
     p = engine.planner(grid, res)
@@ -42,27 +63,72 @@ def test_compactify_preserves_items_and_normal_form(engine, grid, res):
     c = p.cqr("join")
     h = hcqr_from_cqr(c, grid, res, ctx.ctotals)
     rows = h.collect()
-    # normal form: no row has an fm ancestor among the rows
-    from oscar_spatial_index_compare_spark.grids.base import get_grid
-    import numpy as np
-
-    g = get_grid(grid)
-    fm = [(r.pixel_id, r.level) for r in rows if r.is_fm]
-    fmset = set(fm)
-    for r in rows:
-        cur = np.array([r.pixel_id])
-        for lvl in range(r.level - 1, -1, -1):
-            cur = g.parent(cur, lvl)
-            assert (int(cur[0]), lvl) not in fmset, "fm ancestor present"
+    _assert_normal_form(rows, grid, res)
     # items preserved
     from oscar_spatial_index_compare_spark.operators.cqr import cqr_flatten
 
-    items_h = {r.doc_id for r in hcqr_items(h, ctx.ctotals, grid, res, ctx.spark).collect()}
+    items_h = {r.doc_id for r in hcqr_items(h, ctx.ctotals, grid, res).collect()}
     items_c = {r.doc_id for r in cqr_flatten(c, ctx.ctotals).collect()}
     assert items_h == items_c
     # compaction actually happened for a common token at coarse-ish res
     n_leaves = sum(1 for r in rows if r.level == res)
     assert len(rows) <= c.count()
+
+
+SPATIAL_LEAVES = ["$region:1", "$rect:40.1,55.2,-5.3,15.7", "$poly:concave_c"]
+# a rect far smaller than one leaf cell of either grid: its covering has
+# boundary cells only
+TINY_RECT = "$rect:48.84,48.86,2.34,2.36"
+
+
+def _check_covering_leaf(engine, q, grid, res):
+    """A spatial leaf lifted from the covering: hcqr() rows equal the old
+    lift (res-level CQR → compactify) row for row, and items equal the
+    flat CQR docs."""
+    p = engine.planner(grid, res)
+    ctx = p.ctx
+    lifted = hcqr_from_cqr(p.cqr(q), grid, res, ctx.ctotals, pop_anc=ctx.pop_anc())
+    assert _rows(p.hcqr(q)) == _rows(lifted)
+    cqr_docs = {r.doc_id for r in p.docs(q).collect()}
+    assert {r.doc_id for r in p.hcqr_docs(q).collect()} == cqr_docs
+
+
+def _unpruned(engine, grid, res, monkeypatch):
+    """Force the no-driver-stats path: MAX_DRIVER_CELLS = -1 on a fresh
+    stats memo, so cell_stats returns None and full cells stay unpruned."""
+    ctx = engine.planner(grid, res).ctx
+    monkeypatch.setattr(cs, "MAX_DRIVER_CELLS", -1)
+    monkeypatch.setitem(ctx.mcells.__dict__, cs._MEMO, {})
+    assert cs.cell_stats(ctx.mcells, grid, res) is None
+
+
+@pytest.mark.parametrize("grid,res", [("s2", 10), ("zxy", 9)])
+@pytest.mark.parametrize("q", SPATIAL_LEAVES)
+def test_covering_leaf_matches_lifted(engine, q, grid, res):
+    _check_covering_leaf(engine, q, grid, res)
+
+
+@pytest.mark.parametrize("grid,res", [("s2", 10), ("zxy", 9)])
+@pytest.mark.parametrize("q", SPATIAL_LEAVES)
+def test_unpruned_covering_leaf_is_normal_form(engine, q, grid, res, monkeypatch):
+    _unpruned(engine, grid, res, monkeypatch)
+    p = engine.planner(grid, res)
+    poly = p._poly(parse(q))
+    full, _ = cached_covering(grid, poly, res)
+    rows = p._region_hcqr(poly).collect()
+    _assert_normal_form(rows, grid, res)
+    # unpruned: every full covering cell is an fm row at its own level
+    assert {(r.pixel_id, r.level) for r in rows if r.is_fm} >= {
+        (int(c), int(l)) for c, l in zip(full, get_grid(grid).level(full))}
+    _check_covering_leaf(engine, q, grid, res)
+
+
+@pytest.mark.parametrize("grid,res", [("s2", 10), ("zxy", 9)])
+def test_covering_leaf_without_full_cells(engine, grid, res):
+    p = engine.planner(grid, res)
+    full, boundary = cached_covering(grid, p._poly(parse(TINY_RECT)), res)
+    assert len(full) == 0 and len(boundary) > 0
+    _check_covering_leaf(engine, TINY_RECT, grid, res)
 
 
 @pytest.mark.parametrize("grid,res", [("s2", 10)])

@@ -1,13 +1,14 @@
 #!/bin/bash
 # min-of-3 bench protocol for the noisy shared host: fresh tmpfs per run,
-# per-query minima printed as one JSON line.  Usage:
+# per-query minima printed as one JSON line.  Spark gets every core of the
+# host unless SPARK_GRAFT_CPUS is set.  Usage:
 #   tools/bench_min3.sh <sf_dir> <out_prefix>
 set -e
 SF=${1:-/root/testdata/sf0.1}
 PREFIX=${2:-/tmp/bench_min3}
 for i in 1 2 3; do
   rm -rf /dev/shm/sparktmp && mkdir -p /dev/shm/sparktmp
-  SPARK_GRAFT_SF_DIR=$SF SPARK_GRAFT_CPUS=32 timeout 900 python bench.py \
+  SPARK_GRAFT_SF_DIR=$SF SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)} timeout 900 python bench.py \
     2>/dev/null | tr '\r' '\n' | grep '"metric"' > ${PREFIX}_$i.json
 done
 python - "$PREFIX" <<'EOF'
