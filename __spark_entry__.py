@@ -499,24 +499,23 @@ _BATCH_COUNT_REGIONS = ["metro", "south_pent", "concave_c", "east_am",
 
 
 def _region_batch_counts(spark, sf):
-    """Batched per-doc BITMAP counts lowering (region_query_batch_counts):
-    run-length-compressed BETWEEN predicates + PIP on boundary rows, one
-    scan, zero joins.  Raises if the bitmap path would not fire, so this
-    entry is hard evidence for exactly the lowering bench/scaling time
-    (ADVICE r03 high: that path previously had no oracle coverage)."""
+    """Batched counts (region_query_batch_counts): the batch's pruned
+    coverings as ONE broadcast (cell_id, rid, needs_pip) dimension, PIP on
+    boundary-tagged rows, then the packed per-doc bitmap aggregation.
+    Raises unless the whole batch fits one dimension, so this entry is
+    evidence for exactly the lowering bench/scaling time."""
+    from oscar_spatial_index_compare_spark.operators import region_query as rq
     from oscar_spatial_index_compare_spark.operators.cell_stats import cell_stats
-    from oscar_spatial_index_compare_spark.operators.region_query import (
-        _batch_preds_sql,
-        region_query_batch_counts,
-    )
 
     eng = _engine(spark, sf)
     ctx = eng.context("s2", 10)
     regs = [(n, region_by_name(n)) for n in _BATCH_COUNT_REGIONS]
     stats = cell_stats(ctx.mcells, "s2", 10)
-    assert stats is not None and _batch_preds_sql(regs, "s2", 10, stats) is not None, \
-        "bitmap lowering must fire for this entry to certify it"
-    return region_query_batch_counts(spark, ctx.mcells, regs, "s2", 10)
+    covs = [rq.dimension_covering("s2", p, 10, stats) for _n, p in regs]
+    assert None not in covs and sum(
+        len(f) + len(b) for f, b in covs) <= rq.MAX_BROADCAST_CELLS, \
+        "the one-dimension lowering must fire for this entry to certify it"
+    return rq.region_query_batch_counts(spark, ctx.mcells, regs, "s2", 10)
 
 
 def _region_batch_counts_sql() -> str:

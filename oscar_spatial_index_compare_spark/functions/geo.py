@@ -1,10 +1,11 @@
-"""Scalar geo functions with Spark-Column and ANSI-SQL twins.
+"""Scalar geo functions, each built once from one formula.
 
-Every function here exists twice, built from the *same formula*: once as a
-pyspark Column expression (JVM-side, whole-stage codegen) and once as an SQL
-string generator for the DuckDB oracle.  This is how the driver's
-side-by-side correctness harness can verify geo operators bit-for-bit
-without any geo library on either side.
+Haversine and meter quantization exist as a pyspark Column expression
+(JVM-side, whole-stage codegen) and as an SQL string for the DuckDB
+oracle.  Point-in-polygon is SQL text only: ``pip_sql`` is the one string
+that both Spark and DuckDB evaluate, and ``pip_hof_sql`` its bit-identical
+polygon-independent Spark form.  So the side-by-side correctness harness
+verifies geo operators bit-for-bit without any geo library on either side.
 
 Reference analogs: exact PIP refinement plays the role of the reference's
 exact triangulation lookup ``tr.cellIds(p)`` (``src/OscarSgIndex.cpp:106-111``);
@@ -56,29 +57,13 @@ def haversine_np(lat1, lon1, lat2, lon2):
 # point-in-polygon (ray casting), polygon fixed at plan time
 # --------------------------------------------------------------------------
 
-def pip_col(lat_col, lon_col, poly: np.ndarray) -> Column:
-    """Ray-casting PIP as a Column expression with the polygon inlined.
+def pip_sql(lat: str, lon: str, poly: np.ndarray) -> str:
+    """Ray-casting PIP as an SQL boolean with the polygon inlined.
 
-    Same edge formula as grids.base.point_in_poly and pip_sql: a crossing is
-    counted when the edge straddles the point's latitude and the intersection
+    Same edge formula as grids.base.point_in_poly: a crossing is counted
+    when the edge straddles the point's latitude and the intersection
     longitude lies east of the point.
     """
-    x1s, y1s = poly[:, 1], poly[:, 0]
-    x2s, y2s = np.roll(x1s, -1), np.roll(y1s, -1)
-    crossings = None
-    for x1, y1, x2, y2 in zip(x1s, y1s, x2s, y2s):
-        straddle = (F.lit(float(y1)) > lat_col) != (F.lit(float(y2)) > lat_col)
-        xin = (
-            F.lit(float(x2 - x1)) * (lat_col - F.lit(float(y1))) / F.lit(float(y2 - y1))
-            + F.lit(float(x1))
-        )
-        c = F.when(straddle & (lon_col < xin), F.lit(1)).otherwise(F.lit(0))
-        crossings = c if crossings is None else crossings + c
-    return (crossings % 2) == 1
-
-
-def pip_sql(lat: str, lon: str, poly: np.ndarray) -> str:
-    """The identical crossing-count test as an SQL boolean expression."""
     x1s, y1s = poly[:, 1], poly[:, 0]
     x2s, y2s = np.roll(x1s, -1), np.roll(y1s, -1)
     terms = []

@@ -109,17 +109,6 @@ class Grid:
         """
         raise NotImplementedError
 
-    def lattice_step(self, res: int) -> int:
-        """Id stride between lattice-adjacent SIBLING ids at ``res``, for
-        run-length compression of sorted coverings (region_query._runs): a
-        maximal run [lo..hi] at this step may be emitted as ``cell_id
-        BETWEEN lo AND hi`` and matches EXACTLY the run members among valid
-        res-level ids.  1 is always exact (consecutive integers); grids
-        whose res-level ids are step-aligned (s2: ≡ lsb mod 2·lsb) override
-        with the real stride so runs actually compress.  NEVER infer this
-        from observed data (ADVICE r03: min-diff inference overcounted)."""
-        return 1
-
     # --- native Spark column hooks (None → use pandas UDF) ----------------
     def col_cell(self, lat_col, lon_col, res: int):
         return None

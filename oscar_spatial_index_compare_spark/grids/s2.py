@@ -162,14 +162,6 @@ class S2Grid(Grid):
     def _lsb_for(res: int) -> _U64:
         return _U64(1) << _U64(2 * (MAX_LEVEL - res))
 
-    def lattice_step(self, res: int) -> int:
-        """Hilbert-adjacent level-``res`` ids differ by exactly 2·lsb, and
-        every valid level-``res`` id is ≡ lsb (mod 2·lsb) — so a BETWEEN
-        over a 2·lsb-stride run matches exactly the run members among
-        res-level ids (the stride is DERIVED from the id scheme, never from
-        observed data; ADVICE r03)."""
-        return 1 << (2 * (MAX_LEVEL - res) + 1)
-
     def _parent_u64(self, ids_u64, res: int):
         # (id & -lsb) | lsb : clear position bits below `res`, set the marker
         lsb = self._lsb_for(res)

@@ -242,13 +242,13 @@ def region_mention_cells(mcells: DataFrame) -> DataFrame:
     *inside* mentions only, not every cell of a member doc.  Regions are few
     and fixed → per-region PIP filters unioned, all JVM-side.
     """
-    from ..functions.geo import pip_col
+    from ..functions.geo import pip_sql
     from ..sources.regions import REGIONS
 
     parts = []
     for rid, _name, _lvl, poly in REGIONS:
         parts.append(
-            mcells.where(pip_col(F.col("lat"), F.col("lon"), poly))
+            mcells.where(F.expr(pip_sql("lat", "lon", poly)))
             .select("grid", "res", F.lit(rid).alias("region_id"), "doc_id", "cell_id")
         )
     out = parts[0]

@@ -1,27 +1,28 @@
-"""Region (polygon) queries: polyfill + exact PIP refinement (SURVEY X1).
+"""Region (polygon) queries: a covering plus exact PIP refinement (SURVEY X1).
 
 The reference stubs polygon leaves (``src/OscarSearchWithSg.cpp:167-181``,
-UnsupportedFeature) but the north star mandates them.  Plan shape:
+UnsupportedFeature) but the north star mandates them.  A polygon lowers to
+its grid covering:
 
-    covering(poly, res)  →  full cells (possibly coarser levels)
-                         →  boundary cells (exactly res)
+    covering(poly, res)  →  full cells (possibly coarser levels): no PIP
+                         →  boundary cells (exactly res): exact PIP
 
-    docs = ( mention_cells ⋈ full-cell ranges )          -- no PIP needed
-          ∪ ( mention_cells ⋈ boundary cells → exact PIP )
-    distinct doc_id
+the same full-match short-cut the reference gets from fm-cell lists
+(``src/OscarSearchSgIndex.cpp:117-130``).  Every region entry point goes
+through one lowering, ``_region_rows``:
 
-Scale notes:
-  * the covering is computed driver-side (numpy, ≤ tens of thousands of
-    cells) and **broadcast**; the probe side is the bucketed
-    ``mention_cells`` table, so the join is a broadcast hash/range join with
-    zero shuffle of the big side.
-  * for s2, full cells at coarser levels join via contiguous id **ranges**
-    (cell_id BETWEEN lo AND hi) — parquet/Iceberg min-max stats prune files;
-    for hex/zxy, full coverings are emitted at the query res so equality
-    joins suffice.
-  * exact PIP (pip_col) runs only on boundary candidates — the same
-    full-match short-cut the reference gets from fm-cell lists
-    (``src/OscarSearchSgIndex.cpp:117-130``).
+  * with the context's ``CellStats`` on the driver, each covering is pruned
+    to the populated res-level cells.  When a batch's pruned cells fit
+    MAX_BROADCAST_CELLS they ship as ONE broadcast ``(cell_id, rid,
+    needs_pip)`` dimension, joined once against ``mention_cells`` with PIP
+    only on ``needs_pip`` rows; otherwise each region ships its own.
+  * regions with no pruned dimension (no driver stats, or a pruned
+    covering over the cap on its own) join their raw full cells level by
+    level on ancestor ids (``full_cell_rows``, shared with the planner's
+    CQR leaf) and ship their raw boundary cells as one dimension.
+
+PIP is one SQL string, ``pip_filter_sql``; the planner's boundary rows
+(``boundary_rows``) use it too.
 """
 
 from __future__ import annotations
@@ -32,19 +33,24 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.geo import pip_col
+from ..functions.geo import pip_hof_sql, pip_sql
 from ..grids.base import get_grid
 from ..session import local_frame
 from .cell_stats import CellStats, cell_stats
 
 # largest exact boundary-row bound for which the polygon-independent
-# interpreted PIP form (pip_hof_sql) is used in the batch-dimension gate.
-# Measured trade (probe r06e, 32 cores): the unrolled codegen form costs
-# ~0.6-1.5 s of janino compile PER DISTINCT POLYGON; the HOF form compiles
-# once ever but evaluates ~3x slower per row (1.19 s vs 0.39 s per 16M
-# rows).  Break-even ≈ 30M boundary rows; below this cap the compile saving
-# wins, above it per-row speed wins — scale-adaptive by construction.
+# interpreted PIP form (pip_hof_sql) is used.  Measured trade (probe r06e,
+# 32 cores): the unrolled codegen form costs ~0.6-1.5 s of janino compile
+# PER DISTINCT POLYGON; the HOF form compiles once ever but evaluates ~3x
+# slower per row (1.19 s vs 0.39 s per 16M rows).  Break-even ≈ 30M
+# boundary rows; below this cap the compile saving wins, above it per-row
+# speed wins — scale-adaptive by construction.
 PIP_HOF_MAX_ROWS = 20_000_000
+
+# largest pruned covering shipped from the driver as one broadcast
+# dimension: a batch over it ships one dimension per region, and a region
+# over it on its own takes the distributed per-level equi-joins
+MAX_BROADCAST_CELLS = 200_000
 
 
 def cached_covering(grid_name: str, poly: np.ndarray, res: int):
@@ -60,9 +66,14 @@ def _covering(grid_name: str, res: int, poly: bytes):
         np.frombuffer(poly, np.float64).reshape(-1, 2), res)
 
 
-# largest pruned covering worth shipping from the driver as a broadcast
-# list; above it the distributed per-level equi-join path wins
-MAX_BROADCAST_CELLS = 200_000
+def pip_filter_sql(poly: np.ndarray, row_bound: int | None) -> str:
+    """Exact PIP of the ``lat``/``lon`` columns as SQL text: the
+    polygon-independent HOF form when ``row_bound``, a driver-known bound
+    on the rows it filters, is at most PIP_HOF_MAX_ROWS; otherwise the
+    unrolled form that scales.  The two are bit-identical."""
+    if row_bound is not None and row_bound <= PIP_HOF_MAX_ROWS:
+        return pip_hof_sql("lat", "lon", poly)
+    return pip_sql("lat", "lon", poly)
 
 
 def cells_df(spark: SparkSession, arr, colname: str) -> DataFrame:
@@ -79,16 +90,6 @@ def _by_level(grid: str, full: np.ndarray, pop: np.ndarray, res: int):
         yield lvls == lvl, pop if int(lvl) == res else g.parent(pop, int(lvl))
 
 
-def expand_full_to_populated(
-    grid: str, full: np.ndarray, pop: np.ndarray, res: int
-) -> np.ndarray:
-    """Full covering cells (mixed levels) → the POPULATED res-level cells
-    they contain, via vectorized parent matching on the driver.  Exact: a
-    dropped cell provably holds no documents."""
-    return np.unique(np.concatenate([np.empty(0, np.int64)] + [
-        pop[np.isin(anc, full[sel])] for sel, anc in _by_level(grid, full, pop, res)]))
-
-
 def prune_full_to_populated(
     grid: str, full: np.ndarray, pop: np.ndarray, res: int
 ) -> np.ndarray:
@@ -98,6 +99,57 @@ def prune_full_to_populated(
     for sel, anc in _by_level(grid, full, pop, res):
         keep[sel] = np.isin(full[sel], anc)
     return full[keep]
+
+
+def dimension_covering(grid: str, poly: np.ndarray, res: int,
+                       stats: CellStats | None):
+    """``poly``'s covering pruned to the populated cells of ``stats``: (the
+    populated res-level cells under its full cells, its populated boundary
+    cells).  Exact: a dropped cell holds no mention.  None when there are
+    no driver stats or the pruned cells exceed MAX_BROADCAST_CELLS."""
+    if stats is None:
+        return None
+    full, boundary = cached_covering(grid, poly, res)
+    pop = stats.cells
+    fulls = np.empty(0, np.int64)
+    if len(full):
+        fulls = np.unique(np.concatenate([fulls] + [
+            pop[np.isin(anc, full[sel])] for sel, anc in _by_level(grid, full, pop, res)]))
+    bnd = boundary[np.isin(boundary, pop)] if len(boundary) else boundary
+    return None if len(fulls) + len(bnd) > MAX_BROADCAST_CELLS else (fulls, bnd)
+
+
+def full_cell_rows(spark: SparkSession, frame: DataFrame, full: np.ndarray,
+                   grid: str, res: int, rids: np.ndarray | None = None) -> DataFrame:
+    """Rows of ``frame`` whose res-level ``cell_id`` lies under one of the
+    (mixed-level) full covering cells ``full``: one broadcast ancestor
+    equi-join per level, never a nested-loop join (parent-at-level is
+    native bit math for s2 and zxy).  With ``rids`` (aligned with
+    ``full``) each row also gets the ``rid`` of every region whose cell
+    it matched.  The full side of a region with no pruned dimension."""
+    from ..functions.udfs import parent_col
+
+    lvls = get_grid(grid).level(full)
+    parts = []
+    for lvl in np.unique(lvls):
+        sel = lvls == lvl
+        anc = F.col("cell_id") if int(lvl) == res else parent_col(
+            grid, F.col("cell_id"), int(lvl), from_res=res)
+        dim = cells_df(spark, full[sel], "anc") if rids is None else local_frame(
+            spark, "anc long, rid long", [full[sel], rids[sel]])
+        parts.append(frame.withColumn("anc", anc).join(dim.hint("broadcast"), "anc")
+                     .drop("anc"))
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def boundary_rows(spark: SparkSession, mcells: DataFrame, poly: np.ndarray,
+                  boundary: np.ndarray, stats: CellStats | None) -> DataFrame:
+    """Mention rows of ``mcells`` in the ``boundary`` cells that pass exact
+    PIP; the PIP form follows the stats' bound on those rows."""
+    bound = None if stats is None else stats.row_bound(boundary)
+    return mcells.join(
+        cells_df(spark, boundary, "cell_id").hint("broadcast"), "cell_id"
+    ).where(pip_filter_sql(poly, bound))
 
 
 def region_query_docs(
@@ -111,31 +163,14 @@ def region_query_docs(
 
     ``mcells``: mention_cells for (grid, res) — cell_id per mention.
 
-    Lowering (r03 VERDICT item 7 — a batch of one): ONE broadcast join
-    against the pruned covering dimension (_batch_dim) with exact PIP only
-    on boundary-tagged rows, then one dedup — instead of the r01-era 2-3
-    plan fragments + union.  (The run-length BETWEEN-predicate form that
-    batch COUNTS use is deliberately NOT used for singles: a several-
-    thousand-term OR chain pays ~1s of whole-stage-codegen compilation per
-    distinct polygon, which amortizes across a 10-query batch but dominates
-    a single query; a broadcast hash join has O(1) codegen.)  The
-    multi-fragment plan remains as the fallback when the populated-cell
-    list is too big for the driver or the covering exceeds
-    MAX_LITERAL_CELLS.
+    A batch of one through ``_region_rows`` (r03 VERDICT item 7): with
+    driver stats, ONE broadcast join against the pruned covering dimension
+    with exact PIP only on boundary-tagged rows, then one dedup.  A
+    broadcast hash join has O(1) codegen per polygon, where a chain of
+    per-cell predicates pays whole-stage compilation per distinct polygon.
     """
-    probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res))
-    stats = cell_stats(mcells, grid, res)
-    dim = _batch_dim(spark, probe, [("q", poly)], grid, res, stats)
-    if dim is not None:
-        j, _names = dim
-        return j.select("doc_id").dropDuplicates(["doc_id"])
-    parts = _one_region_parts(spark, probe, poly, grid, res, stats)
-    if not parts:
-        return spark.range(0).select(F.col("id").alias("doc_id"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.dropDuplicates(["doc_id"])
+    rows, _names = _region_rows(spark, mcells, [("q", poly)], grid, res)
+    return rows.select("doc_id").dropDuplicates(["doc_id"])
 
 
 def region_query_batch(
@@ -159,27 +194,13 @@ def region_query_batch(
     costs are exactly what caps query-throughput scaling between cluster
     sizes (north_rule).
     """
-    probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res))
-    stats = cell_stats(mcells, grid, res)
-    dim = _batch_dim(spark, probe, regions, grid, res, stats)
-    if dim is not None:
-        j, names = dim
-        out = j.select("rid", "doc_id").dropDuplicates(["rid", "doc_id"])
-        name_arr = F.array(*[F.lit(n) for n in names])
-        return out.select(
-            F.element_at(name_arr, (F.col("rid") + 1).cast("int")).alias("region"), "doc_id"
-        )
-    tagged: list[DataFrame] = []
-    for name, poly in regions:
-        for p in _one_region_parts(spark, probe, poly, grid, res, stats):
-            tagged.append(p.select(F.lit(name).alias("region"), "doc_id"))
-    if not tagged:
-        return spark.range(0).select(
-            F.lit("").alias("region"), F.col("id").alias("doc_id"))
-    out = tagged[0]
-    for p in tagged[1:]:
-        out = out.unionByName(p)
-    return out.dropDuplicates(["region", "doc_id"])
+    if not regions:
+        return local_frame(spark, "region string, doc_id long", [[], []])
+    rows, names = _region_rows(spark, mcells, regions, grid, res)
+    name_arr = F.array(*[F.lit(n) for n in names])
+    return rows.dropDuplicates(["rid", "doc_id"]).select(
+        F.element_at(name_arr, (F.col("rid") + 1).cast("int")).alias("region"), "doc_id"
+    )
 
 
 def region_query_batch_counts(
@@ -193,18 +214,10 @@ def region_query_batch_counts(
     shape (the reference benchmark reports per-query result COUNTS,
     ``apps/mainq.cpp:238-239``).
 
-    Primary lowering (r04): the broadcast covering-dimension join of
-    ``_batch_dim`` feeding a PACKED per-doc bitmap aggregation.  Per
-    mention row the membership test is ONE hash probe into the broadcast
-    ``(cell_id, rid, needs_pip)`` dimension (+ PIP only on boundary-tagged
-    matches) — O(1) per row regardless of covering size.  The previous
-    primary (membership as run-length BETWEEN chains evaluated per row)
-    was O(total_runs) per row: exact after the r03-ADVICE stride fix, but
-    that fix fragmented gappy coverings into thousands of runs and the
-    scan went compute-bound (measured 22s for 50 polygons over 1.7M
-    mention rows vs <2s for the dim join).  It remains the fallback when
-    the combined covering outgrows MAX_LITERAL_CELLS but its runs still
-    fit MAX_BATCH_RUNS.
+    The rows of ``_region_rows`` (with driver stats: one hash probe per
+    mention row into the broadcast ``(cell_id, rid, needs_pip)``
+    dimension, PIP only on boundary-tagged matches) feed a PACKED per-doc
+    bitmap aggregation, ``_mask_counts``.
 
     Packing matters at scale (r04 scaling gate): one BIGINT per 62 queries
     of aggregation state instead of one boolean slot per query — the
@@ -214,54 +227,21 @@ def region_query_batch_counts(
     the same map-side bit_or.  62 bits per chunk keeps every mask positive
     (no sign-extension edge cases anywhere)."""
     if not regions:
-        # every lowering below assumes ≥1 region (agg(*[]) and stack(0,)
-        # are invalid; the per-region fallback would index parts[0])
+        # agg(*[]) and stack(0,) are invalid
         return local_frame(spark, "region string, n_docs long", [[], []])
-    probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res))
-    stats = cell_stats(mcells, grid, res)
-    if stats is not None:
-        dim = _batch_dim(spark, probe, regions, grid, res, stats)
-        if dim is not None:
-            j, names = dim
-            return _mask_counts(j, names)
-        preds = _batch_preds_sql(regions, grid, res, stats)
-        if preds is not None:
-            # fallback bitmap over run-length BETWEEN predicates — SQL
-            # STRINGS: ~50 py4j calls instead of ~10^4 Column-building
-            # round-trips (measured ~5s of driver wall)
-            CHUNK = 62
-            chunks = [preds[i:i + CHUNK] for i in range(0, len(preds), CHUNK)]
-            mask_cols = [
-                F.expr(" | ".join(
-                    f"(CAST(({p}) AS BIGINT) << {b})"
-                    for b, (_n, p) in enumerate(ch)
-                )).alias(f"_m{ci}")
-                for ci, ch in enumerate(chunks)
-            ]
-            bits = probe.select("doc_id", *mask_cols).groupBy("doc_id").agg(
-                *[F.expr(f"bit_or(_m{ci})").alias(f"_m{ci}")
-                  for ci in range(len(chunks))]
-            )
-            names = [n for n, _p in preds]
-            return _mask_sums(bits, names)
-    parts = []
-    for name, poly in regions:
-        d = region_query_docs(spark, mcells, poly, grid, res)
-        parts.append(d.agg(
-            F.lit(name).alias("region"),
-            F.count("*").cast("long").alias("n_docs"),
-        ))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    rows, names = _region_rows(spark, mcells, regions, grid, res)
+    return _mask_counts(rows, names)
 
 
-def _mask_counts(j: DataFrame, names: list[str]) -> DataFrame:
+def _mask_counts(rows: DataFrame, names: list[str]) -> DataFrame:
     """(rows with ``rid``, ``doc_id``) → (region, n_docs) via the packed
     per-doc bitmap aggregation: per row the mask is one shifted bit of
     rid's chunk, groupBy(doc_id) bit_or collapses the join fan-out
-    map-side, one tiny sum unpacks per-query counts."""
+    map-side, and one global sum per bit, unpacked to rows with stack(),
+    gives per-query counts.  Region names NEVER enter SQL text (a
+    quote/backtick in a caller-supplied name would break the parsed
+    stack(); duplicate names would alias-collide) — the stack works on
+    positional ids and names attach afterwards as literal expressions."""
     CHUNK = 62
     nch = max(1, (len(names) + CHUNK - 1) // CHUNK)
     mask_cols = [
@@ -272,19 +252,9 @@ def _mask_counts(j: DataFrame, names: list[str]) -> DataFrame:
         ).alias(f"_m{ci}")
         for ci in range(nch)
     ]
-    bits = j.select("doc_id", *mask_cols).groupBy("doc_id").agg(
+    bits = rows.select("doc_id", *mask_cols).groupBy("doc_id").agg(
         *[F.expr(f"bit_or(_m{ci})").alias(f"_m{ci}") for ci in range(nch)]
     )
-    return _mask_sums(bits, names)
-
-
-def _mask_sums(bits: DataFrame, names: list[str]) -> DataFrame:
-    """(doc_id, _m0.._mK packed masks) → (region, n_docs): one global sum
-    per bit, unpacked to rows with stack().  Region names NEVER enter SQL
-    text (a quote/backtick in a caller-supplied name would break the
-    parsed stack(); duplicate names would alias-collide) — the stack works
-    on positional ids and names attach afterwards as literal expressions."""
-    CHUNK = 62
     sums = bits.agg(*[
         F.expr(f"sum((_m{i // CHUNK} >> {i % CHUNK}) & 1)").alias(f"_q{i}")
         for i in range(len(names))
@@ -298,216 +268,96 @@ def _mask_sums(bits: DataFrame, names: list[str]) -> DataFrame:
         F.coalesce(F.col("n_docs"), F.lit(0)).alias("n_docs"))
 
 
-def _runs(arr: np.ndarray, step: int) -> list:
-    """Sorted distinct int64 array → maximal ``step``-stride runs
-    [(lo, hi)].  ``step`` MUST be the grid's lattice stride
-    (``Grid.lattice_step(res)``: 2·lsb for s2 level-R ids, 1 otherwise) —
-    never inferred from the data: inferring it as the observed min diff
-    (ADVICE r03) made BETWEEN ranges over gappy coverings match populated
-    cells strictly inside the range that were NOT in the covering,
-    silently overcounting.  With the grid-derived stride, BETWEEN lo AND
-    hi matches exactly the run's members among valid res-level ids
-    (step 1: runs are literally consecutive integers; s2: valid level-R
-    ids are ≡ lsb mod 2·lsb, so aligned intermediates are all present)."""
-    if len(arr) == 0:
-        return []
-    if len(arr) == 1:
-        return [(int(arr[0]), int(arr[0]))]
-    d = np.diff(arr)
-    brk = np.where(d != step)[0]
-    starts = np.concatenate([[0], brk + 1])
-    ends = np.concatenate([brk, [len(arr) - 1]])
-    return [(int(arr[s]), int(arr[e])) for s, e in zip(starts, ends)]
-
-
-# cap on total compressed ranges across a batch (plan-size guard)
-MAX_BATCH_RUNS = 50_000
-
-
-def _batch_preds_sql(regions: list, grid: str, res: int, stats: CellStats):
-    """[(name, sql_bool_expr)] for the bitmap batch lowering, or None when
-    the compressed coverings exceed MAX_BATCH_RUNS (plan too large —
-    per-region broadcast paths take over)."""
-    from ..functions.geo import pip_sql
-
-    pop = stats.cells
-    step = get_grid(grid).lattice_step(res)
-    out = []
-    total_runs = 0
-    for name, poly in regions:
-        full, boundary = cached_covering(grid, poly, res)
-        fulls = (
-            expand_full_to_populated(grid, full, pop, res)
-            if len(full) else np.empty(0, np.int64)
-        )
-        bnd = np.sort(boundary[np.isin(boundary, pop)]) if len(boundary) else boundary
-        conds = []
-        for arr in (fulls,):
-            rs = _runs(arr, step)
-            total_runs += len(rs)
-            if rs:
-                conds.append(" OR ".join(
-                    f"(cell_id = {lo})" if lo == hi
-                    else f"(cell_id BETWEEN {lo} AND {hi})" for lo, hi in rs))
-        rs = _runs(bnd, step)
-        total_runs += len(rs)
-        if rs:
-            bsql = " OR ".join(
-                f"(cell_id = {lo})" if lo == hi
-                else f"(cell_id BETWEEN {lo} AND {hi})" for lo, hi in rs)
-            conds.append(f"(({bsql}) AND {pip_sql('lat', 'lon', poly)})")
-        if total_runs > MAX_BATCH_RUNS:
-            return None
-        out.append((name, ("(" + " OR ".join(conds) + ")") if conds else "false"))
-    return out
-
-
-# total pruned-covering cells across a batch below which the whole batch
-# lowers to ONE broadcast covering-dimension join; above it per-region
-# parts take over (the dimension must stay broadcast-sized)
-MAX_LITERAL_CELLS = 100_000
-
-
-def _batch_dim(
+def _region_rows(
     spark: SparkSession,
-    probe: DataFrame,
+    mcells: DataFrame,
     regions: list,
     grid: str,
     res: int,
-    stats: CellStats | None,
 ):
-    """Batched lowering: ONE broadcast join of ``probe`` against the batch's
-    combined pruned covering as a dimension table ``(cell_id, rid,
-    needs_pip)``, then exact PIP only on boundary-tagged rows.
+    """The one region lowering: a non-empty list of (name, polygon) →
+    (frame(rid, doc_id) with one row per mention inside polygon ``rid``,
+    duplicates kept; the names by rid).
+
+    Regions whose pruned covering fits MAX_BROADCAST_CELLS go through
+    ``_batch_dim``: all of them in one dimension when their combined
+    cells fit it, else one dimension each.  The rest (no driver stats, or
+    over the cap alone) take ``_distributed_rows`` together.  Regions are
+    integer rids in the wide path, so the join/dedup rows are
+    primitive-only; names attach in the callers' last projection."""
+    probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res))
+    stats = cell_stats(mcells, grid, res)
+    names = [name for name, _poly in regions]
+    dims, rest = [], []
+    for rid, (_name, poly) in enumerate(regions):
+        cov = dimension_covering(grid, poly, res, stats)
+        if cov is None:
+            rest.append((rid, poly))
+        else:
+            dims.append((rid, poly, *cov))
+    n_cells = sum(len(fulls) + len(bnd) for *_, fulls, bnd in dims)
+    groups = [dims] if n_cells <= MAX_BROADCAST_CELLS else [[d] for d in dims]
+    parts = [_batch_dim(spark, probe, g, stats) for g in groups if g]
+    if rest:
+        parts.append(_distributed_rows(spark, probe, rest, grid, res, stats))
+    return functools.reduce(DataFrame.unionByName, parts), names
+
+
+def _batch_dim(spark: SparkSession, probe: DataFrame, group: list,
+               stats: CellStats | None) -> DataFrame:
+    """ONE broadcast join of ``probe`` against the res-level cells of
+    ``group`` ([(rid, poly, fulls, bnd)]: cells inside the polygon, then
+    its boundary cells) as a dimension table ``(cell_id, rid,
+    needs_pip)``, then exact PIP only on boundary-tagged rows → (rid,
+    doc_id) rows.
 
     One plan for the whole batch amortizes the per-query fixed costs (job
     submit, AQE stage rounds, per-query broadcast setup, N probe scans →
     one) that were the measured bottleneck for query-throughput scaling
-    between cluster sizes (north_rule).  Query ids stay INTs in the wide
-    path (strings only in the final tiny projection) so the join/dedup rows
-    are primitive-only.  Returns (joined-and-filtered df with ``rid``,
-    names list), or None when ineligible (no driver-side cell stats, or
-    combined covering above MAX_LITERAL_CELLS).
-
-    The stats' per-cell row counts bound the PIP-evaluated rows; when the
-    bound is small the gate uses the polygon-independent interpreted PIP
-    form (no per-polygon codegen — see PIP_HOF_MAX_ROWS), otherwise the
-    unrolled codegen form that scales.
-    """
-    if stats is None:
-        return None
-    pop = stats.cells
-    per_region = []
-    total = 0
-    for name, poly in regions:
-        full, boundary = cached_covering(grid, poly, res)
-        fulls = (
-            expand_full_to_populated(grid, full, pop, res)
-            if len(full) else np.empty(0, np.int64)
-        )
-        bnd = boundary[np.isin(boundary, pop)] if len(boundary) else boundary
-        total += len(fulls) + len(bnd)
-        if total > MAX_LITERAL_CELLS:
-            return None
-        per_region.append((name, poly, fulls, bnd))
-    rows = []
-    for rid, (_name, _poly, fulls, bnd) in enumerate(per_region):
-        for c in fulls:
-            rows.append((int(c), rid, False))
-        for c in bnd:
-            rows.append((int(c), rid, True))
-    names = [name for name, *_ in per_region]
-    if not rows:
-        empty = spark.range(0).select(
-            F.col("id").cast("int").alias("rid"), F.col("id").alias("doc_id"))
-        return empty, names
-    dim = local_frame(
-        spark, "cell_id long, rid long, needs_pip boolean", zip(*rows))
-    j = probe.join(F.broadcast(dim), "cell_id")
-    # the PIP gate is ONE SQL string: building the equivalent CASE from
-    # pip_col Column objects cost ~3s of py4j round-trips per 50-polygon
-    # batch (measured r04) — the same driver-wall trap _batch_preds_sql
-    # already avoids; CASE evaluates only the matching rid's branch
-    from ..functions.geo import pip_hof_sql, pip_sql
-    # Σ PER-REGION bounds, not the union's: the CASE evaluates PIP once
-    # per (row × matching rid), so overlapping regions' shared boundary
-    # cells count once per region (review r06 — the union bound
-    # undercounted exactly for large overlapping batches)
-    bnd_rows = sum(stats.row_bound(bnd) for *_, bnd in per_region)
-    pip_form = pip_hof_sql if bnd_rows <= PIP_HOF_MAX_ROWS else pip_sql
+    between cluster sizes (north_rule)."""
+    sizes = [len(fulls) + len(bnd) for *_, fulls, bnd in group]
+    if not sum(sizes):
+        return spark.range(0).selectExpr("id AS rid", "id AS doc_id")
+    dim = local_frame(spark, "cell_id long, rid long, needs_pip boolean", [
+        np.concatenate([c for *_, fulls, bnd in group for c in (fulls, bnd)]),
+        np.repeat([rid for rid, *_ in group], sizes),
+        np.concatenate([np.arange(n) >= len(fulls)
+                        for n, (*_, fulls, _bnd) in zip(sizes, group)]),
+    ])
+    # the gate is ONE SQL string; CASE evaluates only the matching rid's
+    # branch.  The PIP form is chosen on Σ PER-REGION bounds, not the
+    # union's: the CASE evaluates PIP once per (row × matching rid), so
+    # overlapping regions' shared boundary cells count once per region
+    # (review r06 — the union bound undercounted large overlapping batches)
+    bound = None if stats is None else sum(stats.row_bound(bnd) for *_, bnd in group)
     whens = " ".join(
-        f"WHEN rid = {rid} THEN ({pip_form('lat', 'lon', poly)})"
-        for rid, (_name, poly, _fulls, bnd) in enumerate(per_region)
-        if len(bnd))
+        f"WHEN rid = {rid} THEN ({pip_filter_sql(poly, bound)})"
+        for rid, poly, _fulls, bnd in group if len(bnd))
     gate = ("(NOT needs_pip)" if not whens
             else f"(NOT needs_pip) OR (CASE {whens} ELSE false END)")
-    return j.where(F.expr(gate)), names
+    return probe.join(F.broadcast(dim), "cell_id").where(gate).select("rid", "doc_id")
 
 
-def _one_region_parts(
-    spark: SparkSession,
-    probe: DataFrame,
-    poly: np.ndarray,
-    grid: str,
-    res: int,
-    stats: CellStats | None,
-) -> list:
-    """Per-polygon plan fragments (doc_id DataFrames) — shared by the
-    single-query and batched entry points."""
-    g = get_grid(grid)
-    full, boundary = cached_covering(grid, poly, res)
-    parts: list[DataFrame] = []
-    pop = None if stats is None else stats.cells
-    if pop is not None:
-        # prune the covering to POPULATED cells driver-side (r01 VERDICT
-        # fix: no BroadcastNestedLoopJoin, and empty coverings cost nothing)
-        fulls = (
-            expand_full_to_populated(grid, full, pop, res)
-            if len(full) else np.empty(0, np.int64)
-        )
-        bnd = boundary[np.isin(boundary, pop)] if len(boundary) else boundary
-        if len(fulls) + len(bnd) > MAX_BROADCAST_CELLS:
-            pop = None  # pruned list too big to ship — distributed joins below
-        else:
-            if len(fulls):
-                fdf = F.broadcast(cells_df(spark, fulls, "fcell"))
-                parts.append(
-                    probe.join(fdf, F.col("cell_id") == F.col("fcell")).select("doc_id")
-                )
-            if len(bnd):
-                bdf = F.broadcast(cells_df(spark, bnd, "bcell"))
-                cand = probe.join(bdf, F.col("cell_id") == F.col("bcell"))
-                parts.append(
-                    cand.where(pip_col(F.col("lat"), F.col("lon"), poly)).select("doc_id")
-                )
-    if pop is None:
-        # distributed fallback (populated-cell list too big for the driver):
-        # per-level ancestor EQUI-joins — broadcast hash joins, never a BNLJ
-        # (parent-at-level is native bit math for s2 and zxy)
-        from ..functions.udfs import parent_col
-        if len(full):
-            lvls = g.level(full)
-            for lvl in np.unique(lvls):
-                cdf = F.broadcast(cells_df(spark, full[lvls == lvl], "fcell"))
-                if int(lvl) == res:
-                    parts.append(probe.join(cdf, F.col("cell_id") == F.col("fcell")).select("doc_id"))
-                else:
-                    anc = probe.withColumn(
-                        "anc", parent_col(grid, F.col("cell_id"), int(lvl), from_res=res)
-                    )
-                    parts.append(anc.join(cdf, F.col("anc") == F.col("fcell")).select("doc_id"))
-        if len(boundary):
-            bdf = F.broadcast(cells_df(spark, boundary, "bcell"))
-            cand = probe.join(bdf, F.col("cell_id") == F.col("bcell"))
-            parts.append(
-                cand.where(pip_col(F.col("lat"), F.col("lon"), poly)).select("doc_id")
-            )
-    return parts
+def _distributed_rows(spark: SparkSession, probe: DataFrame, group: list,
+                      grid: str, res: int, stats: CellStats | None) -> DataFrame:
+    """Regions with no pruned dimension ([(rid, poly)]) → (rid, doc_id)
+    rows over their raw coverings: the full cells of all of them by one
+    ancestor equi-join per level (``full_cell_rows``), their boundary
+    cells as one unpruned dimension (``_batch_dim``)."""
+    covs = [(rid, poly, *cached_covering(grid, poly, res)) for rid, poly in group]
+    none = np.empty(0, np.int64)
+    parts = [_batch_dim(spark, probe, [(rid, poly, none, boundary)
+                                       for rid, poly, _full, boundary in covs], stats)]
+    full = np.concatenate([full for *_, full, _boundary in covs])
+    if len(full):
+        rids = np.repeat([rid for rid, *_ in covs], [len(c[2]) for c in covs])
+        parts.append(full_cell_rows(spark, probe, full, grid, res, rids)
+                     .select("rid", "doc_id"))
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def region_query_oracle_sql(poly: np.ndarray) -> str:
     """Brute-force oracle: doc has a gazetteer mention strictly inside poly."""
-    from ..functions.geo import pip_sql
     from ..sources.gazetteer import mentions_subquery_sql
 
     return f"""

@@ -23,8 +23,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.geo import pip_col, pip_hof_sql
-from ..functions.udfs import parent_col
 from ..grids.base import get_grid
 from ..operators.cell_stats import CellStats, cell_stats
 from ..operators.cqr import (
@@ -39,11 +37,11 @@ from ..operators.cqr import (
     cqr_union,
 )
 from ..operators.region_query import (
-    MAX_BROADCAST_CELLS,
-    PIP_HOF_MAX_ROWS,
+    boundary_rows,
     cached_covering,
     cells_df,
-    expand_full_to_populated,
+    dimension_covering,
+    full_cell_rows,
     prune_full_to_populated,
 )
 from ..operators.token_index import DEFAULT_MAX_KEY_LEN, match_tokens, resolve_qt
@@ -347,32 +345,25 @@ class Planner:
 
     def _region_cqr(self, poly: np.ndarray) -> DataFrame:
         """Polygon leaf → CQR: res-level fm cells inside + pm boundary cells
-        with exact-PIP doc lists (the CQR face of operators/region_query)."""
+        with exact-PIP doc lists (the CQR face of operators/region_query).
+        A dimension-sized pruned covering emits its populated fm cells from
+        the driver, with zero Spark work for the full side; otherwise
+        ``cell_totals`` joins the raw covering on ancestor ids."""
         ctx = self.ctx
-        full, boundary = cached_covering(ctx.grid, poly, ctx.res)
-        parts: list[DataFrame] = []
         stats = cell_stats(ctx.mcells, ctx.grid, ctx.res)
-        pop = None if stats is None else stats.cells
-        if pop is not None:
-            fulls = expand_full_to_populated(ctx.grid, full, pop, ctx.res)
-            if len(fulls) + len(boundary) > MAX_BROADCAST_CELLS:
-                pop = None  # too big to ship — distributed path
-            else:
-                boundary = boundary[np.isin(boundary, pop)]
-                if len(fulls):
-                    # driver-side exact pruning: emit the populated fm
-                    # cells directly — zero Spark work for the full side
-                    parts.append(cells_df(ctx.spark, fulls, "cell_id")
-                                 .selectExpr("cell_id", *FM_EXPRS))
-        if pop is None and len(full):
-            # distributed fallback: per-level ancestor equi-joins
-            lvls = get_grid(ctx.grid).level(full)
-            for lvl in np.unique(lvls):
-                cdf = cells_df(ctx.spark, full[lvls == lvl], "anc").hint("broadcast")
-                anc = F.col("cell_id") if int(lvl) == ctx.res else parent_col(
-                    ctx.grid, F.col("cell_id"), int(lvl), from_res=ctx.res)
-                parts.append(ctx.ctotals.select("cell_id", anc.alias("anc"))
-                             .join(cdf, "anc").selectExpr("cell_id", *FM_EXPRS))
+        cov = dimension_covering(ctx.grid, poly, ctx.res, stats)
+        parts: list[DataFrame] = []
+        if cov is not None:
+            fulls, boundary = cov
+            if len(fulls):
+                parts.append(cells_df(ctx.spark, fulls, "cell_id")
+                             .selectExpr("cell_id", *FM_EXPRS))
+        else:
+            full, boundary = cached_covering(ctx.grid, poly, ctx.res)
+            if len(full):
+                parts.append(full_cell_rows(
+                    ctx.spark, ctx.ctotals.select("cell_id"), full, ctx.grid, ctx.res
+                ).selectExpr("cell_id", *FM_EXPRS))
         if len(boundary):
             parts.append(self._boundary_cqr(poly, boundary, stats))
         if not parts:
@@ -406,17 +397,7 @@ class Planner:
                       stats: CellStats | None) -> DataFrame:
         """Boundary cells → CQR rows from exact PIP over their mentions."""
         ctx = self.ctx
-        cand = ctx.mcells.join(
-            cells_df(ctx.spark, boundary, "cell_id").hint("broadcast"), "cell_id")
-        # PIP form choice mirrors region_query._batch_dim: when the
-        # context's mention-cell row counts bound the boundary rows below
-        # PIP_HOF_MAX_ROWS, the polygon-independent interpreted form skips
-        # the per-polygon codegen; otherwise the unrolled codegen form that
-        # scales.  Bit-identical either way.
-        if stats is not None and stats.row_bound(boundary) <= PIP_HOF_MAX_ROWS:
-            cand = cand.where(pip_hof_sql("lat", "lon", poly))
-        else:
-            cand = cand.where(pip_col(F.col("lat"), F.col("lon"), poly))
+        cand = boundary_rows(ctx.spark, ctx.mcells, poly, boundary, stats)
         # a boundary cell where *every* doc matches is fm (classification
         # invariant, reference src/OscarSearchSgIndex.cpp:178-197)
         return (

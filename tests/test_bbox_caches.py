@@ -78,7 +78,7 @@ def test_region_cache_no_aliasing_across_tables(spark, engine):
     own populated-cell sets (the id()-reuse hazard, VERDICT r02 item 6)."""
     import gc
 
-    from oscar_spatial_index_compare_spark.functions.geo import pip_col
+    from oscar_spatial_index_compare_spark.functions.geo import pip_sql
     from oscar_spatial_index_compare_spark.operators.index_build import mention_cells
     from oscar_spatial_index_compare_spark.operators.region_query import (
         region_query_docs,
@@ -93,7 +93,7 @@ def test_region_cache_no_aliasing_across_tables(spark, engine):
 
     def brute(m):
         return (
-            m.where(pip_col(F.col("lat"), F.col("lon"), poly))
+            m.where(F.expr(pip_sql("lat", "lon", poly)))
             .select("doc_id").distinct().count()
         )
 

@@ -89,22 +89,6 @@ def test_region_batch_matches_single_queries(spark, engine):
         assert got[n] == want, n
 
 
-def test_region_batch_fallback_parity(spark, engine, monkeypatch):
-    # force the per-region fallback (as if the combined covering were too
-    # big to ship as a dimension) and require identical rows
-    import oscar_spatial_index_compare_spark.operators.region_query as rq
-    from oscar_spatial_index_compare_spark.sources.regions import region_by_name
-
-    ctx = engine.context("s2", 10)
-    regs = [(n, region_by_name(n)) for n in ["metro", "east_am"]]
-    a = sorted(map(tuple, rq.region_query_batch(
-        spark, ctx.mcells, regs, "s2", 10).collect()))
-    monkeypatch.setattr(rq, "MAX_LITERAL_CELLS", 0)
-    b = sorted(map(tuple, rq.region_query_batch(
-        spark, ctx.mcells, regs, "s2", 10).collect()))
-    assert a == b
-
-
 @pytest.fixture(scope="module")
 def ps_engine(spark):
     from oscar_spatial_index_compare_spark.engine import Engine

@@ -113,8 +113,9 @@ def test_pop_row_bound_empty_populated_list():
 
 def test_rect_leaf_over_zero_mention_context_is_empty(spark, monkeypatch):
     """Both distributed covering paths over a zero-mention context yield no
-    docs: the unpruned boundary against empty stats (covering too big to
-    ship), and no stats at all (populated list above the driver cap)."""
+    docs: empty stats with no dimension to ship (the cap forced below
+    zero), and no stats at all (populated list above the driver cap).
+    Each joins cell_totals on ancestor ids."""
     from oscar_spatial_index_compare_spark.operators import cell_stats as cs
     from oscar_spatial_index_compare_spark.operators import region_query as rq
     from oscar_spatial_index_compare_spark.plans.planner import Planner
@@ -122,9 +123,13 @@ def test_rect_leaf_over_zero_mention_context_is_empty(spark, monkeypatch):
     rect = "$rect:9.9,10.6,9.9,10.6"
     with monkeypatch.context() as m:
         m.setattr(rq, "MAX_BROADCAST_CELLS", -1)
-        assert Planner(_ctx(spark, [])).docs(rect).count() == 0
+        ctx = _ctx(spark, [])
+        assert cs.cell_stats(ctx.mcells, "s2", 10) is not None
+        assert "Join Inner, (anc#" in _analyzed(Planner(ctx).cqr(rect))
+        assert Planner(ctx).docs(rect).count() == 0
     monkeypatch.setattr(cs, "MAX_DRIVER_CELLS", -1)
     ctx = _ctx(spark, [])
+    assert "Join Inner, (anc#" in _analyzed(Planner(ctx).cqr(rect))
     assert Planner(ctx).docs(rect).count() == 0
     assert cs.cell_stats(ctx.mcells, "s2", 10) is None
 

@@ -11,11 +11,10 @@ identical doc sets.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from oscar_spatial_index_compare_spark.functions.geo import pip_hof_sql, pip_sql
-from oscar_spatial_index_compare_spark.sources.regions import REGIONS, region_by_name
+from oscar_spatial_index_compare_spark.sources.regions import REGIONS
 
 
 def test_pip_forms_bit_identical_on_corpus(spark, engine):
@@ -32,23 +31,6 @@ def test_pip_forms_bit_identical_on_corpus(spark, engine):
         )
     row = m.agg(*checks).collect()[0]
     assert all(v == 0 for v in row), row.asDict()
-
-
-def test_pip_form_choice_result_identical(spark, engine, monkeypatch):
-    """region_query_docs with the HOF gate forced on (huge cap) and forced
-    off (cap 0) returns the same doc set."""
-    from oscar_spatial_index_compare_spark.operators import region_query as rq
-
-    ctx = engine.context("s2", 10)
-    poly = region_by_name("north_band")
-
-    monkeypatch.setattr(rq, "PIP_HOF_MAX_ROWS", 0)
-    lo = {r.doc_id for r in rq.region_query_docs(
-        spark, ctx.mcells, poly, "s2", 10).collect()}
-    monkeypatch.setattr(rq, "PIP_HOF_MAX_ROWS", 1 << 60)
-    hi = {r.doc_id for r in rq.region_query_docs(
-        spark, ctx.mcells, poly, "s2", 10).collect()}
-    assert lo == hi and len(lo) > 0
 
 
 def test_pop_row_bound_exact(spark, engine):

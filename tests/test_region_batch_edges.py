@@ -8,6 +8,7 @@ returns an empty frame.
 """
 
 from oscar_spatial_index_compare_spark.operators.region_query import (
+    region_query_batch,
     region_query_batch_counts,
     region_query_docs,
 )
@@ -46,6 +47,12 @@ def test_counts_empty_batch(spark, engine):
     out = region_query_batch_counts(spark, _mcells(engine), [], "s2", 10)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["region", "n_docs"]
+
+
+def test_batch_empty_batch(spark, engine):
+    out = region_query_batch(spark, _mcells(engine), [], "s2", 10)
+    assert out.count() == 0
+    assert out.schema.simpleString() == "struct<region:string,doc_id:bigint>"
 
 
 def test_broad_pattern_leaf_caps_literal_expansion(spark, engine, monkeypatch):
