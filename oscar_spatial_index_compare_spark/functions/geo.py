@@ -86,7 +86,7 @@ def pip_hof_sql(lat: str, lon: str, poly: np.ndarray) -> str:
     ``y2 - y1`` are folded in Python exactly as the unrolled form's literal
     subtraction folds at plan time), and the crossing sum accumulates
     sequentially in edge order (integer adds — order-insensitive anyway).
-    Verified 0 differing rows over the full corpus (probe r06e).
+    Verified 0 differing rows over the full corpus in r06.
 
     Why it exists (guide §7.2 duplicated-codegen class): the unrolled form
     inlines the vertex doubles into the generated Java source, so EVERY

@@ -1,20 +1,24 @@
 """Cell-query-result (CQR) algebra — SURVEY §2.4, Q4-Q10.
 
 A CQR is a DataFrame ``(cell_id long, is_fm boolean, doc_ids array<long>)``
-with doc_ids NULL iff is_fm (reference: ``include/hic/static-htm-index.h:
-302-313``).  The set operations reproduce the fm/pm case analysis of the
-reference evaluators (``src/OscarSearchWithSg.cpp:190-198``,
-``src/HcqrOpTree.cpp:106-141``):
+(reference: ``include/hic/static-htm-index.h:302-313``) with three row
+kinds, T being the cell's docs:
 
-  * union        — full-outer join; fm wins
-  * intersection — inner join; fm∩fm→fm, fm∩pm→pm(other side), pm∩pm→array_intersect
-  * difference   — left join; X−∅=X, fm−fm=∅, pm−fm=∅, fm−pm needs cell totals
-  * symdiff      — native one-pass xor via full-outer join (reference
-                   ``apps/mainq.cpp:416-481``; HCQR doesn't support ^ at all —
-                   ``src/HcqrOpTree.cpp:136-137``)
-  * all_to_full  — Q8 FM_CONVERSION ``*`` (``src/HcqrOpTree.cpp:70-79``)
-  * flatten      — Q10: fm cells pull their full posting list from
-                   cell_totals, pm arrays explode; distinct doc set
+  * pm         — ``NOT is_fm``: exactly ``doc_ids``;
+  * whole cell — ``is_fm AND doc_ids IS NULL``: all of T;
+  * complement — ``is_fm AND doc_ids IS NOT NULL``: T − ``doc_ids``; an
+                 empty exclusion list is still a complement row.
+
+Complement rows close the reference's fm/pm case analysis
+(``include/hic/static-htm-index.h:197-299``), whose fm−pm case needs T:
+T−B is a complement row.  So every set op is one cell_id join plus one
+CASE projection that reads it once; only ``cqr_flatten`` and
+``cqr_normalize`` join ``cell_totals``, attaching T to the fm rows that
+read it.  ``Planner.cqr`` returns
+normalized rows (no complements), those of the fm/pm rules applied op by
+op but for one case: a whole cell minus (or xor) a complement excluding
+all of T stays fm under those rules and comes back here as a pm row of T.
+Symdiff is native (``apps/mainq.cpp:416-481``; HCQR has no ^).
 
 Laziness: every op returns an unevaluated DataFrame, so an op-tree becomes
 ONE Catalyst plan — the reference's TreedCQR deferred evaluation
@@ -33,10 +37,17 @@ from pyspark.sql import functions as F
 CQR_COLS = ["cell_id", "is_fm", "doc_ids"]
 # the fm payload columns: full-match, no doc list
 FM_EXPRS = ("true AS is_fm", "CAST(NULL AS ARRAY<BIGINT>) AS doc_ids")
+# a row survives an op if it is fm (whole or complement) or non-empty pm
+_NON_EMPTY = "is_fm OR size(doc_ids) > 0"
 
 # Expressions are SQL text (selectExpr / where(str) / one F.expr per join
 # condition): on classic PySpark each F.col costs ~19 py4j round trips, so
 # Column trees made plan construction a visible share of every op-tree.
+
+
+def _excl(docs: str) -> str:
+    """The exclusion list of an fm row, a whole cell's read as empty."""
+    return f"coalesce({docs}, CAST(array() AS ARRAY<BIGINT>))"
 
 
 def _norm(df: DataFrame) -> DataFrame:
@@ -50,83 +61,57 @@ def _join(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
 
 
 def cqr_union(left: DataFrame, right: DataFrame) -> DataFrame:
-    fm = "coalesce(l.is_fm, false) OR coalesce(r.is_fm, false)"
+    """L ∪ R: (T−X)∪B = T−(X−B), (T−X)∪(T−Y) = T−(X∩Y); a whole cell wins."""
     return _join(left, right, "full_outer").selectExpr(
-        "coalesce(l.cell_id, r.cell_id) AS cell_id", f"{fm} AS is_fm",
-        f"CASE WHEN {fm} THEN NULL WHEN l.doc_ids IS NULL THEN r.doc_ids"
-        " WHEN r.doc_ids IS NULL THEN l.doc_ids"
+        "coalesce(l.cell_id, r.cell_id) AS cell_id",
+        "coalesce(l.is_fm, false) OR coalesce(r.is_fm, false) AS is_fm",
+        "CASE WHEN r.cell_id IS NULL THEN l.doc_ids WHEN l.cell_id IS NULL THEN r.doc_ids"
+        " WHEN l.is_fm AND r.is_fm THEN array_intersect(l.doc_ids, r.doc_ids)"
+        " WHEN l.is_fm THEN array_except(l.doc_ids, r.doc_ids)"
+        " WHEN r.is_fm THEN array_except(r.doc_ids, l.doc_ids)"
         " ELSE array_sort(array_union(l.doc_ids, r.doc_ids)) END AS doc_ids")
 
 
 def cqr_intersect(left: DataFrame, right: DataFrame) -> DataFrame:
+    """L ∩ R: (T−X)∩B = B−X, (T−X)∩(T−Y) = T−(X∪Y)."""
     return _join(left, right, "inner").selectExpr(
         "l.cell_id AS cell_id", "l.is_fm AND r.is_fm AS is_fm",
-        "CASE WHEN l.is_fm AND r.is_fm THEN NULL WHEN l.is_fm THEN r.doc_ids"
-        " WHEN r.is_fm THEN l.doc_ids"
+        "CASE WHEN l.is_fm AND r.is_fm"
+        " THEN coalesce(array_union(l.doc_ids, r.doc_ids), l.doc_ids, r.doc_ids)"
+        f" WHEN l.is_fm THEN array_except(r.doc_ids, {_excl('l.doc_ids')})"
+        f" WHEN r.is_fm THEN array_except(l.doc_ids, {_excl('r.doc_ids')})"
         " ELSE array_sort(array_intersect(l.doc_ids, r.doc_ids)) END AS doc_ids",
-    ).where("is_fm OR size(doc_ids) > 0")
+    ).where(_NON_EMPTY)
 
 
-def _minus_totals(pairs: DataFrame, ctotals: DataFrame) -> DataFrame:
-    """(cell_id, pm_docs) → pm rows of the cell totals minus pm_docs."""
-    return (
-        pairs.join(ctotals.selectExpr("cell_id", "doc_ids AS t_docs"), "cell_id")
-        .selectExpr("cell_id", "false AS is_fm",
-                    "array_sort(array_except(t_docs, pm_docs)) AS doc_ids")
-        .where("size(doc_ids) > 0")
-    )
+def cqr_difference(left: DataFrame, right: DataFrame) -> DataFrame:
+    """L − R: (T−X)−B = T−(X∪B), (T−X)−(T−Y) = Y−X, A−(T−Y) = A∩Y."""
+    return _join(left, right, "left").selectExpr(
+        "l.cell_id AS cell_id",
+        "l.is_fm AND NOT coalesce(r.is_fm, false) AS is_fm",
+        "CASE WHEN r.cell_id IS NULL THEN l.doc_ids"
+        " WHEN l.is_fm AND r.is_fm"
+        f" THEN array_sort(array_except(r.doc_ids, {_excl('l.doc_ids')}))"
+        " WHEN l.is_fm THEN coalesce(array_union(l.doc_ids, r.doc_ids), r.doc_ids)"
+        " WHEN r.is_fm THEN array_sort(array_intersect(l.doc_ids, r.doc_ids))"
+        " ELSE array_sort(array_except(l.doc_ids, r.doc_ids)) END AS doc_ids",
+    ).where(_NON_EMPTY)
 
 
-def cqr_difference(left: DataFrame, right: DataFrame, ctotals: DataFrame) -> DataFrame:
-    """L − R.  ``ctotals``: (cell_id, doc_ids) full per-cell lists — joined
-    lazily and only for the fm−pm cells (SURVEY §7 hard-part 3)."""
-    # the case analysis below references the join THREE times — a plan
-    # boundary computes it once instead of once per branch (r06); under
-    # AQE this call already runs the join's shuffle and broadcast stages
-    j = _join(left, right, "left").localCheckpoint(eager=False)
-    passthrough = j.where("r.cell_id IS NULL").selectExpr(
-        "l.cell_id AS cell_id", "l.is_fm AS is_fm", "l.doc_ids AS doc_ids")
-    pm_pm = j.where("r.cell_id IS NOT NULL AND NOT l.is_fm AND NOT r.is_fm").selectExpr(
-        "l.cell_id AS cell_id", "false AS is_fm",
-        "array_sort(array_except(l.doc_ids, r.doc_ids)) AS doc_ids",
-    ).where("size(doc_ids) > 0")
-    fm_pm = j.where("r.cell_id IS NOT NULL AND l.is_fm AND NOT r.is_fm").selectExpr(
-        "l.cell_id AS cell_id", "r.doc_ids AS pm_docs")
-    # fm−fm and pm−fm vanish
-    return passthrough.unionByName(pm_pm).unionByName(_minus_totals(fm_pm, ctotals))
-
-
-def cqr_symdiff(left: DataFrame, right: DataFrame, ctotals: DataFrame) -> DataFrame:
-    """L ^ R — native one-pass xor (reference ``apps/mainq.cpp:416-481``).
-
-    ONE full-outer join computing the xor cases directly (r02 VERDICT item 4:
-    the previous ``(L∪R)−(L∩R)`` composition evaluated each operand subtree
-    twice and ran three joins):
-
-      * cell only in one side  → pass through unchanged
-      * fm ^ fm                → cancels (drop)
-      * fm ^ pm                → totals − pm docs (ctotals joined lazily, for
-                                 exactly these cells — SURVEY §7 hard-part 3)
-      * pm ^ pm                → (L−R) ∪ (R−L), drop when empty
-    """
-    # four references below (only_l/only_r/pm_pm/fm_pm) — one boundary
-    # instead of four evaluations of the operand subtrees (r06)
-    j = _join(left, right, "full_outer").localCheckpoint(eager=False)
-    only_l = j.where("r.cell_id IS NULL").selectExpr(
-        "l.cell_id AS cell_id", "l.is_fm AS is_fm", "l.doc_ids AS doc_ids")
-    only_r = j.where("l.cell_id IS NULL").selectExpr(
-        "r.cell_id AS cell_id", "r.is_fm AS is_fm", "r.doc_ids AS doc_ids")
-    both = j.where("l.cell_id IS NOT NULL AND r.cell_id IS NOT NULL")
-    pm_pm = both.where("NOT l.is_fm AND NOT r.is_fm").selectExpr(
-        "l.cell_id AS cell_id", "false AS is_fm",
-        "array_sort(array_union(array_except(l.doc_ids, r.doc_ids),"
-        " array_except(r.doc_ids, l.doc_ids))) AS doc_ids",
-    ).where("size(doc_ids) > 0")
-    fm_pm = both.where("l.is_fm != r.is_fm").selectExpr(
-        "l.cell_id AS cell_id", "coalesce(l.doc_ids, r.doc_ids) AS pm_docs")
-    # fm ^ fm cancels
-    return (only_l.unionByName(only_r).unionByName(pm_pm)
-            .unionByName(_minus_totals(fm_pm, ctotals)))
+def cqr_symdiff(left: DataFrame, right: DataFrame) -> DataFrame:
+    """L ^ R — one-pass xor (reference ``apps/mainq.cpp:416-481``).  With
+    missing exclusions read as empty, (T−X)^(T−Y) = X^Y and (T−X)^B =
+    T−(X^B), so a cell on both sides is one xor of the two lists; it is a
+    complement row iff exactly one side is fm, and a whole cell on both
+    sides cancels."""
+    x, y = _excl("l.doc_ids"), _excl("r.doc_ids")
+    return _join(left, right, "full_outer").selectExpr(
+        "coalesce(l.cell_id, r.cell_id) AS cell_id",
+        "coalesce(l.is_fm != r.is_fm, l.is_fm, r.is_fm) AS is_fm",
+        "CASE WHEN r.cell_id IS NULL THEN l.doc_ids WHEN l.cell_id IS NULL THEN r.doc_ids"
+        f" ELSE array_sort(array_union(array_except({x}, {y}), array_except({y}, {x})))"
+        " END AS doc_ids",
+    ).where(_NON_EMPTY)
 
 
 def cqr_dilate(cqr: DataFrame, grid: str, res: int, ctotals: DataFrame) -> DataFrame:
@@ -141,7 +126,8 @@ def cqr_dilate(cqr: DataFrame, grid: str, res: int, ctotals: DataFrame) -> DataF
     promoted by being its neighbor's neighbor); added cells are semi-joined
     against the populated-cell set — an unpopulated fm cell flattens to
     nothing, so dropping it early is result-identical and avoids growing
-    the CQR with dead rows at scale.
+    the CQR with dead rows at scale.  ``cqr`` must be normalized: an
+    empty complement row is no cell and has no neighbors.
     """
     if grid != "zxy":
         raise NotImplementedError(
@@ -168,16 +154,37 @@ def cqr_dilate(cqr: DataFrame, grid: str, res: int, ctotals: DataFrame) -> DataF
 
 
 def cqr_all_to_full(cqr: DataFrame) -> DataFrame:
+    """``cqr`` must be normalized: an empty complement row is no cell."""
     return cqr.selectExpr("cell_id", *FM_EXPRS)
 
 
+def _with_totals(cqr: DataFrame, ctotals: DataFrame, reads: str) -> DataFrame:
+    """``cqr`` with its cell's T as ``t_docs`` on the rows where ``reads``
+    holds, NULL on the others (and for unpopulated cells): a hot cell's
+    list is carried only by the rows that use it."""
+    return _norm(cqr).join(
+        ctotals.selectExpr("cell_id AS t_cell", "doc_ids AS t_docs"),
+        F.expr(f"cell_id = t_cell AND {reads}"), "left")
+
+
 def cqr_flatten(cqr: DataFrame, ctotals: DataFrame) -> DataFrame:
-    """→ DataFrame(doc_id) distinct — Q10 ``flaten``."""
-    fm = cqr.where("is_fm").selectExpr("cell_id").join(
-        ctotals.selectExpr("cell_id", "doc_ids AS t_docs"), "cell_id"
-    ).selectExpr("explode(t_docs) AS doc_id")
-    pm = cqr.where("NOT is_fm").selectExpr("explode(doc_ids) AS doc_id")
-    return fm.unionByName(pm).dropDuplicates(["doc_id"])
+    """→ DataFrame(doc_id) distinct — Q10 ``flaten``: an fm row yields T
+    less its exclusions, a pm row its own list."""
+    return _with_totals(cqr, ctotals, "is_fm").selectExpr(
+        f"explode(CASE WHEN is_fm THEN array_except(t_docs, {_excl('doc_ids')})"
+        " ELSE doc_ids END) AS doc_id"
+    ).dropDuplicates(["doc_id"])
+
+
+def cqr_normalize(cqr: DataFrame, ctotals: DataFrame) -> DataFrame:
+    """Complement rows → pm rows of T less their exclusions; empty ones
+    go.  Whole-cell and pm rows are unchanged."""
+    complement = "is_fm AND doc_ids IS NOT NULL"
+    return _with_totals(cqr, ctotals, complement).selectExpr(
+        "cell_id", "is_fm AND doc_ids IS NULL AS is_fm",
+        f"CASE WHEN {complement}"
+        " THEN array_sort(array_except(t_docs, doc_ids)) ELSE doc_ids END AS doc_ids",
+    ).where(_NON_EMPTY)
 
 
 def cqr_stats(cqr: DataFrame) -> DataFrame:

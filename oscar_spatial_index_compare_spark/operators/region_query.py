@@ -39,10 +39,10 @@ from ..session import local_frame
 from .cell_stats import CellStats, cell_stats
 
 # largest exact boundary-row bound for which the polygon-independent
-# interpreted PIP form (pip_hof_sql) is used.  Measured trade (probe r06e,
-# 32 cores): the unrolled codegen form costs ~0.6-1.5 s of janino compile
-# PER DISTINCT POLYGON; the HOF form compiles once ever but evaluates ~3x
-# slower per row (1.19 s vs 0.39 s per 16M rows).  Break-even ≈ 30M
+# interpreted PIP form (pip_hof_sql) is used.  The trade, as measured in
+# r06 on 32 cores and not re-measured since: the unrolled codegen form
+# costs ~0.6-1.5 s of janino compile PER DISTINCT POLYGON; the HOF form
+# compiles once ever but evaluates ~3x slower per row (1.19 s vs 0.39 s per 16M rows).  Break-even ≈ 30M
 # boundary rows; below this cap the compile saving wins, above it per-row
 # speed wins — scale-adaptive by construction.
 PIP_HOF_MAX_ROWS = 20_000_000

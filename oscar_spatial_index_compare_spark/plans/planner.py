@@ -1,7 +1,9 @@
 """Op-tree → DataFrame planner (SURVEY E2, §4).
 
 Recursively lowers a parsed op-tree to Catalyst plans over the postings
-tables, cut by local checkpoints where a subtree is referenced twice.
+tables: a CQR tree is one plan (every set op reads its join once, see
+operators/cqr.py); HCQR trees keep local checkpoints where an operator
+references its input several times.
 Reproduces the reference evaluators' structure (``SgOpTree::calc``
 ``include/hic/static-htm-index.h:197-299``, ``HcqrOpTree::calc``
 ``src/HcqrOpTree.cpp:13-153``) with their
@@ -33,6 +35,7 @@ from ..operators.cqr import (
     cqr_dilate,
     cqr_flatten,
     cqr_intersect,
+    cqr_normalize,
     cqr_symdiff,
     cqr_union,
 )
@@ -76,6 +79,10 @@ def _token_pred(pat: str, qt: str) -> str:
     if qt not in _TOKEN_PRED:
         raise ValueError(qt)
     return _TOKEN_PRED[qt].format(sql_str(pat))
+
+
+_CQR_OPS = {"union": cqr_union, "inter": cqr_intersect,
+            "diff": cqr_difference, "sym": cqr_symdiff}
 
 
 @dataclass
@@ -125,26 +132,24 @@ class Planner:
 
     # -- public -------------------------------------------------------------
     def cqr(self, query: str) -> DataFrame | None:
-        """Query string → CQR DataFrame (None == statically empty)."""
-        return self._eval(parse(query))
+        """Query string → CQR DataFrame (None == statically empty), with
+        no complement rows."""
+        return self._eval_normalized(parse(query))
+
+    def _eval_normalized(self, n: Node) -> DataFrame | None:
+        c = self._eval(n)
+        return None if c is None else cqr_normalize(c, self.ctx.ctotals)
 
     def _no_docs(self) -> DataFrame:
         return self.ctx.spark.range(0).selectExpr("id AS doc_id")
 
     def docs(self, query: str) -> DataFrame:
-        """Query string → flattened distinct doc_id DataFrame (Q10).
-
-        The CQR is checkpointed before flatten: cqr_flatten references it
-        twice (fm branch joining cell_totals + pm explode), and without a
-        plan boundary the whole op-tree join DAG executes once per
-        reference (r06 — measured ~25% off every optree entry).  Under AQE
-        the eager=False checkpoint already runs the tree's shuffle and
-        broadcast stages inside this call; only the flatten's own stages
-        wait for the caller's action."""
-        c = self.cqr(query)
+        """Query string → flattened distinct doc_id DataFrame (Q10): one
+        plan, which reads the tree once."""
+        c = self._eval(parse(query))
         if c is None:
             return self._no_docs()
-        return cqr_flatten(c.localCheckpoint(eager=False), self.ctx.ctotals)
+        return cqr_flatten(c, self.ctx.ctotals)
 
     # -- HCQR evaluation (SURVEY E3) -----------------------------------------
     def hcqr(self, query: str) -> DataFrame | None:
@@ -203,8 +208,7 @@ class Planner:
             if tok is not None:
                 # checkpoint: the hcqr set ops reference each leaf up to 5x
                 # (fm/pm splits + broadcast f-sides) — without a boundary
-                # every reference rescans the postings table (r06; same
-                # rationale as docs()'s flatten boundary)
+                # every reference rescans the postings table (r06)
                 return ctx.hcqr_tbl.where(f"token = {sql_str(tok)}").selectExpr(
                     "pixel_id", "level", "is_fm", "doc_ids"
                 ).localCheckpoint(eager=False)
@@ -215,7 +219,7 @@ class Planner:
         if n.op in ("token", "cell", "dilate"):
             # dilate has no structural HCQR form — like a multi-token
             # leaf, its CQR result is lifted (and compacted) into the
-            # hierarchy
+            # hierarchy (none of these three holds complement rows)
             c = self._eval(n)
             if c is None:
                 return None
@@ -298,7 +302,7 @@ class Planner:
         if n.op in ("region", "poly", "rect"):
             return self._region_cqr(self._poly(n))
         if n.op == "dilate":
-            c = self._eval(n.args[0])
+            c = self._eval_normalized(n.args[0])
             # dilating the empty result is empty (no cells → no neighbors)
             if c is None:
                 return None
@@ -306,34 +310,15 @@ class Planner:
         if n.op == "cell":
             return local_frame(ctx.spark, CQR_DDL, [[int(n.args[0])], [True], [None]])
         if n.op == "fm":
-            c = self._eval(n.args[0])
+            c = self._eval_normalized(n.args[0])
             return None if c is None else cqr_all_to_full(c)
-        l = self._eval(n.args[0])
-        r = self._eval(n.args[1])
+        l, r = self._eval(n.args[0]), self._eval(n.args[1])
         # empty-operand short-circuits (reference: HcqrOpTree.cpp:106-135)
-        if n.op == "union":
-            if l is None:
-                return r
-            if r is None:
-                return l
-            return cqr_union(l, r)
-        if n.op == "inter":
-            if l is None or r is None:
+        if l is None or r is None:
+            if n.op == "inter" or (n.op == "diff" and l is None):
                 return None
-            return cqr_intersect(l, r)
-        if n.op == "diff":
-            if l is None:
-                return None
-            if r is None:
-                return l
-            return cqr_difference(l, r, self.ctx.ctotals)
-        if n.op == "sym":
-            if l is None:
-                return r
-            if r is None:
-                return l
-            return cqr_symdiff(l, r, self.ctx.ctotals)
-        raise ValueError(n.op)
+            return l if r is None else r
+        return _CQR_OPS[n.op](l, r)
 
     @staticmethod
     def _poly(n: Node) -> np.ndarray:

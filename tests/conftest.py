@@ -1,5 +1,6 @@
 import os
 import sys
+import tempfile
 
 import duckdb
 import pytest
@@ -28,6 +29,14 @@ def engine(spark):
     from oscar_spatial_index_compare_spark.engine import Engine
 
     return Engine(spark, SF_DIR)
+
+
+@pytest.fixture(scope="session")
+def cat_engine(spark):
+    """A catalog-backed engine: tables written once, read back as scans."""
+    from oscar_spatial_index_compare_spark.engine import Engine
+
+    return Engine(spark, SF_DIR, catalog_root=tempfile.mkdtemp(prefix="osi_cat_"))
 
 
 @pytest.fixture(scope="session")

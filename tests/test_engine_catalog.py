@@ -17,14 +17,6 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 
 
-@pytest.fixture(scope="module")
-def cat_engine(spark):
-    from oscar_spatial_index_compare_spark.engine import Engine
-
-    root = tempfile.mkdtemp(prefix="osi_cat_")
-    return Engine(spark, SF_DIR, catalog_root=root)
-
-
 def _docs(engine, q, grid="s2", res=10):
     return sorted(
         r.doc_id for r in engine.planner(grid, res).docs(q).collect()

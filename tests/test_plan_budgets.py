@@ -1,0 +1,60 @@
+"""Plan budgets of CQR op-trees, counted in catalog mode at s2-10.
+
+Every CQR set op reads its join once (complement rows, operators/cqr.py),
+so a ``docs`` tree is one plan and one SQL execution, with no checkpoint
+queries beneath it.  In-memory plans would include the cached build
+lineage, so the counts are taken over a catalog engine.
+"""
+
+from __future__ import annotations
+
+import time
+
+import pytest
+
+import __spark_entry__ as entrymod
+from oscar_spatial_index_compare_spark.plans.optree import Node, parse
+
+DEEPEST = entrymod._OPTREES_ZXY["optree_nested"]
+TREES = ["join / dup", "join - dup", "dup ^ spark",
+         "(join + dup) / window - spark", DEEPEST]
+
+
+def _last_execution_id(spark) -> int:
+    """The newest SQL execution id in the status store.  Ids only grow,
+    and the newest are kept when old ones are evicted, so a difference
+    of two readings counts executions even in a long session."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return executions.last().executionId() if executions.nonEmpty() else -1
+
+
+def _size(n: Node) -> int:
+    return 1 + sum(_size(a) for a in n.args if isinstance(a, Node))
+
+
+@pytest.mark.parametrize("tree", TREES)
+def test_cqr_docs_tree_is_one_execution(spark, cat_engine, tree):
+    planner = cat_engine.planner("s2", 10)
+    planner.docs(tree).count()  # loads the covering and per-context state
+    before = _last_execution_id(spark)
+    planner.docs(tree).count()
+    assert _last_execution_id(spark) - before == 1, tree
+
+
+def test_deepest_tree_plans_in_linear_size_and_bounded_time(cat_engine):
+    """Catalyst must not blow up on the deepest oracle tree: the optimized
+    plan holds at most one join per tree node plus the flatten's, and
+    optimizing and physically planning the analyzed tree (no Python plan
+    building, no job) takes ~0.13 s on a 4-core host, so a 5 s bound
+    leaves a ~40x margin and still catches a blow-up's minutes."""
+    planner = cat_engine.planner("s2", 10)
+    planner.docs(DEEPEST)  # loads the covering and per-context state
+    df = planner.docs(DEEPEST)  # analyzed as it is built
+    t0 = time.perf_counter()
+    qe = df._jdf.queryExecution()
+    joins = qe.optimizedPlan().toString().count("Join ")
+    qe.executedPlan()
+    took = time.perf_counter() - t0
+    assert 0 < joins <= _size(parse(DEEPEST)) + 1
+    assert took < 5.0, f"{took:.1f} s to optimize and plan {DEEPEST}"

@@ -55,17 +55,19 @@ def test_batch_empty_batch(spark, engine):
     assert out.schema.simpleString() == "struct<region:string,doc_id:bigint>"
 
 
-def test_broad_pattern_leaf_caps_literal_expansion(spark, engine, monkeypatch):
+def test_broad_pattern_leaf_caps_literal_expansion(engine, monkeypatch):
     # above the literal cap the leaf lowers to the distributed predicate;
     # results must be identical to the dictionary-expansion path
     from oscar_spatial_index_compare_spark.plans import planner as planner_mod
 
-    want = sorted(r.doc_id for r in engine.query_docs(
-        "*a*", grid="zxy", res=9).collect())
-    monkeypatch.setattr(planner_mod, "MAX_PLAN_LITERAL_TOKENS", 1)
-    from oscar_spatial_index_compare_spark.engine import Engine
+    def lowered():
+        df = engine.planner("zxy", 9).docs("*a*")
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return plan, sorted(r.doc_id for r in df.collect())
 
-    eng2 = Engine(spark, engine.sf_dir)  # fresh engine: no result-cache hit
-    got = sorted(r.doc_id for r in eng2.query_docs(
-        "*a*", grid="zxy", res=9).collect())
+    plan, want = lowered()
+    assert " IN (" in plan and "Contains(token#" not in plan
+    monkeypatch.setattr(planner_mod, "MAX_PLAN_LITERAL_TOKENS", 1)
+    plan, got = lowered()
+    assert "Contains(token#" in plan and " IN (" not in plan
     assert got == want and len(got) > 0
