@@ -1,10 +1,9 @@
 """Scalar geo functions, each built once from one formula.
 
-Haversine and meter quantization exist as a pyspark Column expression
-(JVM-side, whole-stage codegen) and as an SQL string for the DuckDB
-oracle.  Point-in-polygon is SQL text only: ``pip_sql`` is the one string
-that both Spark and DuckDB evaluate, and ``pip_hof_sql`` its bit-identical
-polygon-independent Spark form.  So the side-by-side correctness harness
+Haversine, meter quantization and point-in-polygon are SQL text: one
+string that both Spark and the DuckDB oracle evaluate (``pip_hof_sql`` is
+``pip_sql``'s bit-identical polygon-independent Spark form), with numpy
+twins for driver-side bounds.  So the side-by-side correctness harness
 verifies geo operators bit-for-bit without any geo library on either side.
 
 Reference analogs: exact PIP refinement plays the role of the reference's
@@ -15,8 +14,6 @@ haversine backs the kNN distance (reference stubs NEAR — SURVEY Q9/X2).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 EARTH_RADIUS_KM = 6371.0088
 
@@ -25,23 +22,22 @@ EARTH_RADIUS_KM = 6371.0088
 # haversine
 # --------------------------------------------------------------------------
 
-def haversine_col(lat1, lon1, lat2, lon2) -> Column:
-    """Great-circle distance in km as a native Column expression."""
-    p1, p2 = F.radians(lat1), F.radians(lat2)
-    dp = F.radians(lat2 - lat1) / 2.0
-    dl = F.radians(lon2 - lon1) / 2.0
-    a = F.sin(dp) * F.sin(dp) + F.cos(p1) * F.cos(p2) * F.sin(dl) * F.sin(dl)
-    return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
+def _double(x: float) -> str:
+    """A DOUBLE literal in both dialects: Spark parses a bare ``2.0`` as a
+    DECIMAL, so every constant is spelled as a cast string."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
 def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
-    """Identical formula as ANSI SQL (DuckDB oracle twin)."""
+    """Great-circle km as SQL: the formula of ``haversine_np``, op for op."""
+    def half(a: str, b: str) -> str:
+        return f"SIN(RADIANS(({b}) - ({a})) / {_double(2.0)})"
+
+    dp, dl = half(lat1, lat2), half(lon1, lon2)
     return (
-        f"(2.0 * {EARTH_RADIUS_KM!r} * ASIN(SQRT("
-        f"SIN(RADIANS(({lat2}) - ({lat1})) / 2.0) * SIN(RADIANS(({lat2}) - ({lat1})) / 2.0)"
-        f" + COS(RADIANS({lat1})) * COS(RADIANS({lat2}))"
-        f" * SIN(RADIANS(({lon2}) - ({lon1})) / 2.0) * SIN(RADIANS(({lon2}) - ({lon1})) / 2.0)"
-        f")))"
+        f"({_double(2.0 * EARTH_RADIUS_KM)} * ASIN(SQRT(LEAST("
+        f"{dp} * {dp} + COS(RADIANS({lat1})) * COS(RADIANS({lat2})) * ({dl} * {dl})"
+        f", {_double(1.0)}))))"
     )
 
 
@@ -124,10 +120,7 @@ def pip_hof_sql(lat: str, lon: str, poly: np.ndarray) -> str:
 # distance quantization for cross-engine comparison
 # --------------------------------------------------------------------------
 
-def dist_m_col(km_col) -> Column:
-    """Distance in integer meters — stable across Spark/DuckDB libm ulps."""
-    return F.floor(km_col * F.lit(1000.0) + F.lit(0.5)).cast("long")
-
-
 def dist_m_sql(km_expr: str) -> str:
-    return f"CAST(FLOOR(({km_expr}) * 1000.0 + 0.5) AS BIGINT)"
+    """Distance in integer meters — stable across Spark/DuckDB libm ulps."""
+    return (f"CAST(FLOOR(({km_expr}) * {_double(1000.0)} + {_double(0.5)})"
+            " AS BIGINT)")

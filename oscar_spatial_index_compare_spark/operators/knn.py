@@ -6,11 +6,15 @@ bounded heap.
 
 Algorithm (per query point, batched across queries):
   1. seed = hex cell of the query point at ``res``;
-  2. candidate cells = ``grid_disk(seed, r)`` with r doubling 2,4,8,…;
-     candidates are broadcast and hash-joined against ``mention_cells`` —
-     the big side never shuffles;
-  3. per-partition bounded top-k (mapInPandas + np.argpartition — the
-     bounded heap), then global top-k;
+  2. candidate cells: every populated cell that can hold a top-k doc,
+     bounded on the driver from the per-cell counts (or, without them,
+     ``grid_disk(seed, r)`` with r doubling 2,4,8,…).  They ship as ONE
+     broadcast dimension ``(query_id, cand_cell, qlat, qlon, k)``,
+     hash-joined on ``cell_id = cand_cell`` — the big side never shuffles;
+  3. min distance per (query, doc), then ``row_number()`` per query
+     filtered by ``rank <= max_k AND rank <= k``.  The literal bound makes
+     Spark plan a ``WindowGroupLimit`` in ``Partial`` mode before the
+     window's shuffle: the per-partition bounded heap, run in the JVM;
   4. termination proof: any mention outside disk(r) is at planar degree
      distance ≥ (r-0.5)·s·√3/2 from the query; ``_km_lower_bound`` converts
      that to a great-circle km bound that accounts for longitude shrink at
@@ -18,7 +22,9 @@ Algorithm (per query point, batched across queries):
 
 Doc distance = min over its mentions; k docs per query, ties broken by
 doc_id; distances quantized to integer meters for cross-engine equality
-(functions/geo.dist_m_col — same formula as the DuckDB oracle).
+(``_DIST_M``: the one SQL string that Spark and the DuckDB oracle both
+evaluate).  The plan is SQL text (``selectExpr`` / ``where(str)``): on
+classic PySpark each Column built in Python costs ~19 py4j round trips.
 """
 
 from __future__ import annotations
@@ -26,15 +32,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.geo import (
-    dist_m_col,
-    dist_m_sql,
-    haversine_col,
-    haversine_np,
-    haversine_sql,
-)
+from ..functions.geo import dist_m_sql, haversine_np, haversine_sql
 from ..grids.base import get_grid
 from ..grids.hex7 import SQRT3, _frame
 from ..session import local_frame
@@ -56,74 +55,42 @@ def _km_lower_bound(qlat: float, d_deg: float) -> float:
     return float(KM_PER_DEG * val.min())
 
 
-def _partial_topk(per_doc: DataFrame, max_k: int) -> DataFrame:
-    """Per-partition bounded heap (north_star): keep only the max_k best
-    (dist, doc) rows per query within each partition before the global
-    shuffle — mapInPandas + np.argpartition, Arrow-batched."""
-    schema = per_doc.schema
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf
-                continue
-            parts = []
-            for _, grp in pdf.groupby("query_id", sort=False):
-                if len(grp) > max_k:
-                    # lexsort keeps the (dist, doc_id) tie-break exact
-                    order = np.lexsort(
-                        (grp["doc_id"].to_numpy(), grp["dist_m"].to_numpy())
-                    )[:max_k]
-                    grp = grp.iloc[np.sort(order)]
-                parts.append(grp)
-            yield pd.concat(parts, ignore_index=True)
-
-    return per_doc.mapInPandas(fn, schema)
-
-
 # hard cap on the Σ-per-query candidate-cell literal frame built on the
 # driver; beyond it knn_docs falls back to ring expansion instead of
 # shipping a queries×populated-cells broadcast (VERDICT r05 item 4)
 MAX_CANDIDATE_ROWS = 5_000_000
 
-# below this many candidate (doc, cell) pairs (exact bound from the cached
-# per-cell counts) the per-partition Python bounded heap is pure overhead —
-# the window's global top-k alone handles the rows comfortably
-PARTIAL_TOPK_MIN_ROWS = 2_000_000
-
-_QUERY_DDL = "query_id long, qlat double, qlon double, k int"
-_CAND_DDL = "query_id long, cand_cell long"
+_CAND_DDL = "query_id long, cand_cell long, qlat double, qlon double, k int"
+_OUT_DDL = "query_id long, doc_id long, dist_m long, rank int"
+_DIST_M = dist_m_sql(haversine_sql("qlat", "qlon", "lat", "lon"))
 
 
-def _broadcast_frame(spark: SparkSession, ddl: str, rows) -> DataFrame:
-    """Non-empty [(…)] rows → a broadcast local frame with ``ddl`` types."""
-    return F.broadcast(local_frame(spark, ddl, zip(*rows)))
+def _candidates(spark: SparkSession, queries, cells: list[np.ndarray]) -> DataFrame:
+    """The broadcast candidate dimension: one (query_id, cand_cell, qlat,
+    qlon, k) row per candidate cell ``cells[i]`` of ``queries[i]``."""
+    reps = [len(c) for c in cells]
+    qid, qlat, qlon, k = (np.repeat(np.asarray(col), reps) for col in zip(*queries))
+    return local_frame(spark, _CAND_DDL, [
+        qid, np.concatenate(cells), qlat, qlon, k]).hint("broadcast")
 
 
-def _per_doc_topk(j: DataFrame, max_k: int,
-                  use_partial: bool = True) -> DataFrame:
-    """(joined candidate rows with qlat/qlon/k) → exact per-query top-k:
-    min-distance per (query, doc), optional per-partition bounded heap,
-    global row_number window with the (dist, doc_id) tie-break."""
-    j = j.withColumn(
-        "dist_m",
-        dist_m_col(
-            haversine_col(F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon"))
-        ),
-    )
-    per_doc = j.groupBy("query_id", "doc_id", "k").agg(F.min("dist_m").alias("dist_m"))
-    if use_partial:
-        per_doc = _partial_topk(per_doc, max_k)  # bounded heap per partition
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_m").asc(), F.col("doc_id").asc()
-    )
+def _topk(joined: DataFrame, max_k: int) -> DataFrame:
+    """Candidate mention rows joined to their query → the exact per-query
+    top-k (query_id, doc_id, dist_m, rank): min distance per (query, doc),
+    ranked by (dist_m, doc_id).  ``rank <= max_k`` is the literal Spark
+    needs to plan the per-partition ``WindowGroupLimit``."""
     return (
-        per_doc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.col("k"))
-        .select("query_id", "doc_id", "dist_m", "rank", "k")
+        joined.selectExpr("query_id", "doc_id", "k", f"{_DIST_M} AS dist_m")
+        .groupBy("query_id", "doc_id", "k").agg(F.expr("min(dist_m) AS dist_m"))
+        .selectExpr("query_id", "doc_id", "dist_m", "k", "row_number() OVER "
+                    "(PARTITION BY query_id ORDER BY dist_m, doc_id) AS rank")
+        .where(f"rank <= {max_k} AND rank <= k")
+        .selectExpr("query_id", "doc_id", "dist_m", "rank")
     )
+
+
+def _join(probe: DataFrame, cand: DataFrame) -> DataFrame:
+    return probe.join(cand, F.expr("cell_id = cand_cell"))
 
 
 def knn_docs(
@@ -137,20 +104,27 @@ def knn_docs(
     """queries: [(query_id, lat, lon, k)] → (query_id, doc_id, dist_m, rank).
 
     ``mcells``: mention_cells at (grid, res).  Returns exactly k rows per
-    query (fewer only if the corpus has fewer docs).
+    query (fewer only if the corpus has fewer docs); query ids must be
+    distinct within a batch.
 
     The per-cell doc counts (``cell_stats``, collected once per frame)
     bound each query's kth distance on the driver, so the candidate cells
-    are provably complete without a probe job; the queries and candidates
-    ship as Arrow local frames (no Python workers), and the result is ONE
-    distributed plan.  Ring expansion remains the fallback when the
-    populated cells or the candidate set exceed their driver caps.
+    are provably complete without a probe job; they ship as one Arrow
+    local frame (no Python workers), and the result is ONE distributed
+    plan.  Ring expansion remains the fallback when the populated cells or
+    the candidate set exceed their driver caps.
     """
-    g = get_grid(grid)
+    seen: set[int] = set()
+    for qid, *_ in queries:
+        if qid in seen:
+            raise ValueError(f"duplicate query_id {qid} in one kNN batch")
+        seen.add(qid)
+    if not queries:
+        return local_frame(spark, _OUT_DDL, [[]] * 4)
+    g = get_grid(grid)  # raises on an unknown grid name before it reaches SQL
     s, _ = _frame(res)
-    probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res)).select(
-        "doc_id", "lat", "lon", "cell_id"
-    )
+    probe = mcells.where(f"grid = '{grid}' AND res = {int(res)}").selectExpr(
+        "doc_id", "lat", "lon", "cell_id")
     stats = cell_stats(mcells, grid, res)
     if stats is None:
         # populated-cell list too large for the driver (very deep res at
@@ -162,9 +136,7 @@ def knn_docs(
     if not len(stats.cells):
         # no mentions at this (grid, res): empty result, correct schema
         # (the grid kernels reject empty id arrays, so bail before geometry)
-        return local_frame(
-            spark, "query_id long, doc_id long, dist_m long, rank int",
-            [[]] * 4)
+        return local_frame(spark, _OUT_DDL, [[]] * 4)
 
     cells, n_arr = stats.cells, stats.n_docs
     mstar, ndocs = stats.mstar, stats.docs
@@ -179,8 +151,6 @@ def knn_docs(
     # ---- phase 2: provably complete candidate set — every populated cell
     # whose NEAREST point (center distance − circumradius) can be within X
     # (pole/antimeridian safe: pure haversine on cell geometry).
-    qdf_all = _broadcast_frame(spark, _QUERY_DDL, queries)
-    max_k = max(k for _, _, _, k in queries)
     # cum(prefix) = Σ per-cell distinct counts OVERCOUNTS distinct docs (a
     # doc spanning j cells is counted j times), so "cum ≥ k" alone cannot
     # prove k docs lie within the prefix.  Two sound lower bounds from the
@@ -188,10 +158,8 @@ def knn_docs(
     # budget is exactly P − D) and distinct ≥ ceil(cum / M*); the prefix is
     # proven once cum reaches the SMALLER of the two thresholds.
     total_pairs = int(n_arr.sum())
-    qids_parts: list[np.ndarray] = []
-    cells_parts: list[np.ndarray] = []
+    cand_cells: list[np.ndarray] = []
     n_cand = 0
-    est_rows = 0  # Σ per-query candidate (doc, cell) pairs, from counts
     for qid, qlat, qlon, k in queries:
         center_d = haversine_np(qlat, qlon, clat, clon)
         hi = center_d + rad_km
@@ -210,7 +178,6 @@ def knn_docs(
                 mask = center_d - rad_km <= d_km
         sel = cells[mask]
         n_cand += len(sel)
-        est_rows += int(n_arr[mask].sum())
         if n_cand > MAX_CANDIDATE_ROWS:
             # unprunable dense corpus (or a huge query batch): the literal
             # candidate frame would be a driver-side materialization the
@@ -220,18 +187,9 @@ def knn_docs(
             return _knn_ring_expansion(
                 spark, probe, g, s, queries, res, max_r
             )
-        qids_parts.append(np.full(len(sel), qid, np.int64))
-        cells_parts.append(sel)
-    cand2 = F.broadcast(local_frame(spark, _CAND_DDL, [
-        np.concatenate(qids_parts), np.concatenate(cells_parts)]))
-    j2 = probe.join(cand2, probe.cell_id == cand2.cand_cell).join(qdf_all, "query_id")
-    # the per-partition bounded heap (mapInPandas) only pays for itself
-    # when the post-aggregation row set is large; the cached counts give an
-    # exact upper bound on per-doc rows (Σ candidate-cell distinct counts),
-    # so small batches skip the Python boundary entirely — the window alone
-    # is exact (guide §4: eliminate JVM↔Python when built-ins suffice)
-    return _per_doc_topk(j2, max_k,
-                        use_partial=est_rows > PARTIAL_TOPK_MIN_ROWS).drop("k")
+        cand_cells.append(sel)
+    max_k = max(k for _, _, _, k in queries)
+    return _topk(_join(probe, _candidates(spark, queries, cand_cells)), max_k)
 
 
 def _knn_ring_expansion(spark, probe, g, s, queries, res, max_r):
@@ -245,17 +203,11 @@ def _knn_ring_expansion(spark, probe, g, s, queries, res, max_r):
     radius = dict.fromkeys(seed, 2)
     verified: dict[int, int | None] = {}  # qid → radius (None = exact scan)
     while pending:
-        cand_rows = [
-            (qid, int(c))
-            for qid in pending
-            for c in g.disk(seed[qid], radius[qid]).tolist()
-        ]
-        cand = _broadcast_frame(spark, _CAND_DDL, cand_rows)
-        qdf = _broadcast_frame(
-            spark, _QUERY_DDL, [(qid, *v) for qid, v in pending.items()])
-        j = probe.join(cand, probe.cell_id == cand.cand_cell).join(qdf, "query_id")
+        batch = [(qid, *v) for qid, v in pending.items()]
+        cand = _candidates(spark, batch, [
+            g.disk(seed[qid], radius[qid]) for qid in pending])
         max_k = max(k for _, _, k in pending.values())
-        rows = _per_doc_topk(j, max_k).collect()  # k-bounded
+        rows = _topk(_join(probe, cand), max_k).collect()  # k-bounded
         by_q: dict[int, list] = {}
         for row in rows:
             by_q.setdefault(row.query_id, []).append(row)
@@ -273,33 +225,18 @@ def _knn_ring_expansion(spark, probe, g, s, queries, res, max_r):
             else:
                 radius[qid] = min(radius[qid] * 2, max_r)
 
-    qdf_all = _broadcast_frame(spark, _QUERY_DDL, queries)
-    parts = []
-    ring_rows = [
-        (qid, int(c))
-        for qid, r in verified.items()
-        if r is not None
-        for c in g.disk(seed[qid], r).tolist()
-    ]
-    if ring_rows:
-        cand = _broadcast_frame(spark, _CAND_DDL, ring_rows)
-        parts.append(
-            probe.join(cand, probe.cell_id == cand.cand_cell)
-            .join(qdf_all, "query_id")
-            .select("query_id", "qlat", "qlon", "k", "doc_id", "lat", "lon")
-        )
-    exact_qids = [qid for qid, r in verified.items() if r is None]
-    if exact_qids:
-        parts.append(
-            probe.crossJoin(
-                qdf_all.where(F.col("query_id").isin(exact_qids))
-            ).select("query_id", "qlat", "qlon", "k", "doc_id", "lat", "lon")
-        )
-    j = parts[0]
-    for p in parts[1:]:
-        j = j.unionByName(p)
-    max_k = max(k for _, _, _, k in queries)
-    return _per_doc_topk(j, max_k).drop("k")
+    # an exact-scan query keeps one dimension row (its seed cell) and is
+    # crossed with every mention; the seed cell's rows it also joins are
+    # duplicates that the per-doc min absorbs
+    cand = _candidates(spark, queries, [
+        g.disk(seed[qid], verified[qid]) if verified[qid] is not None
+        else np.array([seed[qid]], np.int64) for qid, _, _, _ in queries])
+    joined = _join(probe, cand)
+    exact = [str(int(qid)) for qid, r in verified.items() if r is None]
+    if exact:
+        joined = joined.unionByName(probe.crossJoin(
+            cand.where(f"query_id IN ({', '.join(exact)})")))
+    return _topk(joined, max(k for _, _, _, k in queries))
 
 
 def knn_oracle_sql(queries: list[tuple[int, float, float, int]]) -> str:

@@ -112,3 +112,58 @@ def test_empty_populated_cell_set_returns_empty(spark):
     mc = spark.createDataFrame([], MCELLS_SCHEMA)
     out = knn_docs(spark, mc, [(1, 0.0, 0.0, 3)], grid="h3", res=5)
     assert out.count() == 0
+
+
+def test_empty_query_batch_returns_empty(spark):
+    mc = _mcells(spark, "h3", 5, [(1, 0.0, 0.0)])
+    out = knn_docs(spark, mc, [], grid="h3", res=5)
+    assert out.schema.simpleString() == (
+        "struct<query_id:bigint,doc_id:bigint,dist_m:bigint,rank:int>")
+    assert out.count() == 0
+
+
+def test_duplicate_query_id_is_rejected(spark):
+    # Two points under one id used to merge into one ranked answer.
+    mc = _mcells(spark, "h3", 5, [(1, 0.0, 0.0), (2, 0.1, 0.1), (3, 3.0, 3.0)])
+    with pytest.raises(ValueError, match="query_id 0"):
+        knn_docs(spark, mc, [(0, 0.0, 0.0, 2), (0, 3.0, 3.0, 1)],
+                 grid="h3", res=5)
+
+
+def test_no_cell_stats_takes_ring_expansion(spark, monkeypatch):
+    # Above MAX_DRIVER_CELLS cell_stats returns None and kNN expands rings
+    # from the seed cell; doc 9 lies outside the first ring, so the ring
+    # doubles at least once before the kth distance is proven.
+    import oscar_spatial_index_compare_spark.operators.cell_stats as cs
+    import oscar_spatial_index_compare_spark.operators.knn as K
+
+    mentions = [(1, 0.01, 0.01), (2, -0.02, 0.03), (2, 0.04, -0.01),
+                (9, 0.6, 0.5)]
+    mc = _mcells(spark, "h3", 5, mentions)
+    monkeypatch.setattr(cs, "MAX_DRIVER_CELLS", -1)
+    monkeypatch.setitem(mc.__dict__, cs._MEMO, {})
+    assert cs.cell_stats(mc, "h3", 5) is None
+    calls = {"ring": 0, "frames": 0}
+    ring, candidates = K._knn_ring_expansion, K._candidates
+
+    def ring_spy(*a, **kw):
+        calls["ring"] += 1
+        return ring(*a, **kw)
+
+    def candidates_spy(*a, **kw):
+        calls["frames"] += 1
+        return candidates(*a, **kw)
+
+    monkeypatch.setattr(K, "_knn_ring_expansion", ring_spy)
+    monkeypatch.setattr(K, "_candidates", candidates_spy)
+    got = knn_docs(spark, mc, [(1, 0.0, 0.0, 3)], grid="h3", res=5).collect()
+    assert calls["ring"] == 1
+    assert calls["frames"] >= 3  # two rounds or more, then the final plan
+    want = _brute_topk(mentions, 0.0, 0.0, 3)
+    assert [(r.doc_id, r.dist_m) for r in sorted(got, key=lambda r: r.rank)] \
+        == want
+    # capped at the first ring, the query falls back to an exact scan
+    capped = knn_docs(spark, mc, [(1, 0.0, 0.0, 3)], grid="h3", res=5,
+                      max_r=2).collect()
+    assert [(r.doc_id, r.dist_m) for r in sorted(capped, key=lambda r: r.rank)] \
+        == want

@@ -64,6 +64,18 @@ def _mcells(spark, grid, res, mentions):
         "cell_id long", [[grid] * len(doc), [res] * len(doc), doc, lat, lon, cells])
 
 
+def knn_batch(spark):
+    """A 5-query kNN batch over 400 local-frame mentions at h3-5 → a
+    function that builds (does not run) the batch's plan."""
+    from oscar_spatial_index_compare_spark.operators.knn import knn_docs
+
+    rng = np.random.RandomState(3)
+    mentions = [(i // 2, *rng.uniform(-5, 5, 2)) for i in range(400)]
+    mc = _mcells(spark, "h3", 5, mentions)
+    queries = [(i, *rng.uniform(-4, 4, 2).tolist(), 3 + i) for i in range(5)]
+    return lambda: knn_docs(spark, mc, queries, "h3", 5)
+
+
 def test_knn_batch_runs_no_rdd_scan(spark):
     from oscar_spatial_index_compare_spark.operators.knn import knn_docs
 

@@ -1,19 +1,23 @@
-"""Plan budgets of CQR op-trees, counted in catalog mode at s2-10.
+"""Plan budgets of CQR op-trees and kNN batches.
 
 Every CQR set op reads its join once (complement rows, operators/cqr.py),
 so a ``docs`` tree is one plan and one SQL execution, with no checkpoint
 queries beneath it.  In-memory plans would include the cached build
-lineage, so the counts are taken over a catalog engine.
+lineage, so the CQR counts are taken over a catalog engine at s2-10.  A
+kNN batch is one broadcast candidate dimension and Spark's own
+per-partition top-k; its plan is pinned over a local mention frame.
 """
 
 from __future__ import annotations
 
+import re
 import time
 
 import pytest
 
 import __spark_entry__ as entrymod
 from oscar_spatial_index_compare_spark.plans.optree import Node, parse
+from tests.test_local_frames import knn_batch
 
 DEEPEST = entrymod._OPTREES_ZXY["optree_nested"]
 TREES = ["join / dup", "join - dup", "dup ^ spark",
@@ -58,3 +62,13 @@ def test_deepest_tree_plans_in_linear_size_and_bounded_time(cat_engine):
     took = time.perf_counter() - t0
     assert 0 < joins <= _size(parse(DEEPEST)) + 1
     assert took < 5.0, f"{took:.1f} s to optimize and plan {DEEPEST}"
+
+
+def test_knn_batch_plan_has_one_broadcast_and_no_python(spark):
+    """One broadcast hash join on the candidate dimension, no Python node,
+    and the bounded heap as a partial ``WindowGroupLimit`` before the
+    window's shuffle."""
+    plan = knn_batch(spark)()._jdf.queryExecution().executedPlan().toString()
+    assert not re.search("MapInPandas|ArrowEvalPython|BatchEvalPython", plan)
+    assert plan.count("BroadcastExchange") == 1
+    assert len(re.findall(r"WindowGroupLimit .*, Partial", plan)) == 1

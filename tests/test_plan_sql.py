@@ -1,11 +1,12 @@
-"""Op-tree plans are built from SQL text.
+"""Op-tree plans and kNN batches are built from SQL text.
 
 On classic PySpark every ``F.col`` is ~19 py4j round trips to the JVM (an
 active-session lookup plus reflection), so Column-tree plan construction
 cost thousands of gateway commands per HCQR op.  The planner and the
-CQR/HCQR operators now build expressions as SQL strings; these tests pin
-the command budget of building fixed trees, the one quoting helper for
-data-derived strings, and the engine's result-cache LRU.
+CQR/HCQR and kNN operators now build expressions as SQL strings; these
+tests pin the command budget of building fixed trees and a kNN batch,
+the one quoting helper for data-derived strings, and the engine's
+result-cache LRU.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import pytest
 
 from oscar_spatial_index_compare_spark.plans.planner import _token_pred, sql_str
 from oscar_spatial_index_compare_spark.session import local_frame
+from tests.test_local_frames import knn_batch
 
 
 @contextlib.contextmanager
@@ -65,6 +67,17 @@ def test_plan_construction_budget(engine, spark, monkeypatch, path, tree, ceilin
     with _gateway_commands(spark, monkeypatch) as sent:
         build()
     assert 0 < len(sent) <= ceiling, f"{tree}: {len(sent)} gateway commands"
+
+
+def test_knn_batch_construction_budget(spark, monkeypatch):
+    """Building a 5-query kNN batch: SQL text over one candidate frame
+    sends ~100 commands, the Column-tree plan with a second query frame
+    sent ~590.  The first build collects the cell stats."""
+    build = knn_batch(spark)
+    build()
+    with _gateway_commands(spark, monkeypatch) as sent:
+        build()
+    assert 0 < len(sent) < 150, f"{len(sent)} gateway commands"
 
 
 TRICKY = ["o'neil", "c:\\temp", "\\'", "it''s\\\\", "plain"]
