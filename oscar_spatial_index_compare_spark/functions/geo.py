@@ -69,7 +69,7 @@ def pip_sql(lat: str, lon: str, poly: np.ndarray) -> str:
             f" AND (({lon}) < {x2 - x1!r} * (({lat}) - {y1!r}) / {y2 - y1!r} + {x1!r})"
             f" THEN 1 ELSE 0 END)"
         )
-    return "((" + " + ".join(terms) + ") % 2 = 1)"
+    return "((" + (" + ".join(terms) or "0") + ") % 2 = 1)"  # no edges: outside
 
 
 def pip_hof_sql(lat: str, lon: str, poly: np.ndarray) -> str:

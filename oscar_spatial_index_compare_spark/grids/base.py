@@ -100,14 +100,39 @@ class Grid:
         """Cells within k rings of ``cell`` (same res) — kNN expansion (X2)."""
         raise NotImplementedError
 
-    def covering(self, poly: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+    def covering(self, poly: np.ndarray, res: int, populated: np.ndarray | None = None
+                 ) -> tuple[np.ndarray, np.ndarray]:
         """X1 polyfill: polygon (n,2) [lat,lon] → (full_cells, boundary_cells).
 
         ``full_cells`` are provably fully inside (safe to skip exact PIP);
         ``boundary_cells`` need exact refinement.  Conservative: never drops
         a cell that intersects the polygon.
+
+        ``populated``: sorted res-level cell ids (``CellStats.cells``).
+        When given, the covering keeps only cells holding one of them: a
+        hierarchical descent drops a cell before any geometry test once
+        its descendant range (``res_bounds``) is empty, and a flat scan
+        classifies only populated candidates.  The kept cells are exactly
+        the unpruned covering's cells that hold a populated cell.
+
+        A polygon with fewer than 3 vertices has no interior under the
+        strict PIP: both arrays come back empty.
         """
+        poly = np.asarray(poly, np.float64).reshape(-1, 2)
+        if len(poly) < 3 or (populated is not None and not len(populated)):
+            return np.empty(0, np.int64), np.empty(0, np.int64)
+        return self._covering(poly, res, populated)
+
+    def _covering(self, poly: np.ndarray, res: int, populated: np.ndarray | None):
         raise NotImplementedError
+
+    def res_bounds(self, ids: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+        """(lo, hi) per cell: a res-level cell descends from (or is)
+        ``ids[i]`` iff its id lies in [lo[i], hi[i]].  Default: grids whose
+        coverings hold res-level cells only."""
+        ids = np.asarray(ids, np.int64)
+        assert (self.level(ids) == res).all(), "res_bounds: cells below res"
+        return ids, ids
 
     # --- native Spark column hooks (None → use pandas UDF) ----------------
     def col_cell(self, lat_col, lon_col, res: int):
@@ -148,6 +173,23 @@ def grid_names() -> list[str]:
     return sorted(_REGISTRY)
 
 
+# ---- populated-cell ranges (coverings pruned to CellStats.cells) ----------
+
+def holds_populated(lo: np.ndarray, hi: np.ndarray, populated: np.ndarray) -> np.ndarray:
+    """Mask of the [lo, hi] ranges holding at least one id of the sorted
+    ``populated``."""
+    return (np.searchsorted(populated, lo, "left")
+            < np.searchsorted(populated, hi, "right"))
+
+
+def populated_in(lo: np.ndarray, hi: np.ndarray, populated: np.ndarray) -> np.ndarray:
+    """The ids of the sorted ``populated`` inside any [lo, hi] range, sorted."""
+    edge = np.zeros(len(populated) + 1, np.int64)
+    np.add.at(edge, np.searchsorted(populated, lo, "left"), 1)
+    np.add.at(edge, np.searchsorted(populated, hi, "right"), -1)
+    return populated[np.cumsum(edge[:-1]) > 0]
+
+
 # ---- shared planar polygon helpers (used by coverings & PIP refinement) ---
 
 def point_in_poly(lat: np.ndarray, lon: np.ndarray, poly: np.ndarray) -> np.ndarray:
@@ -180,3 +222,30 @@ def dist_point_to_segments(px, py, x1, y1, x2, y2):
     cy = y1 + t * dy
     d2 = (px[:, None] - cx) ** 2 + (py[:, None] - cy) ** 2
     return np.sqrt(d2.min(axis=1))
+
+
+def classify_cells(corners: np.ndarray, clat: np.ndarray, clon: np.ndarray,
+                   poly: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(full, disjoint) masks of cells given their (n,k,2) corner lat/lons
+    and centers: planar lat/lon tests padded by each cell's bbox diagonal.
+    ``full``: every corner and the center inside, the center farther than
+    the diagonal from every edge.  ``disjoint``: no corner or center
+    inside, the center beyond the pad, and no polygon vertex in the padded
+    bbox.  The descent coverings (s2, htm) share it."""
+    ex, ey = poly[:, 1], poly[:, 0]
+    ex2, ey2 = np.roll(ex, -1), np.roll(ey, -1)
+    lo_lat, hi_lat = corners[:, :, 0].min(1), corners[:, :, 0].max(1)
+    lo_lon, hi_lon = corners[:, :, 1].min(1), corners[:, :, 1].max(1)
+    pad = np.sqrt((hi_lat - lo_lat) ** 2 + (hi_lon - lo_lon) ** 2)
+    inside = point_in_poly(
+        corners[:, :, 0].ravel(), corners[:, :, 1].ravel(), poly
+    ).reshape(len(corners), -1)
+    cin = point_in_poly(clat, clon, poly)
+    bd_c = dist_point_to_segments(clon, clat, ex, ey, ex2, ey2)
+    near_edge = (
+        (ex[None, :] >= (lo_lon - pad)[:, None]) & (ex[None, :] <= (hi_lon + pad)[:, None])
+        & (ey[None, :] >= (lo_lat - pad)[:, None]) & (ey[None, :] <= (hi_lat + pad)[:, None])
+    ).any(1)
+    full = inside.all(1) & cin & (bd_c > pad)
+    disjoint = (~inside.any(1)) & (~cin) & (bd_c > pad) & ~near_edge
+    return full, disjoint

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import Grid, dist_point_to_segments, point_in_poly, register
+from .base import Grid, dist_point_to_segments, holds_populated, point_in_poly, register
 
 S0 = 24.0  # res-0 hex circumradius, degrees
 ALPHA = float(np.arctan(np.sqrt(3.0) / 5.0))  # aperture-7 rotation
@@ -210,8 +210,9 @@ class Hex7Grid(Grid):
         edge = s / SQRT3
         return (3.0 * SQRT3 / 2.0) * edge * edge * deg_km * deg_km * np.cos(np.radians(clat))
 
-    def covering(self, poly: np.ndarray, res: int):
-        """Scan the axial bbox of the polygon bbox; classify full/boundary."""
+    def _covering(self, poly: np.ndarray, res: int, populated):
+        """Scan the axial bbox of the polygon bbox; classify full/boundary
+        (only the populated candidates when ``populated`` is given)."""
         lat_min, lat_max = poly[:, 0].min(), poly[:, 0].max()
         lon_min, lon_max = poly[:, 1].min(), poly[:, 1].max()
         s, _ = _frame(res)
@@ -227,8 +228,10 @@ class Hex7Grid(Grid):
         gq, gr = gq.ravel(), gr.ravel()
         x, y = _axial_to_xy(gq.astype(np.float64), gr.astype(np.float64), res)
         m = (x >= lon_min - pad) & (x <= lon_max + pad) & (y >= lat_min - pad) & (y <= lat_max + pad)
-        gq, gr, x, y = gq[m], gr[m], x[m], y[m]
         ids = self.encode(np.full_like(gq, res), gq, gr)
+        if populated is not None:
+            m &= holds_populated(ids, ids, populated)
+        ids, x, y = ids[m], x[m], y[m]
         R = s / SQRT3  # circumradius
         ex, ey = poly[:, 1], poly[:, 0]
         ex2, ey2 = np.roll(ex, -1), np.roll(ey, -1)

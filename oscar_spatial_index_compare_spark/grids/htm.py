@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import Grid, dist_point_to_segments, point_in_poly, register
+from .base import Grid, classify_cells, holds_populated, register
 
 _V = np.array(
     [[0.0, 0.0, 1.0], [1.0, 0.0, 0.0], [0.0, 1.0, 0.0],
@@ -52,6 +52,12 @@ def _xyz(lat, lon):
 
 def _norm(v):
     return v / np.linalg.norm(v, axis=-1, keepdims=True)
+
+
+def _latlon(v):
+    """(..., 3) unit vectors → (lat, lon) degrees."""
+    return (np.degrees(np.arcsin(np.clip(v[..., 2], -1, 1))),
+            np.degrees(np.arctan2(v[..., 1], v[..., 0])))
 
 
 def _min_edge_dot(p, a, b, c):
@@ -167,17 +173,10 @@ class HtmGrid(Grid):
         return tri
 
     def _corners_latlon(self, ids):
-        t = self._tris(ids)  # (n,3,3)
-        lat = np.degrees(np.arcsin(np.clip(t[:, :, 2], -1, 1)))
-        lon = np.degrees(np.arctan2(t[:, :, 1], t[:, :, 0]))
-        return np.stack([lat, lon], axis=2)  # (n,3,2)
+        return np.stack(_latlon(self._tris(ids)), axis=2)  # (n,3,2)
 
     def center(self, ids):
-        t = _norm(self._tris(ids).sum(axis=1))
-        return (
-            np.degrees(np.arcsin(np.clip(t[:, 2], -1, 1))),
-            np.degrees(np.arctan2(t[:, 1], t[:, 0])),
-        )
+        return _latlon(_norm(self._tris(ids).sum(axis=1)))
 
     def bbox(self, ids):
         from .base import bbox_from_corners
@@ -202,72 +201,38 @@ class HtmGrid(Grid):
         e = ang(a, b, c) + ang(b, c, a) + ang(c, a, b) - np.pi
         return e * R * R
 
-    def covering(self, poly: np.ndarray, res: int):
+    def res_bounds(self, ids, res: int):
+        ids = np.asarray(ids, np.int64)
+        shift = 2 * (res - self.level(ids))
+        return ids << shift, ((ids + 1) << shift) - 1
+
+    def _covering(self, poly: np.ndarray, res: int, populated):
         """Recursive triangle subdivision covering (same conservative scheme
-        as the s2 grid: planar lat/lon tests + diag pad, levels < 3 always
-        subdivide so face-scale distortion cannot prune wrongly).  Corner
-        triangles are CARRIED through the recursion — no per-level root
-        walks (that walk made first-call coverings ~10x slower)."""
-        ex, ey = poly[:, 1], poly[:, 0]
-        ex2, ey2 = np.roll(ex, -1), np.roll(ey, -1)
-        full_out: list[np.ndarray] = []
+        as the s2 grid: ``classify_cells``, levels < 3 always subdivide so
+        face-scale distortion cannot prune wrongly).  Corner triangles are
+        CARRIED through the recursion — no per-level root walks (that walk
+        made first-call coverings ~10x slower)."""
+        fulls = [np.empty(0, np.int64)]
         frontier = np.array([f[0] for f in _FACES], np.int64)
         tris = np.stack([np.stack([_V[a], _V[b], _V[c]]) for _f, a, b, c in _FACES])
-
-        def tri_latlon(t):
-            lat = np.degrees(np.arcsin(np.clip(t[:, :, 2], -1, 1)))
-            lon = np.degrees(np.arctan2(t[:, :, 1], t[:, :, 0]))
-            return np.stack([lat, lon], axis=2)
-
-        def classify(ids, tri):
-            c = tri_latlon(tri)
-            diag = np.sqrt(
-                (c[:, :, 0].max(1) - c[:, :, 0].min(1)) ** 2
-                + (c[:, :, 1].max(1) - c[:, :, 1].min(1)) ** 2
-            )
-            inside = point_in_poly(
-                c[:, :, 0].ravel(), c[:, :, 1].ravel(), poly
-            ).reshape(-1, 3)
-            ctr = _norm(tri.sum(axis=1))
-            clat = np.degrees(np.arcsin(np.clip(ctr[:, 2], -1, 1)))
-            clon = np.degrees(np.arctan2(ctr[:, 1], ctr[:, 0]))
-            cin = point_in_poly(clat, clon, poly)
-            bd_c = dist_point_to_segments(clon, clat, ex, ey, ex2, ey2)
-            lo_lat, hi_lat = c[:, :, 0].min(1), c[:, :, 0].max(1)
-            lo_lon, hi_lon = c[:, :, 1].min(1), c[:, :, 1].max(1)
-            pad = diag
-            near_edge = (
-                (ex[None, :] >= (lo_lon - pad)[:, None]) & (ex[None, :] <= (hi_lon + pad)[:, None])
-                & (ey[None, :] >= (lo_lat - pad)[:, None]) & (ey[None, :] <= (hi_lat + pad)[:, None])
-            ).any(1)
-            full = inside.all(1) & cin & (bd_c > diag)
-            disjoint = (~inside.any(1)) & (~cin) & (bd_c > pad) & ~near_edge
-            return full, disjoint, inside, cin, bd_c, pad, near_edge
-
-        for lvl in range(0, res):
-            if len(frontier) == 0:
+        for lvl in range(res + 1):
+            if populated is not None:
+                keep = holds_populated(*self.res_bounds(frontier, res), populated)
+                frontier, tris = frontier[keep], tris[keep]
+            if not len(frontier):
                 break
-            full, disjoint, *_ = classify(frontier, tris)
-            if lvl < 3:
-                full[:] = False
-                disjoint[:] = False
-            full_out.append(frontier[full])
-            keepm = ~full & ~disjoint
-            keep = frontier[keepm]
-            kid_tris = _children_tris(tris[keepm])  # 4 x (n,3,3)
-            frontier = self.children(keep).ravel()
-            # children() column order is c0..c3 — interleave tris to match
-            tris = np.stack(kid_tris, axis=1).reshape(-1, 3, 3)
-        if len(frontier):
-            full, _disjoint, inside, cin, bd_c, pad, near_edge = classify(frontier, tris)
-            boundary = ~full & (inside.any(1) | cin | (bd_c <= pad) | near_edge)
-            fulls = (
-                np.concatenate(full_out + [frontier[full]])
-                if full_out else frontier[full]
-            )
-            return fulls, frontier[boundary]
-        fulls = np.concatenate(full_out) if full_out else np.empty(0, np.int64)
-        return fulls, np.empty(0, np.int64)
+            full, disjoint = classify_cells(np.stack(_latlon(tris), axis=2),
+                                            *_latlon(_norm(tris.sum(axis=1))), poly)
+            if lvl < min(3, res):
+                full[:] = disjoint[:] = False
+            fulls.append(frontier[full])
+            keep = ~full & ~disjoint
+            frontier, tris = frontier[keep], tris[keep]
+            if lvl < res:
+                frontier = self.children(frontier).ravel()
+                # children() column order is c0..c3 — interleave tris to match
+                tris = np.stack(_children_tris(tris), axis=1).reshape(-1, 3, 3)
+        return np.concatenate(fulls), frontier
 
     # ---- native Spark column hooks (prefix bit math, codegen-resident) ------
     def col_level(self, id_col):

@@ -25,10 +25,10 @@ from __future__ import annotations
 
 import numpy as np
 
-# np.select/where evaluate all branches; div-by-zero lanes are never selected
+# np.where evaluates both branches; invalid-sqrt lanes are never selected
 np.seterr(divide="ignore", invalid="ignore")
 
-from .base import Grid, dist_point_to_segments, point_in_poly, register
+from .base import Grid, classify_cells, holds_populated, register
 
 MAX_LEVEL = 30
 _LOOKUP_BITS = 4
@@ -70,33 +70,35 @@ def _latlon_to_xyz(lat, lon):
     return cp * np.cos(lam), cp * np.sin(lam), np.sin(phi)
 
 
+# per-face operand tables.  (u, v) = (num_u / den, num_v / den) with den
+# the face's axis; numerators index [x, y, z, -x, -y, -z]
+_DEN = np.array([0, 1, 2, 0, 1, 2])
+_NUM_U = np.array([1, 3, 3, 2, 2, 4])  # y/x, -x/y, -x/z, z/x, z/y, -y/z
+_NUM_V = np.array([2, 2, 4, 1, 3, 3])  # z/x, z/y, -y/z, y/x, -x/y, -x/z
+# (x, y, z) of a face point index [1, u, v, -1, -u, -v]
+_X = np.array([0, 4, 4, 3, 2, 2])      # 1, -u, -u, -1, v, v
+_Y = np.array([1, 0, 5, 5, 3, 1])      # u, 1, -v, -v, -1, u
+_Z = np.array([2, 2, 0, 4, 4, 3])      # v, v, 1, -u, -u, -1
+
+
 def _xyz_to_face_uv(x, y, z):
     ax, ay, az = np.abs(x), np.abs(y), np.abs(z)
     face = np.where(
         (ax >= ay) & (ax >= az),
         np.where(x >= 0, 0, 3),
         np.where(ay >= az, np.where(y >= 0, 1, 4), np.where(z >= 0, 2, 5)),
-    )
-    u = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [y / x, -x / y, -x / z, z / x, z / y, -y / z],
-    )
-    v = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [z / x, z / y, -y / z, y / x, -x / y, -x / z],
-    )
-    return face.astype(np.int64), u, v
+    ).astype(np.int64)
+    ops = np.stack([x, y, z, -x, -y, -z])
+    lane = np.arange(face.size).reshape(face.shape)
+    den = ops[_DEN[face], lane]
+    return face, ops[_NUM_U[face], lane] / den, ops[_NUM_V[face], lane] / den
 
 
 def _face_uv_to_xyz(face, u, v):
     one = np.ones_like(u)
-    x = np.select([face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-                  [one, -u, -u, -one, v, v])
-    y = np.select([face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-                  [u, one, -v, -v, -one, u])
-    z = np.select([face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-                  [v, v, one, -u, -u, -one])
-    return x, y, z
+    ops = np.stack([one, u, v, -one, -u, -v])
+    lane = np.arange(face.size).reshape(face.shape)
+    return ops[_X[face], lane], ops[_Y[face], lane], ops[_Z[face], lane]
 
 
 def _uv_to_st(u):
@@ -245,75 +247,32 @@ class S2Grid(Grid):
         R = 6371.0088
         return (4.0 * np.pi / 6.0) / (4.0 ** lvl) * R * R
 
-    def covering(self, poly: np.ndarray, res: int):
+    def res_bounds(self, ids, res: int):
+        return self.range_bounds(ids)
+
+    def _covering(self, poly: np.ndarray, res: int, populated):
         """Recursive subdivision covering; conservative (never drops hits).
 
-        Planar lat/lon tests with a one-diagonal pad; coarse levels (< 3)
-        always subdivide, so face-cell bbox distortion cannot prune wrongly.
-        """
-        ex, ey = poly[:, 1], poly[:, 0]
-        ex2, ey2 = np.roll(ex, -1), np.roll(ey, -1)
-        full_out: list[np.ndarray] = []
+        Planar lat/lon tests with a one-diagonal pad (``classify_cells``);
+        coarse levels (< 3) always subdivide, so face-cell bbox distortion
+        cannot prune wrongly."""
+        fulls = [np.empty(0, np.int64)]
         frontier = (np.arange(6, dtype=_U64) << _U64(61)) | (_U64(1) << _U64(60))
         frontier = frontier.view(np.int64)
-        for lvl in range(0, res):
-            if len(frontier) == 0:
+        for lvl in range(res + 1):
+            if populated is not None:
+                frontier = frontier[holds_populated(*self.range_bounds(frontier), populated)]
+            if not len(frontier):
                 break
-            c = self._corners_latlon(frontier)
-            diag = np.sqrt(
-                (c[:, :, 0].max(1) - c[:, :, 0].min(1)) ** 2
-                + (c[:, :, 1].max(1) - c[:, :, 1].min(1)) ** 2
-            )
-            inside = point_in_poly(
-                c[:, :, 0].ravel(), c[:, :, 1].ravel(), poly
-            ).reshape(-1, 4)
-            clat, clon = self.center(frontier)
-            cin = point_in_poly(clat, clon, poly)
-            bd_c = dist_point_to_segments(clon, clat, ex, ey, ex2, ey2)
-            if lvl >= 3:
-                full = inside.all(1) & cin & (bd_c > diag)
-            else:
-                full = np.zeros(len(frontier), dtype=bool)
-            # prune: provably disjoint — center far outside and no corner in
-            lo_lat, hi_lat = c[:, :, 0].min(1), c[:, :, 0].max(1)
-            lo_lon, hi_lon = c[:, :, 1].min(1), c[:, :, 1].max(1)
-            pad = diag
-            disjoint = (
-                (~inside.any(1)) & (~cin) & (bd_c > pad)
-                & ~(
-                    (ex[None, :] >= (lo_lon - pad)[:, None]) & (ex[None, :] <= (hi_lon + pad)[:, None])
-                    & (ey[None, :] >= (lo_lat - pad)[:, None]) & (ey[None, :] <= (hi_lat + pad)[:, None])
-                ).any(1)
-            )
-            if lvl < 3:
-                disjoint[:] = False
-            full_out.append(frontier[full])
-            keep = frontier[~full & ~disjoint]
-            frontier = self.children(keep).ravel()
-        # frontier is now at `res`: classify full vs boundary
-        if len(frontier):
-            c = self._corners_latlon(frontier)
-            diag = np.sqrt(
-                (c[:, :, 0].max(1) - c[:, :, 0].min(1)) ** 2
-                + (c[:, :, 1].max(1) - c[:, :, 1].min(1)) ** 2
-            )
-            inside = point_in_poly(c[:, :, 0].ravel(), c[:, :, 1].ravel(), poly).reshape(-1, 4)
-            clat, clon = self.center(frontier)
-            cin = point_in_poly(clat, clon, poly)
-            bd_c = dist_point_to_segments(clon, clat, ex, ey, ex2, ey2)
-            full = inside.all(1) & cin & (bd_c > diag)
-            lo_lat, hi_lat = c[:, :, 0].min(1), c[:, :, 0].max(1)
-            lo_lon, hi_lon = c[:, :, 1].min(1), c[:, :, 1].max(1)
-            pad = diag
-            near_edge = (
-                (ex[None, :] >= (lo_lon - pad)[:, None]) & (ex[None, :] <= (hi_lon + pad)[:, None])
-                & (ey[None, :] >= (lo_lat - pad)[:, None]) & (ey[None, :] <= (hi_lat + pad)[:, None])
-            ).any(1)
-            boundary = ~full & (inside.any(1) | cin | (bd_c <= pad) | near_edge)
-            fulls = np.concatenate(full_out + [frontier[full]]) if full_out else frontier[full]
-            return fulls, frontier[boundary]
-        fulls = np.concatenate(full_out) if full_out else np.empty(0, np.int64)
-        return fulls, np.empty(0, np.int64)
+            full, disjoint = classify_cells(
+                self._corners_latlon(frontier), *self.center(frontier), poly)
+            if lvl < min(3, res):
+                full[:] = disjoint[:] = False
+            fulls.append(frontier[full])
+            frontier = frontier[~full & ~disjoint]
+            if lvl < res:
+                frontier = self.children(frontier).ravel()
+        return np.concatenate(fulls), frontier
 
     # ---- native Spark column hooks (pure bit arithmetic, codegen-resident) -
     def col_level(self, id_col):

@@ -19,7 +19,7 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .base import Grid, dist_point_to_segments, point_in_poly, register
+from .base import Grid, dist_point_to_segments, holds_populated, point_in_poly, register
 
 MAX_MERC_LAT = 85.05112877980659
 
@@ -109,7 +109,7 @@ class ZxyGrid(Grid):
         keep = (ys >= 0) & (ys < n)
         return np.unique(self.encode(z, xs[keep], ys[keep]))
 
-    def covering(self, poly: np.ndarray, res: int):
+    def _covering(self, poly: np.ndarray, res: int, populated):
         lat_min, lat_max = poly[:, 0].min(), poly[:, 0].max()
         lon_min, lon_max = poly[:, 1].min(), poly[:, 1].max()
         x0, y1 = _xy(np.array([lat_min]), np.array([lon_min]), res)
@@ -118,6 +118,8 @@ class ZxyGrid(Grid):
         ys = np.arange(int(y0[0]), int(y1[0]) + 1)
         gx, gy = np.meshgrid(xs, ys)
         ids = self.encode(res, gx.ravel(), gy.ravel())
+        if populated is not None:
+            ids = ids[holds_populated(ids, ids, populated)]
         lat0, lat1, lon0, lon1 = self._bounds(ids)
         corners_lat = np.stack([lat0, lat0, lat1, lat1], axis=1)
         corners_lon = np.stack([lon0, lon1, lon0, lon1], axis=1)

@@ -4,22 +4,32 @@ The reference stubs polygon leaves (``src/OscarSearchWithSg.cpp:167-181``,
 UnsupportedFeature) but the north star mandates them.  A polygon lowers to
 its grid covering:
 
-    covering(poly, res)  →  full cells (possibly coarser levels): no PIP
-                         →  boundary cells (exactly res): exact PIP
+    covering(poly, res, populated)  →  full cells (possibly coarser
+                                       levels): no PIP
+                                    →  boundary cells (exactly res): exact PIP
 
 the same full-match short-cut the reference gets from fm-cell lists
-(``src/OscarSearchSgIndex.cpp:117-130``).  Every region entry point goes
-through one lowering, ``_region_rows``:
+(``src/OscarSearchSgIndex.cpp:117-130``).  Like the reference, which
+intersects a covering with its own cell list, a covering built with the
+context's ``CellStats`` on the driver descends only into cells that hold a
+populated cell: a cell whose descendant range holds none is dropped before
+any geometry test.  Every region entry point goes through one lowering,
+``_region_rows``:
 
-  * with the context's ``CellStats`` on the driver, each covering is pruned
-    to the populated res-level cells.  When a batch's pruned cells fit
-    MAX_BROADCAST_CELLS they ship as ONE broadcast ``(cell_id, rid,
-    needs_pip)`` dimension, joined once against ``mention_cells`` with PIP
-    only on ``needs_pip`` rows; otherwise each region ships its own.
-  * regions with no pruned dimension (no driver stats, or a pruned
-    covering over the cap on its own) join their raw full cells level by
-    level on ancestor ids (``full_cell_rows``, shared with the planner's
-    CQR leaf) and ship their raw boundary cells as one dimension.
+  * with the stats on the driver, the pruned covering's full cells expand
+    to the populated res-level cells under them (``dimension_covering``).
+    When a batch's cells fit MAX_BROADCAST_CELLS they ship as ONE
+    broadcast ``(cell_id, rid, needs_pip)`` dimension, joined once against
+    ``mention_cells`` with PIP only on ``needs_pip`` rows; otherwise each
+    region ships its own.
+  * regions with no dimension (no driver stats, or cells over the cap on
+    their own) take the unpruned covering, memoized by
+    ``cached_covering``: they join its full cells level by level on
+    ancestor ids (``full_cell_rows``, shared with the planner's CQR leaf)
+    and ship its boundary cells as one dimension.
+
+A polygon with fewer than 3 vertices has an empty covering, so every
+entry point answers it with an empty result.
 
 PIP is one SQL string, ``pip_filter_sql``; the planner's boundary rows
 (``boundary_rows``) use it too.
@@ -34,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geo import pip_hof_sql, pip_sql
-from ..grids.base import get_grid
+from ..grids.base import get_grid, populated_in
 from ..session import local_frame
 from .cell_stats import CellStats, cell_stats
 
@@ -54,9 +64,10 @@ MAX_BROADCAST_CELLS = 200_000
 
 
 def cached_covering(grid_name: str, poly: np.ndarray, res: int):
-    """Coverings are deterministic functions of (grid, polygon, res) and are
-    computed serially on the driver — memoize them (repeated queries over
-    the same regions are the common case; this is the query-plan cache)."""
+    """The unpruned covering, memoized: the paths with no dimension (no
+    driver stats, or cells over MAX_BROADCAST_CELLS), where the descent
+    visits every cell the polygon touches (repeated queries over the same
+    regions are the common case)."""
     return _covering(grid_name, res, np.asarray(poly, np.float64).tobytes())
 
 
@@ -81,41 +92,20 @@ def cells_df(spark: SparkSession, arr, colname: str) -> DataFrame:
     return local_frame(spark, f"{colname} long", [np.asarray(arr, np.int64)])
 
 
-def _by_level(grid: str, full: np.ndarray, pop: np.ndarray, res: int):
-    """Per level of the full cells: (mask of the full cells at that level,
-    every populated res-level cell's ancestor at it)."""
-    g = get_grid(grid)
-    lvls = g.level(full)
-    for lvl in np.unique(lvls):
-        yield lvls == lvl, pop if int(lvl) == res else g.parent(pop, int(lvl))
-
-
-def prune_full_to_populated(
-    grid: str, full: np.ndarray, pop: np.ndarray, res: int
-) -> np.ndarray:
-    """The full covering cells, at their own levels, that contain at least
-    one populated res-level cell."""
-    keep = np.zeros(len(full), bool)
-    for sel, anc in _by_level(grid, full, pop, res):
-        keep[sel] = np.isin(full[sel], anc)
-    return full[keep]
-
-
 def dimension_covering(grid: str, poly: np.ndarray, res: int,
                        stats: CellStats | None):
-    """``poly``'s covering pruned to the populated cells of ``stats``: (the
-    populated res-level cells under its full cells, its populated boundary
-    cells).  Exact: a dropped cell holds no mention.  None when there are
-    no driver stats or the pruned cells exceed MAX_BROADCAST_CELLS."""
+    """``poly``'s dimension cells: (the populated res-level cells under
+    the pruned covering's full cells, its populated boundary cells).
+    Exact: a dropped cell holds no mention.  None when there are no
+    driver stats or the cells exceed MAX_BROADCAST_CELLS.  Not memoized:
+    the pruned descent is cheap (s2-10, 225 perfbench polygons, 5.4k
+    populated cells, one 4-core host: median 7 ms, against 33 ms for the
+    unpruned covering plus a prune)."""
     if stats is None:
         return None
-    full, boundary = cached_covering(grid, poly, res)
-    pop = stats.cells
-    fulls = np.empty(0, np.int64)
-    if len(full):
-        fulls = np.unique(np.concatenate([fulls] + [
-            pop[np.isin(anc, full[sel])] for sel, anc in _by_level(grid, full, pop, res)]))
-    bnd = boundary[np.isin(boundary, pop)] if len(boundary) else boundary
+    g = get_grid(grid)
+    full, bnd = g.covering(poly, res, stats.cells)
+    fulls = populated_in(*g.res_bounds(full, res), stats.cells)
     return None if len(fulls) + len(bnd) > MAX_BROADCAST_CELLS else (fulls, bnd)
 
 

@@ -45,7 +45,6 @@ from ..operators.region_query import (
     cells_df,
     dimension_covering,
     full_cell_rows,
-    prune_full_to_populated,
 )
 from ..operators.token_index import DEFAULT_MAX_KEY_LEN, match_tokens, resolve_qt
 from ..session import local_frame
@@ -363,11 +362,9 @@ class Planner:
         the driver); boundary cells keep the CQR's exact-PIP rows at res.
         hcqr() compacts a bare spatial leaf at the root."""
         ctx = self.ctx
-        full, boundary = cached_covering(ctx.grid, poly, ctx.res)
         stats = cell_stats(ctx.mcells, ctx.grid, ctx.res)
-        if stats is not None:
-            full = prune_full_to_populated(ctx.grid, full, stats.cells, ctx.res)
-            boundary = boundary[np.isin(boundary, stats.cells)]
+        full, boundary = (cached_covering(ctx.grid, poly, ctx.res) if stats is None
+                          else get_grid(ctx.grid).covering(poly, ctx.res, stats.cells))
         n = len(full)
         out = local_frame(ctx.spark, HCQR_DDL, [
             full, get_grid(ctx.grid).level(full).astype(np.int32),

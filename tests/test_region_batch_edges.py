@@ -71,3 +71,26 @@ def test_broad_pattern_leaf_caps_literal_expansion(engine, monkeypatch):
     plan, got = lowered()
     assert "Contains(token#" in plan and " IN (" not in plan
     assert got == want and len(got) > 0
+
+
+def test_degenerate_polygons_answer_empty(spark, engine, duck):
+    """Below 3 vertices a polygon has no interior under the strict PIP:
+    its covering is empty and every entry point answers empty, as the
+    oracle does (the empty polygon used to raise from every covering)."""
+    from oscar_spatial_index_compare_spark.operators.region_query import (
+        region_query_oracle_sql,
+    )
+
+    metro = region_query_file(1)[0][1]
+    regs = [("none", metro[:0]), ("point", metro[:1]), ("segment", metro[:2]),
+            ("metro", metro)]
+    want = {name: {r[0] for r in duck.execute(region_query_oracle_sql(poly)).fetchall()}
+            for name, poly in regs}
+    assert want["metro"] and not (want["none"] or want["point"] or want["segment"])
+    for name, poly in regs:
+        got = region_query_docs(spark, _mcells(engine), poly, "s2", 10)
+        assert {r.doc_id for r in got.collect()} == want[name], name
+    rows = region_query_batch(spark, _mcells(engine), regs, "s2", 10).collect()
+    assert {n: {r.doc_id for r in rows if r.region == n} for n, _p in regs} == want
+    counts = region_query_batch_counts(spark, _mcells(engine), regs, "s2", 10).collect()
+    assert {r.region: r.n_docs for r in counts} == {n: len(d) for n, d in want.items()}

@@ -13,8 +13,11 @@ Forcings:
   * ``unrolled_pip`` — ``PIP_HOF_MAX_ROWS = 0``: the unrolled PIP form.
 
 Each case also asserts the path that ran, read from the analyzed plans
-(the frame's own and every frame it checkpointed) and from the PIP text
-that ``pip_filter_sql`` returned.
+(the frame's own and every frame it checkpointed), from the PIP text
+that ``pip_filter_sql`` returned, and from the coverings asked of the
+grid: pruned to the populated cells with driver stats, unpruned without
+them, and both for a region whose pruned cells exceed the dimension cap
+(its fallback joins the raw covering).
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ import re
 
 import pytest
 
+from oscar_spatial_index_compare_spark.grids.base import Grid
 from oscar_spatial_index_compare_spark.operators import cell_stats as cs
 from oscar_spatial_index_compare_spark.operators import region_query as rq
 from oscar_spatial_index_compare_spark.sources.regions import REGIONS
@@ -90,17 +94,19 @@ def _run(entry, spark, engine):
 
 
 def _expect(forcing, entry, sizes):
-    """→ (dimension joins, whether an ancestor equi-join ran, PIP forms).
-    Without a pruned dimension the region entries join their full cells
-    on ancestor ids and ship the raw boundary cells as one dimension.  The
-    planner's leaves ship no dimension, and MAX_BROADCAST_CELLS does not
-    gate the HCQR leaf; a single region fits the per-region cap."""
+    """→ (dimension joins, whether an ancestor equi-join ran, PIP forms,
+    whether each covering asked of the grid was pruned).  Without a pruned
+    dimension the region entries join their full cells on ancestor ids and
+    ship the raw boundary cells as one dimension.  The planner's leaves
+    ship no dimension, and MAX_BROADCAST_CELLS does not gate the HCQR
+    leaf; a single region fits the per-region cap."""
     dims = 0 if entry in ("planner_docs", "hcqr_docs") else 1
     if forcing == "per_region" and entry in ("batch", "batch_counts"):
         dims = sum(1 for n in sizes if n)
     anc = forcing in ("no_stats", "no_dim") and entry != "hcqr_docs"
     pip = {"unrolled"} if forcing in ("no_stats", "unrolled_pip") else {"hof"}
-    return dims, anc, pip
+    pruned = {False} if forcing == "no_stats" else {True, False} if anc else {True}
+    return dims, anc, pip, pruned
 
 
 @pytest.mark.parametrize("entry", ["docs", "batch", "batch_counts", "planner_docs",
@@ -109,9 +115,10 @@ def _expect(forcing, entry, sizes):
                                      "unrolled_pip"])
 def test_region_cap_sweep(forcing, entry, spark, engine, want, sizes, monkeypatch):
     _force(forcing, engine, sizes, monkeypatch)
-    plans, pips = [], []
+    plans, pips, pruned = [], [], []
     frame_cls = type(spark.range(0))  # the classic DataFrame subclass
     checkpoint, pip_filter = frame_cls.localCheckpoint, rq.pip_filter_sql
+    covering = Grid.covering
 
     def spy_checkpoint(df, *a, **k):
         plans.append(df._jdf.queryExecution().analyzed().toString())
@@ -121,15 +128,22 @@ def test_region_cap_sweep(forcing, entry, spark, engine, want, sizes, monkeypatc
         pips.append(out := pip_filter(poly, row_bound))
         return out
 
+    def spy_covering(grid, poly, res, populated=None):
+        pruned.append(populated is not None)
+        return covering(grid, poly, res, populated)
+
     monkeypatch.setattr(frame_cls, "localCheckpoint", spy_checkpoint)
     monkeypatch.setattr(rq, "pip_filter_sql", spy_pip)
+    monkeypatch.setattr(Grid, "covering", spy_covering)
+    rq._covering.cache_clear()  # a memo hit would skip the unpruned covering
     df, got = _run(entry, spark, engine)
     text = "\n".join(plans + [df._jdf.queryExecution().analyzed().toString()])
 
-    dims, anc, pip = _expect(forcing, entry, sizes)
+    dims, anc, pip, want_pruned = _expect(forcing, entry, sizes)
     assert len(_DIM.findall(text)) == dims
     assert ("anc#" in text) == anc
     assert {"hof" if "aggregate(" in s else "unrolled" for s in pips} == pip
+    assert set(pruned) == want_pruned
     if entry == "batch_counts":
         assert got == {n: len(d) for n, d in want.items()}
     else:

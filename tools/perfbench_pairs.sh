@@ -1,25 +1,29 @@
 #!/bin/bash
 # Alternating parent/change pairs of the end-to-end benchmark.
 #
-#   tools/perfbench_pairs.sh PARENT CHANGE WORKLOAD N
+#   tools/perfbench_pairs.sh PARENT CHANGE WORKLOAD N [FIRST_SEED]
 #
 # PARENT and CHANGE are two checkouts of the repository.  Pair i runs
-# `perfbench/run.py --workload WORKLOAD --seed i` in each (seeds 1..N, run
-# length from PARENT's BENCHMARK.json), one run at a time; odd pairs run the
-# parent first, even pairs the change.  Every result line is kept under
-# $PAIRS_OUT (default: a new directory under /tmp).  Prints, per end-to-end
-# metric, both medians, how many pairs the change won (ties count for
-# neither side) and the parent's quartile distance (IQR).  Exits non-zero
-# when any run fails, reports `correct: false` or counts a failed operation.
+# `perfbench/run.py --workload WORKLOAD --seed i` in each (seeds
+# FIRST_SEED..FIRST_SEED+N-1, default FIRST_SEED 1, so a claim can be
+# re-checked on seeds not used while developing; run length from PARENT's
+# BENCHMARK.json), one run at a time; the first pair runs the parent first,
+# the next the change, and so on.  Every result line is kept under
+# $PAIRS_OUT (default: a new directory under /tmp).  Prints each pair's
+# parent → change value of every end-to-end metric, then per metric both
+# medians, how many pairs the change won (ties count for neither side) and
+# the parent's quartile distance (IQR).  Exits non-zero when any run fails,
+# reports `correct: false` or counts a failed operation.
 set -euo pipefail
-if [ $# -ne 4 ]; then
-  echo "usage: $0 PARENT CHANGE WORKLOAD N" >&2
+if [ $# -ne 4 ] && [ $# -ne 5 ]; then
+  echo "usage: $0 PARENT CHANGE WORKLOAD N [FIRST_SEED]" >&2
   exit 2
 fi
 PARENT=$(cd "$1" && pwd)
 CHANGE=$(cd "$2" && pwd)
 WORKLOAD=$3
 N=$4
+FIRST=${5:-1}
 OUT=${PAIRS_OUT:-$(mktemp -d /tmp/perfbench_pairs.XXXXXX)}
 mkdir -p "$OUT"
 SECONDS_PER_RUN=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
@@ -32,24 +36,26 @@ run() {  # run SIDE DIR SEED
   echo "pair $3 $1: $(cat "$OUT/$1-$3.json")" >&2
 }
 
-for i in $(seq 1 "$N"); do
-  if [ $((i % 2)) -eq 1 ]; then
+for i in $(seq "$FIRST" $((FIRST + N - 1))); do
+  if [ $(((i - FIRST) % 2)) -eq 0 ]; then
     run parent "$PARENT" "$i"; run change "$CHANGE" "$i"
   else
     run change "$CHANGE" "$i"; run parent "$PARENT" "$i"
   fi
 done
 
-python3 - "$OUT" "$N" "$PARENT/BENCHMARK.json" <<'EOF'
+python3 - "$OUT" "$N" "$FIRST" "$PARENT/BENCHMARK.json" <<'EOF'
 import json
 import statistics
 import sys
 
-out, n, spec = sys.argv[1], int(sys.argv[2]), json.load(open(sys.argv[3]))
+out, n, first = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
+spec = json.load(open(sys.argv[4]))
+seeds = range(first, first + n)
 ok = True
 runs = {"parent": [], "change": []}
 for side, rs in runs.items():
-    for i in range(1, n + 1):
+    for i in seeds:
         with open(f"{out}/{side}-{i}.json") as f:
             line = f.read().strip()
         r = json.loads(line) if line else {}
@@ -65,11 +71,21 @@ def iqr(xs):
     return q[2] - q[0]
 
 
+def values(side, name):
+    return [r[name]["value"] for r in runs[side] if name in r]
+
+
+names = [m["name"] for m in spec["end_to_end"]]
+print("seed " + " ".join(f"{name:>26}" for name in names))
+for i, (p, c) in zip(seeds, zip(runs["parent"], runs["change"])):
+    print(f"{i:<4} " + " ".join(
+        f"{p[name]['value']:>12.4g} → {c[name]['value']:<11.4g}"
+        if name in p and name in c else f"{'missing':>26}" for name in names))
+print()
 print(f"{'metric':24} {'parent':>12} {'change':>12} {'won':>7} {'parent IQR':>11}")
 for m in spec["end_to_end"]:
     name, lower = m["name"], m["better"] == "lower"
-    p = [r[name]["value"] for r in runs["parent"] if name in r]
-    c = [r[name]["value"] for r in runs["change"] if name in r]
+    p, c = values("parent", name), values("change", name)
     if len(p) != n or len(c) != n:
         print(f"{name:24} missing in some runs")
         ok = False
