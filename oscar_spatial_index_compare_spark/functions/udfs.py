@@ -12,7 +12,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType
+from pyspark.sql.types import LongType
 
 from ..grids.base import get_grid
 
@@ -107,23 +107,3 @@ def parent1_col(grid_name: str, id_col: Column) -> Column:
         g = get_grid(grid_name)
         return pd.Series(g.parent(ids.to_numpy(np.int64)))
     return _p1(id_col)
-
-
-def level_col(grid_name: str, id_col: Column) -> Column:
-    g = get_grid(grid_name)
-    native = g.col_level(id_col)
-    if native is not None:
-        return native
-
-    @F.pandas_udf(LongType())
-    def _level(ids: pd.Series) -> pd.Series:
-        return pd.Series(get_grid(grid_name).level(ids.to_numpy(np.int64)))
-    return _level(id_col)
-
-
-def area_udf(grid_name: str):
-    @F.pandas_udf(DoubleType())
-    def _area(ids: pd.Series) -> pd.Series:
-        g = get_grid(grid_name)
-        return pd.Series(g.area_km2(ids.to_numpy(np.int64)))
-    return _area

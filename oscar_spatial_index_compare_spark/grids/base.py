@@ -168,11 +168,6 @@ def get_grid(name: str) -> Grid:
     return _REGISTRY[name]
 
 
-def grid_names() -> list[str]:
-    _populate()
-    return sorted(_REGISTRY)
-
-
 # ---- populated-cell ranges (coverings pruned to CellStats.cells) ----------
 
 def holds_populated(lo: np.ndarray, hi: np.ndarray, populated: np.ndarray) -> np.ndarray:

@@ -247,4 +247,4 @@ class Hex7Grid(Grid):
         return F.shiftright(id_col, 58).cast("int")
 
 
-HEX7 = register(Hex7Grid())
+register(Hex7Grid())

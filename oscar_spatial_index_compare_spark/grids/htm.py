@@ -254,4 +254,4 @@ class HtmGrid(Grid):
         return (id_col.cast("double") / F.pow(F.lit(4.0), d)).cast("long")
 
 
-HTM = register(HtmGrid())
+register(HtmGrid())

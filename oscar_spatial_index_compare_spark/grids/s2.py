@@ -292,4 +292,4 @@ class S2Grid(Grid):
         return id_col - (lsb - 1), id_col + (lsb - 1)
 
 
-S2 = register(S2Grid())
+register(S2Grid())

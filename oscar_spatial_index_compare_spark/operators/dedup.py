@@ -195,10 +195,6 @@ def _minhash_select() -> str:
     return f"SELECT doc_id, {mins} FROM sh GROUP BY doc_id"
 
 
-def _minhash_sql() -> str:
-    return f"WITH sh AS ({_shingles_sql()}) {_minhash_select()}"
-
-
 def minhash_lsh_pairs(docs: DataFrame, threshold_ppm: int = 500_000) -> DataFrame:
     """LSH candidates (some band of 4 minhashes equal) verified by exact
     Jaccard — → (doc_a, doc_b, jac_ppm).

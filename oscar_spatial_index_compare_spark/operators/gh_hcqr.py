@@ -38,8 +38,6 @@ from pyspark.sql import functions as F
 from ..plans.optree import Node, parse
 from ..session import local_frame
 
-GH_COLS = ["pixel_kind", "pixel_id", "is_fm", "doc_ids"]
-
 
 def gh_cell_items(cp: DataFrame) -> DataFrame:
     """(cell_id, doc_ids): the GH cell postings — union over every region's
@@ -145,16 +143,6 @@ def gh_hcqr_op(op: str, l: DataFrame, r: DataFrame, cp: DataFrame,
     return _classify(cells, gh_items)
 
 
-def gh_items_of(h: DataFrame, cp: DataFrame, gh_items: DataFrame) -> DataFrame:
-    """items(): flatten to distinct doc ids (region-fm via cell_postings,
-    cell-fm via GH cell items — the reference's lazy resolution)."""
-    return (
-        _expand_to_cells(h, cp, gh_items)
-        .select(F.explode("doc_ids").alias("doc_id"))
-        .dropDuplicates(["doc_id"])
-    )
-
-
 def gh_hcqr_docs(spark: SparkSession, tree: str, cp: DataFrame) -> DataFrame:
     """Evaluate a REGION-ROOTED op tree ($region leaves; + / -, space/∩) on
     the GeoHierarchy pixel tree and flatten — the completer's query surface
@@ -219,17 +207,4 @@ def gh_hcqr_docs(spark: SparkSession, tree: str, cp: DataFrame) -> DataFrame:
         ev(ast)
         .select(F.explode("doc_ids").alias("doc_id"))
         .dropDuplicates(["doc_id"])
-    )
-
-
-def gh_hcqr_stats(h: DataFrame) -> DataFrame:
-    """depth / node count over the GH pixel tree (region nodes count their
-    subtree root; cell rows are leaves) — apps/mainq.cpp:151-156 analog."""
-    return h.agg(
-        (F.max(F.when(F.col("pixel_kind") == "cell", 2).otherwise(1)))
-        .cast("long").alias("depth"),
-        F.count("*").cast("long").alias("n_nodes"),
-        F.sum(F.col("is_fm").cast("long")).cast("long").alias("n_fm"),
-        F.sum(F.when(F.col("is_fm"), 0).otherwise(F.size("doc_ids")))
-        .cast("long").alias("pm_items"),
     )

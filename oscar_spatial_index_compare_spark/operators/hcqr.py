@@ -39,7 +39,6 @@ HCQR_COLS = ["pixel_id", "level", "is_fm", "doc_ids"]
 
 
 def hcqr_from_cqr(cqr: DataFrame, grid: str, res: int, ctotals: DataFrame,
-                  min_level: int = 0,
                   pop_anc: DataFrame | None = None) -> DataFrame:
     """CQR at res → compactified HCQR (B8 sge2shcqr/sge2cn analog)."""
     leaves = cqr.selectExpr(
@@ -51,7 +50,7 @@ def hcqr_from_cqr(cqr: DataFrame, grid: str, res: int, ctotals: DataFrame,
     # eager=False is NOT lazy under AQE: to hand back the checkpoint RDD,
     # AQE runs every shuffle and broadcast stage beneath this call right
     # here; only the final, exchange-free stage waits for the next action.
-    return compactify(leaves, grid, res, ctotals, min_level, pop_anc).localCheckpoint(eager=False)
+    return compactify(leaves, grid, res, ctotals, pop_anc).localCheckpoint(eager=False)
 
 
 _M28 = (1 << 28) - 1
@@ -76,29 +75,28 @@ def _anc_sql(grid: str, k: int, c: str = "pixel_id") -> str | None:
     return None
 
 
-def explode_ancestors(df: DataFrame, grid: str, res: int, min_level: int,
+def explode_ancestors(df: DataFrame, grid: str, res: int,
                       keep: list[str]) -> DataFrame:
     """→ (apix, alvl, *keep): one row per (row, ancestor-or-self) pair, from
-    the row's own level up to min_level.  Prefix grids: one SQL explode of
-    ``_anc_sql`` per k; hex: one array-returning vectorized UDF +
-    posexplode."""
+    the row's own level up to level 0 (a coarse row's res+1 chain runs past
+    level 0; the ``alvl >= 0`` filter drops those rows).  Prefix grids: one
+    SQL explode of ``_anc_sql`` per k; hex: one array-returning vectorized
+    UDF + posexplode."""
     if _anc_sql(grid, 0) is not None:
         entries = ", ".join(
             f"named_struct('apix', {_anc_sql(grid, k)}, 'alvl', CAST(level - {k} AS INT))"
-            for k in range(res - min_level + 1))
+            for k in range(res + 1))
         e = df.selectExpr(*keep, f"explode(array({entries})) AS e")
     else:
         import pandas as pd
         from pyspark.sql.types import ArrayType, LongType
-
-        depth = res - min_level
 
         @F.pandas_udf(ArrayType(LongType()))
         def _anc_arr(ids):  # no hints: pd not module-level (future annotations)
             g = get_grid(grid)
             cur = ids.to_numpy(np.int64)
             cols = [cur]
-            for _ in range(depth):
+            for _ in range(res):
                 cur = g.parent(cur)
                 cols.append(cur)
             m = np.stack(cols, axis=1)
@@ -110,7 +108,7 @@ def explode_ancestors(df: DataFrame, grid: str, res: int, min_level: int,
         ).selectExpr(
             *keep, "named_struct('apix', apix, 'alvl', CAST(level - k AS INT)) AS e")
     return e.selectExpr(*keep, "e.apix AS apix", "e.alvl AS alvl").where(
-        f"alvl >= {min_level}")
+        "alvl >= 0")
 
 
 def _maximal(cand: DataFrame, grid: str, key: tuple = ()) -> DataFrame:
@@ -147,7 +145,7 @@ def hcqr_postings_build(tpostings: DataFrame, ctotals: DataFrame, grid: str,
     if pop_anc is None:
         pop_anc = pop_ancestor_counts(ctotals, grid, res)
     fm = tp.where("is_fm").selectExpr("*", "1L AS w")
-    anc = explode_ancestors(fm, grid, res, 0, keep=["token", "w"])
+    anc = explode_ancestors(fm, grid, res, keep=["token", "w"])
     cand = (
         anc.groupBy("token", "apix", "alvl").agg(F.expr("sum(w) AS cov"))
         .join(pop_anc, ["apix", "alvl"]).where("cov = tot AND tot > 0")
@@ -162,17 +160,15 @@ def hcqr_postings_build(tpostings: DataFrame, ctotals: DataFrame, grid: str,
         tp.where("NOT is_fm").selectExpr("token", *HCQR_COLS))
 
 
-def pop_ancestor_counts(ctotals: DataFrame, grid: str, res: int,
-                        min_level: int = 0) -> DataFrame:
+def pop_ancestor_counts(ctotals: DataFrame, grid: str, res: int) -> DataFrame:
     """(apix, alvl, tot): populated-leaf count per ancestor pixel/level —
     ONE explode + ONE groupBy; cache it per QueryContext."""
     pop = ctotals.selectExpr("cell_id AS pixel_id", f"{res} AS level")
-    anc = explode_ancestors(pop, grid, res, min_level, keep=[])
+    anc = explode_ancestors(pop, grid, res, keep=[])
     return anc.groupBy("apix", "alvl").agg(F.expr("count(1) AS tot"))
 
 
 def compactify(h: DataFrame, grid: str, res: int, ctotals: DataFrame,
-               min_level: int = 0,
                pop_anc: DataFrame | None = None) -> DataFrame:
     """Roll maximal all-fm subtrees up to single fm ancestors.
 
@@ -187,7 +183,7 @@ def compactify(h: DataFrame, grid: str, res: int, ctotals: DataFrame,
     independent of depth.  fm rows over no populated leaf are dropped.
     """
     if pop_anc is None:
-        pop_anc = pop_ancestor_counts(ctotals, grid, res, min_level)
+        pop_anc = pop_ancestor_counts(ctotals, grid, res)
     # weight per fm row = populated leaves covered: 1 for a populated leaf;
     # a coarse row's own (pixel, level) is an ancestor key in pop_anc
     leaf_fm = h.where(f"is_fm AND level = {res}").join(
@@ -197,7 +193,7 @@ def compactify(h: DataFrame, grid: str, res: int, ctotals: DataFrame,
         ["pixel_id", "level"], "left")
     fmw = leaf_fm.selectExpr("pixel_id", "level", "1L AS w").unionByName(
         up_fm.selectExpr("pixel_id", "level", "coalesce(tot, 0L) AS w"))
-    anc = explode_ancestors(fmw, grid, res, min_level, keep=["w"])
+    anc = explode_ancestors(fmw, grid, res, keep=["w"])
     cand = (
         anc.groupBy("apix", "alvl").agg(F.expr("sum(w) AS cov"))
         .join(pop_anc, ["apix", "alvl"]).where("cov = tot AND tot > 0")
@@ -385,8 +381,8 @@ def _difference_by_leaf_expansion(
 ) -> list[DataFrame]:
     """Distributed decomposition of fm_L − R: expand every OVERLAPPED fm_L
     container to its populated leaves (ancestor equi-joins, no BNLJ), then
-    subtract R at leaf level.  compactify() in hcqr_op re-rolls the
-    surviving leaves, so the normal form is restored.  Never collects
+    subtract R at leaf level.  The leaves keep the normal form, and
+    ``Planner.hcqr``'s root compactify() re-rolls them.  Never collects
     data-dependent rows to the driver."""
     over_keys = _semi(rall, lf_surv, grid, "inner").selectExpr(
         "f_pixel AS pixel_id", "f_level AS level").dropDuplicates()
@@ -473,15 +469,13 @@ def _hcqr_difference(
 def hcqr_op(
     op: str, l: DataFrame, r: DataFrame, grid: str, res: int,
     spark: SparkSession, ctotals: DataFrame,
-    pop_anc: DataFrame | None = None, compact: bool = True,
 ) -> DataFrame:
     """Binary HCQR op (union/inter/diff), reference semantics
     (``src/HcqrOpTree.cpp:106-135``).
 
     Set ops PRESERVE disjointness and pm-at-leaf-res of their normal-form
-    inputs, so re-compaction per node is an optimization, not a correctness
-    need — the planner re-compacts ONCE at the tree root (``compact=True``
-    keeps the per-op behavior for direct callers)."""
+    inputs, so the result is not re-compacted: the planner compacts ONCE
+    at the tree root."""
     if op == "union":
         out = _hcqr_union(l, r, grid)
     elif op == "inter":
@@ -490,10 +484,7 @@ def hcqr_op(
         out = _hcqr_difference(l, r, grid, res, spark, ctotals)
     else:
         raise ValueError(op)  # '^' unsupported in HCQR (HcqrOpTree.cpp:136)
-    out = out.localCheckpoint(eager=False)  # plan boundary (hcqr_from_cqr note)
-    if not compact:
-        return out
-    return compactify(out, grid, res, ctotals, pop_anc=pop_anc).localCheckpoint(eager=False)
+    return out.localCheckpoint(eager=False)  # plan boundary (hcqr_from_cqr note)
 
 
 def hcqr_items(h: DataFrame, ctotals: DataFrame, grid: str, res: int) -> DataFrame:
@@ -534,7 +525,7 @@ def hcqr_stats(h: DataFrame, grid: str, res: int) -> DataFrame:
     returned (the oracle hashes pin this exact schema).
     """
     leaves = h.select("pixel_id", "level").dropDuplicates()
-    allnodes = explode_ancestors(leaves, grid, res, 0, keep=[]).select(
+    allnodes = explode_ancestors(leaves, grid, res, keep=[]).select(
         F.col("apix").alias("pixel_id"), F.col("alvl").alias("level")
     )
     n_nodes = allnodes.dropDuplicates(["pixel_id", "level"])

@@ -14,9 +14,7 @@ Scale notes (the part that must survive 100 TB):
   * the postings groupBy is the one unavoidable shuffle; map-side partial
     aggregation (collect_list is partial-aggregating; inputs are distinct
     by construction, see _doc_sets_by_cell) + AQE skew split keep hot
-    metro cells bounded.  ``salt`` below adds explicit two-phase
-    aggregation for the known-hot cells (north_rule demands explicit skew
-    handling beyond AQE).
+    metro cells bounded.
   * posting lists are ``array_sort(collect_list(doc_id))`` — the RLE-delta
     compressed ItemIndex analog (``apps/main.cpp:153``); parquet dictionary/
     RLE encodings replace hand-rolled compression (SURVEY B7).
@@ -28,25 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.udfs import cell_col, cells_arr_col
-
-HOT_SALT_BUCKETS = 8
-# (doc,cell) rows a single group must exceed before the explicit two-phase
-# (salted) aggregation kicks in; below it a plain map-side-combined groupBy
-# is strictly cheaper (the salt pass doubles shuffle volume for cells that
-# were never hot — VERDICT r01 "universal salting" finding).  The threshold
-# models when ONE reduce task's list merge becomes the stage straggler:
-# with map-combined ``collect_list`` + ``array_sort`` (not collect_set hash
-# merges — see _doc_sets_by_cell), a group of X ids costs the reducer
-# 8·X bytes of appends + one O(X log X) sort ≈ milliseconds up to the
-# low millions.  Raised from 100k in r05: the pre-pass itself costs TWO
-# extra scans of the exploded input + a count shuffle, which at 1M docs
-# (max cell 204k rows) measured 1.6-1.8x SLOWER than just letting the
-# plain groupBy merge the "hot" cells (cell_totals write 2.98 s vs 1.88 s
-# at 4N, 5.27 s vs 2.90 s at N on the standalone scaling harness) — the
-# 100k setting made every build pay the detection cost to avoid a ~5 ms
-# sort.  At 4M rows the single-task merge is a ~32 MB buffer + ~1 s sort,
-# where splitting it 8 ways genuinely shortens the tail.
-HOT_CELL_THRESHOLD = 4_000_000
 
 
 def doc_index_full(docs: DataFrame, grid: str, res: int) -> DataFrame:
@@ -119,21 +98,12 @@ def mention_cells_from_full(full: DataFrame, grid: str, res: int) -> DataFrame:
     )
 
 
-def _doc_sets_by_cell(dc: DataFrame, keys: list[str],
-                      hot_threshold: int | None = HOT_CELL_THRESHOLD) -> DataFrame:
-    """groupBy(keys) → sorted distinct doc_id arrays, with CONDITIONAL
-    two-phase salting: only cells above ``hot_threshold`` rows take the
-    explicit salted route; everything else is one map-side-combined groupBy.
-
-    The hot-cell detection is a count-only aggregation (bytes per cell, fully
-    map-combined) broadcast back as a semi/anti filter — the explicit skew
-    handling the north_rule asks for, paid only by the cells that need it.
-
-    ``hot_threshold=None`` skips the detection pre-pass entirely (one plain
-    groupBy).  Callers pass None when they can PROVE no cell is hot — a cell
-    never holds more rows than the corpus has documents, so any corpus with
-    ≤ HOT_CELL_THRESHOLD docs qualifies (VERDICT r02 item 1: the pre-pass
-    round-trip was pure serial overhead at small corpus sizes).
+def _doc_sets_by_cell(dc: DataFrame, keys: list[str]) -> DataFrame:
+    """groupBy(keys) → sorted distinct doc_id arrays: one map-side-combined
+    groupBy.  A hot cell needs no explicit salting: partial aggregation
+    already splits its appends over the map tasks, and a salted second
+    phase would still merge and sort the cell's whole list in one task (a
+    count-only hot-cell pre-pass measured 1.6-1.8x SLOWER at 1M docs, r05).
 
     INPUT CONTRACT: (keys..., doc_id) rows must be DISTINCT (every caller
     explodes per-doc ``array_distinct`` arrays, which guarantees it).  That
@@ -143,57 +113,20 @@ def _doc_sets_by_cell(dc: DataFrame, keys: list[str],
     (r02 scaling gate: measured 2.2x for 4x cores with set vs 3.5x with
     list; the list buffer is a plain append + one O(n log n) sort).
     """
-    if hot_threshold is None:
-        return dc.groupBy(*keys).agg(
-            F.array_sort(F.collect_list("doc_id")).alias("doc_ids")
-        )
-    counts = dc.groupBy(*keys).agg(F.count("*").alias("_n"))
-    hot = F.broadcast(counts.where(F.col("_n") > hot_threshold).select(*keys))
-    cold_sets = (
-        dc.join(hot, keys, "left_anti")
-        .groupBy(*keys)
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("doc_ids"))
-    )
-    hot_salted = dc.join(hot, keys, "left_semi").withColumn(
-        "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(HOT_SALT_BUCKETS))
-    )
-    hot_partial = hot_salted.groupBy(*keys, "_salt").agg(
-        F.collect_list("doc_id").alias("_part")
-    )
-    hot_sets = hot_partial.groupBy(*keys).agg(
-        F.array_sort(F.flatten(F.collect_list("_part"))).alias("doc_ids")
-    )
-    return cold_sets.unionByName(hot_sets)
+    return dc.groupBy(*keys).agg(
+        F.array_sort(F.collect_list("doc_id")).alias("doc_ids"))
 
 
-def cell_totals_from_base(base: DataFrame, grid: str, res: int,
-                          hot_threshold: int | None = HOT_CELL_THRESHOLD,
-                          n_docs_hint: int | None = None) -> DataFrame:
+def cell_totals_from_base(base: DataFrame, grid: str, res: int) -> DataFrame:
     """B3 ``computeTrixelItems`` from the one-pass base: explode cells →
-    one conditional-salted groupBy (doc_ids are distinct per doc already).
-
-    ``n_docs_hint``: corpus doc count when the caller already knows it; a
-    cell can never exceed it, so hint ≤ hot_threshold PROVES the salt
-    pre-pass is useless and it is skipped (exact, not heuristic)."""
-    if (hot_threshold is not None and n_docs_hint is not None
-            and n_docs_hint <= hot_threshold):
-        hot_threshold = None
+    one groupBy (doc_ids are distinct per doc already)."""
     dc = base.select("doc_id", F.explode("cells").alias("cell_id"))
-    sets = _doc_sets_by_cell(dc, ["cell_id"], hot_threshold)
+    sets = _doc_sets_by_cell(dc, ["cell_id"])
     return sets.select(
         F.lit(grid).alias("grid"), F.lit(res).alias("res"),
         "cell_id", "doc_ids",
         F.size("doc_ids").cast("long").alias("n_docs"),
     )
-
-
-def mention_cells_from_docs(docs: DataFrame, grid: str, res: int) -> DataFrame:
-    """mention_cells computed ARRAY-WISE from documents: matched gazetteer
-    entries, jitter and cells stay per-doc arrays (one Arrow/codegen row per
-    DOC — ~34x fewer rows through the cell UDF than the exploded form),
-    then a single arrays_zip explode.  Row-identical to
-    ``mention_cells(extract_mentions(docs), grid, res)``."""
-    return mention_cells_from_full(doc_index_full(docs, grid, res), grid, res)
 
 
 def mention_cells(mentions: DataFrame, grid: str, res: int) -> DataFrame:
@@ -214,22 +147,11 @@ def doc_cells(mcells: DataFrame) -> DataFrame:
     )
 
 
-def cell_totals(dcells: DataFrame,
-                hot_threshold: int = HOT_CELL_THRESHOLD) -> DataFrame:
-    """B3 ``computeTrixelItems`` analog: per cell, the full sorted doc set.
-
-    Conditional two-phase aggregation (see _doc_sets_by_cell): only cells
-    above ``hot_threshold`` take the explicit salted route; normal cells get
-    one map-side-combined groupBy."""
-    sets = _doc_sets_by_cell(dcells, ["grid", "res", "cell_id"], hot_threshold)
+def cell_totals(dcells: DataFrame) -> DataFrame:
+    """B3 ``computeTrixelItems`` analog: per cell, the full sorted doc set
+    (one map-side-combined groupBy, see _doc_sets_by_cell)."""
+    sets = _doc_sets_by_cell(dcells, ["grid", "res", "cell_id"])
     return sets.withColumn("n_docs", F.size("doc_ids").cast("long"))
-
-
-def cell_counts(dcells: DataFrame) -> DataFrame:
-    """Cheap statistics variant (A1): per-cell doc counts without the arrays."""
-    return dcells.groupBy("grid", "res", "cell_id").agg(
-        F.count("*").cast("long").alias("n_docs")
-    )
 
 
 def region_mention_cells(mcells: DataFrame) -> DataFrame:
@@ -257,11 +179,6 @@ def region_mention_cells(mcells: DataFrame) -> DataFrame:
     return out.dropDuplicates(["grid", "res", "region_id", "doc_id", "cell_id"])
 
 
-def region_docs(mcells: DataFrame) -> DataFrame:
-    """(region_id, doc_id) membership via exact PIP over mention coords."""
-    return region_mention_cells(mcells).select("region_id", "doc_id").dropDuplicates()
-
-
 def cell_postings(mcells: DataFrame) -> DataFrame:
     """B1 TrixelData analog: (grid, res, cell_id, region_id, doc_ids, n_docs)
     from inside-region mention cells."""
@@ -270,27 +187,4 @@ def cell_postings(mcells: DataFrame) -> DataFrame:
         .groupBy("grid", "res", "cell_id", "region_id")
         .agg(F.array_sort(F.collect_set("doc_id")).alias("doc_ids"))
         .withColumn("n_docs", F.size("doc_ids").cast("long"))
-    )
-
-
-def region_cells(cpostings: DataFrame) -> DataFrame:
-    """CellTrixelMap analog (``src/OscarSgIndex.cpp:148-156``)."""
-    return cpostings.select("grid", "res", "region_id", "cell_id").dropDuplicates()
-
-
-def index_stats(dcells: DataFrame, grid_name: str) -> DataFrame:
-    """A1/A2: per-res distribution of per-cell doc counts + cell areas."""
-    from ..functions.udfs import area_udf
-
-    per_cell = dcells.groupBy("grid", "res", "cell_id").agg(
-        F.count("*").alias("n_docs")
-    )
-    per_cell = per_cell.withColumn("area_km2", area_udf(grid_name)(F.col("cell_id")))
-    return per_cell.groupBy("grid", "res").agg(
-        F.count("*").cast("long").alias("n_cells"),
-        F.min("n_docs").cast("long").alias("min_docs"),
-        F.max("n_docs").cast("long").alias("max_docs"),
-        F.sum("n_docs").cast("long").alias("sum_docs"),
-        F.min("area_km2").alias("min_area_km2"),
-        F.max("area_km2").alias("max_area_km2"),
     )

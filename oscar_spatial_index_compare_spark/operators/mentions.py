@@ -111,8 +111,8 @@ def _doc_mentions_contains(docs: DataFrame) -> DataFrame:
         zero-allocation UTF8String scans + a small zip — no per-check
         allocation, no 64 KB codegen risk
       * jitter constants (length/ascii hashes of each name) are folded at
-        plan time per entry; the arithmetic is bit-identical to
-        ``jitter_lat_col`` / the DuckDB oracle's closed form
+        plan time per entry; the arithmetic is bit-identical to the
+        DuckDB oracle's closed form (``jitter_lat_sql``)
 
     ``ments`` is referenced >=3 times by every consumer projection, so the
     zip runs once per row regardless of optimizer choices.

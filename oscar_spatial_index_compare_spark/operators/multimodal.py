@@ -18,15 +18,10 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType,
+    ArrayType, FloatType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
 
-MEDIA_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("media_type", StringType()),
-    StructField("payload", BinaryType()),
-])
 
 META_SCHEMA = StructType([
     StructField("doc_id", LongType()),

@@ -53,26 +53,3 @@ SELECT {z} AS z,
 FROM {mentions_subquery_sql()} m
 GROUP BY 1, 2, 3""")
     return "\nUNION ALL\n".join(selects)
-
-
-def cell_tiles(dcells: DataFrame, grid_name: str, z: int) -> DataFrame:
-    """Vector→raster bridge: map each grid cell (by center) into a zoom-z
-    tile and aggregate postings per tile — raster↔vector movement without
-    touching raw coordinates again."""
-    import pandas as pd
-    from pyspark.sql.types import LongType
-    from pyspark.sql import functions as F  # noqa: F811
-    from ..grids.base import get_grid
-
-    @F.pandas_udf(LongType())
-    def _center_tile(ids):  # no hints: pd not module-level
-        import numpy as np
-        g = get_grid(grid_name)
-        lat, lon = g.center(ids.to_numpy(np.int64))
-        return pd.Series(ZXY.cell(lat, lon, z))
-
-    t = dcells.withColumn("tile", _center_tile(F.col("cell_id")))
-    return t.groupBy("tile").agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.countDistinct("cell_id").alias("n_cells"),
-    )

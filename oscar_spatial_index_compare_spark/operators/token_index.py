@@ -127,7 +127,6 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
                              grid: str, res: int,
                              n_docs_hint: int | None = None,
                              target_docs: int = TARGET_GROUP_DOCS,
-                             impl: str | None = None,
                              _collide_tokens: list[str] | None = None,
                              vocab: tuple[DataFrame, list[str]] | None = None) -> DataFrame:
     """Arrow-grouped posting build over doc_index_base (doc_id, toks, cells)
@@ -180,8 +179,8 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
     Exactness: toks/cells are array_distinct per doc, so each (token, doc,
     cell) pair occurs once, lands in exactly one deterministic token slice,
     and per-group counts/lists are exact and complete (row-identical to the
-    string-kernel and JVM builds — pytest A≡B on the forced-salt corpus,
-    forced-collision routing test, and the oracle suite).  Group memory is
+    string kernel — pytest A≡B on the forced-salt corpus with the whole
+    vocabulary routed, and the oracle suite).  Group memory is
     bounded: a slice carries ~``target_docs``·|toks| token refs, and
     dropping empty slices bounds group ROWS by the slice's token refs too.
     ``n_docs_hint`` ≤ target_docs proves no cell can need salting (a cell
@@ -194,16 +193,14 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
     gate needs — the 4N level pays netty transfer for shuffle bytes that
     the 1-executor level reads locally.
 
-    ``impl``: 'arrow' (default — hash-keyed Arrow kernel), 'arrow-str'
-    (string-keyed Arrow kernel: no vocab pass / no plan-time action; also
-    the collision-routing path), 'jvm' (no Python workers at all).
-
     ``vocab``: optional pre-computed ``(vh, coll)`` — the (token, th)
     dimension frame and the sorted colliding-token list.  The vocabulary is
     a property of the CORPUS, not the grid: an Engine building three grids
     passes the same pair to every build instead of paying the corpus-wide
     distinct scan + collision-audit action per grid (r06; guide §1.2 "don't
-    compute things you throw away").
+    compute things you throw away").  ``_collide_tokens`` injects a fake
+    colliding set so tests can exercise the routing (real 64-bit
+    collisions are unconstructible).
     """
     no_salt = n_docs_hint is not None and n_docs_hint <= target_docs
     salt_expr = (F.lit(1) if no_salt else
@@ -227,45 +224,67 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
                                    spark.sparkContext.defaultParallelism)))
     head = [F.lit("exact").alias("qt"), F.lit(grid).alias("grid"),
             F.lit(res).alias("res")]
-    if impl is None:
-        import os
-        impl = os.environ.get("SPARK_GRAFT_TOKEN_IMPL", "arrow")
-    if impl == "arrow":
-        return _tp_hashed(base, ctb, grid, res, no_salt, n_shuffle, head,
-                          _collide_tokens, vocab)
-    pairs = _salted_pairs(base, ctb, no_salt, n_shuffle, hashed=False)
-    if impl == "jvm":
-        # JVM tail: explode the token array AFTER the (cell_id, _salt)
-        # exchange and aggregate by (cell_id, _salt, token) in Tungsten.
-        # Hash partitioning on a SUBSET of the grouping keys satisfies the
-        # aggregate's ClusteredDistribution, so Catalyst adds NO second
-        # exchange — the |toks|× fan-out exists only inside the post-
-        # shuffle stage, never on the wire (same shuffle bytes as the
-        # Arrow tail), and the whole fan-out → sort-aggregate → parquet
-        # chain is one JVM stage with no Python worker round-trip.
-        # n_total joins the grouping keys (constant per cell — it cannot
-        # split a group) so fm classification stays local and exact.
-        # NOT the default: measured 1M docs / 8-core executor, this tail
-        # runs 3.3x SLOWER than the Arrow kernel (250 s vs 77 s) — the
-        # SortAggregate's binary-row sort over ~10^9 exploded string-keyed
-        # triples is what the kernel's dictionary_encode + int lexsort
-        # avoids.  Kept (tested row-identical) for clusters that cannot
-        # run Python workers on executors.
-        triples = pairs.select(
-            "doc_id", "cell_id", "_salt", "n_total",
-            F.explode("toks").alias("token"))
-        agged = triples.groupBy("cell_id", "_salt", "n_total", "token").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.collect_list("doc_id").alias("_docs"))
-        is_fm = F.col("n_docs") == F.col("n_total")
-        return agged.select(
-            "token", *head, "cell_id", is_fm.alias("is_fm"),
-            F.when(is_fm, F.lit(None)).otherwise(
-                F.array_sort("_docs")).alias("doc_ids"),
-            F.col("n_docs").cast("long").alias("n_docs"))
-    if impl != "arrow-str":
-        raise ValueError(f"unknown token-build impl {impl!r}")
-    return _tp_string_tail(pairs, head)
+    if vocab is not None and _collide_tokens is None:
+        vh, coll = vocab
+    else:
+        vh = (base.select(F.explode("toks").alias("token")).distinct()
+              .select("token", F.xxhash64("token").alias("th")))
+        coll = (vocab_collisions(vh) if _collide_tokens is None
+                else sorted(set(_collide_tokens)))
+    if len(coll) > MAX_COLLIDING_TOKENS:
+        raise RuntimeError(
+            f"token build: {len(coll)} xxhash64-colliding tokens exceeds "
+            f"MAX_COLLIDING_TOKENS={MAX_COLLIDING_TOKENS} — a 64-bit key "
+            "cannot collide at this rate on real vocabularies")
+    b = base
+    if coll:
+        coll_lit = F.array(*[F.lit(t) for t in coll])
+        b = base.withColumn("toks", F.array_except("toks", coll_lit))
+    hb = b.withColumn("toks", F.transform("toks", lambda t: F.xxhash64(t)))
+    pairs = _salted_pairs(hb, ctb, no_salt, n_shuffle, hashed=True)
+    out_schema = ("th long, cell_id long, doc_ids array<long>, "
+                  "n_docs long, is_fm boolean")
+
+    def build(table):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        toks = table.column("toks").combine_chunks()
+        lens = pc.list_value_length(toks).to_numpy().astype(np.int64)
+        if int(lens.sum()) == 0:
+            return pa.table({
+                "th": pa.array([], pa.int64()),
+                "cell_id": pa.array([], pa.int64()),
+                "doc_ids": pa.array([], pa.list_(pa.int64())),
+                "n_docs": pa.array([], pa.int64()),
+                "is_fm": pa.array([], pa.bool_()),
+            })
+        cell = table.column("cell_id")[0].as_py()
+        n_total = table.column("n_total")[0].as_py()
+        codes = pc.list_flatten(toks).to_numpy()  # int64 hashes, zero-copy
+        drep = np.repeat(table.column("doc_id").to_numpy(), lens)
+        keys, ns, fm, doc_ids = _kernel_tail(codes, drep, n_total)
+        k = len(ns)
+        return pa.table({
+            "th": pa.array(keys, pa.int64()),
+            "cell_id": pa.array(np.full(k, cell, np.int64)),
+            "doc_ids": doc_ids,
+            "n_docs": pa.array(ns, pa.int64()),
+            "is_fm": pa.array(fm),
+        })
+
+    grouped = pairs.groupBy("cell_id", "_salt").applyInArrow(build, out_schema)
+    out = grouped.join(vh, "th").select(
+        "token", *head, "cell_id", "is_fm", "doc_ids",
+        F.col("n_docs").cast("long").alias("n_docs"))
+    if coll:
+        cb = base.withColumn(
+            "toks", F.array_intersect("toks", coll_lit)
+        ).where(F.size("toks") > 0)
+        pairs_c = _salted_pairs(cb, ctb, no_salt, n_shuffle, hashed=False)
+        out = out.unionByName(_tp_string_tail(pairs_c, head))
+    return out
 
 
 def _kernel_tail(codes, drep, n_total, dict_indices: bool = False):
@@ -342,10 +361,9 @@ def _kernel_tail(codes, drep, n_total, dict_indices: bool = False):
 
 def _tp_string_tail(pairs: DataFrame, head: list) -> DataFrame:
     """String-keyed Arrow kernel tail: dictionary_encode (the C++ hash
-    table) assigns int codes, then the shared lexsort tail.  No vocab pass
-    and no plan-time action — this is also the collision-routing path of
-    the hashed build (a colliding token's group is string-keyed, so the
-    two tokens never merge)."""
+    table) assigns int codes, then the shared lexsort tail.  The exact
+    route of the hashed build's xxhash64-colliding tokens (a colliding
+    token's group is string-keyed, so the two tokens never merge)."""
     out_schema = ("token string, cell_id long, doc_ids array<long>, "
                   "n_docs long, is_fm boolean")
 
@@ -389,78 +407,6 @@ def _tp_string_tail(pairs: DataFrame, head: list) -> DataFrame:
     return grouped.select(
         "token", *head, "cell_id", "is_fm", "doc_ids",
         F.col("n_docs").cast("long").alias("n_docs"))
-
-
-def _tp_hashed(base: DataFrame, ctb: DataFrame, grid: str, res: int,
-               no_salt: bool, n_shuffle: int, head: list,
-               _collide_tokens: list[str] | None,
-               vocab: tuple[DataFrame, list[str]] | None = None) -> DataFrame:
-    """Hash-keyed main path of token_postings_from_base (see its docstring):
-    vocab pass + collision audit, int64 exchange, no-strings kernel,
-    (th → token) restoration join, string-kernel union for colliding
-    tokens.  ``_collide_tokens`` injects a fake colliding set so tests can
-    exercise the routing (real 64-bit collisions are unconstructible)."""
-    if vocab is not None and _collide_tokens is None:
-        vh, coll = vocab
-    else:
-        vh = (base.select(F.explode("toks").alias("token")).distinct()
-              .select("token", F.xxhash64("token").alias("th")))
-        coll = (vocab_collisions(vh) if _collide_tokens is None
-                else sorted(set(_collide_tokens)))
-    if len(coll) > MAX_COLLIDING_TOKENS:
-        raise RuntimeError(
-            f"token build: {len(coll)} xxhash64-colliding tokens exceeds "
-            f"MAX_COLLIDING_TOKENS={MAX_COLLIDING_TOKENS} — a 64-bit key "
-            "cannot collide at this rate on real vocabularies")
-    b = base
-    if coll:
-        coll_lit = F.array(*[F.lit(t) for t in coll])
-        b = base.withColumn("toks", F.array_except("toks", coll_lit))
-    hb = b.withColumn("toks", F.transform("toks", lambda t: F.xxhash64(t)))
-    pairs = _salted_pairs(hb, ctb, no_salt, n_shuffle, hashed=True)
-    out_schema = ("th long, cell_id long, doc_ids array<long>, "
-                  "n_docs long, is_fm boolean")
-
-    def build(table):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        toks = table.column("toks").combine_chunks()
-        lens = pc.list_value_length(toks).to_numpy().astype(np.int64)
-        if int(lens.sum()) == 0:
-            return pa.table({
-                "th": pa.array([], pa.int64()),
-                "cell_id": pa.array([], pa.int64()),
-                "doc_ids": pa.array([], pa.list_(pa.int64())),
-                "n_docs": pa.array([], pa.int64()),
-                "is_fm": pa.array([], pa.bool_()),
-            })
-        cell = table.column("cell_id")[0].as_py()
-        n_total = table.column("n_total")[0].as_py()
-        codes = pc.list_flatten(toks).to_numpy()  # int64 hashes, zero-copy
-        drep = np.repeat(table.column("doc_id").to_numpy(), lens)
-        keys, ns, fm, doc_ids = _kernel_tail(codes, drep, n_total)
-        k = len(ns)
-        return pa.table({
-            "th": pa.array(keys, pa.int64()),
-            "cell_id": pa.array(np.full(k, cell, np.int64)),
-            "doc_ids": doc_ids,
-            "n_docs": pa.array(ns, pa.int64()),
-            "is_fm": pa.array(fm),
-        })
-
-    grouped = pairs.groupBy("cell_id", "_salt").applyInArrow(build, out_schema)
-    out = grouped.join(vh, "th").select(
-        "token", *head, "cell_id", "is_fm", "doc_ids",
-        F.col("n_docs").cast("long").alias("n_docs"))
-    if coll:
-        cb = base.withColumn(
-            "toks", F.array_intersect("toks", coll_lit)
-        ).where(F.size("toks") > 0)
-        pairs_c = _salted_pairs(cb, ctb, no_salt, n_shuffle, hashed=False)
-        out = out.unionByName(_tp_string_tail(pairs_c, head))
-    return out
 
 
 def match_tokens(all_tokens: list[str], pattern: str, qt: str) -> list[str]:

@@ -247,8 +247,7 @@ class Planner:
                 return None
             if r is None:
                 return l
-        return hcqr_op(n.op, l, r, ctx.grid, ctx.res, ctx.spark, ctx.ctotals,
-                       pop_anc=ctx.pop_anc(), compact=False)
+        return hcqr_op(n.op, l, r, ctx.grid, ctx.res, ctx.spark, ctx.ctotals)
 
     # -- node lowering --------------------------------------------------------
     def _eval(self, n: Node) -> DataFrame | None:

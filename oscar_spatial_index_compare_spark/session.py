@@ -11,8 +11,8 @@ Design-for-scale notes (100 TB / 1000 executors):
   * AQE on: runtime coalescing of the shuffle that builds cell postings, and
     skew-join splitting for hot cells (major cities) — the reference handles
     the same hot-cell skew with an atomic work counter; we let AQE split
-    oversized partitions and additionally salt known-hot cells explicitly
-    (see operators/index_build.py).
+    oversized partitions, and the token build salts hot cells by token
+    slice (see operators/token_index.py).
   * ``spark.sql.shuffle.partitions`` defaults to the local core count here;
     on a real cluster set it ≈ 2-3x total cores via spark-submit --conf.
   * Arrow execution is mandatory (north_rule: vectorized Arrow UDFs, never
@@ -24,8 +24,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def get_spark(

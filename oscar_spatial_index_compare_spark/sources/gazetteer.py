@@ -89,40 +89,6 @@ def gazetteer() -> list[tuple[str, float, float, int]]:
     return entries
 
 
-def gazetteer_df(spark):
-    """Gazetteer as a (broadcastable) DataFrame: name, lat, lon, popularity."""
-    from ..session import local_frame
-
-    return local_frame(
-        spark, "name string, lat double, lon double, popularity int",
-        zip(*gazetteer()))
-
-
-def gazetteer_array_col():
-    """The gazetteer as ONE literal array<struct<name,glat,glon>> column.
-
-    Backs the row-wise extraction path (operators/index_build.doc_index_base):
-    a 200-entry literal lives in the plan itself, so dictionary matching needs
-    no join at all — the Spark-side analog of the reference walking its
-    in-memory trie per item (``src/OscarSearchSgIndex.cpp:53-102``).
-    """
-    from pyspark.sql import functions as F
-
-    entries = [
-        F.struct(
-            F.lit(n).alias("name"),
-            # pre-padded form: the match is contains(' '||text||' ', pname)
-            # with ZERO per-check allocation (the padded text is built once
-            # per row; each of the 200 checks is a pure substring scan)
-            F.lit(f" {n} ").alias("pname"),
-            F.lit(lat).alias("glat"),
-            F.lit(lon).alias("glon"),
-        )
-        for n, lat, lon, _pop in gazetteer()
-    ]
-    return F.array(*entries)
-
-
 def gazetteer_values_sql() -> str:
     """The same gazetteer as an ANSI VALUES relation for the DuckDB oracle."""
     rows = ",\n".join(
@@ -152,22 +118,6 @@ def jitter_lat_sql(doc_id: str, name: str, lat: str) -> str:
 def jitter_lon_sql(doc_id: str, name: str, lon: str) -> str:
     h = f"(({doc_id}) * 999983 + length({name}) * 104729 + ascii({name}) * 37) % {_JMOD}"
     return f"({lon} + (({h}) - 2000) / 10000.0)"
-
-
-def jitter_lat_col(doc_id, name, lat):
-    from pyspark.sql import functions as F
-
-    h = (doc_id * F.lit(1000003) + F.length(name) * F.lit(7919)
-         + F.ascii(name) * F.lit(131)) % F.lit(_JMOD)
-    return lat + (h - F.lit(2000)) / F.lit(10000.0)
-
-
-def jitter_lon_col(doc_id, name, lon):
-    from pyspark.sql import functions as F
-
-    h = (doc_id * F.lit(999983) + F.length(name) * F.lit(104729)
-         + F.ascii(name) * F.lit(37)) % F.lit(_JMOD)
-    return lon + (h - F.lit(2000)) / F.lit(10000.0)
 
 
 def mentions_subquery_sql() -> str:

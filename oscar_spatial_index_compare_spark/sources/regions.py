@@ -15,7 +15,6 @@ from __future__ import annotations
 import numpy as np
 
 
-
 def _rect(lat0, lat1, lon0, lon1):
     return np.array([[lat0, lon0], [lat0, lon1], [lat1, lon1], [lat1, lon0]], dtype=np.float64)
 
@@ -48,20 +47,6 @@ REGIONS: list[tuple[int, str, int, np.ndarray]] = [
     # small triangle inside the country but away from the metro
     (10, "tri_west", 7, np.array([[43.1, -3.9], [46.4, -0.2], [43.6, 1.8]])),
 ]
-
-
-def regions_df(spark):
-    from ..session import local_frame
-
-    rows = [
-        (rid, name, lvl, [[float(a), float(b)] for a, b in poly.tolist()])
-        for rid, name, lvl, poly in REGIONS
-    ]
-    return local_frame(
-        spark,
-        "region_id long, name string, admin_level int, poly array<array<double>>",
-        zip(*rows),
-    )
 
 
 def region_query_file(n_queries: int = 50) -> list[tuple[str, np.ndarray]]:

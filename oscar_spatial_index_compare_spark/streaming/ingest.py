@@ -86,17 +86,3 @@ def compact_postings(spark: SparkSession, out_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_docs"),
         )
     )
-
-
-def windowed_cell_counts(spark: SparkSession, docs_stream: DataFrame,
-                         grid: str, res: int, ts_col: str = "warc_ts",
-                         window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window per-cell doc counts (late data dropped
-    after the watermark) — live-tile analytics over the crawl stream."""
-    m = extract_mentions(spark.getActiveSession() or spark, docs_stream)
-    mc = mention_cells(m.join(docs_stream.select("doc_id", ts_col), "doc_id"), grid, res)
-    return (
-        mc.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), "grid", "res", "cell_id")
-        .agg(F.approx_count_distinct("doc_id").alias("n_docs"))
-    )

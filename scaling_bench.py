@@ -27,8 +27,8 @@ r04 change (r03 VERDICT item 1): the base used to be .cache()d and each
 table counted against it — the columnar cache write was pure overhead once
 the create step serializes everything anyway, and it was one of the two
 named stage-tail stragglers.  The other (the single-reducer tail of hot
-postings groups) is addressed by conditional two-phase salting in
-token_postings_from_base / cell_totals (HOT_CELL_THRESHOLD 4M).
+postings groups) is addressed by token-slice salting in
+token_postings_from_base; cell_totals is one map-side-combined groupBy.
 Independent table writes are submitted CONCURRENTLY (threads): on a real
 cluster a build driver does exactly this, and it is what keeps 4N
 executors busy through each write's stage tail.  Queries run against the
@@ -145,7 +145,7 @@ def worker(cores: int, n_docs: int) -> None:
                 "cell_id").write.mode("overwrite").parquet(mc_path)
 
         def w_ct():
-            cell_totals_from_base(full, "s2", 10, n_docs_hint=n).\
+            cell_totals_from_base(full, "s2", 10).\
                 sortWithinPartitions("cell_id").write.mode("overwrite").parquet(ct_path)
 
         # sorted_list_agg affects only w_ct's collect_list (the other two
@@ -510,8 +510,8 @@ Build = WRITE-ONCE create: the one-pass base (gazetteer match + jitter +
 cells + tokens) is written in a single corpus pass; mention_cells and the
 cell_totals→token_postings chain derive from the STORED base (pruned
 columnar reads) and are written sorted, the two independent write chains
-submitted concurrently from the driver.  Hot postings groups take the
-conditional salted two-phase aggregation (HOT_CELL_THRESHOLD 4M).
+submitted concurrently from the driver.  Hot token-postings groups are
+salted by token slice; cell_totals is one map-side-combined groupBy.
 Queries follow the reference's create→query split: a 50-polygon query file
 runs as ONE Catalyst plan over the stored mention_cells (per-doc bitmap
 aggregation over run-length-compressed coverings with grid-derived run

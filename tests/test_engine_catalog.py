@@ -121,3 +121,41 @@ def test_posting_store_requires_catalog(spark):
 
     with pytest.raises(ValueError):
         Engine(spark, SF_DIR, posting_store=True)
+
+
+
+def _plans_since(spark, before: int | None) -> tuple[int, list[str]]:
+    """(newest SQL execution id, physical plan descriptions of the
+    executions newer than ``before``) from the status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    last = execs.last().executionId() if execs.nonEmpty() else -1
+    plans = []
+    for i in range(last + 1 if before is None else before + 1, last + 1):
+        e = store.execution(i)
+        if e.isDefined():
+            plans.append(e.get().physicalPlanDescription())
+    return last, plans
+
+
+def _tp_rows(tp):
+    return sorted(
+        (r.token, r.qt, r.grid, r.res, r.cell_id, r.is_fm,
+         None if r.doc_ids is None else tuple(r.doc_ids), r.n_docs)
+        for r in tp.collect())
+
+
+def test_posting_store_build_runs_token_kernel_once(spark, engine):
+    """Both store tables of a fresh --dedup build split one token-kernel
+    run: the Arrow kernel appears in exactly one SQL execution, and the
+    resolved postings equal the inline token_postings row for row."""
+    from oscar_spatial_index_compare_spark.engine import Engine
+
+    ps = Engine(spark, SF_DIR, catalog_root=tempfile.mkdtemp(prefix="osi_ps1_"),
+                posting_store=True)
+    before, _ = _plans_since(spark, None)
+    ctx = ps.context("zxy", 9)
+    _, plans = _plans_since(spark, before)
+    assert sum("FlatMapGroupsInArrow" in p for p in plans) == 1
+    assert _tp_rows(ctx.tpostings) == _tp_rows(engine.context("zxy", 9).tpostings)

@@ -95,7 +95,7 @@ def test_failed_build_cleans_up_and_resumes(spark, fresh_build, monkeypatch):
     eng2.context("zxy", 9)
     new = [s["table"] for s in eng2.catalog.snapshots()[len(before):]]
     assert sorted(new) == sorted({f"{t}_zxy_9" for t in TABLES} - written)
-    assert len(calls) == 1  # cell_totals needs the corpus size
+    assert len(calls) == 0  # cell_totals needs no corpus size
 
 
 def test_streaming_incremental_matches_batch(spark, engine, tmp_path):
@@ -120,6 +120,22 @@ def test_streaming_incremental_matches_batch(spark, engine, tmp_path):
     a = {(r.cell_id, r.n_docs, tuple(r.doc_ids)) for r in streamed.collect()}
     b = {(r.cell_id, r.n_docs, tuple(r.doc_ids)) for r in batch.collect()}
     assert a == b
+
+
+def test_documents_cc_matches_oracle(spark, duck):
+    """The input-hint lift of the documents table equals its DuckDB twin
+    (timestamps compared as UTC text)."""
+    from oscar_spatial_index_compare_spark.sources.tables import (
+        DOCUMENTS_CC_ORACLE, documents_cc,
+    )
+
+    cc = documents_cc(spark, SF_DIR).selectExpr(
+        "doc_id", "url", "CAST(warc_ts AS STRING) AS ts", "html", "text", "lang")
+    got = sorted((*r[:3], bytes(r.html), r.text, r.lang) for r in cc.collect())
+    want = sorted(duck.execute(
+        "SELECT doc_id, url, CAST(warc_ts AS VARCHAR), html, text, lang "
+        f"FROM ({DOCUMENTS_CC_ORACLE})").fetchall())
+    assert got and got == want
 
 
 def test_multimodal_plumbing(spark):
