@@ -107,14 +107,36 @@ def test_no_salt_hint_exact(spark):
     assert _tp_rows(hinted) == default
 
 
+def test_jvm_and_arrow_impls_identical(spark, engine):
+    """The build tails must be row-identical on both the unsalted and the
+    forced-salt (target_docs=1) paths.  Only the Arrow kernels remain (the
+    post-exchange JVM tail is gone): the hash-keyed kernel (default) and the
+    string-keyed kernel, which builds the whole table when every corpus
+    token is routed to it as an xxhash64 collision."""
+    from oscar_spatial_index_compare_spark.operators.index_build import (
+        cell_totals_from_base, doc_index_base,
+    )
+
+    base = doc_index_base(engine.docs, "zxy", 9)
+    ct = cell_totals_from_base(base, "zxy", 9)
+    vocab = sorted(r.t for r in base.select(
+        F.explode("toks").alias("t")).distinct().collect())
+    assert len(vocab) > 2
+    for target in (10**9, 1):
+        hashed = _tp_rows(token_postings_from_base(
+            base, ct, "zxy", 9, target_docs=target))
+        stringed = _tp_rows(token_postings_from_base(
+            base, ct, "zxy", 9, target_docs=target, _collide_tokens=vocab))
+        assert stringed == hashed
+        assert any(r[2] for r in hashed)  # fm rows present — not vacuous
+
+
 def test_collision_routing_exact(spark, engine):
     """Inject a fake xxhash64-colliding token set (real 64-bit collisions
-    are unconstructible): the routed build must be row-identical to the
-    unrouted default, on both salting paths — with two tokens routed (the
-    string-kernel rows unioned into the hash-kernel rows) and with the
-    whole corpus vocabulary routed (the string kernel alone builds the full
-    table).  Also pins the cap: an absurd colliding set must raise, not
-    silently merge."""
+    are unconstructible): the routed build — those tokens through the
+    string kernel, the rest through the hash kernel, unioned — must be
+    row-identical to the unrouted default, on both salting paths.  Also
+    pins the cap: an absurd colliding set must raise, not silently merge."""
     import pytest
 
     from oscar_spatial_index_compare_spark.operators.index_build import (
@@ -124,23 +146,18 @@ def test_collision_routing_exact(spark, engine):
 
     base = doc_index_base(engine.docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
-    vocab = sorted(r.t for r in base.select(
-        F.explode("toks").alias("t")).distinct().collect())
-    # two real corpus tokens, one of them gazetteer-hot
+    # pick two real corpus tokens, one of them gazetteer-hot
     toks = [r.t for r in base.select(
         F.explode("toks").alias("t")).distinct().limit(2).collect()]
-    assert len(toks) == 2 and len(vocab) > 2
+    assert len(toks) == 2
     for target in (10**9, 1):
         default = _tp_rows(token_postings_from_base(
             base, ct, "zxy", 9, target_docs=target))
-        for coll in (toks, vocab):
-            routed = _tp_rows(token_postings_from_base(
-                base, ct, "zxy", 9, target_docs=target, _collide_tokens=coll))
-            assert routed == default, len(coll)
-        # the routed tokens genuinely appear in the result, fm rows too
-        # (non-vacuous)
+        routed = _tp_rows(token_postings_from_base(
+            base, ct, "zxy", 9, target_docs=target, _collide_tokens=toks))
+        assert routed == default
+        # the routed tokens genuinely appear in the result (non-vacuous)
         assert any(r[0] in toks for r in default)
-        assert any(r[2] for r in default)
     with pytest.raises(RuntimeError, match="colliding"):
         token_postings_from_base(
             base, ct, "zxy", 9,
