@@ -12,7 +12,7 @@ from functools import cached_property
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.cell_stats import cell_stats
+from .operators.cell_stats import load_stats, stats_frame
 from .operators.hcqr import hcqr_postings_build
 from .operators.index_build import (
     cell_totals_from_base,
@@ -28,14 +28,15 @@ from .operators.posting_store import (
 )
 from .operators.token_index import token_postings_from_base, vocab_collisions
 from .plans.planner import Planner, QueryContext
-from .session import local_frame
+from .session import collect_arrow, local_frame
 from .sources.catalog import WRITE_PARTS, Catalog, TableSpec, build_cached
-from .sources.tables import ensure_scan_parallelism, load
+from .sources.tables import ensure_scan_parallelism, load, read_arrow
 
 # Largest token dictionary worth holding on the driver for plan-time leaf
 # expansion; beyond it leaves lower to distributed filters on token_postings.
 MAX_DRIVER_TOKENS = 1_000_000
 TABLES = ("index_base", "mention_cells", "cell_totals")
+_UNREAD = object()  # a driver-side memo before its first read
 
 
 class Engine:
@@ -73,6 +74,8 @@ class Engine:
         # the first stored/cached doc_index_full: later grids re-derive their
         # base from it (cell re-assignment only, no gazetteer match)
         self._full_src: DataFrame | None = None
+        # corpus dictionary and build vocabulary: read once, for every grid
+        self._tokens = self._vocab_pair = _UNREAD
 
     @cached_property
     def n_docs(self) -> int:
@@ -80,28 +83,35 @@ class Engine:
         holds more docs, so a small corpus needs no token-slice salting)."""
         return self.docs.count()
 
-    @cached_property
-    def _tokens(self) -> list[str] | None:
-        rows = (self.docs.select(F.explode(F.array_distinct(
-                    F.split(F.col("text"), " "))).alias("t"))
-                .distinct().limit(MAX_DRIVER_TOKENS + 1).collect())
-        return None if len(rows) > MAX_DRIVER_TOKENS else sorted(r.t for r in rows)
-
-    def corpus_tokens(self) -> list[str] | None:
+    def _dictionary(self, token_dict: DataFrame) -> list[str] | None:
         """Sorted distinct corpus tokens, or None when the dictionary exceeds
-        MAX_DRIVER_TOKENS (callers then use the distributed leaf path)."""
+        MAX_DRIVER_TOKENS (leaves then take the distributed predicate).  A
+        catalog's is read from its parquet files, the cap decided from
+        their footers: no Spark job."""
+        if self._tokens is _UNREAD:
+            t = (collect_arrow(token_dict, MAX_DRIVER_TOKENS) if self.catalog is None
+                 else read_arrow(self.catalog.path("token_dict"), MAX_DRIVER_TOKENS))
+            self._tokens = None if t is None else t.sort_by("token").column(
+                "token").to_pylist()
         return self._tokens
 
-    @cached_property
-    def _vocab(self) -> tuple | None:
-        """(vh, coll) for token_postings_from_base, shared by every grid;
+    def corpus_tokens(self) -> list[str] | None:
+        """The corpus dictionary (see ``_dictionary``)."""
+        return self._dictionary(
+            self._build(self._values(), ["token_dict"])["token_dict"])
+
+    def _vocab(self, token_dict: DataFrame) -> tuple | None:
+        """(vh, coll) for token_postings_from_base: the dictionary as a local
+        (token, th) relation and its collision audit, which runs no job.
         None above the driver cap (each build runs its own vocab pass)."""
-        toks = self.corpus_tokens()
-        if toks is None:
-            return None
-        vh = local_frame(self.spark, "token string", [toks]).select(
-            "token", F.xxhash64("token").alias("th"))
-        return vh, vocab_collisions(vh)
+        if self._vocab_pair is _UNREAD:
+            toks, pair = self._dictionary(token_dict), None
+            if toks is not None:
+                vh = local_frame(self.spark, "token string", [toks]).selectExpr(
+                    "token", "xxhash64(token) AS th")
+                pair = vh, vocab_collisions(vh)
+            self._vocab_pair = pair
+        return self._vocab_pair
 
     def _adopt_full_source(self, full: DataFrame) -> None:
         """Keep the first doc_index_full as later grids' extraction source;
@@ -118,19 +128,23 @@ class Engine:
         old.unpersist()
 
     def _values(self) -> list[TableSpec]:
-        """Value nodes every build shares; clustered writes use one task
-        per 2,000 docs, capped at the shuffle parallelism."""
+        """Nodes every build shares; clustered writes use one task per 2,000
+        docs, capped at the shuffle parallelism."""
         parts = "spark.sql.shuffle.partitions"
         return [TableSpec("n_docs", None, (), lambda d: self.n_docs),
                 TableSpec(WRITE_PARTS, None, ("n_docs",), lambda d: max(1, min(
                     int(self.spark.conf.get(parts)), -(-d["n_docs"] // 2000)))),
-                TableSpec("vocab", None, (), lambda d: self._vocab)]
+                TableSpec("token_dict", "token_dict", (), lambda d: self.docs.selectExpr(
+                    "explode(array_distinct(split(text, ' '))) AS token").distinct(),
+                          inputs=(self.sf_dir,)),
+                TableSpec("vocab", None, ("token_dict",),
+                          lambda d: self._vocab(d["token_dict"]))]
 
     def _specs(self, grid: str, res: int, use_store: bool) -> list[TableSpec]:
         """The create DAG of one (grid, res).  Every table derives from the
         one-pass base (in catalog mode the STORED base: pruned reads)."""
         sfx, p = f"{grid}_{res}", {"grid": grid, "res": res}
-        base = f"index_base_{sfx}"
+        base, mc = f"index_base_{sfx}", f"mention_cells_{sfx}"
         tp_in = (base, f"cell_totals_{sfx}")
 
         def base_build(d):
@@ -154,17 +168,21 @@ class Engine:
                       inputs=(self.sf_dir,), params=p),
             # clustered by cell: the base's doc-hash layout scattered cell
             # runs over every file (+60% stored bytes at sf1.0)
-            TableSpec(f"mention_cells_{sfx}", "mention_cells",
-                      (base, WRITE_PARTS),
+            TableSpec(mc, "mention_cells", (base, WRITE_PARTS),
                       lambda d: mention_cells_from_full(d[base], grid, res),
                       cluster_by="cell_id", sort_within=("cell_id",), params=p),
             TableSpec(f"cell_totals_{sfx}", "cell_totals", (base,),
                       lambda d: cell_totals_from_base(d[base], grid, res),
                       sort_within=("cell_id",), params=p),
+            # the metadata energize() loads (SURVEY S7), read back at open
+            TableSpec(f"cell_stats_{sfx}", "cell_stats", (mc,),
+                      lambda d: stats_frame(d[mc], grid, res), params=p),
         ]
         if not use_store:
-            # clustered by token: a leaf's pushed token filter decodes ~1/N
-            # of the files (the reference's static index is token-major)
+            # clustered by token (the reference's static index is
+            # token-major); a leaf's pushed token filter still decodes every
+            # file while each file is one row group spanning most of the
+            # token range, as at the perfbench corpus size
             return specs + [TableSpec(
                 f"token_postings_{sfx}", "token_postings",
                 (base, "n_docs", "vocab", WRITE_PARTS), tp_build,
@@ -195,9 +213,12 @@ class Engine:
                 or bool(self.catalog.snapshots(f"posting_lists_{sfx}")))
             tp_tables = (("posting_lists", "token_postings_refs") if use_store
                          else ("token_postings",))
-            base, mc, ct, *tp = self._build(
-                self._specs(grid, res, use_store),
-                [f"{t}_{sfx}" for t in TABLES + tp_tables]).values()
+            tables = [f"{t}_{sfx}" for t in TABLES + tp_tables]
+            stats, targets = f"cell_stats_{sfx}", tables + ["token_dict"]
+            if self.catalog is not None:
+                targets.append(stats)
+            vals = self._build(self._specs(grid, res, use_store), targets)
+            base, mc, ct, *tp = (vals[t] for t in tables)
             self._adopt_full_source(base)
             if use_store:
                 # a 64-bit content-key collision fails the create step hard
@@ -209,11 +230,13 @@ class Engine:
                 tp = [resolve_postings(tp[1], tp[0])]
             self._ctx[key] = QueryContext(
                 spark=self.spark, grid=grid, res=res, mcells=mc, ctotals=ct,
-                tpostings=tp[0], tokens=self.corpus_tokens())
+                tpostings=tp[0], tokens=self._dictionary(vals["token_dict"]))
             if self.catalog is not None:
-                # the reference's energize() (SURVEY S7): per-cell metadata
-                # loads at open; an in-memory mcells loads on first use
-                cell_stats(mc, grid, res)
+                # the reference's energize() (SURVEY S7): the stored per-cell
+                # metadata loads at open with no Spark job; an in-memory
+                # mcells collects its stats on first use
+                load_stats(mc, grid, res, lambda cap: read_arrow(
+                    self.catalog.path(stats), cap))
         return self._ctx[key]
 
     def hcqr_context(self, grid: str = "s2", res: int = 10) -> QueryContext:

@@ -2,7 +2,8 @@
 
 The reference loads its per-cell metadata (CellInfo) once, into one object,
 when it opens an index (``energize()``, ``apps/main.cpp:111-121``).  Here
-the same numbers come from ONE Spark action over the frame:
+the same numbers are one small frame over ``mention_cells``
+(``stats_frame``):
 
   * the sorted populated cell ids — region queries prune their coverings
     to them (the reference intersects a covering with its cell list,
@@ -11,23 +12,30 @@ the same numbers come from ONE Spark action over the frame:
     boundary cell sends to PIP, which picks the PIP form;
   * per-cell distinct docs and the spread (M*, D) — the kNN density bound.
 
+A catalog stores it as the ``cell_stats_{grid}_{res}`` table of its build
+DAG, which ``Engine.context`` reads on the driver at open (no Spark job);
+any other frame collects it through Arrow on first use (one action).
+
 The result is stored on the frame object itself, so it lives and dies with
 the frame it describes: a dropped frame takes its stats with it, and a new
-frame can never see another frame's numbers.  ``Engine.context`` loads it
-when it opens a catalog context; any other frame loads on first use.
+frame can never see another frame's numbers.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 from functools import cached_property
+from typing import Callable
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geo import haversine_np
 from ..grids.base import get_grid
+from ..session import collect_arrow
 
 # populated-cell lists above this size stay distributed: cell_stats returns
 # None and region queries take per-level ancestor equi-joins, kNN takes ring
@@ -70,47 +78,48 @@ class CellStats:
         return clat, clon, rad_km
 
 
-def cell_stats(mcells: DataFrame, grid: str, res: int) -> CellStats | None:
-    """Stats of ``mcells`` at (grid, res), or None above MAX_DRIVER_CELLS.
-
-    Computed once per frame and (grid, res).  Per-cell counts OVERCOUNT docs
-    whose mentions span several cells, so the kNN bound also needs M* and D
-    to turn a cumulative per-cell sum into a provable lower bound on
-    distinct docs.  Both branches are direct aggregations (distinct counts
-    reduce map-side), unioned into one collect: nothing doc-sized reaches
-    the driver."""
-    memo = mcells.__dict__.setdefault(_MEMO, {})
-    if (grid, res) not in memo:
-        memo[(grid, res)] = _collect(mcells, grid, res)
-    return memo[(grid, res)]
-
-
-def _collect(mcells: DataFrame, grid: str, res: int) -> CellStats | None:
-    probe = mcells.where((F.col("grid") == grid) & (F.col("res") == res))
-    per_cell = (
-        probe.groupBy("cell_id")
-        .agg(F.count("*").alias("a"), F.count_distinct("doc_id").alias("b"))
-        .select(F.lit(0).alias("kind"), "cell_id", "a", "b")
-        .limit(MAX_DRIVER_CELLS + 1)
-    )
+def stats_frame(mcells: DataFrame, grid: str, res: int) -> DataFrame:
+    """(kind, cell_id, a, b): per populated cell a kind-0 row (a = mention
+    rows, b = distinct docs), and one kind-1 row (a = M*, b = D).  Per-cell
+    counts OVERCOUNT docs whose mentions span several cells, so the kNN
+    bound needs M* and D to turn a per-cell sum into a lower bound on
+    distinct docs.  Nothing doc-sized reaches the driver."""
+    probe = mcells.where(f"grid = '{grid}' AND res = {int(res)}")
+    per_cell = probe.groupBy("cell_id").agg(
+        F.expr("count(*) AS a"), F.expr("count(DISTINCT doc_id) AS b"))
     spread = (
-        probe.groupBy("doc_id").agg(F.count_distinct("cell_id").alias("nc"))
-        .agg(F.max("nc").alias("a"), F.count("*").alias("b"))
-        .select(F.lit(1).alias("kind"), F.lit(0).cast("long").alias("cell_id"),
-                "a", "b")
+        probe.groupBy("doc_id").agg(F.expr("count(DISTINCT cell_id) AS nc"))
+        .selectExpr("1 AS kind", "CAST(0 AS BIGINT) AS cell_id",
+                    "max(nc) AS a", "count(*) AS b")
     )
-    rows = per_cell.unionByName(spread).collect()
-    cell_rows = [r for r in rows if r.kind == 0]
-    if len(cell_rows) > MAX_DRIVER_CELLS:
-        return None
-    srow = next(r for r in rows if r.kind == 1)
-    cells = np.array([r.cell_id for r in cell_rows], np.int64)
-    order = np.argsort(cells)
-    return CellStats(
-        grid=grid,
-        cells=cells[order],
-        n_rows=np.array([r.a for r in cell_rows], np.int64)[order],
-        n_docs=np.array([r.b for r in cell_rows], np.int64)[order],
-        mstar=int(srow.a or 0),
-        docs=int(srow.b or 0),
-    )
+    return per_cell.selectExpr("0 AS kind", "cell_id", "a", "b").unionByName(spread)
+
+
+def cell_stats(mcells: DataFrame, grid: str, res: int) -> CellStats | None:
+    """Stats of ``mcells`` at (grid, res), or None above MAX_DRIVER_CELLS:
+    the loaded ones, else ``stats_frame`` collected once through Arrow."""
+    memo = mcells.__dict__.get(_MEMO, {})
+    if (grid, res) in memo:
+        return memo[(grid, res)]
+    return load_stats(mcells, grid, res, lambda cap: collect_arrow(
+        stats_frame(mcells, grid, res), cap))
+
+
+def load_stats(mcells: DataFrame, grid: str, res: int,
+               fetch: Callable[[int], pa.Table | None]) -> CellStats | None:
+    """Attach to ``mcells`` the (grid, res) stats that ``fetch(cap)`` reads:
+    its ``stats_frame`` table, or None when that has more than ``cap`` =
+    MAX_DRIVER_CELLS + 1 rows."""
+    t = fetch(MAX_DRIVER_CELLS + 1)
+    stats = None
+    if t is not None:
+        cell = t.column("kind").to_numpy() == 0
+        # M* (a max over no docs) is NULL for a zero-mention frame: read as 0
+        cells, a, b = (pc.fill_null(t.column(c), 0).to_numpy().astype(np.int64)
+                       for c in ("cell_id", "a", "b"))
+        order = np.argsort(cells[cell])
+        stats = CellStats(grid=grid, cells=cells[cell][order],
+                          n_rows=a[cell][order], n_docs=b[cell][order],
+                          mstar=int(a[~cell][0]), docs=int(b[~cell][0]))
+    mcells.__dict__.setdefault(_MEMO, {})[(grid, res)] = stats
+    return stats

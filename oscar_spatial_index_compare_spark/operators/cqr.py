@@ -37,12 +37,23 @@ from pyspark.sql import functions as F
 CQR_COLS = ["cell_id", "is_fm", "doc_ids"]
 # the fm payload columns: full-match, no doc list
 FM_EXPRS = ("true AS is_fm", "CAST(NULL AS ARRAY<BIGINT>) AS doc_ids")
-# a row survives an op if it is fm (whole or complement) or non-empty pm
+# a row holds docs if it is fm (whole or complement) or a non-empty pm row
 _NON_EMPTY = "is_fm OR size(doc_ids) > 0"
 
 # Expressions are SQL text (selectExpr / where(str) / one F.expr per join
 # condition): on classic PySpark each F.col costs ~19 py4j round trips, so
 # Column trees made plan construction a visible share of every op-tree.
+#
+# The set ops keep the empty pm rows they make (doc_ids empty or NULL): a
+# filter on the CASE result would be pushed below the projection with the
+# CASE substituted into it, so each joined row would run its array
+# functions twice.  Every op reads an empty row as an absent one, and
+# ``cqr_flatten``'s explode and ``cqr_normalize``'s filter drop them.
+
+
+def _none(side: str) -> str:
+    """``side`` of a join holds no docs: it is absent or an empty pm row."""
+    return f"NOT coalesce({side}.is_fm OR size({side}.doc_ids) > 0, false)"
 
 
 def _excl(docs: str) -> str:
@@ -65,7 +76,7 @@ def cqr_union(left: DataFrame, right: DataFrame) -> DataFrame:
     return _join(left, right, "full_outer").selectExpr(
         "coalesce(l.cell_id, r.cell_id) AS cell_id",
         "coalesce(l.is_fm, false) OR coalesce(r.is_fm, false) AS is_fm",
-        "CASE WHEN r.cell_id IS NULL THEN l.doc_ids WHEN l.cell_id IS NULL THEN r.doc_ids"
+        f"CASE WHEN {_none('r')} THEN l.doc_ids WHEN {_none('l')} THEN r.doc_ids"
         " WHEN l.is_fm AND r.is_fm THEN array_intersect(l.doc_ids, r.doc_ids)"
         " WHEN l.is_fm THEN array_except(l.doc_ids, r.doc_ids)"
         " WHEN r.is_fm THEN array_except(r.doc_ids, l.doc_ids)"
@@ -80,8 +91,7 @@ def cqr_intersect(left: DataFrame, right: DataFrame) -> DataFrame:
         " THEN coalesce(array_union(l.doc_ids, r.doc_ids), l.doc_ids, r.doc_ids)"
         f" WHEN l.is_fm THEN array_except(r.doc_ids, {_excl('l.doc_ids')})"
         f" WHEN r.is_fm THEN array_except(l.doc_ids, {_excl('r.doc_ids')})"
-        " ELSE array_sort(array_intersect(l.doc_ids, r.doc_ids)) END AS doc_ids",
-    ).where(_NON_EMPTY)
+        " ELSE array_sort(array_intersect(l.doc_ids, r.doc_ids)) END AS doc_ids")
 
 
 def cqr_difference(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -89,13 +99,12 @@ def cqr_difference(left: DataFrame, right: DataFrame) -> DataFrame:
     return _join(left, right, "left").selectExpr(
         "l.cell_id AS cell_id",
         "l.is_fm AND NOT coalesce(r.is_fm, false) AS is_fm",
-        "CASE WHEN r.cell_id IS NULL THEN l.doc_ids"
+        f"CASE WHEN {_none('r')} THEN l.doc_ids"
         " WHEN l.is_fm AND r.is_fm"
         f" THEN array_sort(array_except(r.doc_ids, {_excl('l.doc_ids')}))"
         " WHEN l.is_fm THEN coalesce(array_union(l.doc_ids, r.doc_ids), r.doc_ids)"
         " WHEN r.is_fm THEN array_sort(array_intersect(l.doc_ids, r.doc_ids))"
-        " ELSE array_sort(array_except(l.doc_ids, r.doc_ids)) END AS doc_ids",
-    ).where(_NON_EMPTY)
+        " ELSE array_sort(array_except(l.doc_ids, r.doc_ids)) END AS doc_ids")
 
 
 def cqr_symdiff(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -108,10 +117,9 @@ def cqr_symdiff(left: DataFrame, right: DataFrame) -> DataFrame:
     return _join(left, right, "full_outer").selectExpr(
         "coalesce(l.cell_id, r.cell_id) AS cell_id",
         "coalesce(l.is_fm != r.is_fm, l.is_fm, r.is_fm) AS is_fm",
-        "CASE WHEN r.cell_id IS NULL THEN l.doc_ids WHEN l.cell_id IS NULL THEN r.doc_ids"
+        f"CASE WHEN {_none('r')} THEN l.doc_ids WHEN {_none('l')} THEN r.doc_ids"
         f" ELSE array_sort(array_union(array_except({x}, {y}), array_except({y}, {x})))"
-        " END AS doc_ids",
-    ).where(_NON_EMPTY)
+        " END AS doc_ids")
 
 
 def cqr_dilate(cqr: DataFrame, grid: str, res: int, ctotals: DataFrame) -> DataFrame:

@@ -37,17 +37,12 @@ _OBJ_HASH_AGG_CONF = "spark.sql.execution.useObjectHashAggregateExec"
 @contextmanager
 def sorted_list_agg(spark):
     """Scope a terminal action so collect_list groupBys plan as
-    SortAggregate instead of ObjectHashAggregate.
-
-    For posting-list builds (tens of millions of appended values across
-    ~10^5 groups) the object-hash buffer churn made the list pass 3-4x
-    slower than a shuffle-sort + streaming append (measured in the r04
-    scaling profile: 103s → 31s at 48M triples / 8 cores).  The conf only
-    affects TypedImperativeAggregate functions (collect_list/collect_set),
-    so the count/sum HashAggregates in the same plan are untouched; it is
-    restored on exit so interactive-session aggregations keep the default.
-    Plans are frozen at ACTION time — wrap the ``.write``/``.count``, not
-    the DataFrame construction.
+    SortAggregate instead of ObjectHashAggregate: for posting-list builds
+    the object-hash buffer churn made the list pass 3-4x slower than a
+    shuffle-sort + streaming append.  Only TypedImperativeAggregate
+    functions are affected, and the conf is restored on exit.  Plans are
+    frozen at ACTION time — wrap the ``.write``/``.count``, not the
+    DataFrame construction.
     """
     old = spark.conf.get(_OBJ_HASH_AGG_CONF, "true")
     spark.conf.set(_OBJ_HASH_AGG_CONF, "false")
@@ -71,11 +66,13 @@ MAX_COLLIDING_TOKENS = 10_000
 
 def vocab_collisions(vh: DataFrame) -> list[str]:
     """The plan-time collision audit over a (token, th = xxhash64(token))
-    vocabulary: the sorted tokens whose hash another token shares."""
-    rows = (vh.groupBy("th").agg(F.collect_list("token").alias("ts"))
-            .where(F.size("ts") > 1).select("ts")
-            .limit(MAX_COLLIDING_TOKENS + 1).collect())
-    return sorted({t for r in rows for t in r.ts})
+    vocabulary: the sorted tokens whose hash another token shares.  The
+    vocabulary is collected and grouped on the driver; over a local
+    relation (the engine's dictionary) the collect runs no Spark job."""
+    by_hash: dict[int, list[str]] = {}
+    for r in vh.collect():
+        by_hash.setdefault(r.th, []).append(r.token)
+    return sorted(t for ts in by_hash.values() if len(ts) > 1 for t in ts)
 
 
 def _salted_pairs(b: DataFrame, ctb: DataFrame, no_salt: bool,
@@ -113,13 +110,10 @@ def _salted_pairs(b: DataFrame, ctb: DataFrame, no_salt: bool,
             "doc_id", "cell_id", "n_total", "_nsalt",
             F.posexplode(slices).alias("_salt", "toks"),
         ).where(F.size("toks") > 0)
-    # EXPLICIT partition count for the group exchange: AQE sizes post-shuffle
-    # stages by shuffle BYTES, but this stage's cost is the ~|toks|× token
-    # fan-out of those bytes — left to AQE it coalesced a 32-core stage down
-    # to ~5 tasks (measured: 67 s at BOTH 8 and 32 cores, zero scaling).  An
-    # explicit repartition on the exact grouping keys satisfies
-    # FlatMapGroupsInPandas' clustering requirement (no second exchange) and
-    # is exempt from AQE coalescing.
+    # EXPLICIT partition count: AQE sizes post-shuffle stages by shuffle
+    # bytes, but this stage costs the ~|toks|× token fan-out of them (AQE
+    # coalesced a 32-core stage to ~5 tasks).  A repartition on the exact
+    # grouping keys needs no second exchange and is exempt from coalescing.
     return pairs.repartition(n_shuffle, "cell_id", "_salt")
 
 
@@ -129,76 +123,43 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
                              target_docs: int = TARGET_GROUP_DOCS,
                              _collide_tokens: list[str] | None = None,
                              vocab: tuple[DataFrame, list[str]] | None = None) -> DataFrame:
-    """Arrow-grouped posting build over doc_index_base (doc_id, toks, cells)
-    — the r05 scaling-gate rewrite (r04 VERDICT item 1).
+    """Arrow-grouped posting build over doc_index_base (doc_id, toks, cells).
+    The token fan-out stays OUT of the shuffle:
 
-    The r04 shape exploded every (token, doc, cell) triple BEFORE the
-    exchange and shuffle-sorted ~40 triples per (doc, cell) — the shuffle
-    and sort of ~10⁹ slim rows was the named non-scaling pass (0.34-0.40
-    raw).  This build keeps the token fan-out OUT of the shuffle entirely:
-
-      plan time  one narrow vocab pass (explode toks → distinct → th =
-               xxhash64(token)) serves two jobs: the (th → token)
-               restoration dimension, and an exact COLLISION AUDIT — any
-               th mapping to >1 token is collected driver-side (bounded by
-               ``MAX_COLLIDING_TOKENS``; expected count ~0, see constant)
-               and those tokens are routed to the string-keyed kernel
-               instead, so a 64-bit collision can never merge two tokens'
-               postings.  Same driver-literal pattern as region_query's
-               pruned coverings; the audit action runs once per build.
-      stage 0  one narrow pass: ``toks`` → xxhash64 per token (ONCE per
-               doc, JVM-side), explode ``cells`` only → (doc_id, toks,
-               cell_id) + a broadcast join against cell_totals for
-               ``n_total`` and the per-cell salt factor.  The exchange
-               carries ONE row per (doc, cell) with the doc's token-HASH
-               array — ~|toks|× fewer rows than the triple stream, and
-               fixed-width longs instead of strings (measured 1M docs:
-               5.6 GB → ~3 GB shuffle; the salt-slice filter becomes a
-               pmod on the value instead of per-slice string hashing).
-               Hot cells are salted by TOKEN SLICE: the doc's token array
-               splits into ``_nsalt`` hash slices (JVM-side higher-order
-               filter, empty slices dropped), so EVERY (cell, salt) group
-               holds the complete doc set of its token slice.
+      plan time  the vocabulary (explode toks → distinct → th =
+               xxhash64(token)) is the (th → token) restoration dimension
+               and gets an exact COLLISION AUDIT: it is collected, and any
+               th shared by >1 token (bounded by ``MAX_COLLIDING_TOKENS``;
+               expected count ~0) routes those tokens to the string-keyed
+               kernel, so a 64-bit collision never merges two tokens'
+               postings.
+      stage 0  one narrow pass: ``toks`` → xxhash64 per token (once per
+               doc, JVM-side), explode ``cells`` only, broadcast-join cell
+               totals for ``n_total`` and the salt factor.  The exchange
+               carries ONE row per (doc, cell) with the doc's token-hash
+               array, ~|toks|× fewer rows than a triple stream.  Hot cells
+               are salted by TOKEN SLICE (``_salted_pairs``), so every
+               (cell, salt) group holds the complete doc set of its tokens.
       stage 1  ``applyInArrow`` over (cell_id, salt): the (token → sorted
-               doc list) fan-out runs INSIDE each group on native Arrow
-               buffers — zero-copy ``list_flatten`` and ONE value sort of
-               rank-packed ``(token_rank << 40 | doc_id)`` words that
-               groups token hashes and sorts every token's doc run in the
-               same pass (see ``_kernel_tail``); no strings ever reach
-               Python (the r05.0 string kernel spent 1.7× this kernel's
-               wall in ``dictionary_encode`` alone, and its Arrow IPC was
-               ~2× the bytes).  Every group is complete for its tokens, so
-               fm classifies LOCALLY (len == n_total) and fm rows emit
-               doc_ids NULL — the reference's fm-bit compression
-               (``src/OscarSearchSgIndex.cpp:178-197``) applied before the
-               lists ever cross Arrow.
-      tail     join th → token against the vocab dimension (AQE picks
-               broadcast while the vocab fits; plain shuffle join beyond)
-               and union the string-kernel rows of any colliding tokens.
+               doc list) fan-out runs inside each group on Arrow buffers
+               (``_kernel_tail``); no strings reach Python.  Every group is
+               complete for its tokens, so fm classifies LOCALLY (len ==
+               n_total) and fm rows emit doc_ids NULL — the reference's
+               fm-bit compression (``src/OscarSearchSgIndex.cpp:178-197``).
+      tail     join th → token against the vocabulary (AQE picks broadcast
+               while it fits) and union the string kernel's rows of any
+               colliding tokens.
 
     Exactness: toks/cells are array_distinct per doc, so each (token, doc,
-    cell) pair occurs once, lands in exactly one deterministic token slice,
-    and per-group counts/lists are exact and complete (row-identical to the
-    string kernel — pytest A≡B on the forced-salt corpus with the whole
-    vocabulary routed, and the oracle suite).  Group memory is
-    bounded: a slice carries ~``target_docs``·|toks| token refs, and
-    dropping empty slices bounds group ROWS by the slice's token refs too.
-    ``n_docs_hint`` ≤ target_docs proves no cell can need salting (a cell
-    never exceeds the corpus doc count) and pins the salt factor to 1,
-    skipping the slice fan-out entirely.
-
-    Measured (250k docs, local[8], same sortWithinPartitions+write action):
-    r04 slim-key two-pass 94-103 s → string-kernel build 35 s; the hot
-    shuffle/sort volume falls |toks|-fold, which is also what the N→4N
-    gate needs — the 4N level pays netty transfer for shuffle bytes that
-    the 1-executor level reads locally.
+    cell) occurs once and lands in exactly one slice.  Group memory is
+    bounded by ~``target_docs``·|toks| token refs per slice.
+    ``n_docs_hint`` ≤ target_docs proves no cell needs salting (a cell
+    never exceeds the corpus doc count) and skips the slice fan-out.
 
     ``vocab``: optional pre-computed ``(vh, coll)`` — the (token, th)
-    dimension frame and the sorted colliding-token list.  The vocabulary is
-    a property of the CORPUS, not the grid: an Engine building three grids
-    passes the same pair to every build instead of paying the corpus-wide
-    distinct scan + collision-audit action per grid (r06; guide §1.2 "don't
-    compute things you throw away").  ``_collide_tokens`` injects a fake
+    dimension frame and the sorted colliding-token list.  The vocabulary
+    is a property of the CORPUS, not the grid: an Engine passes the same
+    pair to every grid's build.  ``_collide_tokens`` injects a fake
     colliding set so tests can exercise the routing (real 64-bit
     collisions are unconstructible).
     """
@@ -209,13 +170,9 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
         "cell_id", F.col("n_docs").alias("n_total"),
         salt_expr.cast("int").alias("_nsalt"),
     )
-    # Kernel-stage parallelism: floored at the cluster's core count now
-    # that output FILE sizing is decoupled from it (the engine clusters the
-    # stored table by token in a separate explicit repartition — r06).  The
-    # old ~2k-docs-per-task cap sized files but also capped the Arrow
-    # kernel stage at 3 tasks for a 5k-doc corpus (measured 4s of a 32-core
-    # build in a 3-task Python stage); any corpus big enough to matter
-    # still hits the shuffle_partitions cap.
+    # kernel-stage parallelism: ~2k docs per task, floored at the core count
+    # (output files are sized by the engine's own clustered write) and
+    # capped at the shuffle partitions
     spark = base.sparkSession
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if n_docs_hint is not None:
@@ -292,19 +249,13 @@ def _kernel_tail(codes, drep, n_total, dict_indices: bool = False):
     sorts every token's doc run, then run-length cuts → (per-group keys,
     run lengths ``ns``, fm mask, null-masked doc_ids ListArray pieces).
 
-    Fast path (the r5 scaling-gate bandwidth fix): keys are rank-encoded
-    to dense ints < 2^23 (string-kernel ``codes`` already ARE dictionary
-    indices; hash keys take ONE ``dictionary_encode`` plus a k-sized rank
-    remap that preserves the hash-ascending group order), packed
-    ``rank << 40 | doc_id`` into a single int64 word and sorted by VALUE —
-    one ``np.sort`` replaces lexsort's two stable argsorts AND both n-sized
-    permutation gathers (measured 8x less kernel wall at 5M pairs; the
-    token build is the one bandwidth-bound pass of the N→4N scaling gate).
-    Falls back to the lexsort formulation, bit-identical, when doc ids
-    exceed 40 bits or a group holds ≥2^23 distinct keys — a group is one
-    cell × token-slice (~``TARGET_GROUP_DOCS``·|toks| refs), far below
-    both bounds by construction, but the kernel stays exact if a caller
-    breaks the construction.
+    Keys are rank-encoded to dense ints < 2^23 (string-kernel ``codes``
+    already are dictionary indices; hash keys take one
+    ``dictionary_encode`` plus a rank remap that keeps the hash-ascending
+    group order), packed ``rank << 40 | doc_id`` into one int64 and sorted
+    by VALUE: one ``np.sort`` instead of lexsort's two argsorts and two
+    gathers.  Doc ids over 40 bits or ≥2^23 keys in a group fall back to
+    the bit-identical lexsort.
     """
     import numpy as np
     import pyarrow as pa
@@ -385,10 +336,6 @@ def _tp_string_tail(pairs: DataFrame, head: list) -> DataFrame:
         cell = table.column("cell_id")[0].as_py()
         n_total = table.column("n_total")[0].as_py()
         dic = pc.dictionary_encode(pc.list_flatten(toks))
-        if isinstance(dic, pa.ChunkedArray):  # multi-chunk input path
-            dic = dic.combine_chunks()
-            if isinstance(dic, pa.ChunkedArray):
-                dic = dic.chunk(0)
         codes = dic.indices.to_numpy()
         uniq = dic.dictionary
         drep = np.repeat(table.column("doc_id").to_numpy(), lens)

@@ -59,8 +59,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # COUNT(*)/MIN/MAX over parquet answer from row-group metadata —
-        # catalog snapshot counts become footer reads, not data scans
+        # COUNT(*)/MIN/MAX over parquet answer from row-group metadata
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -93,3 +92,10 @@ def local_frame(spark: SparkSession, ddl: str, columns) -> DataFrame:
     schema = StructType.fromDDL(ddl)
     table = pa.table([pa.array(c) for c in columns], names=schema.names)
     return spark.createDataFrame(table, schema)
+
+
+def collect_arrow(df: DataFrame, cap: int):
+    """``df`` on the driver as a pyarrow table, or None when it holds more
+    than ``cap`` rows (at most ``cap + 1`` rows are collected)."""
+    t = df.limit(cap + 1).toArrow()
+    return None if t.num_rows > cap else t

@@ -33,6 +33,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.token_index import sorted_list_agg
+from .tables import data_files, footer_rows, read_parquet
 
 # value node a ``cluster_by`` spec must list among its deps: the partition
 # count of its clustered write
@@ -135,7 +136,7 @@ class Catalog:
         return os.path.join(self.root, table)
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        return read_parquet(self.spark, self.path(table))
 
     # -- build (checkpoint-gated DAG) ----------------------------------------
     def _lineage(self, s: TableSpec, by: dict) -> tuple[list[str], str]:
@@ -187,8 +188,7 @@ class Catalog:
             out = out.sortWithinPartitions(*s.sort_within)
         out.write.mode("overwrite").parquet(self.path(s.name))
         end = time.time()
-        stored = self.read(s.name)
-        n_files, nbytes = self._file_stats(s.name)
+        files = data_files(self.path(s.name))  # row counts from the footers
         self._append({
             "snapshot_id": f"{s.name}-{len(self.snapshots(s.name))}-{fp}",
             "table": s.name,
@@ -196,20 +196,11 @@ class Catalog:
             "fingerprint": fp,
             "inputs": inputs,
             "params": s.params or {},
-            "n_rows": stored.count(),
-            "n_files": n_files,
-            "bytes": nbytes,
+            "n_rows": footer_rows(files),
+            "n_files": len(files),
+            "bytes": sum(map(os.path.getsize, files)),
             "start": round(start, 3),
             "end": round(end, 3),
             "wall_sec": round(end - start, 3),
         })
-        return stored
-
-    def _file_stats(self, table: str) -> tuple[int, int]:
-        n, b = 0, 0
-        for dirpath, _dirs, files in os.walk(self.path(table)):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    n += 1
-                    b += os.path.getsize(os.path.join(dirpath, fn))
-        return n, b
+        return self.read(s.name)

@@ -16,46 +16,67 @@ asserts it.
 
 from __future__ import annotations
 
+import json
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
+
+# footer key-value entry holding the Spark schema of a Spark-written file
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
-def _size_bytes(conf_val: str, default: int) -> int:
-    """Parse a Spark byte-size conf string — Spark accepts both one- and
-    two-letter suffixes ('134217728b', '128m', '256mb', '1g', '1gb')."""
-    s = str(conf_val).strip().lower()
-    mult = 1
-    for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                   ("tb", 1 << 40), ("k", 1 << 10), ("m", 1 << 20),
-                   ("g", 1 << 30), ("t", 1 << 40), ("b", 1)):
-        if s.endswith(suf):
-            s = s[: -len(suf)]
-            mult = m
-            break
-    try:
-        return int(float(s)) * mult
-    except ValueError:
-        return default
-
-
-def _data_file_sizes(path: str) -> list[int]:
-    """Byte sizes of the files a parquet read of ``path`` scans: Spark's
-    file index skips names starting with ``_`` or ``.`` (``_SUCCESS``,
-    ``.crc`` checksums), in directories too."""
-    import os
-
+def data_files(path: str) -> list[str]:
+    """The files a parquet read of ``path`` scans: Spark's file index skips
+    names starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` checksums),
+    in directories too."""
     if os.path.isfile(path):
-        return [os.path.getsize(path)]
-    sizes = []
+        return [path]
+    out = []
     for dirpath, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        sizes += [os.path.getsize(os.path.join(dirpath, f))
-                  for f in files if not f.startswith(("_", "."))]
-    return sizes
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out += [os.path.join(dirpath, f) for f in sorted(files)
+                if not f.startswith(("_", "."))]
+    return out
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from the first
+    data file's footer on the driver, so the read runs no inference job.
+    A Spark-written footer carries the Spark schema itself; any other is
+    converted from its Arrow schema (a zone-less timestamp is
+    TIMESTAMP_NTZ, as Spark infers it)."""
+    files = data_files(path)
+    if not files:  # not a local path: Spark lists and infers it
+        return spark.read.parquet(path)
+    footer = pq.read_schema(files[0])
+    meta = (footer.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    schema = (StructType.fromJson(json.loads(meta)) if meta is not None
+              else from_arrow_schema(footer, prefer_timestamp_ntz=True))
+    return spark.read.schema(schema).parquet(path)
+
+
+def footer_rows(files: list[str]) -> int:
+    """Σ ``num_rows`` over parquet footers: a row count without reading
+    data."""
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def read_arrow(path: str, cap: int) -> pa.Table | None:
+    """The parquet table at ``path`` on the driver, or None when its
+    footers count more than ``cap`` rows (then no data is read)."""
+    files = data_files(path)
+    if footer_rows(files) > cap:
+        return None
+    return pa.concat_tables(pq.read_table(f) for f in files)
 
 
 def estimated_scan_partitions(spark: SparkSession, path: str) -> int | None:
@@ -69,17 +90,14 @@ def estimated_scan_partitions(spark: SparkSession, path: str) -> int | None:
         openCost.
 
     None when ``path`` holds no data file (e.g. a non-filesystem source)."""
-    sizes = [sz for sz in _data_file_sizes(path) if sz > 0]
+    sizes = [sz for sz in map(os.path.getsize, data_files(path)) if sz > 0]
     if not sizes:
         return None
-    conf = spark.conf
-    max_bytes = _size_bytes(
-        conf.get("spark.sql.files.maxPartitionBytes", "134217728b"), 128 << 20)
-    open_cost = _size_bytes(
-        conf.get("spark.sql.files.openCostInBytes", "4194304b"), 4 << 20)
+    conf = spark._jsparkSession.sessionState().conf()  # Spark's byte parsing
+    max_bytes, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
     min_parts = int(
-        conf.get("spark.sql.files.minPartitionNum", None)
-        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
         or spark.sparkContext.defaultParallelism)
     per_core = (sum(sizes) + len(sizes) * open_cost) // min_parts
     split = min(max_bytes, max(open_cost, per_core))
@@ -97,21 +115,15 @@ def ensure_scan_parallelism(df: DataFrame, spark: SparkSession,
                             key: str = "doc_id",
                             input_path: str | None = None) -> DataFrame:
     """Guard against unsplittable narrow inputs: if the scan plans FEWER
-    partitions than the cluster has cores (e.g. one parquet file with one
-    row group — every derived narrow stage would run single-task), insert a
-    deterministic hash repartition on ``key`` so the whole downstream
-    pipeline parallelizes.  No-op whenever the scan already has enough
-    splits (any real at-scale input), so the extra exchange only ever buys
-    parallelism that the input could not provide.  Hash-on-key is
-    deterministic under task retry (never round-robin on rand —
-    SPARK-38388).
+    partitions than the cluster has cores (e.g. one single-row-group
+    parquet file), insert a hash repartition on ``key`` (deterministic
+    under task retry, SPARK-38388) so the downstream pipeline
+    parallelizes; a no-op whenever the scan has enough splits.
 
-    ``input_path``: when the caller knows the file(s) behind ``df``, the
-    split count is computed from file sizes (estimated_scan_partitions)
-    instead of planning the scan — ``df.rdd.getNumPartitions()`` forces a
-    full physical plan + RDD conversion, measured ~0.5-1 s of serial driver
-    time on a cold session (r06 third pass).  Without a path the exact
-    planned count is used."""
+    ``input_path``: the file(s) behind ``df``, whose sizes give the split
+    count (estimated_scan_partitions) without planning the scan, which
+    ``df.rdd.getNumPartitions()`` does (~0.5-1 s of driver time on a cold
+    session)."""
     n = spark.sparkContext.defaultParallelism
     est = (estimated_scan_partitions(spark, input_path)
            if input_path is not None else None)

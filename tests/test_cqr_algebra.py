@@ -2,10 +2,12 @@
 
 Each cell holds one pair of (left, right) kinds out of: absent, pm, whole
 cell, complement with an empty exclusion list, complement with a
-non-empty one, and complement of the whole cell (an empty set).  The
-expected answer is a Python model of the fm/pm rules applied to the
-normalized inputs, where a complement row is the pm row of its cell's
-docs less its exclusions (and no row when that is empty).
+non-empty one, complement of the whole cell (an empty set), and the two
+empty pm rows the ops leave for flatten and normalize to drop (an empty
+list and a NULL one).  The expected answer is a Python model of the fm/pm
+rules applied to the normalized inputs, where a complement row is the pm
+row of its cell's docs less its exclusions (and no row when that is
+empty) and an empty pm row is no row.
 
 The one known difference: a whole cell against an empty complement in a
 difference or symdiff.  The fm/pm rules see no right-hand row and keep
@@ -34,7 +36,8 @@ from oscar_spatial_index_compare_spark.plans.planner import (
 )
 from oscar_spatial_index_compare_spark.session import local_frame
 
-KINDS = ("absent", "pm", "whole", "comp_empty", "comp", "comp_all")
+KINDS = ("absent", "pm", "whole", "comp_empty", "comp", "comp_all",
+         "pm_empty", "pm_null")
 PAIRS = list(itertools.product(KINDS, KINDS))
 # offsets of a cell's docs: T = {1..6}; each side's lists differ so that
 # every op has overlapping and non-overlapping members to sort out
@@ -53,6 +56,8 @@ def _row(side: str, kind: str, cell: int):
         return None
     if kind == "pm":
         return False, _docs(cell, LISTS[side]["pm"])
+    if kind in ("pm_empty", "pm_null"):
+        return False, [] if kind == "pm_empty" else None
     if kind == "whole":
         return True, None
     excl = {"comp_empty": (), "comp": LISTS[side]["comp"], "comp_all": TOTAL}[kind]
@@ -72,7 +77,7 @@ def _parent_form(row, total: set):
         return None
     is_fm, docs = row
     if not is_fm:
-        return "pm", set(docs)
+        return ("pm", set(docs)) if docs else None
     if docs is None:
         return "fm", None
     rest = total - set(docs)

@@ -156,9 +156,15 @@ def test_difference_distributed_fallback_matches(engine, q, monkeypatch):
     from oscar_spatial_index_compare_spark.operators import hcqr as hc
 
     p = engine.planner("s2", 10)
+    expansions = []
+    expand = hc._difference_by_leaf_expansion
+    monkeypatch.setattr(hc, "_difference_by_leaf_expansion",
+                        lambda *a: expansions.append(a) or expand(*a))
     normal = {r.doc_id for r in p.hcqr_docs(q).collect()}
+    assert not expansions  # below the cap: driver-side decomposition
     monkeypatch.setattr(hc, "MAX_DRIVER_OVERLAP_PAIRS", 0)
     forced = {r.doc_id for r in p.hcqr_docs(q).collect()}
+    assert expansions  # the forced case took the leaf expansion
     assert forced == normal
     cqr_docs = {r.doc_id for r in p.docs(q).collect()}
     assert forced == cqr_docs

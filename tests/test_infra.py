@@ -11,6 +11,12 @@ from tests.conftest import SF_DIR
 
 
 TABLES = ("index_base", "mention_cells", "cell_totals", "token_postings")
+
+
+def _stored(sfx: str) -> set[str]:
+    """The tables a catalog context of one (grid, res) stores: the index
+    tables and its cell_stats metadata (the corpus-wide token_dict aside)."""
+    return {f"{t}_{sfx}" for t in TABLES + ("cell_stats",)}
 OBJ_HASH_AGG = "spark.sql.execution.useObjectHashAggregateExec"
 
 
@@ -36,7 +42,7 @@ def fresh_build(spark, tmp_path_factory):
 def test_catalog_checkpoint_resume(spark, fresh_build):
     eng, _ = fresh_build
     snaps1 = eng.catalog.snapshots()
-    assert {s["table"] for s in snaps1} == {f"{t}_s2_10" for t in TABLES}
+    assert {s["table"] for s in snaps1} == _stored("s2_10") | {"token_dict"}
     for s in snaps1:
         assert s["n_rows"] > 0 and s["bytes"] > 0 and s["n_files"] > 0
         assert s["inputs"], "lineage missing"
@@ -94,7 +100,7 @@ def test_failed_build_cleans_up_and_resumes(spark, fresh_build, monkeypatch):
     eng2, calls = _counting_engine(spark, root)
     eng2.context("zxy", 9)
     new = [s["table"] for s in eng2.catalog.snapshots()[len(before):]]
-    assert sorted(new) == sorted({f"{t}_zxy_9" for t in TABLES} - written)
+    assert sorted(new) == sorted(_stored("zxy_9") - written)
     assert len(calls) == 0  # cell_totals needs no corpus size
 
 

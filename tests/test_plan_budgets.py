@@ -64,6 +64,21 @@ def test_deepest_tree_plans_in_linear_size_and_bounded_time(cat_engine):
     assert took < 5.0, f"{took:.1f} s to optimize and plan {DEEPEST}"
 
 
+_ARRAY_FNS = ("array_except(", "array_union(", "array_intersect(", "array_sort(")
+
+
+@pytest.mark.parametrize("tree", TREES)
+def test_set_op_case_runs_once_per_joined_row(cat_engine, tree):
+    """Each array function of a tree's CASE projections appears in the
+    optimized plan as often as in the analyzed one: no filter over a CASE
+    result is pushed below its projection with the CASE copied into it."""
+    qe = cat_engine.planner("s2", 10).docs(tree)._jdf.queryExecution()
+    analyzed, optimized = qe.analyzed().toString(), qe.optimizedPlan().toString()
+    assert analyzed.count("array_except(") > 0
+    for fn in _ARRAY_FNS:
+        assert optimized.count(fn) == analyzed.count(fn), (tree, fn)
+
+
 def test_knn_batch_plan_has_one_broadcast_and_no_python(spark):
     """One broadcast hash join on the candidate dimension, no Python node,
     and the bounded heap as a partial ``WindowGroupLimit`` before the
