@@ -562,9 +562,9 @@ _GH_TREE = "($region:2 - $region:1) / ($region:2 + $region:6)"
 
 
 def _gh_hcqr_docs(spark, sf):
-    """Region-rooted op tree on the GeoHierarchy-as-pixel-tree completer
-    (reference GeoHierarchyHCQRCompleter.cpp:17-33): pixels are region ids /
-    cell_postings pieces; items() = union over region_cells → cell_postings."""
+    """Region-rooted op tree on the GeoHierarchy completer (reference
+    GeoHierarchyHCQRCompleter.cpp:17-33): each region leaf is its
+    cell_postings pieces as pm CQR rows, evaluated by the CQR set ops."""
     from oscar_spatial_index_compare_spark.operators.gh_hcqr import gh_hcqr_docs
     from oscar_spatial_index_compare_spark.operators.index_build import (
         cell_postings, mention_cells,

@@ -8,8 +8,8 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0),
      SPARK_GRAFT_CPUS (default 32).
 
 Probes:
-  1. mention extraction per-task cost: gram-intersect vs contains-scan,
-     arrays only (no explode) — the pure matching-kernel comparison.
+  1. mention extraction per-task cost: the gram-intersect kernel, arrays
+     only (no explode).
   2. exploded mentions end-to-end — the InferFiltersFromGenerate evidence
      (re-run with SPARK_GRAFT_KEEP_INFER_RULE=1 to reproduce the r05
      double-evaluation plan: the scan's DataFilters then contain the whole
@@ -58,7 +58,7 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     from oscar_spatial_index_compare_spark.operators.mentions import (
-        _doc_mentions_contains, doc_mentions_df, extract_mentions,
+        doc_mentions_df, extract_mentions,
     )
     from oscar_spatial_index_compare_spark.sources.tables import (
         ensure_scan_parallelism, load,
@@ -69,8 +69,6 @@ def main() -> None:
 
     t("extract_arrays_gram", lambda: noop(
         doc_mentions_df(docs).select("doc_id", "ments")))
-    t("extract_arrays_contains", lambda: noop(
-        _doc_mentions_contains(docs).select("doc_id", "ments")))
     t("extract_exploded", lambda: noop(extract_mentions(spark, docs)))
 
     # kNN decomposition over a fresh materialized h3 context

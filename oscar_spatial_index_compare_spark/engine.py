@@ -30,7 +30,9 @@ from .operators.token_index import token_postings_from_base, vocab_collisions
 from .plans.planner import Planner, QueryContext
 from .session import collect_arrow, local_frame
 from .sources.catalog import WRITE_PARTS, Catalog, TableSpec, build_cached
-from .sources.tables import ensure_scan_parallelism, load, read_arrow
+from .sources.tables import (
+    data_files, ensure_scan_parallelism, footer_rows, load, read_arrow,
+)
 
 # Largest token dictionary worth holding on the driver for plan-time leaf
 # expansion; beyond it leaves lower to distributed filters on token_postings.
@@ -80,8 +82,10 @@ class Engine:
     @cached_property
     def n_docs(self) -> int:
         """Corpus size: sizes clustered writes and the token build (no cell
-        holds more docs, so a small corpus needs no token-slice salting)."""
-        return self.docs.count()
+        holds more docs, so a small corpus needs no token-slice salting).
+        Summed from the corpus parquet footers: no Spark job."""
+        files = data_files(f"{self.sf_dir}/documents.parquet")
+        return footer_rows(files) if files else self.docs.count()
 
     def _dictionary(self, token_dict: DataFrame) -> list[str] | None:
         """Sorted distinct corpus tokens, or None when the dictionary exceeds

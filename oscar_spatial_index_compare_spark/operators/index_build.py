@@ -75,12 +75,6 @@ def doc_index_full_from_full(full: DataFrame, grid: str, res: int) -> DataFrame:
     ).withColumn("cells", F.array_distinct(F.col("cells_m")))
 
 
-def doc_index_base(docs: DataFrame, grid: str, res: int) -> DataFrame:
-    """(doc_id, toks, cells) projection of doc_index_full — kept as the
-    minimal input contract of cell_totals_from_base / token_postings_from_base."""
-    return doc_index_full(docs, grid, res).select("doc_id", "toks", "cells")
-
-
 def mention_cells_from_full(full: DataFrame, grid: str, res: int) -> DataFrame:
     """mention_cells as a plain arrays_zip explode of doc_index_full — no
     second gazetteer match, no per-mention UDF rows."""
@@ -137,21 +131,6 @@ def mention_cells(mentions: DataFrame, grid: str, res: int) -> DataFrame:
         "doc_id", "name", "lat", "lon",
         cell_col(grid, F.col("lat"), F.col("lon"), res).alias("cell_id"),
     )
-
-
-def doc_cells(mcells: DataFrame) -> DataFrame:
-    """Distinct (grid, res, doc_id, cell_id) — the TrixelData triple stream
-    (reference emits (trixel, cell, item) at ``src/OscarSgIndex.cpp:113-128``)."""
-    return mcells.select("grid", "res", "doc_id", "cell_id").dropDuplicates(
-        ["grid", "res", "doc_id", "cell_id"]
-    )
-
-
-def cell_totals(dcells: DataFrame) -> DataFrame:
-    """B3 ``computeTrixelItems`` analog: per cell, the full sorted doc set
-    (one map-side-combined groupBy, see _doc_sets_by_cell)."""
-    sets = _doc_sets_by_cell(dcells, ["grid", "res", "cell_id"])
-    return sets.withColumn("n_docs", F.size("doc_ids").cast("long"))
 
 
 def region_mention_cells(mcells: DataFrame) -> DataFrame:

@@ -4,9 +4,9 @@ Reference analog: items acquire geometry from the OSM store
 (``src/OscarSgIndex.cpp:104-122``); our documents acquire geometry by
 matching gazetteer place names in ``text``.
 
-Spark-first design: the ~200-entry gazetteer is matched per row by an
-allocation-free ``contains`` scan over the padded text with the match,
-jitter and struct assembly fused into ONE ``zip_with`` pass
+Spark-first design: the ~200-entry gazetteer is matched per row by one
+``array_intersect`` of its names with the text's unigrams and bigrams, with
+the jitter and struct assembly fused into the same ``transform``
 (``doc_mentions_df``).  At 10^12 docs this is shuffle-free: the only wide
 op downstream is the groupBy that builds postings.  Extraction is a pure
 function of
@@ -51,14 +51,15 @@ def doc_mentions_df(docs: DataFrame) -> DataFrame:
         lookup per matched name (~32 matches/doc · O(200) short compares,
         ~50x less work than the scans they replace).
 
-    Names longer than 2 tokens (none today) would break the gram
-    equivalence — such a dictionary falls back to the contains-scan form
-    below, preserving generality.
+    A name longer than 2 tokens (none today) would break the gram
+    equivalence, so such a gazetteer entry raises ``ValueError``.
     """
     from ..sources.gazetteer import _JMOD, gazetteer
 
-    if any(n.count(" ") > 1 for n, *_ in gazetteer()):
-        return _doc_mentions_contains(docs)
+    long_names = [n for n, *_ in gazetteer() if n.count(" ") > 1]
+    if long_names:
+        raise ValueError(f"gazetteer names longer than 2 tokens are not "
+                         f"matched: {long_names}")
 
     def _q(s: str) -> str:
         return "'" + s.replace("'", "''") + "'"
@@ -92,85 +93,18 @@ def doc_mentions_df(docs: DataFrame) -> DataFrame:
     return p0.select("doc_id", "text", F.expr(ments_sql).alias("ments"))
 
 
-def _doc_mentions_contains(docs: DataFrame) -> DataFrame:
-    """Contains-scan fallback of doc_mentions_df (general for any name
-    length) — the r02-r05 primary form; see doc_mentions_df for why the
-    gram-intersect lowering replaced it as the default.
-
-    Physical shape (r02 VERDICT perf: the transform/array_compact form ran
-    the 200-contains scan interpreted with a fresh padded-string allocation
-    PER CHECK — a GC storm that capped build scaling at ~1.7x for 4x cores;
-    and the unrolled 3x200-when alternative exceeds janino's 64 KB method
-    limit, silently dropping the stage out of codegen):
-
-      * the padded text is bound as a real column (``_pt``); it is referenced
-        by all 200 ``contains`` checks, so CollapseProject provably cannot
-        inline it (non-cheap alias, >1 reference) — ONE concat per row
-      * the match+jitter is one ``zip_with(hits, meta, ...)`` over a literal
-        200-entry metadata array: even fully interpreted this is 200
-        zero-allocation UTF8String scans + a small zip — no per-check
-        allocation, no 64 KB codegen risk
-      * jitter constants (length/ascii hashes of each name) are folded at
-        plan time per entry; the arithmetic is bit-identical to the
-        DuckDB oracle's closed form (``jitter_lat_sql``)
-
-    ``ments`` is referenced >=3 times by every consumer projection, so the
-    zip runs once per row regardless of optimizer choices.
-
-    The whole expression is assembled as ONE SQL text and parsed JVM-side
-    with ``F.expr``: the earlier Column-API form issued ~1,200 py4j
-    round-trips (200 struct literals x 5 fields + 200 contains), a
-    measured 3.65 s of SERIAL driver time per plan construction — a fixed
-    cost that anti-scales (it is 15% of the whole 4N build wall on the
-    scaling harness).  One parse call is milliseconds; the analyzed tree
-    and the row arithmetic are identical (oracle suite byte-stable).
-    """
-    from ..sources.gazetteer import _JMOD, gazetteer
-
-    def _q(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
-    metas, hits = [], []
-    for n, la, lo, _p in gazetteer():
-        cl = len(n) * 7919 + ord(n[0]) * 131
-        co = len(n) * 104729 + ord(n[0]) * 37
-        # CAST('…' AS DOUBLE) is constant-folded and parses repr() exactly
-        # (a bare 48.85 literal would parse as DECIMAL and change the math)
-        metas.append(
-            f"named_struct('name', {_q(n)},"
-            f" 'glat', CAST('{la!r}' AS DOUBLE), 'glon', CAST('{lo!r}' AS DOUBLE),"
-            f" 'cl', {cl}L, 'co', {co}L)"
-        )
-        hits.append(f"contains(_pt, {_q(' ' + n + ' ')})")
-    jlat = (f"m.glat + (((doc_id * 1000003 + m.cl) % {_JMOD}) - 2000)"
-            " / CAST('10000.0' AS DOUBLE)")
-    jlon = (f"m.glon + (((doc_id * 999983 + m.co) % {_JMOD}) - 2000)"
-            " / CAST('10000.0' AS DOUBLE)")
-    ments_sql = (
-        "array_compact(zip_with("
-        f"array({', '.join(hits)}), array({', '.join(metas)}), "
-        "(h, m) -> CASE WHEN h THEN named_struct("
-        f"'name', m.name, 'lat', {jlat}, 'lon', {jlon}) END))"
-    )
-    p0 = docs.select(
-        "doc_id", "text",
-        F.concat(F.lit(" "), F.col("text"), F.lit(" ")).alias("_pt"),
-    )
-    return p0.select("doc_id", "text", F.expr(ments_sql).alias("ments"))
-
-
 def extract_mentions(spark: SparkSession, docs: DataFrame,
                      with_idx: bool = False) -> DataFrame:
     """documents(doc_id, text, ...) → mentions(doc_id[, mention_idx], name,
     lat, lon).
 
     A mention is a distinct gazetteer name occurring in the doc's token
-    stream (unigrams and space-joined bigrams) — matched with the row-wise
-    dictionary-literal ``contains`` scan (doc_mentions_df), the same form
-    every oracle uses.  Earlier variants (r1 explode+broadcast-join; r2
-    transform/array_compact) were allocation-heavy interpreted paths that
-    drove GC into stop-the-world spirals at local[32] — see the
-    doc_mentions_df docstring for the shape that scales.
+    stream (unigrams and space-joined bigrams), matched by doc_mentions_df;
+    the oracles' ``contains`` join finds the same set.  Earlier variants
+    (r1 explode+broadcast-join; r2 transform/array_compact) were
+    allocation-heavy interpreted paths that drove GC into stop-the-world
+    spirals at local[32] — see the doc_mentions_df docstring for the shape
+    that scales.
 
     ``with_idx`` adds mention_idx (the doc's mentions numbered in name
     order — deterministic, SQL-reproducible) at the cost of a per-doc

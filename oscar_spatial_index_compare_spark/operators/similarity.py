@@ -120,8 +120,8 @@ def lsh_bucket_col(vec_col, planes: np.ndarray):
 def _probe_set(q: list[float], planes: np.ndarray, hamming: int) -> set[int]:
     """The multiprobe bucket set for one query vector: its own bucket plus
     every bucket within ``hamming`` bit flips.  Driver-side arithmetic only —
-    shared by ann_topk / ann_topk_bucketed / ann_topk_oracle so the Spark
-    plan and the DuckDB oracle enumerate the identical probe list."""
+    shared by ann_topk and ann_topk_oracle so the Spark plan and the DuckDB
+    oracle enumerate the identical probe list."""
     v = np.asarray(q, dtype=np.float64)
     n_p = len(planes)
     b0 = sum((1 << j) if float(v @ planes[j]) >= 0 else 0 for j in range(n_p))
@@ -157,8 +157,7 @@ def ann_topk(
 ) -> DataFrame:
     """Approximate top-k: probe the query's LSH bucket ± ``hamming`` bit
     flips (multiprobe — 79 of 4096 buckets at hamming 2, ~2% of the corpus),
-    exact cosine within candidates.  At 100 TB the bucketed table is written
-    partitioned by bucket → queries touch a few partitions.
+    exact cosine within candidates.
 
     Contract (verified in tests/test_similarity.py): recall ≥ 0.6 on true
     NEAR neighbors (sim ≳ 0.95).  On uniform-random vectors whose "top-k"
@@ -195,41 +194,6 @@ def _score_candidates(cand: DataFrame,
                else sim.when(F.col("query_id") == qid, sm))
     return (cand.select("query_id", "vec_id", sim.alias("sim_micro"))
             .dropDuplicates(["query_id", "vec_id"]))
-
-
-def write_bucketed_embeddings(emb: DataFrame, path: str) -> None:
-    """Persist the ANN index: embeddings written PARTITIONED BY LSH bucket.
-    At 100 TB this is the layout that makes ann_topk_bucketed a
-    partition-pruned read — a query touches ~79/4096 directories (hamming-2
-    multiprobe), never the full corpus."""
-    planes = _planes()
-    emb.withColumn("bucket", lsh_bucket_col(F.col("embedding"), planes)) \
-        .write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def ann_topk_bucketed(
-    spark: SparkSession, path: str, queries: list[tuple[int, list[float]]],
-    k: int, hamming: int = 2,
-) -> DataFrame:
-    """ann_topk over a write_bucketed_embeddings layout: the bucket filter
-    is a PARTITION filter (visible as PartitionFilters in the scan), so
-    non-probed buckets are never read.  Same results as ann_topk."""
-    emb = spark.read.parquet(path)
-    planes = _planes()
-    rows = []
-    for qid, q in queries:
-        rows.extend((qid, int(b)) for b in _probe_set(q, planes, hamming))
-    probe_df = F.broadcast(
-        local_frame(spark, "query_id long, bucket long", zip(*rows)))
-    all_buckets = sorted({b for _, b in rows})
-    cand = emb.where(F.col("bucket").isin(all_buckets)).join(probe_df, "bucket")
-    scored = _score_candidates(cand, queries)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim_micro").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim_micro", "rank")
-    )
 
 
 # banded OR-construction for near-dup detection: a pair is a candidate when

@@ -123,8 +123,9 @@ def token_postings_from_base(base: DataFrame, ctotals: DataFrame,
                              target_docs: int = TARGET_GROUP_DOCS,
                              _collide_tokens: list[str] | None = None,
                              vocab: tuple[DataFrame, list[str]] | None = None) -> DataFrame:
-    """Arrow-grouped posting build over doc_index_base (doc_id, toks, cells).
-    The token fan-out stays OUT of the shuffle:
+    """Arrow-grouped posting build over a doc_index_full frame (of which it
+    reads doc_id, toks and cells).  The token fan-out stays OUT of the
+    shuffle:
 
       plan time  the vocabulary (explode toks → distinct → th =
                xxhash64(token)) is the (th → token) restoration dimension

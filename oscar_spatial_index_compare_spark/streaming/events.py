@@ -1,18 +1,15 @@
-"""Event-stream analytics over the ``events`` table (event_id, ts,
-user_id, event_type, value, props).
+"""Event analytics over the ``events`` table (event_id, ts, user_id,
+event_type, value, props): tumbling-window and session-window stats, each
+with its DuckDB twin.
 
-The reference is batch-only (SURVEY §2.7); these are part of the engine's
-Spark-native streaming surface, the single-code-path way: each operator is
-ONE set of column expressions used identically by the batch entry point
-(DuckDB-oracle-checked) and the Structured-Streaming entry point
-(``readStream`` + watermark; parity with batch pytest-gated).  Monetary
-sums are exact integer cents so the oracle hash cannot drift on
+The reference is batch-only (SURVEY §2.7), and so is this module.
+Monetary sums are exact integer cents so the oracle hash cannot drift on
 floating-point accumulation order.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 def _cents():
@@ -25,11 +22,7 @@ def _cents():
 
 def event_window_stats(events: DataFrame, window: str = "10 minutes") -> DataFrame:
     """Tumbling-window per-type stats → (w_start, w_end, event_type,
-    n_events, sum_cents, max_cents).  The same expression tree runs on a
-    stream (see stream_event_window_stats) — every aggregate here is
-    streamable (no distinct aggregations: exact countDistinct is not
-    supported on streaming frames, and approx_count_distinct would break
-    the DuckDB oracle; single code path wins over the extra column)."""
+    n_events, sum_cents, max_cents)."""
     w = F.window(F.col("ts"), window)
     return (
         events.groupBy(w.alias("w"), "event_type")
@@ -65,10 +58,7 @@ def event_sessions(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows per user (gap-based) → (user_id, s_start, s_end,
     n_events, sum_cents).  Spark semantics: an event extends the session
     iff it starts AT OR before previous_ts + gap (touching windows merge
-    — pytest-pinned boundary); s_end is last_ts + gap.  On a stream the
-    same expression runs with a watermark
-    (session_window is the built-in gap-state operator — no custom
-    applyInPandasWithState needed for this shape)."""
+    — pytest-pinned boundary); s_end is last_ts + gap."""
     sw = F.session_window(F.col("ts"), gap)
     return (
         events.groupBy(sw.alias("s"), "user_id")
@@ -109,26 +99,3 @@ SELECT user_id,
 FROM sids
 GROUP BY user_id, sid
 """
-
-
-def stream_events(spark: SparkSession, src_dir: str, schema) -> DataFrame:
-    s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    # event-time watermarks require TIMESTAMP (with local zone); the events
-    # table stores TIMESTAMP_NTZ.  The session zone is pinned UTC
-    # (session.py), so the cast is value-preserving and batch/stream
-    # windows bucket identically.
-    return s.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def stream_event_window_stats(events_stream: DataFrame,
-                              window: str = "10 minutes",
-                              watermark: str = "1 hour") -> DataFrame:
-    """The SAME aggregation as event_window_stats on a watermarked stream
-    (late events beyond the watermark are dropped; in complete/update
-    output mode windows refine as micro-batches land)."""
-    return event_window_stats(
-        events_stream.withWatermark("ts", watermark), window)

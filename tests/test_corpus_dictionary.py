@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from oscar_spatial_index_compare_spark.operators.index_build import (
     cell_totals_from_base,
-    doc_index_base,
+    doc_index_full,
     mention_cells,
 )
 from oscar_spatial_index_compare_spark.operators.mentions import extract_mentions
@@ -18,7 +18,7 @@ from oscar_spatial_index_compare_spark.plans.planner import Planner, QueryContex
 
 
 def _ctx(spark, docs, tokens):
-    base = doc_index_base(docs, "zxy", 9)
+    base = doc_index_full(docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
     tp = token_postings_from_base(base, ct, "zxy", 9)
     mc = mention_cells(extract_mentions(spark, docs), "zxy", 9)
@@ -74,10 +74,10 @@ def test_salted_groups_exact(spark, engine):
     goes through the partial-merge path) must equal the unsalted build row
     for row — fm classification and lists included."""
     from oscar_spatial_index_compare_spark.operators.index_build import (
-        cell_totals_from_base, doc_index_base,
+        cell_totals_from_base, doc_index_full,
     )
 
-    base = doc_index_base(engine.docs, "zxy", 9)
+    base = doc_index_full(engine.docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
     default = token_postings_from_base(base, ct, "zxy", 9)
     salted = token_postings_from_base(base, ct, "zxy", 9, target_docs=1)
@@ -97,10 +97,10 @@ def test_no_salt_hint_exact(spark):
         "doc_id long, text string",
     )
     from oscar_spatial_index_compare_spark.operators.index_build import (
-        cell_totals_from_base, doc_index_base,
+        cell_totals_from_base, doc_index_full,
     )
 
-    base = doc_index_base(docs, "zxy", 9)
+    base = doc_index_full(docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
     hinted = token_postings_from_base(base, ct, "zxy", 9, n_docs_hint=12)
     default = _tp_rows(token_postings_from_base(base, ct, "zxy", 9))
@@ -114,10 +114,10 @@ def test_jvm_and_arrow_impls_identical(spark, engine):
     string-keyed kernel, which builds the whole table when every corpus
     token is routed to it as an xxhash64 collision."""
     from oscar_spatial_index_compare_spark.operators.index_build import (
-        cell_totals_from_base, doc_index_base,
+        cell_totals_from_base, doc_index_full,
     )
 
-    base = doc_index_base(engine.docs, "zxy", 9)
+    base = doc_index_full(engine.docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
     vocab = sorted(r.t for r in base.select(
         F.explode("toks").alias("t")).distinct().collect())
@@ -140,11 +140,11 @@ def test_collision_routing_exact(spark, engine):
     import pytest
 
     from oscar_spatial_index_compare_spark.operators.index_build import (
-        cell_totals_from_base, doc_index_base,
+        cell_totals_from_base, doc_index_full,
     )
     from oscar_spatial_index_compare_spark.operators import token_index as ti
 
-    base = doc_index_base(engine.docs, "zxy", 9)
+    base = doc_index_full(engine.docs, "zxy", 9)
     ct = cell_totals_from_base(base, "zxy", 9)
     # pick two real corpus tokens, one of them gazetteer-hot
     toks = [r.t for r in base.select(

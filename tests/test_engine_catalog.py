@@ -220,6 +220,15 @@ def test_reopen_runs_no_spark_job(spark, cat_engine):
     assert cs.cell_stats(ctx.mcells, "h3", 6) is not None
 
 
+def test_n_docs_runs_no_spark_job(spark):
+    """A fresh Engine sums its corpus size from the documents footers."""
+    eng = engine_mod.Engine(spark, SF_DIR)
+    before = _max_job_id(spark)
+    n = eng.n_docs
+    assert _max_job_id(spark) == before
+    assert n == eng.docs.count() > 0
+
+
 def test_footer_schema_equals_inference(spark, cat_engine):
     """Every catalog table and every corpus table reads with the schema
     Spark's own parquet inference gives it."""

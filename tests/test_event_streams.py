@@ -1,52 +1,18 @@
-"""Event analytics (streaming/events.py): batch↔stream single-code-path
-parity and session-window boundary semantics.  The DuckDB oracles for
-both operators run in the test_correctness mirror (extra_queries)."""
+"""Event analytics (streaming/events.py): session-window boundary
+semantics and event coverage.  The DuckDB oracles for both operators run
+in the test_correctness mirror (extra_queries)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
-from oscar_spatial_index_compare_spark.streaming.events import (
-    event_sessions,
-    event_window_stats,
-    stream_event_window_stats,
-    stream_events,
-)
+from oscar_spatial_index_compare_spark.streaming.events import event_sessions
 
 
 @pytest.fixture(scope="module")
 def events(spark):
     return spark.read.parquet(f"{SF_DIR}/events.parquet")
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_stream_matches_batch(spark, events, tmp_path):
-    """The SAME window aggregation through readStream (availableNow,
-    complete mode) must produce exactly the batch result — the
-    single-code-path invariant the ingest stream also holds."""
-    # file stream sources need a DIRECTORY; stage the table file into one
-    import os
-
-    src = tmp_path / "ev_src"
-    src.mkdir()
-    os.symlink(f"{SF_DIR}/events.parquet", src / "part-0.parquet")
-    q = (
-        stream_event_window_stats(
-            stream_events(spark, str(src), events.schema))
-        .writeStream.format("memory").queryName("ev_win")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = _rows(spark.table("ev_win"))
-    assert got == _rows(event_window_stats(events))
-    assert got  # non-vacuous
 
 
 def test_session_gap_boundary(spark):

@@ -1,21 +1,18 @@
-"""GeoHierarchy-as-pixel-tree HCQR completer (operators/gh_hcqr.py;
-reference ``src/GeoHierarchyHCQRCompleter.cpp:17-33``).
+"""GeoHierarchy HCQR completer (operators/gh_hcqr.py; reference
+``src/GeoHierarchyHCQRCompleter.cpp:17-33``): region leaves as pm CQR rows
+under the CQR set ops.
 
 The driver entry ``hcqr_docs_gh_region`` oracle-checks one region-rooted
 tree; these tests add the cross-engine differential the reference runs
 between its completers (``apps/main.cpp:193-205``) over every op kind,
-plus the reference-parity error paths.
+plus the reference-parity error paths.  ``tests/test_plan_budgets.py``
+pins the deepest tree at one SQL execution.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from oscar_spatial_index_compare_spark.operators.gh_hcqr import (
-    gh_cell_items,
-    gh_hcqr_docs,
-    gh_hcqr_op,
-    gh_region_leaf,
-)
+from oscar_spatial_index_compare_spark.operators.gh_hcqr import gh_hcqr_docs
 from oscar_spatial_index_compare_spark.operators.index_build import (
     cell_postings,
     mention_cells,
@@ -23,6 +20,9 @@ from oscar_spatial_index_compare_spark.operators.index_build import (
 
 GRID, RES = "zxy", 9
 
+DEEP_TREE = ("((($region:2 + $region:6) - $region:1) / "
+             "(($region:2 - $region:1) + ($region:6 / $region:2))) "
+             "+ ($region:1 - $region:6)")
 # region-rooted trees covering every op the completer answers: leaf, ∪,
 # ∩ (both spellings), −, nesting, and the disjoint/empty interactions
 TREES = [
@@ -33,6 +33,7 @@ TREES = [
     "$region:2 - $region:1",
     "($region:2 - $region:1) / ($region:2 + $region:6)",
     "($region:1 + $region:6) - ($region:2 / $region:1)",
+    DEEP_TREE,
 ]
 
 
@@ -58,29 +59,6 @@ def test_gh_matches_cqr_engine(spark, engine, cp, tree):
         assert gh  # non-vacuous: the base leaf matches documents
 
 
-def test_gh_docs_deep_tree_no_reexpansion(spark, engine, cp, monkeypatch):
-    """Depth-5 region tree: the docs surface must evaluate in cell-granular
-    form — zero gh_cell_items computations, one cell_postings equi-join per
-    region leaf — and still match the CQR engine (VERDICT r05 item 6)."""
-    import oscar_spatial_index_compare_spark.operators.gh_hcqr as G
-
-    calls = {"gi": 0}
-    orig = G.gh_cell_items
-
-    def spy(*a, **kw):
-        calls["gi"] += 1
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(G, "gh_cell_items", spy)
-    tree = ("((($region:2 + $region:6) - $region:1) / "
-            "(($region:2 - $region:1) + ($region:6 / $region:2))) "
-            "+ ($region:1 - $region:6)")
-    gh = {r.doc_id for r in G.gh_hcqr_docs(spark, tree, cp).collect()}
-    assert calls["gi"] == 0  # never re-expanded through the GH item table
-    cqr = {r.doc_id for r in engine.query_docs(tree, grid=GRID, res=RES).collect()}
-    assert gh == cqr
-
-
 def test_gh_region_rooted_only(spark, cp):
     """Non-region leaves raise — the completer answers queries over its
     own hierarchy only, like the reference completer."""
@@ -90,32 +68,5 @@ def test_gh_region_rooted_only(spark, cp):
 
 def test_gh_symdiff_unsupported(spark, cp):
     """'^' throws, matching HcqrOpTree (src/HcqrOpTree.cpp:136)."""
-    gi = gh_cell_items(cp)
-    l, r = gh_region_leaf(spark, 2), gh_region_leaf(spark, 1)
     with pytest.raises(ValueError, match="unsupported"):
-        gh_hcqr_op("symdiff", l, r, cp, gi)
-
-
-def test_gh_fm_classification(spark, cp):
-    """A single-region leaf lowered to cells must classify every cell fm
-    whose doc set covers ALL GH items of the cell, pm otherwise — and fm
-    rows carry NULL doc_ids (the fm-bit compression invariant)."""
-    from oscar_spatial_index_compare_spark.operators.gh_hcqr import (
-        _classify,
-        _expand_to_cells,
-    )
-
-    gi = gh_cell_items(cp)
-    h = _classify(_expand_to_cells(gh_region_leaf(spark, 2), cp, gi), gi)
-    rows = h.join(
-        gi.select(F.col("cell_id").alias("pixel_id"),
-                  F.col("doc_ids").alias("_all")),
-        "pixel_id",
-    ).collect()
-    assert rows
-    for r in rows:
-        if r.is_fm:
-            assert r.doc_ids is None
-        else:
-            assert r.doc_ids is not None
-            assert set(r.doc_ids) < set(r._all)  # strictly partial
+        gh_hcqr_docs(spark, "$region:2 ^ $region:1", cp)

@@ -2,8 +2,9 @@
 
 Every CQR set op reads its join once (complement rows, operators/cqr.py),
 so a ``docs`` tree is one plan and one SQL execution, with no checkpoint
-queries beneath it.  In-memory plans would include the cached build
-lineage, so the CQR counts are taken over a catalog engine at s2-10.  A
+queries beneath it; so is a GeoHierarchy region tree on the same ops.
+In-memory plans would include the cached build lineage, so the CQR counts
+are taken over a catalog engine at s2-10.  A
 kNN batch is one broadcast candidate dimension and Spark's own
 per-partition top-k; its plan is pinned over a local mention frame.
 """
@@ -16,7 +17,9 @@ import time
 import pytest
 
 import __spark_entry__ as entrymod
+from oscar_spatial_index_compare_spark.operators.gh_hcqr import gh_hcqr_docs
 from oscar_spatial_index_compare_spark.plans.optree import Node, parse
+from tests.test_gh_hcqr import DEEP_TREE, cp  # cp: the GH pieces fixture
 from tests.test_local_frames import knn_batch
 
 DEEPEST = entrymod._OPTREES_ZXY["optree_nested"]
@@ -44,6 +47,15 @@ def test_cqr_docs_tree_is_one_execution(spark, cat_engine, tree):
     before = _last_execution_id(spark)
     planner.docs(tree).count()
     assert _last_execution_id(spark) - before == 1, tree
+
+
+def test_gh_docs_tree_is_one_execution(spark, cp):
+    """A GH region tree runs the CQR set ops with no checkpoint: building
+    and counting the deepest tree is one SQL execution."""
+    gh_hcqr_docs(spark, DEEP_TREE, cp).count()  # materializes the cached pieces
+    before = _last_execution_id(spark)
+    gh_hcqr_docs(spark, DEEP_TREE, cp).count()
+    assert _last_execution_id(spark) - before == 1
 
 
 def test_deepest_tree_plans_in_linear_size_and_bounded_time(cat_engine):

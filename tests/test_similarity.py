@@ -121,33 +121,3 @@ def test_neardup_finds_injected_duplicates(spark):
     idx = {v: i for i, v in enumerate(ids)}
     for a, b in got_pairs:
         assert math.floor(sims[idx[a], idx[b]] * 1e6 + 0.5) >= 990_000 - 1, (a, b)
-
-
-def test_bucketed_ann_prunes_partitions_and_matches(spark, tmp_path):
-    """The persisted ANN layout: partitioned-by-bucket parquet; queries read
-    only probed buckets (PartitionFilters) and answer exactly like the
-    in-memory ann_topk."""
-    import io
-    from contextlib import redirect_stdout
-
-    from oscar_spatial_index_compare_spark.operators.similarity import (
-        ann_topk_bucketed,
-        write_bucketed_embeddings,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    path = str(tmp_path / "ann_idx")
-    write_bucketed_embeddings(emb, path)
-    qs = _queries()
-    mem = {(r.query_id, r.vec_id, r.sim_micro) for r in ann_topk(emb, qs, K, spark).collect()}
-    idx_df = ann_topk_bucketed(spark, path, qs, K)
-    idx = {(r.query_id, r.vec_id, r.sim_micro) for r in idx_df.collect()}
-    assert idx == mem
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        idx_df.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters: [" in plan
-    # the partition filter actually constrains the bucket column
-    line = [ln for ln in plan.splitlines() if "PartitionFilters" in ln][0]
-    assert "bucket" in line
